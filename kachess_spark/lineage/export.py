@@ -88,11 +88,12 @@ def dashboard_column_lineage(frames: dict[str, DataFrame]) -> DataFrame:
     "all physical table columns a ... dashboard ever used").
 
     Walks the select_item DAG upstream from the dashboard's datasets
-    (dashboard_dataset, :118-125) to TABLE-typed sources.  The closure
-    runs on the data-sized edge frame (closure.py's hybrid); everything
-    else is metadata-sized joins.
+    (dashboard_dataset, :118-125) to TABLE-typed sources.  The dashboard
+    items are metadata-sized, so they seed feeds_into's upstream walk
+    (closure.py) over the data-sized edge frame; everything else is
+    metadata-sized joins.
     """
-    from kachess_spark.lineage.closure import transitive_closure
+    from kachess_spark.lineage.closure import _seeded_closure
 
     dd = frames["dashboard_dataset"].alias("dd")
     si = frames["select_items"].alias("si")
@@ -103,12 +104,20 @@ def dashboard_column_lineage(frames: dict[str, DataFrame]) -> DataFrame:
         F.col("dd.source_id").alias("dboard_id"),
         F.col("si.id").alias("item_id"),
     )
-    cl = transitive_closure(
-        rel, "parent_select_item_id", "child_select_item_id"
+    # metadata-sized: collected once, it seeds the walk and is read back
+    # as a local relation instead of re-running the join
+    start_tbl = start.toArrow()
+    up = _seeded_closure(
+        rel,
+        "child_select_item_id",
+        "parent_select_item_id",
+        start_tbl.column("item_id").to_pylist(),
+        max_hops=20,
     )
+    start = rel.sparkSession.createDataFrame(start_tbl)
     upstream = start.join(
-        cl, start["item_id"] == cl["descendant_id"]
-    ).select("dboard_id", F.col("ancestor_id").alias("item_id"))
+        up, start["item_id"] == up["ancestor_id"]
+    ).select("dboard_id", F.col("descendant_id").alias("item_id"))
     reachable = start.unionByName(upstream).distinct()
 
     phys = si.join(

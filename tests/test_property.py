@@ -10,7 +10,7 @@ from __future__ import annotations
 from collections import deque
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from kachess_spark.lineage.preprocess import preprocess, split_statements
@@ -433,6 +433,262 @@ def test_distributed_closure_terminates_on_cycles(spark, edges):
         assert got == _bfs_closure(edges)
     finally:
         C.SMALL_GRAPH_EDGES = old
+
+
+# ------------------------------------------ seeded impact / provenance
+
+_REL_SCHEMA = "parent_select_item_id BIGINT, child_select_item_id BIGINT"
+
+
+def _rel_frame(spark, edges):
+    """select_item_rel rows as a local relation (built from Arrow): the
+    walk's per-hop scans then cost no Spark job, which keeps these
+    examples fast; the perf guards below read list- and parquet-backed
+    frames."""
+    import pyarrow as pa
+
+    cols = list(zip(*edges))
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "parent_select_item_id": pa.array(cols[0], pa.int64()),
+                "child_select_item_id": pa.array(cols[1], pa.int64()),
+            }
+        ),
+        _REL_SCHEMA,
+    )
+
+
+def _lookups(spark, edges, seeds, max_hops):
+    from kachess_spark.lineage.closure import feeds_into, impacted_by
+
+    df = _rel_frame(spark, edges)
+    return tuple(
+        sorted(tuple(r) for r in fn(df, seeds, max_hops).collect())
+        for fn in (impacted_by, feeds_into)
+    )
+
+
+def _bfs_lookups(edges, seeds, max_hops):
+    """The BFS closure filtered to the seeds: (descendant, distance) rows
+    downstream and (ancestor, distance) rows upstream, one per
+    (seed, reached column)."""
+    pairs = [(a, d, n) for (a, d), n in _bfs_closure(edges).items() if n <= max_hops]
+    seeds = set(seeds)
+    down = sorted((d, n) for a, d, n in pairs if a in seeds)
+    up = sorted((a, n) for a, d, n in pairs if d in seeds)
+    return down, up
+
+
+@st.composite
+def seeded_graphs(draw, graphs):
+    """(edges, seeds, max_hops): the seeds hold both ends of one edge (a
+    seed that is a descendant of another seed) plus random extra seeds,
+    duplicates and ids outside the graph among them."""
+    edges = draw(graphs)
+    nodes = sorted({v for e in edges for v in e})
+    extra = draw(st.lists(st.sampled_from(nodes + [-1, 10_000]), max_size=5))
+    seeds = draw(st.permutations(list(draw(st.sampled_from(edges))) + extra))
+    return edges, seeds, draw(st.sampled_from([20, 1, 2]))
+
+
+_DIAMOND = [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (6, 4)]
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(seeded_graphs(st.one_of(dags(), cyclic_graphs())))
+@example((_DIAMOND, [1, 6], 20))  # seeds sharing descendants 4 and 5
+@example((_DIAMOND, [1, 4], 20))  # seed 4 is a descendant of seed 1
+@example((_DIAMOND, [2, 2, 99], 20))  # a duplicate and an unknown seed
+@example((_DIAMOND, [1], 2))  # max_hops cuts 1 -> 5 (three hops)
+def test_seeded_lookups_match_bfs(spark, case):
+    """impacted_by / feeds_into walk from their seeds only; the result
+    must equal the full closure filtered to the seeds, a seed on a cycle
+    leaving itself out as the closure does.  Checked on the driver walk
+    of a metadata-sized graph, and on the walk that scans once per hop:
+    unrelated edges put the graph above a SMALL_GRAPH_EDGES that the walk
+    itself (every edge plus one pair per seed and column) never reaches."""
+    from kachess_spark.lineage import closure as C
+
+    edges, seeds, max_hops = case
+    nodes = {v for e in edges for v in e}
+    threshold = len(edges) + len(set(seeds)) * len(nodes)
+    padded = edges + [
+        (10**6 + i, 2 * 10**6 + i) for i in range(threshold + 1 - len(edges))
+    ]
+    old = C.SMALL_GRAPH_EDGES
+    try:
+        for limit, graph in ((old, edges), (threshold, padded)):
+            C.SMALL_GRAPH_EDGES = limit
+            assert _lookups(spark, graph, seeds, max_hops) == _bfs_lookups(
+                edges, seeds, max_hops
+            )
+    finally:
+        C.SMALL_GRAPH_EDGES = old
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(seeded_graphs(st.one_of(dags(), cyclic_graphs())))
+def test_seeded_lookups_distributed_fallback_matches_bfs(spark, case):
+    """With SMALL_GRAPH_EDGES = 0 the walk hands its pairs and frontier to
+    the distributed loop at the first hop that reaches anything."""
+    from kachess_spark.lineage import closure as C
+
+    edges, seeds, max_hops = case
+    old = C.SMALL_GRAPH_EDGES
+    C.SMALL_GRAPH_EDGES = 0
+    try:
+        assert _lookups(spark, edges, seeds, max_hops) == _bfs_lookups(
+            edges, seeds, max_hops
+        )
+    finally:
+        C.SMALL_GRAPH_EDGES = old
+
+
+@pytest.mark.parametrize(
+    "edges, seeds, threshold",
+    [
+        # one seed -> 5 hubs -> 50 leaves each: the hop-2 scan would
+        # collect 250 edges
+        (
+            [(0, h) for h in range(1, 6)]
+            + [(h, 100 * h + k) for h in range(1, 6) for k in range(50)],
+            [0],
+            20,
+        ),
+        # 5 seeds -> one shared column -> 2 more: few edges, but hop 2
+        # would hold 10 more pairs (plus unrelated edges above the threshold)
+        (
+            [(s, 100) for s in range(5)]
+            + [(100, 101), (100, 102)]
+            + [(1000 + i, 2000 + i) for i in range(20)],
+            list(range(5)),
+            14,
+        ),
+    ],
+    ids=["fan_out", "shared_descendants"],
+)
+def test_seeded_walk_hands_over_before_passing_threshold(
+    spark, monkeypatch, edges, seeds, threshold
+):
+    """On a graph above SMALL_GRAPH_EDGES the walk never holds more than
+    that many edges and pairs on the driver: every collect is bounded, and
+    the scan or hop that would pass the threshold starts the distributed
+    loop from the pairs found before it."""
+    from kachess_spark.lineage import closure as C
+
+    df = spark.createDataFrame(edges, _REL_SCHEMA)
+    collected, handed_over = [], []
+    collect, semi_naive = type(df).collect, C._semi_naive
+
+    def counting_collect(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    def spy(base, closure, frontier, first_hop, max_hops):
+        handed_over.append(closure.count())
+        return semi_naive(base, closure, frontier, first_hop, max_hops)
+
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", threshold)
+    monkeypatch.setattr(C, "_semi_naive", spy)
+    monkeypatch.setattr(type(df), "collect", counting_collect)
+    out = C.impacted_by(df, seeds)
+    monkeypatch.undo()
+    assert len(handed_over) == 1 and handed_over[0] <= threshold
+    assert max(collected) <= threshold + 1
+    assert sorted(tuple(r) for r in out.collect()) == _bfs_lookups(edges, seeds, 20)[0]
+
+
+def _job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    # job and stage events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _shuffle_write_bytes(spark, job_ids) -> int:
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for j in job_ids:
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            attempts = store.stageData(
+                sid, False, sc._jvm.java.util.ArrayList(), False, None
+            )
+            for k in range(attempts.length()):
+                total += attempts.apply(k).shuffleWriteBytes()
+    return total
+
+
+def test_seeded_lookups_empty_ids_run_no_job(spark):
+    from kachess_spark.lineage.closure import feeds_into, impacted_by
+
+    df = spark.createDataFrame(_DIAMOND, _REL_SCHEMA)
+    for fn in (impacted_by, feeds_into):
+        before = _job_ids(spark)
+        out = fn(df, [])
+        assert out.collect() == []
+        assert _job_ids(spark) == before
+        assert out.schema == fn(df, [1]).schema
+
+
+def test_impacted_by_chain_scans_once_per_hop(spark):
+    """Perf guard: on a depth-d chain impacted_by runs at most d + 1 Spark
+    jobs and shuffles nothing — the full closure (distinct, per-round
+    joins and checkpoints) is never built.  A chain this small is
+    metadata-sized: one bounded collect, then a driver walk."""
+    from kachess_spark.lineage.closure import impacted_by
+
+    depth = 6
+    df = spark.createDataFrame([(i, i + 1) for i in range(depth)], _REL_SCHEMA)
+    before = _job_ids(spark)
+    rows = impacted_by(df, [0]).collect()
+    jobs = _job_ids(spark) - before
+    assert sorted(tuple(r) for r in rows) == [(i, i) for i in range(1, depth + 1)]
+    assert len(jobs) <= depth + 1
+    assert _shuffle_write_bytes(spark, jobs) == 0
+
+
+def test_impacted_by_large_graph_scans_once_per_hop(spark, monkeypatch, tmp_path):
+    """Perf guard for a graph above SMALL_GRAPH_EDGES, read from parquet as
+    a data-sized edge table would be: the bounded size probe, then one
+    filtered scan per hop (the last one finding nothing), so at most
+    d + 2 jobs on a depth-d chain, and no shuffle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kachess_spark.lineage import closure as C
+
+    depth = 6
+    chain = [(i, i + 1) for i in range(depth)]
+    other = [(1000 + i, 2000 + i) for i in range(40)]
+    path = str(tmp_path / "select_item_rel.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "parent_select_item_id": [a for a, _ in chain + other],
+                "child_select_item_id": [b for _, b in chain + other],
+            }
+        ),
+        path,
+    )
+    df = spark.read.parquet(path)
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 3 * depth)
+    before = _job_ids(spark)
+    rows = C.impacted_by(df, [0]).collect()
+    jobs = _job_ids(spark) - before
+    assert sorted(tuple(r) for r in rows) == [(i, i) for i in range(1, depth + 1)]
+    assert len(jobs) <= depth + 2
+    assert _shuffle_write_bytes(spark, jobs) == 0
 
 
 # ------------------------------------------------- substring-span cut
