@@ -223,6 +223,7 @@ def main() -> None:
 
     per_query: dict[str, float] = {}
     per_profile: dict[str, dict[str, float]] = {}
+    warm_failed: list[str] = []
     for name in HEADLINE + BREADTH:
         fn = registry.QUERIES[name]
         # Warm THIS query's shape immediately before timing it.  A
@@ -237,7 +238,9 @@ def main() -> None:
             try:
                 fn(spark, warm_dir).count()
             except Exception:
-                pass  # warmup is best-effort; the timed run will surface it
+                # warmup is best-effort: keep timing, but name the query
+                # in the output line instead of hiding the failure
+                warm_failed.append(name)
             # drop the warm run's persisted intermediates (each fn call
             # creates fresh persist() sites, so warm-SF copies would
             # otherwise sit in the cache under the timed run)
@@ -276,6 +279,8 @@ def main() -> None:
         "loadavg_start": load_start,
         "loadavg_end": _loadavg(),
     }
+    if warm_failed:
+        out["warm_failed"] = warm_failed
     if profile:
         out["profile"] = per_profile
     print(json.dumps(out))

@@ -37,15 +37,16 @@ guarded exact slow path:
   contract (element or running-sum magnitude >= 10^14 nulls the dot,
   hence the cosine).
 
-A pytest (tests/test_round13_ops.py) asserts bit-equality against the
-JVM fold on every fixture corpus plus adversarially constructed
-near-tie values; ``KACHESS_COSINE_JVM=1`` selects the original JVM
-expression path for A/B verification.
+``tests/test_round13_ops.py::test_cosine_kernel_matches_jvm_fold``
+asserts row-for-row equality (NULLs included) against the JVM fold
+(``_exact_cosine_edges(..., engine="jvm")``), plain and mirrored, on
+the fixture corpus plus hand-built vectors in the guard band, in the
+exact row fold and in the DECIMAL(28,14) overflow-to-NULL regime.
 """
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 
@@ -53,12 +54,17 @@ _Q14 = Decimal("1E-14")
 _Q6 = Decimal("1E-6")
 _DEC_OVERFLOW_UNITS = 10**28  # DECIMAL(28,14) magnitude cap, in 1e-14 units
 _TROUBLE_ABS = 1e3  # |x·y| beyond this -> exact row fold (int64 headroom)
+# room for any finite double at scale 14 (309 integer + 14 fraction
+# digits): the default 28-digit context cannot quantize |p| >= 1e14,
+# exactly the products that must become NULL
+_EXACT = Context(prec=330)
 
 
 def _quant_slow(p: float, q: Decimal, pow10: int) -> int:
     """HALF_UP(shortest_repr(|p|), scale) in integer units — the exact
     semantics of Spark's double->decimal cast, via CPython repr."""
-    return int(Decimal(repr(abs(float(p)))).quantize(q, ROUND_HALF_UP).scaleb(pow10))
+    d = Decimal(repr(abs(float(p)))).quantize(q, ROUND_HALF_UP, _EXACT)
+    return int(d.scaleb(pow10, _EXACT))
 
 
 def _quant14_rows(P: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -76,6 +82,9 @@ def _quant14_rows(P: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     embedding magnitudes is ~1e-3."""
     absP = np.abs(P)
     trouble = absP.max(axis=1) > _TROUBLE_ABS
+    # diverted rows are redone by the exact fold; zero them here so the
+    # fast path never quantizes a magnitude int64 units cannot hold
+    absP[trouble] = 0.0
     hi = absP * 1e14
     k = np.floor(hi)
     frac = hi - k  # exact (Sterbenz: k <= hi <= 2k, or k == 0)
@@ -147,14 +156,18 @@ def _list_to_mat(col) -> np.ndarray:
     return vals.reshape(n, -1) if n else vals.reshape(0, 0)
 
 
-def _norm_units(X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row squared-norm decimal units (+ NULL mask) of an embedding
-    matrix — the hoisted ``aggregate(embedding, ... x*x ...)`` fold."""
-    units, trouble = _quant14_rows(X * X)
+def _dot_units(S: np.ndarray, D: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row dot-product decimal units (+ NULL mask) of two (rows, dim)
+    matrices: the vectorized path, with diverted rows redone by the
+    exact fold.  An exact fold's units can pass int64 (|dot| >= ~9.2e4)
+    while the DECIMAL stays in range, so those batches keep Python ints
+    (``_units_to_double`` converts them exactly)."""
+    units, trouble = _quant14_rows(S * D)
     null = np.zeros(len(units), dtype=bool)
     if trouble.any():
+        units = units.astype(object)
         for i in np.nonzero(trouble)[0]:
-            u = _dot_units_exact(X[i], X[i])
+            u = _dot_units_exact(S[i], D[i])
             if u is None:
                 null[i] = True
             else:
@@ -171,7 +184,7 @@ def norm_batches(it):
         if b.num_rows == 0:
             continue
         X = _list_to_mat(b.column(1))
-        units, null = _norm_units(X)
+        units, null = _dot_units(X, X)  # the hoisted x*x norm fold
         nrm = _units_to_double(units, 14)
         arr = pa.array(nrm, type=pa.float64(), from_pandas=False)
         if null.any():
@@ -224,15 +237,7 @@ def _pair_batches(it, mirror: bool, rounded: bool = True):
         D = _list_to_mat(col["d_emb"])
         snrm = col["s_nrm"].to_numpy(zero_copy_only=False)
         dnrm = col["d_nrm"].to_numpy(zero_copy_only=False)
-        units, trouble = _quant14_rows(S * D)
-        null = np.zeros(len(units), dtype=bool)
-        if trouble.any():
-            for i in np.nonzero(trouble)[0]:
-                u = _dot_units_exact(S[i], D[i])
-                if u is None:
-                    null[i] = True
-                else:
-                    units[i] = u
+        units, null = _dot_units(S, D)
         dot = _units_to_double(units, 14)
         with np.errstate(invalid="ignore", divide="ignore"):
             cos = dot / np.sqrt(snrm * dnrm)

@@ -438,7 +438,8 @@ def emb_sign_bits(n_vectors: int, dim: int = 64) -> int:
     (n≤8k → 8 bits, n=65k → 11 bits, n=1e9 → 25 bits, capped at dim-1
     sign components;
     past that, switch to derived random hyperplanes —
-    similarity.hyperplane_bucket — which supply unlimited planes).
+    similarity.banded_hyperplane_buckets — which supply unlimited
+    planes).
     A fixed 8-bit bucket would go quadratic at billions of vectors."""
     from kachess_spark.pipeline.similarity import _ceil_log2_ratio
 
@@ -537,7 +538,8 @@ def dedup_embedding_cosine(
     exact cosine runs only on candidates, with the dot/norm sums in
     DECIMAL so the verify is deterministic under any combine order.
     A production ANN path swaps the bucket for IVF/random hyperplanes
-    (similarity.hyperplane_bucket — needed past dim-1 sign components);
+    (similarity.banded_hyperplane_buckets — needed past dim-1 sign
+    components);
     the plan shape (bucket → join → verify) is identical.
     """
     t = Tables(spark, sf_dir)

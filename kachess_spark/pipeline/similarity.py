@@ -344,29 +344,6 @@ def _emb_dim(df: DataFrame) -> int:
     return int(row[0]) if row else 0
 
 
-def hyperplane_bucket(df: DataFrame, band: int = 0) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector for one band.
-
-    Plane (band, p)'s component at position i has a pseudo-random sign
-    derived from md5(b{band}p{p}|i) — deterministic, no RNG state,
-    reproducible on any cluster.  bucket = Σ_p (dot_p > 0) << p.
-    Signs are driver-hoisted constants (see _plane_signs); each plane
-    dot is a literal-array zip_with in codegen — one narrow map over
-    the vectors, no explode."""
-    dim = _emb_dim(df)
-    # single-row-group parquet → spread before the CPU-bound folds
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, "vec_id")
-    sig = df.select(
-        F.col("vec_id").alias("vid"),
-        *[_plane_dot(band, p, dim).alias(f"d{p}") for p in range(N_PLANES)],
-    )
-    bucket = sum(
-        (F.when(F.col(f"d{p}") > 0, 1).otherwise(0) * (1 << p))
-        for p in range(N_PLANES)
-    )
-    return sig.select("vid", bucket.alias("bucket"))
-
-
 def banded_hyperplane_buckets(
     df: DataFrame, n_bands: int | None = None, n_planes: int = N_PLANES
 ) -> DataFrame:
@@ -438,7 +415,6 @@ def banded_hyperplane_buckets(
 def sim_ann_lsh(
     spark: SparkSession,
     sf_dir: str,
-    n_bands: int | None = None,
     certify: bool = True,
     probe_ids: tuple[int, ...] = QUERY_IDS,
 ) -> DataFrame:
@@ -448,9 +424,8 @@ def sim_ann_lsh(
     the pytest floor track quality vs brute force.
 
     Scale: candidate generation is a bucket-equality join per band —
-    never all-pairs; the band count (default ``ann_n_bands(n)``,
-    adaptive in corpus size; ``n_bands`` overrides for the RECALL.md
-    parameter sweep) multiplies candidate-set size by at most L while
+    never all-pairs; the band count (``ann_n_bands(n)``, adaptive in
+    corpus size) multiplies candidate-set size by at most L while
     OR-amplification takes recall from p^b to 1-(1-p^b)^L.  The L·b
     plane dots are one aggregation pass of codegen SUMs, and the exact
     re-rank touches only the deduped candidate union."""
@@ -463,7 +438,7 @@ def sim_ann_lsh(
     # InMemoryRelation would outlive the call for the whole session
     # (checkpoint blocks are GC-released with the plan); the ~0.3 s of
     # eager planning is the price of not leaking executor memory.
-    buckets = banded_hyperplane_buckets(emb, n_bands).localCheckpoint(
+    buckets = banded_hyperplane_buckets(emb).localCheckpoint(
         eager=False
     )
     queries = buckets.where(F.col("vid").isin(*probe_ids)).select(
@@ -579,11 +554,11 @@ def _exact_cosine_edges(
     wall (round-13 profile: 151 s executor time in one scoring stage).
     The kernel computes the identical value (HALF_UP-on-shortest-repr
     quantization, exact int64 unit sums, correctly-rounded unit→double
-    conversion — bit-equality proven per fixture + adversarial ties in
-    tests) from whole Arrow batches at ~1 us/pair.
-    ``KACHESS_COSINE_JVM=1`` re-selects the expression path for A/B
-    certification; both paths keep the join shape (pairs carry the two
-    embeddings through one exchange) so the 100 TB plan is unchanged.
+    conversion) from whole Arrow batches at ~1 us/pair;
+    ``tests/test_round13_ops.py::test_cosine_kernel_matches_jvm_fold``
+    asserts bit-equality on the fixture plus adversarial values.  Both
+    engines keep the join shape (pairs carry the two embeddings through
+    one exchange) so the 100 TB plan is unchanged.
 
     ``engine="jvm"`` pins a caller to the expression path: on chains
     with FEW, SMALL scoring calls the kernel's fixed per-call costs
@@ -591,11 +566,9 @@ def _exact_cosine_edges(
     its per-pair win — sim_knn_graph_incremental measured 6.8 s Arrow
     vs 5.9 s JVM min-of-4 at sf0.1 (round-13 interleaved A/B), while
     the many-round builders win 30-40% on Arrow.  Both engines are
-    bit-equal (proven in tests), so the choice is pure performance.
+    bit-equal (same test), so the choice is pure performance.
     """
-    import os
-
-    if engine == "jvm" or os.environ.get("KACHESS_COSINE_JVM") == "1":
+    if engine == "jvm":
         scored = _exact_cosine_edges_jvm(emb, cands)
         if not mirror:
             return scored
@@ -643,7 +616,8 @@ def _exact_cosine_edges(
 
 def _exact_cosine_edges_jvm(emb: DataFrame, cands: DataFrame) -> DataFrame:
     """The original JVM-expression scorer (zip_with DECIMAL fold) —
-    kept as the A/B reference for the Arrow kernel."""
+    the ``engine="jvm"`` path and the bit-equality reference for the
+    Arrow kernel."""
     norm = F.expr(
         f"aggregate(embedding, CAST(0 AS {PDEC}), (acc, x) ->"
         f" CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
@@ -768,16 +742,15 @@ def sim_knn_graph_ivf(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str | None = None,
-    n_probe: int | None = None,
     refine: int = KNN_GRAPH_REFINE,
 ) -> DataFrame:
     """k-NN graph over the STORED IVF index — the second, index-serving
     way to build the neighbor graph (cf. the LSH self-join
-    sim_knn_graph): every node probes its ``n_probe`` nearest cells
-    from the trained centroids (default ``knn_graph_n_probe`` — 2x the
-    serving schedule; a graph build is offline batch, not per-query
-    serving), candidates are the probed cells' inverted lists, exact
-    DECIMAL cosine ranks the top-{KNN_K} per node, then ``refine``
+    sim_knn_graph): every node probes its ``knn_graph_n_probe`` nearest
+    cells from the trained centroids (2x the serving schedule; a graph
+    build is offline batch, not per-query serving), candidates are the
+    probed cells' inverted lists, exact DECIMAL cosine ranks the
+    top-{KNN_K} per node, then ``refine``
     NN-descent rounds (Dong et al. 2011, WWW — neighbor-of-neighbor
     expansion) close the recall gap the Voronoi gating leaves: each
     round re-ranks every node against its current neighbors, their
@@ -806,8 +779,7 @@ def sim_knn_graph_ivf(
     assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
     meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
     cells = int(meta["cells"])
-    if n_probe is None:
-        n_probe = knn_graph_n_probe(cells)
+    n_probe = knn_graph_n_probe(cells)
     # corpus-wide multi-probe: every node's n_probe nearest cells
     qprobe = ivf_assign(spark, emb, centroids, n=n_probe).select(
         F.col("vid").alias("src"), F.col("cell").alias("data_cell")
@@ -963,9 +935,6 @@ def sim_knn_graph_prescreened(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str | None = None,
-    n_probe: int | None = None,
-    refine: int = KNN_GRAPH_REFINE,
-    prescreen_c: int = KNN_PRESCREEN_C,
 ) -> DataFrame:
     """k-NN graph over the STORED IVF index with a PREFIX-PROJECTION
     prescreen — the variant whose full-precision work stays linear in
@@ -974,12 +943,12 @@ def sim_knn_graph_prescreened(
     at the 16x fixture); here candidates are first ranked by the exact
     DECIMAL cosine of their {KNN_PRESCREEN_DIMS}-dim PREFIX (a 2x
     cheaper fold over the SAME join shape — zero extra exchanges), and
-    the full-width re-rank touches only the top-``prescreen_c`` per
-    node (n·prescreen_c pairs).  The prefix of a random embedding is
-    itself a random projection (the emb_random_projection JL argument),
-    so prefix ranks correlate with full ranks; ``refine`` NN-descent
-    rounds heal the residual misses the same way they heal the plain
-    path's Voronoi misses.
+    the full-width re-rank touches only the top-{KNN_PRESCREEN_C} per
+    node (n·{KNN_PRESCREEN_C} pairs).  The prefix of a random embedding
+    is itself a random projection (the emb_random_projection JL
+    argument), so prefix ranks correlate with full ranks;
+    {KNN_GRAPH_REFINE} NN-descent round(s) heal the residual misses the
+    same way they heal the plain path's Voronoi misses.
 
     A PQ-ADC prescreen (FAISS IVFADC) was built and measured first:
     relational code-lookup joins expand every candidate pair into M
@@ -1009,8 +978,7 @@ def sim_knn_graph_prescreened(
     assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
     meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
     cells = int(meta["cells"])
-    if n_probe is None:
-        n_probe = knn_graph_n_probe(cells)
+    n_probe = knn_graph_n_probe(cells)
 
     # IVF candidate generation — identical to sim_knn_graph_ivf
     qprobe = ivf_assign(spark, emb, centroids, n=n_probe).select(
@@ -1049,16 +1017,16 @@ def sim_knn_graph_prescreened(
     short = (
         _exact_cosine_edges(pre, cands)
         .select("src", "dst", F.row_number().over(wa).alias("ark"))
-        .where(F.col("ark") <= prescreen_c)
+        .where(F.col("ark") <= KNN_PRESCREEN_C)
         .select("src", "dst")
-        # shortlist cardinality is exactly n·prescreen_c (r11 #6)
+        # shortlist cardinality is exactly n·KNN_PRESCREEN_C (r11 #6)
         .repartition(
-            partitions_for_rows(spark, n * prescreen_c), "src", "dst"
+            partitions_for_rows(spark, n * KNN_PRESCREEN_C), "src", "dst"
         )
     )
     embn = _emb_with_norms(emb).localCheckpoint(eager=False)
     topk = _knn_topk(_exact_cosine_edges(emb, short, embn=embn))
-    for _ in range(refine):
+    for _ in range(KNN_GRAPH_REFINE):
         topk = _knn_refine_round(spark, emb, topk, embn=embn, n=n)
     return topk.orderBy("src", "rk")
 
@@ -1162,7 +1130,6 @@ def sim_knn_graph_descent(
     spark: SparkSession,
     sf_dir: str,
     rounds: int | None = None,
-    k_work: int = KNN_DESCENT_K,
 ) -> DataFrame:
     """k-NN graph by PURE NN-descent (Dong et al. 2011, WWW '11 —
     "Efficient K-Nearest Neighbor Graph Construction for Generic
@@ -1170,13 +1137,13 @@ def sim_knn_graph_descent(
     md5-banded pseudo-random partners, then let the neighbor-of-
     neighbor gradient converge.  Each round re-ranks every node
     against its neighbors, reverse neighbors, and two-hop closure at
-    a working degree of ``k_work`` (> the delivered {KNN_K}: a wider
-    working frontier is what propagates good neighbors — Dong's K);
-    the final graph is the working graph cut to top-{KNN_K}.
+    a working degree of {KNN_DESCENT_K} (> the delivered {KNN_K}: a
+    wider working frontier is what propagates good neighbors — Dong's
+    K); the final graph is the working graph cut to top-{KNN_K}.
 
     THE linear builder of the family: candidate volume is
-    n·(2·k_work)² per round at ANY corpus size — no n^1.5 inverted-
-    list stage (sim_knn_graph_ivf / _prescreened) and no corpus-wide
+    n·(2·{KNN_DESCENT_K})² per round at ANY corpus size — no n^1.5
+    inverted-list stage (sim_knn_graph_ivf / _prescreened) and no corpus-wide
     signature table (sim_knn_graph).  Convergence: recall is monotone
     per round (current edges re-enter the candidate set); the loop
     runs a fixed unroll of ``knn_descent_rounds(n)`` rounds
@@ -1208,7 +1175,7 @@ def sim_knn_graph_descent(
     linear·log at the adaptive schedule — plus the family's lowest
     wall; the recall-per-second default is sim_knn_graph_prescreened."""
     return (
-        _knn_descent_graph(spark, sf_dir, rounds, k_work)
+        _knn_descent_graph(spark, sf_dir, rounds)
         .where(F.col("rk") <= KNN_K)
         .select("src", "dst", "cosine", "rk")
         .orderBy("src", "rk")
@@ -1219,11 +1186,10 @@ def _knn_descent_graph(
     spark: SparkSession,
     sf_dir: str,
     rounds: int | None = None,
-    k_work: int = KNN_DESCENT_K,
 ) -> DataFrame:
     """The descent chain at the WORKING degree (init → rounds → the
-    k_work-ranked graph, uncut): sim_knn_graph_descent cuts this to
-    top-{KNN_K}; ``build_graph_serve_state`` persists it whole — the
+    {KNN_DESCENT_K}-ranked graph, uncut): sim_knn_graph_descent cuts
+    this to top-{KNN_K}; ``build_graph_serve_state`` persists it whole — the
     wider graph is exactly the navigable structure beam serving
     needs.  ``rounds=None`` = the adaptive ``knn_descent_rounds(n)``
     schedule."""
@@ -1243,12 +1209,13 @@ def _knn_descent_graph(
     cands = _knn_descent_init(emb, n).where(F.col("src") < F.col("dst"))
     embn = _emb_with_norms(emb).localCheckpoint(eager=False)
     topk = _knn_topk(
-        _exact_cosine_edges(emb, cands, mirror=True, embn=embn), k=k_work
+        _exact_cosine_edges(emb, cands, mirror=True, embn=embn),
+        k=KNN_DESCENT_K,
     )
     topk = topk.localCheckpoint(eager=False)
     for r in range(rounds):
         nxt = _knn_refine_round(
-            spark, emb, topk, k=k_work, embn=embn, n=n
+            spark, emb, topk, k=KNN_DESCENT_K, embn=embn, n=n
         ).localCheckpoint(eager=False)
         # zero-update early stop: the edge SET fixed-point implies all
         # later rounds are identical (scores are deterministic functions
@@ -1481,6 +1448,14 @@ def knn_snapshot_v2(emb: DataFrame) -> DataFrame:
     with the NEGATED embedding.  The DuckDB twin derives the identical
     view, so the maintenance logic — not the fixture — is what the
     oracle checks."""
+    *_, kept, added = _snapshot_v2_parts(emb)
+    return kept.unionByName(added)
+
+
+def _snapshot_v2_parts(emb: DataFrame) -> tuple:
+    """``knn_snapshot_v2`` in the pieces the incremental maintainers
+    use: the (removed, edited, added) residue predicates on vec_id,
+    then the kept frame (edited rows reversed) and the added frame."""
     from kachess_spark.pipeline.curation import (
         _SNAP_ADD,
         _SNAP_ADD_OFFSET,
@@ -1488,18 +1463,20 @@ def knn_snapshot_v2(emb: DataFrame) -> DataFrame:
         _SNAP_EDIT,
     )
 
-    changed = F.col("vec_id") % _SNAP_EDIT == 5
-    kept = emb.where(F.col("vec_id") % _SNAP_DROP != 3).select(
+    removed = F.col("vec_id") % _SNAP_DROP == 3
+    edited = F.col("vec_id") % _SNAP_EDIT == 5
+    is_added = F.col("vec_id") % _SNAP_ADD == 2
+    kept = emb.where(~removed).select(
         "vec_id",
-        F.when(changed, F.reverse("embedding"))
+        F.when(edited, F.reverse("embedding"))
         .otherwise(F.col("embedding"))
         .alias("embedding"),
     )
-    added = emb.where(F.col("vec_id") % _SNAP_ADD == 2).select(
+    added = emb.where(is_added).select(
         (F.col("vec_id") + _SNAP_ADD_OFFSET).alias("vec_id"),
         F.expr("transform(embedding, x -> -x)").alias("embedding"),
     )
-    return kept.unionByName(added)
+    return removed, edited, is_added, kept, added
 
 
 def build_knn_state(
@@ -1548,9 +1525,6 @@ def sim_knn_graph_incremental(
     spark: SparkSession,
     sf_dir: str,
     state_dir: str | None = None,
-    drop_mod: int | None = None,
-    edit_mod: int | None = None,
-    add_mod: int | None = None,
 ) -> DataFrame:
     """Incremental k-NN graph maintenance: given the stored v1 state
     (signature table + neighbor graph, ``build_knn_state``) and the
@@ -1593,22 +1567,10 @@ def sim_knn_graph_incremental(
     candidate join probe side, exact DECIMAL scoring — are all
     DELTA-proportional; the corpus-sized inputs (stored buckets,
     stored graph) are read, anti-joined and unioned but never
-    re-scored.  ``*_mod`` override the snapshot residues so the scale
-    probe can hold |delta| constant while the corpus grows
-    (BASELINE.md round-11 records cost tracking the delta).
+    re-scored (BASELINE.md round-11 records cost tracking the delta).
     """
     import os
 
-    from kachess_spark.pipeline.curation import (
-        _SNAP_ADD,
-        _SNAP_ADD_OFFSET,
-        _SNAP_DROP,
-        _SNAP_EDIT,
-    )
-
-    drop_mod = drop_mod or _SNAP_DROP
-    edit_mod = edit_mod or _SNAP_EDIT
-    add_mod = add_mod or _SNAP_ADD
     if state_dir is None:
         state_dir = build_knn_state(spark, sf_dir)
     t = Tables(spark, sf_dir)
@@ -1618,19 +1580,7 @@ def sim_knn_graph_incremental(
     b1 = spark.read.parquet(os.path.join(state_dir, "buckets"))
     g1 = spark.read.parquet(os.path.join(state_dir, "graph"))
 
-    removed = F.col("vec_id") % drop_mod == 3
-    edited = F.col("vec_id") % edit_mod == 5
-    # v2 corpus under the (possibly overridden) residues
-    kept = emb.where(~removed).select(
-        "vec_id",
-        F.when(edited, F.reverse("embedding"))
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    added = emb.where(F.col("vec_id") % add_mod == 2).select(
-        (F.col("vec_id") + _SNAP_ADD_OFFSET).alias("vec_id"),
-        F.expr("transform(embedding, x -> -x)").alias("embedding"),
-    )
+    removed, edited, _, kept, added = _snapshot_v2_parts(emb)
     emb2 = kept.unionByName(added)
 
     # delta id frames (BIG-corpus discipline: joins, never isin lists)
@@ -1783,27 +1733,14 @@ def _serve_incremental_working(
     spark: SparkSession,
     sf_dir: str,
     state_dir: str | None = None,
-    drop_mod: int | None = None,
-    edit_mod: int | None = None,
-    add_mod: int | None = None,
 ) -> DataFrame:
     """The incremental maintenance chain at the WORKING degree (uncut
-    k_work-ranked v2 graph) — ``sim_graph_serve_incremental`` cuts it
-    to the delivered top-{KNN_K}; ``update_graph_serve_state``
+    {KNN_DESCENT_K}-ranked v2 graph) — ``sim_graph_serve_incremental``
+    cuts it to the delivered top-{KNN_K}; ``update_graph_serve_state``
     persists it whole as the maintained serving asset.  See the
     registered wrapper's docstring for the full contract."""
     import os
 
-    from kachess_spark.pipeline.curation import (
-        _SNAP_ADD,
-        _SNAP_ADD_OFFSET,
-        _SNAP_DROP,
-        _SNAP_EDIT,
-    )
-
-    drop_mod = drop_mod or _SNAP_DROP
-    edit_mod = edit_mod or _SNAP_EDIT
-    add_mod = add_mod or _SNAP_ADD
     if state_dir is None:
         state_dir = build_graph_serve_state(spark, sf_dir)
     t = Tables(spark, sf_dir)
@@ -1812,18 +1749,7 @@ def _serve_incremental_working(
         "src", "dst", "cosine", "rk"
     )
 
-    removed = F.col("vec_id") % drop_mod == 3
-    edited = F.col("vec_id") % edit_mod == 5
-    kept = emb.where(~removed).select(
-        "vec_id",
-        F.when(edited, F.reverse("embedding"))
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    added = emb.where(F.col("vec_id") % add_mod == 2).select(
-        (F.col("vec_id") + _SNAP_ADD_OFFSET).alias("vec_id"),
-        F.expr("transform(embedding, x -> -x)").alias("embedding"),
-    )
+    removed, edited, is_added, kept, added = _snapshot_v2_parts(emb)
     emb2 = kept.unionByName(added).localCheckpoint(eager=False)
     minus_src = emb.where(removed | edited).select(
         F.col("vec_id").alias("src")
@@ -1871,7 +1797,7 @@ def _serve_incremental_working(
         F.sum((~removed & ~edited).cast("long")).alias("n_surv"),
         (
             F.sum((~removed & edited).cast("long"))
-            + F.sum((F.col("vec_id") % add_mod == 2).cast("long"))
+            + F.sum(is_added.cast("long"))
         ).alias("n_plus"),
     ).first()
     n_surv = int(sizes["n_surv"] or 0)
@@ -2023,9 +1949,6 @@ def sim_graph_serve_incremental(
     spark: SparkSession,
     sf_dir: str,
     state_dir: str | None = None,
-    drop_mod: int | None = None,
-    edit_mod: int | None = None,
-    add_mod: int | None = None,
 ) -> DataFrame:
     """Incremental maintenance for the NN-descent SERVE graph: given
     the stored v1 working graph (``build_graph_serve_state``) and the
@@ -2072,13 +1995,9 @@ def sim_graph_serve_incremental(
     Scale shape: placement is |delta| walks of corpus-independent
     probe volume; banding is linear in |delta|; repair and settle
     touch the dirty ball only.  The corpus-sized inputs (stored graph,
-    survivor adjacency) are filtered and joined but never re-scored.
-    ``*_mod`` override the snapshot residues so a scale probe can hold
-    |delta| fixed while the corpus grows."""
+    survivor adjacency) are filtered and joined but never re-scored."""
     return (
-        _serve_incremental_working(
-            spark, sf_dir, state_dir, drop_mod, edit_mod, add_mod
-        )
+        _serve_incremental_working(spark, sf_dir, state_dir)
         .where(F.col("rk") <= KNN_K)
         .select("src", "dst", "cosine", "rk")
         .orderBy("src", "rk")
@@ -2130,94 +2049,59 @@ def ivf_assign(
 ) -> DataFrame:
     """(vid, cell, rank) — nearest ``n`` centroid cells per vector.
 
-    Codegen argmin: each (vector, centroid) cosine is one zip_with
-    DECIMAL fold on an n·K broadcast-joined row — no positional explode
-    (the previous plan pushed n·K·dim rows through a groupBy exchange)
-    and, for the n=1 assignment pass that dominates k-means training, a
-    ``max_by`` hash aggregation instead of a row_number sort window
-    (same (cos desc, cell asc) tie-break, encoded as max of the
-    (cos, -cell) struct).  K stays broadcast-sized (≤ {IVF_MAX_CELLS});
-    a production index swaps the per-row fold for an Arrow-batched
-    matrix multiply per batch — the surrounding plan is identical.
-    Dots are exact DECIMAL folds, so assignments are bit-identical to
-    the old exploded formulation.
+    Each (vector, centroid) cosine is scored on an n·K broadcast-joined
+    row — no positional explode (an older plan pushed n·K·dim rows
+    through a groupBy exchange) — and, for the n=1 assignment pass that
+    dominates k-means training, ranked by a ``max_by`` hash aggregation
+    instead of a row_number sort window (same (cos desc, cell asc)
+    tie-break, encoded as max of the (cos, -cell) struct).  K stays
+    broadcast-sized (≤ {IVF_MAX_CELLS}).  Dots are exact DECIMAL folds,
+    so assignments are bit-identical to the old exploded formulation.
     """
-    import os
+    # Arrow kernel (round-13): the JVM zip_with fold's decimal-dot /
+    # double-norm value, UNROUNDED (this cosine only ranks), computed
+    # batch-wise instead of one interpreted DECIMAL fold per (vector,
+    # centroid) row — the n=1 training assignment over a single-file
+    # corpus ran its n·K folds on one task at ~50 us each (3.3 s
+    # single-task stage, profiled)
+    from kachess_spark.pipeline._cosine_kernel import (
+        cosine_pair_batches_unrounded,
+        norm_batches,
+    )
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if os.environ.get("KACHESS_COSINE_JVM") == "1":
-        norm = F.expr(
-            f"aggregate(embedding, CAST(0 AS {PDEC}), (acc, x) ->"
-            f" CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-            f" AS {PDEC}) AS {PDEC}))"
+    def with_nrm(df: DataFrame) -> DataFrame:
+        d2 = df.select("vec_id", "embedding")
+        sch = StructType(
+            list(d2.schema.fields) + [StructField("nrm", DoubleType())]
         )
-        e = emb.select(
-            F.col("vec_id").alias("vid"), "embedding", norm.alias("nn")
-        )
-        c = centroids.select(
-            F.col("vec_id").alias("cell"),
-            F.col("embedding").alias("c_emb"),
-            norm.alias("cn"),
-        )
-        dot = F.expr(
-            f"aggregate(zip_with(embedding, c_emb, (x, y) ->"
-            f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-            f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-        )
-        scored = e.join(broadcast(c)).select(
-            "vid",
-            "cell",
-            (
-                dot.cast("double")
-                / F.sqrt(
-                    F.col("nn").cast("double") * F.col("cn").cast("double")
-                )
-            ).alias("cos"),
-        )
-    else:
-        # Arrow kernel (round-13): same decimal-dot/double-norm value,
-        # UNROUNDED (the JVM original never rounds this ranking-only
-        # cosine), computed batch-wise instead of one interpreted
-        # DECIMAL fold per (vector, centroid) row — the n=1 training
-        # assignment over a single-file corpus ran its n·K folds on
-        # one task at ~50 us each (3.3 s single-task stage, profiled)
-        from kachess_spark.pipeline._cosine_kernel import (
+        return d2.mapInArrow(norm_batches, sch)
+
+    vid_t = emb.schema["vec_id"].dataType.simpleString()
+    cell_t = centroids.schema["vec_id"].dataType.simpleString()
+    e = with_nrm(emb).select(
+        F.col("vec_id").cast("long").alias("src"),
+        F.col("embedding").alias("s_emb"),
+        F.col("nrm").alias("s_nrm"),
+    )
+    c = with_nrm(centroids).select(
+        F.col("vec_id").cast("long").alias("dst"),
+        F.col("embedding").alias("d_emb"),
+        F.col("nrm").alias("d_nrm"),
+    )
+    scored = (
+        e.join(broadcast(c))
+        .select("src", "dst", "s_emb", "d_emb", "s_nrm", "d_nrm")
+        .mapInArrow(
             cosine_pair_batches_unrounded,
-            norm_batches,
+            "src long, dst long, cosine double",
         )
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        def with_nrm(df: DataFrame) -> DataFrame:
-            d2 = df.select("vec_id", "embedding")
-            sch = StructType(
-                list(d2.schema.fields) + [StructField("nrm", DoubleType())]
-            )
-            return d2.mapInArrow(norm_batches, sch)
-
-        vid_t = emb.schema["vec_id"].dataType.simpleString()
-        cell_t = centroids.schema["vec_id"].dataType.simpleString()
-        e = with_nrm(emb).select(
-            F.col("vec_id").cast("long").alias("src"),
-            F.col("embedding").alias("s_emb"),
-            F.col("nrm").alias("s_nrm"),
+        .select(
+            F.col("src").cast(vid_t).alias("vid"),
+            F.col("dst").cast(cell_t).alias("cell"),
+            F.col("cosine").alias("cos"),
         )
-        c = with_nrm(centroids).select(
-            F.col("vec_id").cast("long").alias("dst"),
-            F.col("embedding").alias("d_emb"),
-            F.col("nrm").alias("d_nrm"),
-        )
-        scored = (
-            e.join(broadcast(c))
-            .select("src", "dst", "s_emb", "d_emb", "s_nrm", "d_nrm")
-            .mapInArrow(
-                cosine_pair_batches_unrounded,
-                "src long, dst long, cosine double",
-            )
-            .select(
-                F.col("src").cast(vid_t).alias("vid"),
-                F.col("dst").cast(cell_t).alias("cell"),
-                F.col("cosine").alias("cos"),
-            )
-        )
+    )
     if n == 1:
         return scored.groupBy("vid").agg(
             F.expr("max_by(cell, struct(cos, -cell))").alias("cell"),
@@ -2326,14 +2210,11 @@ def sim_ivf_topk(
     spark: SparkSession,
     sf_dir: str,
     certify: bool = True,
-    cells: int | None = None,
-    n_probe: int | None = None,
     probe_ids: tuple[int, ...] = QUERY_IDS,
 ) -> DataFrame:
     """IVF-flat ANN: partition vectors into coarse cells around fixed
     centroids, search exactly only inside the query's nearest cells
-    (corpus-adaptive ``ivf_n_cells(n)`` / ``ivf_n_probe``; overrides
-    for the RECALL.md sweep).
+    (corpus-adaptive ``ivf_n_cells(n)`` / ``ivf_n_probe``).
 
     Centroids here are the lowest-id vectors (deterministic, no k-means
     RNG); a production index trains them offline — the query-time plan
@@ -2341,10 +2222,7 @@ def sim_ivf_topk(
     thing.  Candidates shrink by ~probe/cells vs brute force."""
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    if cells is None:
-        cells = ivf_n_cells(emb.count())
-    if n_probe is None:
-        n_probe = ivf_n_probe(cells)
+    cells = ivf_n_cells(emb.count())
     centroids = (
         emb.orderBy("vec_id").limit(cells)
         .select(F.col("vec_id").alias("vec_id_c"), "embedding")
@@ -2354,101 +2232,37 @@ def sim_ivf_topk(
         )
         .select(F.col("cell").alias("vec_id"), "embedding")
     )
-    return _ivf_search(spark, emb, centroids, certify, n_probe, probe_ids)
-
-
-_FFT_SAMPLE_CAP = 4096  # driver-side seeding sample bound (documented)
-
-
-def _sample_fft_centroids(
-    spark: SparkSession, emb: DataFrame, k: int
-) -> DataFrame:
-    """Deterministic k-means++-style seeding on a bounded sample: take
-    the ``_FFT_SAMPLE_CAP`` vectors with the smallest xxhash64(vec_id)
-    (a seeded pseudorandom sample), collect them (bounded — the
-    offline-trainer shape: seeding runs on a sample small enough for
-    one machine), and run farthest-first traversal in cosine distance
-    — the deterministic analogue of k-means++ D²-sampling (each next
-    seed is the sample point FARTHEST from its nearest chosen seed,
-    ties by vec_id).  Returns (vec_id=cell, embedding) seeds.
-    """
-    import numpy as np
-
-    sample = (
-        emb.orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(_FFT_SAMPLE_CAP)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    ids = np.array([r["vec_id"] for r in sample])
-    mat = np.array([r["embedding"] for r in sample], dtype="float64")
-    unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    order = np.argsort(ids)  # start at the lowest vec_id (no RNG)
-    chosen = [order[0]]
-    # min cosine-distance to the chosen set, updated incrementally;
-    # chosen indices are masked to -inf so a pick can never repeat —
-    # with duplicate vectors (or k near the sample's distinct-direction
-    # count) every remaining min-distance is ~0 and the id tie-break
-    # would otherwise re-select an already-chosen point (round-8 advice)
-    mind = 1.0 - unit @ unit[chosen[0]]
-    mind[chosen[0]] = -np.inf
-    for _ in range(min(k, len(ids)) - 1):
-        # farthest point; ties broken by vec_id for determinism
-        far = np.lexsort((ids, -mind))[0]
-        chosen.append(far)
-        mind = np.minimum(mind, 1.0 - unit @ unit[far])
-        mind[far] = -np.inf
-    rows = [
-        (int(c), [float(x) for x in mat[j]]) for c, j in enumerate(chosen)
-    ]
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
+    return _ivf_search(
+        spark, emb, centroids, certify, ivf_n_probe(cells), probe_ids
     )
 
 
-def kmeans_centroids(
-    spark: SparkSession,
-    emb: DataFrame,
-    k: int,
-    iters: int = 3,
-    seeding: str = "first",
-) -> DataFrame:
-    """Lloyd's k-means trained inside the engine (IVF coarse quantizer).
+def kmeans_centroids(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
+    """Lloyd's k-means trained inside the engine (IVF coarse quantizer),
+    {IVF_BUILD_ITERS} round(s).
 
     Deterministic throughout: seeding = the k lowest-id vectors (no RNG;
-    ``seeding="sample_fft"`` swaps in the deterministic k-means++-style
-    farthest-first sample seeding — see RECALL.md for the measured
-    sweep), per-dimension means via exact DECIMAL sums
+    RECALL.md records the farthest-first seeding sweep that lost to
+    it), per-dimension means via exact DECIMAL sums
     (combine-order-proof), and ties in assignment broken by cell id
     (ivf_assign's row_number).
 
     Scale shape per iteration: one broadcast-join assignment pass over
     the data + one (cell, pos) aggregation — both shuffle-light; the
     centroid frame is k rows and localCheckpointed so the loop never
-    builds an iters-deep plan.  Returns (vec_id=cell, embedding).
+    builds a rounds-deep plan.  Returns (vec_id=cell, embedding).
     """
-    if seeding not in ("first", "sample_fft"):
-        raise ValueError(
-            f"unknown seeding {seeding!r}: use 'first' or 'sample_fft'"
+    cent = (
+        emb.orderBy("vec_id")
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("vec_id"),
+            "embedding",
         )
-    if seeding == "sample_fft":
-        cent = _sample_fft_centroids(spark, emb, k).localCheckpoint(
-            eager=True
-        )
-    else:
-        cent = (
-            emb.orderBy("vec_id")
-            .limit(k)
-            .select(
-                (
-                    F.row_number().over(Window.orderBy("vec_id")) - 1
-                ).alias("vec_id"),
-                "embedding",
-            )
-            .localCheckpoint(eager=True)
-        )
+        .localCheckpoint(eager=True)
+    )
     d = _exploded(emb, "vid", "dv").localCheckpoint(eager=False)
-    for _ in range(iters):
+    for _ in range(IVF_BUILD_ITERS):
         assign = ivf_assign(spark, emb, cent, n=1).select("vid", "cell")
         means = (
             d.join(assign, "vid")
@@ -2478,10 +2292,7 @@ def sim_ivf_kmeans_topk(
     spark: SparkSession,
     sf_dir: str,
     certify: bool = True,
-    cells: int | None = None,
-    n_probe: int | None = None,
     probe_ids: tuple[int, ...] = QUERY_IDS,
-    iters: int = 1,
 ) -> DataFrame:
     """IVF-flat ANN over a k-means-trained coarse quantizer: train
     centroids in-engine (kmeans_centroids), assign data to cells, probe
@@ -2490,22 +2301,22 @@ def sim_ivf_kmeans_topk(
 
     vs sim_ivf_topk's fixed seed centroids: trained cells track the data
     distribution, so probes recover more true neighbors at the same
-    probe budget.  Default iters=1 per the round-10 POPULATION-recall
-    sweep (RECALL.md "Round-10 probe-bias correction"): unbiased
-    md5-random probes measure 0.424 (iters=1) vs 0.427 (iters=3) —
+    probe budget.  One Lloyd round ({IVF_BUILD_ITERS}, the stored
+    index's training) per the round-10 POPULATION-recall sweep
+    (RECALL.md "Round-10 probe-bias correction"): unbiased md5-random
+    probes measure 0.424 (iters=1) vs 0.427 (iters=3) —
     statistically flat, so one Lloyd round keeps 3x of the build cost.
     (The round-8 numbers that read "more iterations hurt" — 0.95 at 1
     vs 0.91 at 3 — were an artifact of the biased 100-pair probe set
     and are superseded.)  Converged training only pays off on genuinely
-    clustered embeddings, where callers pass iters=3+."""
+    clustered embeddings."""
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    if cells is None:
-        cells = ivf_n_cells(emb.count())
-    if n_probe is None:
-        n_probe = ivf_n_probe(cells)
-    centroids = kmeans_centroids(spark, emb, cells, iters=iters)
-    return _ivf_search(spark, emb, centroids, certify, n_probe, probe_ids)
+    cells = ivf_n_cells(emb.count())
+    centroids = kmeans_centroids(spark, emb, cells)
+    return _ivf_search(
+        spark, emb, centroids, certify, ivf_n_probe(cells), probe_ids
+    )
 
 
 # ------------------------------------------------ offline IVF index
@@ -2523,10 +2334,9 @@ def sim_ivf_kmeans_topk(
 # while Lloyd rounds, which move centroids off the probes, looked like
 # regressions (0.95/0.91).  On an UNBIASED md5-random 150-probe sample
 # at sf0.1 the ordering inverts: population recall@5 is 0.348 for
-# iters=0 vs 0.424 (first/1), 0.427 (first/3), 0.451 (sample_fft/3).
-# Default is now ONE Lloyd round — captures nearly all of the
-# population-recall gain at one extra assignment pass; sample_fft/3
-# buys +0.027 more at 3x build cost (keywords available).  RECALL.md
+# iters=0 vs 0.424 (iters=1), 0.427 (iters=3).
+# Training is ONE Lloyd round — captures nearly all of the
+# population-recall gain at one extra assignment pass.  RECALL.md
 # "Round-10 probe-bias correction" records the full sweep.
 IVF_BUILD_ITERS = 1
 
@@ -2698,8 +2508,6 @@ def build_ivf_index(
     index_dir: str | None = None,
     cells: int | None = None,
     n_probe: int | None = None,
-    iters: int = IVF_BUILD_ITERS,
-    seeding: str = "first",
     emb: DataFrame | None = None,
 ) -> str:
     """Train-once IVF index build: k-means centroids + the corpus-wide
@@ -2708,10 +2516,12 @@ def build_ivf_index(
     training is fully deterministic, so an existing index for the same
     parameters is reused as-is (the default dir is keyed on them).
 
-    Default ``iters=IVF_BUILD_ITERS`` (1 Lloyd round — the round-10
-    POPULATION-recall winner after the probe-bias correction in
-    RECALL.md; the round-9 iters=0 default was an artifact of probing
-    the seed vectors themselves).
+    Training is ``IVF_BUILD_ITERS`` (1) Lloyd round from first-k
+    seeds — the round-10 POPULATION-recall winner after the probe-bias
+    correction in RECALL.md (the round-9 iters=0 default was an
+    artifact of probing the seed vectors themselves).  The meta row
+    still records ``iters`` and ``seeding`` so indexes stay
+    comparable across builds.
 
     This is where the n·cells assignment cost lives at production
     scale — paid once per corpus version, amortized over every query
@@ -2732,7 +2542,8 @@ def build_ivf_index(
         n_probe = ivf_n_probe(cells)
     if index_dir is None:
         key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|{cells}|{n_probe}|{iters}|{seeding}"
+            f"{os.path.abspath(sf_dir)}|{cells}|{n_probe}"
+            f"|{IVF_BUILD_ITERS}|first"
             .encode()
         ).hexdigest()[:12]
         index_dir = _scratch(f"ivf_index_{key}")
@@ -2743,14 +2554,13 @@ def build_ivf_index(
             "n_built": int(n),
             "cells": int(cells),
             "n_probe": int(n_probe),
-            "iters": int(iters),
-            "seeding": seeding,
+            "iters": IVF_BUILD_ITERS,
+            "seeding": "first",
         },
     ):
         return index_dir  # deterministic build + same params → reuse
     meta_dir = os.path.join(index_dir, "meta")
-    centroids = kmeans_centroids(spark, emb, cells, iters=iters,
-                                 seeding=seeding)
+    centroids = kmeans_centroids(spark, emb, cells)
     assign = ivf_assign(spark, emb, centroids, n=1).select(
         "vid", F.col("cell").alias("data_cell")
     )
@@ -2766,7 +2576,7 @@ def build_ivf_index(
         "data_cell"
     ).mode("overwrite").parquet(os.path.join(index_dir, "assignments"))
     spark.createDataFrame(
-        [(int(n), int(cells), int(n_probe), int(iters), seeding, int(n))],
+        [(int(n), int(cells), int(n_probe), IVF_BUILD_ITERS, "first", int(n))],
         "n_vectors long, cells int, n_probe int, iters int,"
         " seeding string, n_built long",
     ).write.mode("overwrite").parquet(meta_dir)
@@ -2974,11 +2784,11 @@ def sim_ivf_stored_topk(
     plan contains no k-means training and no corpus-wide assignment
     pass, only (tiny query set → n_probe cells) assignment, an
     inverted-list fetch, and the exact top-k within candidates.
-    Identical results to the self-contained operator built with the
-    same training configuration (``sim_ivf_kmeans_topk`` at the
-    default ``IVF_BUILD_ITERS=1``; ``sim_ivf_topk`` for an ``iters=0``
-    seeded build) at a fraction of its per-query cost — the
-    train-once/probe-many split a production deployment runs.
+    Identical results to the self-contained operator with the same
+    training (``sim_ivf_kmeans_topk``, whose in-plan training is the
+    same ``IVF_BUILD_ITERS=1`` round) at a fraction of its per-query
+    cost — the train-once/probe-many split a production deployment
+    runs.
     """
     import os
 
@@ -3003,6 +2813,7 @@ def sim_ivf_stored_topk(
 PQ_M = 4  # subspaces
 PQ_DIMS = 16  # dims per subspace (64-dim embeddings)
 PQ_K = 16  # codewords per subspace → 4 bits/subspace, 16 bits/vector
+PQ_ITERS = 2  # L2 Lloyd rounds per subspace codebook
 PQ_SHORTLIST = 128  # base ADC shortlist (corpus <= ANN_BASE_N vectors)
 PQ_SHORTLIST_MAX = 1024
 
@@ -3021,7 +2832,7 @@ def pq_shortlist(n: int) -> int:
     the absolute candidate count rising while the shortlist fraction
     C/n falls beyond ~4k vectors.  The +192 slope was chosen jointly
     with the adaptive ``pq_codewords`` default on the 20-probe/100-pair
-    metric (tools/pq_probe_sweep.py): at sf0.1 (n=2000 → k=64, C=512)
+    metric (frozen sweep, RECALL.md): at sf0.1 (n=2000 → k=64, C=512)
     recall@5 is 0.97 wide-probe / 0.933 on the legacy 3-probe set —
     dominating the old fixed (k=16, C=256) default's 0.83/0.933;
     RECALL.md records the full sweep."""
@@ -3045,7 +2856,7 @@ def pq_codewords(n: int) -> int:
     The operator DEFAULT since round 7: the original 3-probe k-sweep
     looked non-monotonic (k=16→0.93, 32→0.80, 64→0.73, 128→0.93 at
     C=256), but its 15-pair ground truth has recall quantum 0.067 —
-    the 20-probe/100-pair re-sweep (tools/pq_probe_sweep.py) is
+    the frozen 20-probe/100-pair re-sweep (RECALL.md) is
     cleanly monotone (0.83 → 0.88 → 0.91 → 0.94 at sf0.1), confirming
     code width, not the trainer, was the binding constraint and the
     apparent regressions were single-pair noise.  Cost: codebooks stay
@@ -3285,7 +3096,7 @@ def _assign_l2(sub: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _pq_kmeans_l2(sub: DataFrame, k: int, iters: int) -> DataFrame:
+def _pq_kmeans_l2(sub: DataFrame, k: int) -> DataFrame:
     """Lloyd's k-means under SQUARED-L2 assignment — what PQ minimizes.
     (kmeans_centroids assigns by cosine, right for the IVF coarse
     quantizer but wrong for subspace codebooks: on low-dim subvectors
@@ -3305,7 +3116,7 @@ def _pq_kmeans_l2(sub: DataFrame, k: int, iters: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     d = _exploded(sub, "vid", "dv").localCheckpoint(eager=False)
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         assign = _assign_l2(sub, cent)
         means = (
             d.join(assign, "vid")
@@ -3331,7 +3142,7 @@ def _pq_kmeans_l2(sub: DataFrame, k: int, iters: int) -> DataFrame:
 
 
 def pq_train_encode(
-    spark: SparkSession, emb: DataFrame, k: int = PQ_K, iters: int = 2
+    spark: SparkSession, emb: DataFrame, k: int = PQ_K
 ) -> tuple[DataFrame, DataFrame]:
     """→ (codebooks, codes): per-subspace k-means codebooks
     (m, code, embedding) and the encoded corpus (vid, m, code).
@@ -3346,7 +3157,7 @@ def pq_train_encode(
         sub = emb.select(
             "vec_id", F.slice("embedding", m * PQ_DIMS + 1, PQ_DIMS).alias("embedding")
         )
-        cent = _pq_kmeans_l2(sub, k, iters=iters)
+        cent = _pq_kmeans_l2(sub, k)
         books.append(
             cent.select(
                 F.lit(m).alias("m"), F.col("vec_id").alias("code"), "embedding"
@@ -3368,16 +3179,13 @@ def sim_pq_adc_topk(
     spark: SparkSession,
     sf_dir: str,
     certify: bool = True,
-    shortlist: int | None = None,
-    codewords: int | None = None,
     probe_ids: tuple[int, ...] = QUERY_IDS,
 ) -> DataFrame:
     """PQ + asymmetric distance computation (ADC), used the way
     production ANN uses it: the 16-bit-code scan ranks a SHORTLIST
-    (corpus-adaptive ``pq_shortlist(n)``; ``shortlist`` overrides for
-    the RECALL.md sweep) by table-lookup distance, and only the
-    shortlist's full vectors are fetched for exact re-ranking to the
-    final top-k.
+    (corpus-adaptive ``pq_shortlist(n)``) by table-lookup distance,
+    and only the shortlist's full vectors are fetched for exact
+    re-ranking to the final top-k.
 
     On this corpus the neighbor gaps sit below PQ quantization error
     (distance concentration), so raw ADC ranks are noisy — but the
@@ -3393,22 +3201,15 @@ def sim_pq_adc_topk(
     """
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    if codewords is None or shortlist is None:
-        # counted only when a size is derived from it (an explicit
-        # sweep call passing both must not pay a corpus scan)
-        n = emb.count()
-    if codewords is None:
-        # corpus-adaptive k (round-7 flip): the original 3-probe
-        # k-sweep was non-monotonic, but that was 15-pair metric noise
-        # — the 20-probe/100-pair re-sweep (tools/pq_probe_sweep.py)
-        # is cleanly monotone (k=16→0.83, 32→0.88, 64→0.91, 128→0.94
-        # at sf0.1), so constant-cell-occupancy sizing is the default.
-        codewords = pq_codewords(n)
-    if shortlist is None:
-        shortlist = pq_shortlist(n)  # corpus-adaptive C
-    books, codes = pq_train_encode(spark, emb, codewords)
+    n = emb.count()
+    # corpus-adaptive k (round-7 flip): the original 3-probe k-sweep
+    # was non-monotonic, but that was 15-pair metric noise — the
+    # frozen 20-probe/100-pair re-sweep (RECALL.md) is cleanly
+    # monotone (k=16→0.83, 32→0.88, 64→0.91, 128→0.94 at sf0.1), so
+    # constant-cell-occupancy sizing is the rule.
+    books, codes = pq_train_encode(spark, emb, pq_codewords(n))
     return _pq_adc_probe(
-        spark, emb, books, codes, certify, shortlist, probe_ids
+        spark, emb, books, codes, certify, pq_shortlist(n), probe_ids
     )
 
 
@@ -3525,9 +3326,7 @@ def build_pq_index(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str | None = None,
-    codewords: int | None = None,
     shortlist: int | None = None,
-    iters: int = 2,
     emb: DataFrame | None = None,
 ) -> str:
     """Train-once PQ index build: per-subspace codebooks + the encoded
@@ -3546,13 +3345,12 @@ def build_pq_index(
         t = Tables(spark, sf_dir)
         emb = t.embeddings.select("vec_id", "embedding")
     n = emb.count()
-    if codewords is None:
-        codewords = pq_codewords(n)
+    codewords = pq_codewords(n)
     if shortlist is None:
         shortlist = pq_shortlist(n)
     if index_dir is None:
         key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|{codewords}|{shortlist}|{iters}"
+            f"{os.path.abspath(sf_dir)}|{codewords}|{shortlist}|{PQ_ITERS}"
             .encode()
         ).hexdigest()[:12]
         index_dir = _scratch(f"pq_index_{key}")
@@ -3563,16 +3361,16 @@ def build_pq_index(
             "n_built": int(n),
             "codewords": int(codewords),
             "shortlist": int(shortlist),
-            "iters": int(iters),
+            "iters": PQ_ITERS,
         },
     ):
         return index_dir
     meta_dir = os.path.join(index_dir, "meta")
-    books, codes = pq_train_encode(spark, emb, codewords, iters=iters)
+    books, codes = pq_train_encode(spark, emb, codewords)
     books.write.mode("overwrite").parquet(os.path.join(index_dir, "books"))
     codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
     spark.createDataFrame(
-        [(int(n), int(codewords), int(shortlist), int(iters), int(n))],
+        [(int(n), int(codewords), int(shortlist), PQ_ITERS, int(n))],
         "n_vectors long, codewords int, shortlist int, iters int,"
         " n_built long",
     ).write.mode("overwrite").parquet(meta_dir)
@@ -3738,9 +3536,6 @@ def build_ivfpq_index(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str | None = None,
-    codewords: int | None = None,
-    shortlist: int | None = None,
-    iters: int = 2,
 ) -> str:
     """Train-once RESIDUAL IVFPQ index: the PQ codebooks are trained on
     residuals x − centroid(cell(x)) — the FAISS IVFPQ refinement — so
@@ -3758,13 +3553,10 @@ def build_ivfpq_index(
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
     n = emb.count()
-    if codewords is None:
-        codewords = pq_codewords(n)
-    if shortlist is None:
-        shortlist = pq_shortlist(n)
+    codewords, shortlist = pq_codewords(n), pq_shortlist(n)
     if index_dir is None:
         key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|res|{codewords}|{shortlist}|{iters}"
+            f"{os.path.abspath(sf_dir)}|res|{codewords}|{shortlist}|{PQ_ITERS}"
             .encode()
         ).hexdigest()[:12]
         index_dir = _scratch(f"ivfpq_index_{key}")
@@ -3775,7 +3567,7 @@ def build_ivfpq_index(
             "n_built": int(n),
             "codewords": int(codewords),
             "shortlist": int(shortlist),
-            "iters": int(iters),
+            "iters": PQ_ITERS,
         },
     ):
         return index_dir
@@ -3795,11 +3587,11 @@ def build_ivfpq_index(
             ).alias("embedding"),
         )
     )
-    books, codes = pq_train_encode(spark, res, codewords, iters=iters)
+    books, codes = pq_train_encode(spark, res, codewords)
     books.write.mode("overwrite").parquet(os.path.join(index_dir, "books"))
     codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
     spark.createDataFrame(
-        [(int(n), int(codewords), int(shortlist), int(iters), int(n))],
+        [(int(n), int(codewords), int(shortlist), PQ_ITERS, int(n))],
         "n_vectors long, codewords int, shortlist int, iters int,"
         " n_built long",
     ).write.mode("overwrite").parquet(meta_dir)
@@ -4354,11 +4146,10 @@ def _sim_range_search_oracle() -> str:
 def sim_range_search(
     spark: SparkSession,
     sf_dir: str,
-    tau: float = RANGE_TAU,
     probe_ids: tuple[int, ...] = QUERY_IDS,
 ) -> DataFrame:
     """Cosine RANGE search (FAISS ``range_search`` shape): every
-    neighbor with cosine >= ``tau`` of each probe — the radius query a
+    neighbor with cosine >= {RANGE_TAU} of each probe — the radius query a
     dedup/recall pipeline runs when it wants ALL matches, not top-k.
     Candidates come from the banded hyperplane LSH index (bucket
     equality in any band — never all-pairs); the exact cosine filter
@@ -4424,7 +4215,7 @@ def sim_range_search(
         cands.join(embn, cands.vid == embn.vec_id)
         .join(broadcast(qv), "qid")
         .select("qid", "vid", cos_expr.alias("cosine"))
-        .where(F.col("cosine") >= tau)
+        .where(F.col("cosine") >= RANGE_TAU)
     )
     # exact full-corpus range set — the in-plan completeness certificate
     exact = (
@@ -4435,7 +4226,7 @@ def sim_range_search(
             F.col("vec_id").alias("vid"),
             cos_expr.alias("cosine"),
         )
-        .where(F.col("cosine") >= tau)
+        .where(F.col("cosine") >= RANGE_TAU)
         .select("qid", "vid")
     )
     hits = (
@@ -4466,7 +4257,7 @@ from kachess_spark.registry import add_oracle as _add_oracle  # noqa: E402
 _add_oracle("sim_ann_lsh", _sim_lsh_serving_oracle())
 _add_oracle("sim_ivf_topk", _sim_ivf_serving_oracle(0))
 _add_oracle("sim_ivf_stored_topk", _sim_ivf_serving_oracle(IVF_BUILD_ITERS))
-_add_oracle("sim_ivf_kmeans_topk", _sim_ivf_serving_oracle(1))
+_add_oracle("sim_ivf_kmeans_topk", _sim_ivf_serving_oracle(IVF_BUILD_ITERS))
 _add_oracle("sim_pq_adc_topk", _sim_pq_serving_oracle())
 _add_oracle("sim_pq_stored_topk", _sim_pq_serving_oracle())
 _add_oracle("sim_ivfpq_stored_topk", _sim_ivfpq_stored_oracle())
@@ -4662,23 +4453,17 @@ def _sql_knn_refine_round(
     )"""
 
 
-def _sim_knn_graph_ivf_oracle(refine: int = KNN_GRAPH_REFINE) -> str:
-    """sim_knn_graph_ivf: stored-index chain (default-iters build) ->
+def _sql_ivf_graph_cands() -> str:
+    """The IVF-graph candidate chain shared by the sim_knn_graph_ivf /
+    _prescreened twins: stored-index chain (default-iters build) ->
     ALL-nodes graph-schedule probe (knn_graph_n_probe = 2x serving,
-    capped at cells) -> inverted-list candidates -> exact DECIMAL
-    cosine -> per-source top-KNN_K -> ``refine`` unrolled NN-descent
-    rounds (default {KNN_GRAPH_REFINE})."""
+    capped at cells) -> inverted-list candidates ``g_cand``."""
     cells = _sql_ivf_cells("n")
     serving = (
         f"CASE WHEN cells <= {N_CELLS} THEN {N_PROBE}"
         f" ELSE {N_PROBE} + {_sql_ceil_log2_ratio('cells', N_CELLS)} END"
     )
-    rounds = ",\n    ".join(
-        _sql_knn_refine_round(f"g_e{r}", r) for r in range(refine)
-    )
-    rounds = f",\n    {rounds}" if rounds else ""
-    return f"""
-    WITH {_sql_ivf_chain("TRUE", "g_")},
+    return f"""{_sql_ivf_chain("TRUE", "g_")},
     g_k AS (SELECT cells, LEAST(cells, 2 * ({serving})) AS np
             FROM (SELECT {cells} AS cells FROM g_par0)),
     g_qcos AS (
@@ -4701,9 +4486,26 @@ def _sim_knn_graph_ivf_oracle(refine: int = KNN_GRAPH_REFINE) -> str:
       SELECT DISTINCT pr.src, a.vid AS dst
       FROM g_asgF a JOIN g_qprobe pr ON a.cell = pr.cell
       WHERE a.vid <> pr.src
-    ),
-    {_sql_knn_score_rank("g_cand", "g_e0")}{rounds}
-    SELECT src, dst, cosine, rk FROM g_e{refine}
+    )"""
+
+
+def _sql_knn_graph_refine_rounds() -> str:
+    """The {KNN_GRAPH_REFINE} unrolled NN-descent round(s) the stored-
+    index graph builders run after their first scoring pass."""
+    rounds = ",\n    ".join(
+        _sql_knn_refine_round(f"g_e{r}", r) for r in range(KNN_GRAPH_REFINE)
+    )
+    return f",\n    {rounds}" if rounds else ""
+
+
+def _sim_knn_graph_ivf_oracle() -> str:
+    """sim_knn_graph_ivf: the IVF-graph candidates -> exact DECIMAL
+    cosine -> per-source top-KNN_K -> {KNN_GRAPH_REFINE} unrolled
+    NN-descent round(s)."""
+    return f"""
+    WITH {_sql_ivf_graph_cands()},
+    {_sql_knn_score_rank("g_cand", "g_e0")}{_sql_knn_graph_refine_rounds()}
+    SELECT src, dst, cosine, rk FROM g_e{KNN_GRAPH_REFINE}
     ORDER BY src, rk
 """
 
@@ -4736,47 +4538,13 @@ def _sim_knn_graph_incremental_oracle() -> str:
     {_sim_knn_graph_oracle(corpus="v2_corpus", n_src="embeddings")}"""
 
 
-def _sim_knn_graph_prescreened_oracle(
-    refine: int = KNN_GRAPH_REFINE,
-) -> str:
-    """sim_knn_graph_prescreened: the IVF-graph candidate chain, the
+def _sim_knn_graph_prescreened_oracle() -> str:
+    """sim_knn_graph_prescreened: the IVF-graph candidates, the
     {KNN_PRESCREEN_DIMS}-dim prefix-cosine prescreen (exact DECIMAL
     over pos <= prefix), top-{KNN_PRESCREEN_C} per node, full-width
     re-rank, unrolled NN-descent rounds."""
-    cells = _sql_ivf_cells("n")
-    serving = (
-        f"CASE WHEN cells <= {N_CELLS} THEN {N_PROBE}"
-        f" ELSE {N_PROBE} + {_sql_ceil_log2_ratio('cells', N_CELLS)} END"
-    )
-    rounds = ",\n    ".join(
-        _sql_knn_refine_round(f"g_e{r}", r) for r in range(refine)
-    )
-    rounds = f",\n    {rounds}" if rounds else ""
     return f"""
-    WITH {_sql_ivf_chain("TRUE", "g_")},
-    g_k AS (SELECT cells, LEAST(cells, 2 * ({serving})) AS np
-            FROM (SELECT {cells} AS cells FROM g_par0)),
-    g_qcos AS (
-      SELECT t.vid AS src, t.cell,
-             CAST(t.dot AS DOUBLE)
-               / SQRT(CAST(n.nn AS DOUBLE) * CAST(c.cn AS DOUBLE)) AS cos
-      FROM (SELECT d.vid, c.cell,
-                   SUM(CAST(d.dv * c.cv AS DECIMAL(28,14))) AS dot
-            FROM g_d d JOIN g_centF c USING (pos)
-            GROUP BY d.vid, c.cell) t
-      JOIN g_norms n ON n.vid = t.vid
-      JOIN g_asgF_cn c ON c.cell = t.cell
-    ),
-    g_qprobe AS (
-      SELECT src, cell FROM g_qcos
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, cell)
-        <= (SELECT np FROM g_k)
-    ),
-    g_cand AS (
-      SELECT DISTINCT pr.src, a.vid AS dst
-      FROM g_asgF a JOIN g_qprobe pr ON a.cell = pr.cell
-      WHERE a.vid <> pr.src
-    ),
+    WITH {_sql_ivf_graph_cands()},
     g_pn AS (
       SELECT vid, SUM(CAST(dv * dv AS DECIMAL(28,14))) AS pn
       FROM g_d WHERE pos <= {KNN_PRESCREEN_DIMS} GROUP BY vid
@@ -4802,17 +4570,15 @@ def _sim_knn_graph_prescreened_oracle(
         JOIN g_pn n2 ON n2.vid = p.src
       ) WHERE rn <= {KNN_PRESCREEN_C}
     ),
-    {_sql_knn_score_rank("g_short", "g_e0")}{rounds}
-    SELECT src, dst, cosine, rk FROM g_e{refine}
+    {_sql_knn_score_rank("g_short", "g_e0")}{_sql_knn_graph_refine_rounds()}
+    SELECT src, dst, cosine, rk FROM g_e{KNN_GRAPH_REFINE}
     ORDER BY src, rk
 """
 
 
 def _sim_knn_graph_descent_oracle(
-    k_work: int = KNN_DESCENT_K,
     tail: str | None = None,
     base_n: int = KNN_DESCENT_BASE_N,
-    max_unroll: int = KNN_DESCENT_MAX_UNROLL,
 ) -> str:
     """sim_knn_graph_descent: md5-banded init buckets, in-bucket pair
     seed, score+rank at the working degree, GATED unrolled NN-descent
@@ -4827,25 +4593,28 @@ def _sim_knn_graph_descent_oracle(
     is hash-certified, not just the refine chain.  An inactive round's
     adjacency CTE is empty and its output passes the previous graph
     through, so the extra unroll levels cost ~nothing at fixture
-    sizes.  The static unroll certifies n <= base_n·2^{{max_unroll -
-    {KNN_DESCENT_ROUNDS}}} (32k at the production base); past that the
+    sizes.  The static unroll certifies n <= base_n·2^({KNN_DESCENT_MAX_UNROLL}
+    - {KNN_DESCENT_ROUNDS}) (32k at the production base); past that the
     exhaustive oracle itself is the thing that no longer runs, while
     the Spark schedule keeps growing.  ``tail`` lets a composing
     operator (dedup_embedding_graph, sim_graph_stored_topk) replace
-    the final SELECT over g_e{{max_unroll}} with its own consumption
-    of the graph."""
+    the final SELECT over g_e{KNN_DESCENT_MAX_UNROLL} with its own
+    consumption of the graph."""
     if tail is None:
-        tail = f"""SELECT src, dst, cosine, rk FROM g_e{max_unroll} WHERE rk <= {KNN_K}
+        tail = f"""SELECT src, dst, cosine, rk FROM g_e{KNN_DESCENT_MAX_UNROLL}
+    WHERE rk <= {KNN_K}
     ORDER BY src, rk"""
     parts = []
-    for r in range(max_unroll):
+    for r in range(KNN_DESCENT_MAX_UNROLL):
         gate = (
             None
             if r < KNN_DESCENT_ROUNDS
             else "(SELECT COUNT(*) FROM embeddings)"
             f" > {base_n * 2 ** (r - KNN_DESCENT_ROUNDS)}"
         )
-        parts.append(_sql_knn_refine_round(f"g_e{r}", r, k=k_work, gate=gate))
+        parts.append(
+            _sql_knn_refine_round(f"g_e{r}", r, k=KNN_DESCENT_K, gate=gate)
+        )
     rounds_sql = ",\n    ".join(parts)
     rounds_sql = f",\n    {rounds_sql}" if rounds_sql else ""
     return f"""
@@ -4877,7 +4646,7 @@ def _sim_knn_graph_descent_oracle(
       JOIN g_binit b ON a.band = b.band AND a.bucket = b.bucket
       WHERE a.vid <> b.vid
     ),
-    {_sql_knn_score_rank("g_c0", "g_e0", k=k_work)}{rounds_sql}
+    {_sql_knn_score_rank("g_c0", "g_e0", k=KNN_DESCENT_K)}{rounds_sql}
     {tail}
 """
 

@@ -13,6 +13,7 @@ multi-executor cluster reading ~100 TB:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -37,24 +38,18 @@ def get_spark(app_name: str = "kachess_spark", master: str | None = None) -> Spa
         # 256-way initial keeps per-task state ~flat while AQE's 64 MB
         # advisory target folds small shuffles back to few tasks, so
         # sf0.1 walls are unchanged (BASELINE.md round-11).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("KACHESS_INITIAL_PARTITIONS", "256"),
-        )
-        # AQE coalescing minPartitionSize, env-tunable for A/B.  The
-        # round-14 global 256k experiment (widen every sub-parallelism
-        # shuffle) was a NET LOSS and is reverted to the 1m default:
-        # it fixed the descent builder's 2-3-task scoring stages but
-        # grew task counts suite-wide (serve maintenance 224 -> 1102,
-        # ivfpq_stored 107 -> 177, ingest gate 608 -> 857), and the
-        # per-task fixed costs outweighed the one builder's win.  The
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
+        # AQE coalescing minPartitionSize.  The round-14 global 256k
+        # experiment (widen every sub-parallelism shuffle) was a NET
+        # LOSS and is reverted to the 1m default: it fixed the descent
+        # builder's 2-3-task scoring stages but grew task counts
+        # suite-wide (serve maintenance 224 -> 1102, ivfpq_stored
+        # 107 -> 177, ingest gate 608 -> 857), and the per-task fixed
+        # costs outweighed the one builder's win.  The
         # under-parallelized Arrow scoring exchanges are widened
         # SURGICALLY instead (similarity._knn_refine_round's gated
         # spread) — see OPTIMIZATION_r14.md.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("KACHESS_MIN_PARTITION_SIZE", "1m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -69,21 +64,25 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally-provided session.
 
     The driver hands us its own SparkSession in ``__spark_entry__.entry``;
-    only runtime-mutable confs can be set there.
+    only runtime-mutable confs can be set there.  Confs this build
+    refuses are skipped and named in one warning.
     """
+    unset = []
     for k, v in [
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.autoBroadcastJoinThreshold", "64m"),
-        (
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("KACHESS_MIN_PARTITION_SIZE", "1m"),
-        ),
+        ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m"),
     ]:
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime conf on this build; keep going
+        except Exception as e:  # non-runtime conf on this build
+            unset.append(f"{k}={v} ({type(e).__name__})")
+    if unset:
+        warnings.warn(
+            "tune_for_session could not set: " + "; ".join(unset),
+            stacklevel=2,
+        )
     return spark

@@ -180,7 +180,9 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_new",
         F.when(
             F.lag("ts").over(w).isNull()
-            | (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w)) > 1800),
+            # microseconds, not unix_timestamp's whole seconds: a gap in
+            # (1800, 1801) s starts a session, as epoch(ts) does in SQL
+            | (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)) > 1800 * 10**6),
             1,
         ).otherwise(0),
     )

@@ -982,3 +982,14 @@ def test_activity_count_substituted(spark):
     assert not sess.skipped
     names = {it.name for d in sess.store.datasets for it in d.items}
     assert {"col101s", "rows_touched"} <= names
+
+
+def test_syntax_check_returns_none_or_parser_message(spark):
+    """The parse-only gate: a statement that parses gives None, a
+    malformed one gives the Catalyst parser's own message."""
+    from kachess_spark.lineage.planjson import syntax_check
+
+    assert syntax_check(spark, "SELECT a, b FROM t WHERE a > 1") is None
+    msg = syntax_check(spark, "SELEC a FROM t")
+    assert isinstance(msg, str)
+    assert "PARSE_SYNTAX_ERROR" in msg and "'SELEC'" in msg, msg

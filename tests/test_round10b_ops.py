@@ -358,18 +358,6 @@ def test_snapshot_diff_counts_reconcile(spark, sf_dir, duck):
     assert got.get("added", 0) == n_added
 
 
-def test_kmeans_seeding_rejects_unknown_keyword(spark, sf_dir):
-    """A typo'd seeding string must fail loudly, not silently fall back
-    to first-k seeding (that silent fallback masked half of a round-10
-    recall sweep)."""
-    from kachess_spark.catalog import Tables
-    from kachess_spark.pipeline.similarity import kmeans_centroids
-
-    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    with pytest.raises(ValueError, match="unknown seeding"):
-        kmeans_centroids(spark, emb, 8, iters=0, seeding="fft")
-
-
 def test_knn_graph_ivf_structure(spark, sf_dir, tmp_path):
     """Stored-IVF graph: every node gets exactly KNN_K edges (cells are
     far larger than K at every fixture sf), ranks are 1..K, and no

@@ -219,3 +219,91 @@ def test_update_graph_serve_state_serves_maintained_graph(
     for q in qids:
         rks = sorted(r["rk"] for r in served if r["qid"] == q)
         assert rks == list(range(1, TOP_K + 1))
+
+
+def _edges(df) -> list[tuple]:
+    """(src, dst, cosine) rows sorted by key, cosines as float.hex() so
+    +0.0 / -0.0 and the last ulp count; NULL stays None (equal to
+    None)."""
+    return sorted(
+        (r["src"], r["dst"], None if r["cosine"] is None else r["cosine"].hex())
+        for r in df.collect()
+    )
+
+
+# element values whose shortest repr ends in 5 at the 1e-15 place, and
+# whose plain float64 |p|·1e14 rounds the OTHER way — only the guard
+# band's exact Decimal(repr) slow path gets them right
+_GUARD_VALUES = (0.269786713763875, 0.321869391075945, 0.148764012232505)
+
+
+def test_cosine_kernel_matches_jvm_fold(spark, sf_dir):
+    """The Arrow cosine kernel (_cosine_kernel) equals the JVM
+    aggregate(zip_with) DECIMAL fold row for row, NULLs included, on
+    the plain and the mirrored path: over the fixture corpus on a fixed
+    candidate set, and over hand-built vectors that take each of the
+    kernel's exact branches — the .5e-14 guard band, the |x·y| > 1e3
+    exact row fold (also past int64 units), a negative cosine rounding
+    to +0.0, and the DECIMAL(28,14) overflow-to-NULL contract.  The
+    hand-built set runs with ANSI mode off: that NULL contract is the
+    one the kernel replicates (under ANSI the JVM cast raises)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from kachess_spark.catalog import Tables
+    from kachess_spark.pipeline.similarity import _exact_cosine_edges
+
+    def check(emb, cands):
+        for mirror in (False, True):
+            arrow = _edges(_exact_cosine_edges(emb, cands, mirror=mirror))
+            jvm = _edges(
+                _exact_cosine_edges(emb, cands, mirror=mirror, engine="jvm")
+            )
+            assert arrow == jvm, (mirror, set(arrow) ^ set(jvm))
+        return arrow
+
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    ids = F.col("vec_id")
+    cands = (
+        emb.select(ids.alias("src"))
+        .crossJoin(emb.select(ids.alias("dst")))
+        .where(F.col("src") < F.col("dst"))
+        .where((F.col("src") * 7 + F.col("dst")) % 50 == 0)
+    )
+    assert len(check(emb, cands)) > 1000
+
+    # the guard values really sit where the float fast path is wrong
+    for v in _GUARD_VALUES:
+        exact = Decimal(repr(v)).quantize(Decimal("1E-14"), ROUND_HALF_UP)
+        assert round(v * 1e14) != int(exact.scaleb(14)), v
+
+    g1, g2, g3 = _GUARD_VALUES
+    hand_built = [
+        (1, [g1, -g2, g3, 5e-15]),  # guard band, both signs, 0.5 units
+        (2, [1.0, 1.0, 1.0, 1.0]),
+        (3, [g2, g3, -g1, 1.0]),
+        (4, [100.0, 50.0, 0.25, 3.0]),  # |x·y| > 1e3: exact row fold
+        (5, [1000.0, 300.0, 1.0, -1.0]),  # exact fold past int64 units
+        (6, [1.0, 0.0, 0.0, 0.0]),
+        (7, [-1e-8, 1.0, 0.0, 0.0]),  # cosine -1e-8 rounds to +0.0
+        (8, [1e7, 1.0, 1.0, 1.0]),  # 1e14 element: the cast overflows
+        (9, [7e6, 7e6, 7e6, 1.0]),  # 4.9e13 each: the running sum does
+    ]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = check(
+            spark.createDataFrame(
+                hand_built, "vec_id long, embedding array<double>"
+            ),
+            spark.createDataFrame(
+                [(a, b) for a, _ in hand_built for b, _ in hand_built if a < b],
+                "src long, dst long",
+            ),
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert (6, 7, (0.0).hex()) in got
+    # every pair touching 8 or 9 (overflowing norms) and only those
+    assert {(a, b) for a, b, c in got if c is None} == {
+        (a, b) for a, b, _ in got if {a, b} & {8, 9}
+    }

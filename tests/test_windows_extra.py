@@ -63,3 +63,53 @@ def test_drawdown_corpus_is_nonvacuous(spark, sf_dir):
     nonzero = got.where(F.col("max_drawdown_scaled") > 0).count()
     assert total > 0
     assert nonzero >= total // 2
+
+
+def test_session_gap_uses_fractional_seconds(spark, tmp_path):
+    """stream_session_stats splits a session where the gap exceeds
+    1800 s to the microsecond, as its DuckDB oracle's epoch(ts) does:
+    gaps of exactly 1800 s stay in the session, 1800.5 s and 1801 s
+    start a new one.  Whole-second unix_timestamp differences read the
+    1800.5 s gaps as 1800 and merged those sessions."""
+    import duckdb
+
+    from kachess_spark.streaming.windows import (
+        _SESSION_ORACLE,
+        session_window_stats,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
+    s = datetime.timedelta(seconds=1)
+    user1 = [t0, t0 + 1800 * s, t0 + 3600.5 * s, t0 + 5401.5 * s]
+    user2 = [t0 + 0.25 * s, t0 + 1800.75 * s]  # 1800.5 s across a second
+    rows = [
+        (i, u, ts, "click", float(i + 1))
+        for i, (u, ts) in enumerate(
+            [(1, ts) for ts in user1] + [(2, ts) for ts in user2]
+        )
+    ]
+    sf = _write_events(spark, tmp_path, rows)
+
+    got = [
+        tuple(r)
+        for r in session_window_stats(spark, sf)
+        .select("user_id", "session_no", "n_events", "session_value")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM"
+        f" read_parquet('{sf}/events.parquet/*.parquet')"
+    )
+    want = [
+        tuple(r)
+        for r in con.execute(
+            "SELECT user_id, session_no, n_events, session_value"
+            f" FROM ({_SESSION_ORACLE}) ORDER BY 1, 2"
+        ).fetchall()
+    ]
+    con.close()
+    assert got == want
+    assert [(u, n) for u, _, n, _ in got] == [
+        (1, 2), (1, 1), (1, 1), (2, 1), (2, 1)
+    ]

@@ -105,43 +105,11 @@ def main() -> None:
         "IVF/PQ analogous). PQ-ADC re-ranks its shortlist exactly, so",
         "its misses are shortlist misses, not quantization error.",
         "",
-        "## LSH recall vs band count (the ann_n_bands justification)",
-        "",
-        "recall@5 at each band count, largest sf swept; `<-` marks the",
-        "band count `ann_n_bands` auto-selects for that corpus size.",
-        "More bands monotonically raise recall at linear candidate",
-        "cost — the sweep shows the adaptive choice sits at the knee.",
-        "",
-        "| sf | bands | hits | recall | |",
-        "|---|---|---|---|---|",
     ]
-    from kachess_spark.pipeline.similarity import ann_n_bands
-
-    sweep_sf = sf_dirs[-1]
-    exact = topk_sets(registry.QUERIES["sim_cosine_topk"](spark, sweep_sf))
-    denom = sum(len(v) for v in exact.values())
-    n_vec = (
-        registry.QUERIES["sim_cosine_topk"]  # corpus size via embeddings
-        and spark.read.parquet(os.path.join(sweep_sf, "embeddings.parquet")).count()
-    )
-    auto = ann_n_bands(n_vec)
-    for bands in (8, 16, 24, 32, 48):
-        got = topk_sets(
-            registry.QUERIES["sim_ann_lsh"].__wrapped__(spark, sweep_sf, bands)
-            if hasattr(registry.QUERIES["sim_ann_lsh"], "__wrapped__")
-            else registry.QUERIES["sim_ann_lsh"](spark, sweep_sf, bands)
-        )
-        hit = sum(len(exact[q] & got.get(q, set())) for q in exact)
-        mark = "<- auto" if bands == auto else ""
-        lines.append(
-            f"| {os.path.basename(sweep_sf)} | {bands} | {hit}/{denom} "
-            f"| {hit / denom:.2f} | {mark} |"
-        )
-        print(f"sweep bands={bands}: {hit}/{denom}")
-    lines.append("")
-    # preserve hand-recorded sweep sections (PQ codebook/shortlist
-    # sweeps, int8 recall, ...) below the marker — regeneration must
-    # not destroy evidence the auto section doesn't produce
+    # preserve hand-recorded sweep sections (LSH band count, PQ
+    # codebook/shortlist sweeps, int8 recall, ...) below the marker —
+    # regeneration must not destroy evidence the auto section doesn't
+    # produce
     path = os.path.join(REPO, "RECALL.md")
     manual = ""
     if os.path.exists(path):
