@@ -129,23 +129,53 @@ HEADLINE = [
 ]
 
 
-def _stage_snapshot(spark) -> dict[int, tuple[int, int, int, int]]:
-    """stageId -> (inputBytes, shuffleReadBytes, shuffleWriteBytes, tasks)."""
+def stage_snapshot(spark) -> dict[tuple[int, int], tuple]:
+    """Every stage in the JVM AppStatusStore: (stageId, attemptId) ->
+    (name, executorRunTime ms, executorCpuTime ns, inputBytes,
+    shuffleReadBytes, shuffleWriteBytes, numTasks, numCompleteTasks).
+    The one status-store walk; ``tools/profile_stages.py`` and
+    ``tools/bench_some.py`` import it from here."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     empty = sc._jvm.java.util.ArrayList()
     defaults = [getattr(store, f"stageList$default${i}")() for i in range(2, 6)]
-    out: dict[int, tuple[int, int, int, int]] = {}
+    out: dict[tuple[int, int], tuple] = {}
     it = store.stageList(empty, *defaults).iterator()
     while it.hasNext():
         sd = it.next()
-        out[sd.stageId()] = (
+        out[(sd.stageId(), sd.attemptId())] = (
+            sd.name(),
+            sd.executorRunTime(),
+            sd.executorCpuTime(),
             sd.inputBytes(),
             sd.shuffleReadBytes(),
             sd.shuffleWriteBytes(),
             sd.numTasks(),
+            sd.numCompleteTasks(),
         )
     return out
+
+
+def prep_indexes(spark, dirs) -> None:
+    """Offline index prep (untimed): build or reuse, for each corpus
+    dir, every stored ANN index and graph state the serving queries
+    read.  A production deployment builds these once per corpus
+    version; build costs are benchmarked separately as scale probes
+    (BASELINE.md round-8 sections)."""
+    from kachess_spark.pipeline.similarity import (
+        build_graph_serve_state,
+        build_ivf_index,
+        build_ivfpq_index,
+        build_knn_state,
+        build_pq_index,
+    )
+
+    for d in dirs:
+        build_ivf_index(spark, d)
+        build_pq_index(spark, d)
+        build_ivfpq_index(spark, d)
+        build_knn_state(spark, d)
+        build_graph_serve_state(spark, d)
 
 
 def _profile_delta(before, after) -> dict[str, float]:
@@ -153,7 +183,7 @@ def _profile_delta(before, after) -> dict[str, float]:
     for sid, m in after.items():
         if sid not in before:
             for i in range(4):
-                tot[i] += m[i]
+                tot[i] += m[3 + i]
     mb = 1024 * 1024
     return {
         "input_mb": round(tot[0] / mb, 2),
@@ -200,24 +230,7 @@ def main() -> None:
     )
     have_warm = os.path.isdir(warm_dir)
 
-    # offline index prep (untimed): the stored-index ANN probes serve
-    # from indexes a production deployment builds once per corpus
-    # version; build costs are benchmarked separately as scale probes
-    # (BASELINE.md round-8 sections)
-    from kachess_spark.pipeline.similarity import (
-        build_graph_serve_state,
-        build_ivf_index,
-        build_ivfpq_index,
-        build_knn_state,
-        build_pq_index,
-    )
-
-    for d in ([warm_dir] if have_warm else []) + [sf_dir]:
-        build_ivf_index(spark, d)
-        build_pq_index(spark, d)
-        build_ivfpq_index(spark, d)
-        build_knn_state(spark, d)
-        build_graph_serve_state(spark, d)
+    prep_indexes(spark, ([warm_dir] if have_warm else []) + [sf_dir])
 
     import gc
 
@@ -249,13 +262,13 @@ def main() -> None:
         # JVM can reclaim them — without this, checkpoint blocks pile up
         # across the ~40-query session and late queries pay GC stalls
         gc.collect()
-        before = _stage_snapshot(spark) if profile else None
+        before = stage_snapshot(spark) if profile else None
         t0 = time.perf_counter()
         # count() forces full execution without driver-side materialization
         fn(spark, sf_dir).count()
         per_query[name] = round(time.perf_counter() - t0, 3)
         if profile:
-            per_profile[name] = _profile_delta(before, _stage_snapshot(spark))
+            per_profile[name] = _profile_delta(before, stage_snapshot(spark))
         # operators that persist() intermediates (funnel, tf-idf pairs)
         # must not leak InMemoryRelations into later queries' timings —
         # clear between queries so each one measures a cold cache

@@ -460,6 +460,10 @@ class LineageSession:
                     else:
                         it.parents |= other.items[i].parents
             if not other_shared:
+                # the dropped branch's predicates now belong to `first`
+                for it in other.filter_items + other.join_items:
+                    it.dataset_id = first.id
+                    self.store.item_owner[it.id] = first.id
                 first.filter_items.extend(other.filter_items)
                 first.join_items.extend(other.join_items)
                 if other in self.store.datasets:

@@ -170,16 +170,6 @@ DASHBOARD_DATASET_SCHEMA = T.StructType(
 )
 
 
-class _RelList:
-    """Append-only view that dedups into a set (upsert semantics)."""
-
-    def __init__(self, backing: set):
-        self._s = backing
-
-    def append(self, row: tuple) -> None:
-        self._s.add(row)
-
-
 class IdGen:
     """Seeded deterministic IDs (util/AutoIncrement.java:12-27)."""
 
@@ -201,7 +191,6 @@ def frames(spark: SparkSession, store: "GraphStore") -> dict[str, DataFrame]:
     # + INSERT IGNORE semantics (db_setup_ddl.sql:90-100,
     # LineageDbService.addSelectColumnPair:50-66)
     rel_set: set[tuple[int, int, str]] = set()
-    rel_rows = _RelList(rel_set)
     for d in store.datasets:
         all_items = list(d.items) + d.filter_items + d.join_items
         if d._asterisk_item is not None:
@@ -212,17 +201,17 @@ def frames(spark: SparkSession, store: "GraphStore") -> dict[str, DataFrame]:
                  it.data_type, it.usage_context, it.position)
             )
             for pid in sorted(it.parents):
-                rel_rows.append((pid, it.id, it.usage_context))
+                rel_set.add((pid, it.id, it.usage_context))
     # coarse WHERE/JOIN propagation: every output column also depends on the
     # filter/join columns, labeled by context (Dataset.java:205-223)
     for d in store.datasets:
         for it in d.items:
             for fl in d.filter_items:
                 for pid in sorted(fl.parents):
-                    rel_rows.append((pid, it.id, CTX_WHERE))
+                    rel_set.add((pid, it.id, CTX_WHERE))
             for jn in d.join_items:
                 for pid in sorted(jn.parents):
-                    rel_rows.append((pid, it.id, CTX_JOIN))
+                    rel_set.add((pid, it.id, CTX_JOIN))
     # dataset edges derived from item parentage (reference writes them
     # explicitly in DatasetPool.flush, DatasetPool.java:244-250)
     dsrel: set[tuple[int, int]] = set()

@@ -424,7 +424,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 COS_THRESHOLD = 0.35
 _SIGN_BITS = 8  # minimum bucket width: sign pattern of first 8 components
 _TARGET_BUCKET = 8  # aim for ~this many vectors per bucket
-PDEC = "decimal(28,14)"  # exact deterministic dot-product sums
 
 
 def emb_sign_bits(n_vectors: int, dim: int = 64) -> int:
@@ -542,17 +541,15 @@ def dedup_embedding_cosine(
     components);
     the plan shape (bucket → join → verify) is identical.
     """
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+
     t = Tables(spark, sf_dir)
     if sign_bits is None:
         sign_bits = emb_sign_bits(t.embeddings.count())
     # per-VECTOR norm computed once before the pair join (n folds, not
     # n·bucket/2), as an in-array DECIMAL fold — exact addition is
     # order-independent, so this matches the oracle's any-order SUM
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}),"
-        f" (acc, x) -> CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
+    norm = F.expr(_DEC_NORM)
     b = (
         t.embeddings.repartition(
             spark.sparkContext.defaultParallelism, "vec_id"
@@ -584,11 +581,7 @@ def dedup_embedding_cosine(
     # whole-stage codegen, no explode, no per-pair shuffle (the previous
     # posexplode → groupBy shape shuffled 64 rows per candidate pair —
     # the dominant cost at scale)
-    dot = F.expr(
-        f"aggregate(zip_with(ea, eb, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    dot = F.expr(_dec_dot("ea", "eb"))
     cos = F.round(
         F.col("dot").cast("double")
         / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
@@ -1182,15 +1175,13 @@ def sem_assign(embeddings: DataFrame, k: int) -> DataFrame:
     min(struct) argmin — the only shuffle is n rows keyed on vec_id.
 
     Returns (vec_id, cluster, cent_cos, embedding, nrm)."""
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+
     # single-row-group parquet → spread before the k·n CPU-bound folds
     embeddings = embeddings.repartition(
         embeddings.sparkSession.sparkContext.defaultParallelism, "vec_id"
     )
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}),"
-        f" (acc, x) -> CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
+    norm = F.expr(_DEC_NORM)
     emb = embeddings.select("vec_id", "embedding", norm.alias("nrm"))
     cent = F.broadcast(
         emb.orderBy("vec_id")
@@ -1201,11 +1192,7 @@ def sem_assign(embeddings: DataFrame, k: int) -> DataFrame:
             F.col("nrm").alias("cnrm"),
         )
     )
-    dot_vc = F.expr(
-        f"aggregate(zip_with(embedding, cemb, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    dot_vc = F.expr(_dec_dot("embedding", "cemb"))
     cent_cos = F.round(
         F.col("dvc").cast("double")
         / F.sqrt(F.col("nrm").cast("double") * F.col("cnrm").cast("double")),
@@ -1285,15 +1272,13 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
     probed groups is assigned to the best IN-PROBE centroid — cluster
     quality degrades gracefully, dedup semantics (pairs within a
     cluster) stay exact."""
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+
     spark = embeddings.sparkSession
     embeddings = embeddings.repartition(
         spark.sparkContext.defaultParallelism, "vec_id"
     )
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}),"
-        f" (acc, x) -> CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
+    norm = F.expr(_DEC_NORM)
     emb = embeddings.select("vec_id", "embedding", norm.alias("nrm"))
     k_coarse = sem_coarse_k(k_fine)
     fine = (
@@ -1315,11 +1300,7 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
         )
     )
     # fine -> coarse groups: broadcast argmin, the sem_assign idiom
-    dot_fc = F.expr(
-        f"aggregate(zip_with(cemb, gemb, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    dot_fc = F.expr(_dec_dot("cemb", "gemb"))
     fc_cos = F.round(
         F.col("dfc").cast("double")
         / F.sqrt(F.col("cnrm").cast("double") * F.col("gnrm").cast("double")),
@@ -1354,9 +1335,7 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
     )
     scores = (
         f"transform(garr, g -> struct("
-        f" round(CAST(aggregate(zip_with(embedding, g.gemb, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
+        f" round(CAST({_dec_dot('embedding', 'g.gemb')}"
         f" AS DOUBLE) / sqrt(CAST(nrm AS DOUBLE) * CAST(g.gnrm AS DOUBLE)),"
         f" 6) AS gcos, g.gid AS gid))"
     )
@@ -1378,11 +1357,7 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
         )
     )
     # candidates: the probed groups' fine centroids; exact argmin within
-    dot_vc = F.expr(
-        f"aggregate(zip_with(embedding, cemb, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    dot_vc = F.expr(_dec_dot("embedding", "cemb"))
     vc_cos = F.round(
         F.col("dvc").cast("double")
         / F.sqrt(F.col("nrm").cast("double") * F.col("cnrm").cast("double")),
@@ -1659,12 +1634,10 @@ def _sem_keep_tail(assigned: DataFrame) -> DataFrame:
     (vec_id, cluster, cent_cos, embedding, nrm): in-cluster pairs,
     exact DECIMAL cosine, drop every vector with a ≥ SEM_TAU neighbor
     of lower keep-priority (centroid-outlier rule, id tie-break)."""
+    from kachess_spark.pipeline.similarity import _dec_dot
+
     a, b = assigned.alias("a"), assigned.alias("b")
-    dot_pair = F.expr(
-        f"aggregate(zip_with(a.embedding, b.embedding, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    dot_pair = F.expr(_dec_dot("a.embedding", "b.embedding"))
     pair_cos = F.round(
         F.col("dp").cast("double")
         / F.sqrt(F.col("a.nrm").cast("double") * F.col("b.nrm").cast("double")),

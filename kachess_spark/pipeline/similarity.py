@@ -4,11 +4,17 @@ Brute-force cosine top-k as the exactness baseline, and an LSH-bucketed
 (random-hyperplane) variant as the scale path.
 
 Scale design: the *query* side is small → broadcast; the data side is
-never collected.  The dot product is computed relationally (explode →
-join on position → exact decimal sum): at 100 TB this is embarrassingly
-parallel, skew-free (position is uniform), and — because the per-pair
-products are summed as DECIMAL — bit-deterministic under any combine
-order, which float dot products are not.
+never collected.  Every dot product and squared norm is an exact
+DECIMAL(28,14) sum — bit-deterministic under any combine order, which
+float dot products are not — computed one of three ways:
+
+- ``cosine_topk``: relationally (explode → join on position → SUM),
+  embarrassingly parallel and skew-free at 100 TB;
+- JVM expressions: the one in-array fold ``_dec_fold`` (``_DEC_NORM``,
+  ``_dec_dot``), used by the ANN rankers, recall certificates, plane
+  projections and ``dedup.py``;
+- the Arrow kernel (``_cosine_kernel.py``), bit-equal to the fold and
+  the default scorer of ``_exact_cosine_edges`` (the graph family).
 """
 
 from __future__ import annotations
@@ -26,6 +32,38 @@ TOP_K = 5
 # products of two float32s are exact in double; DECIMAL(28,14) keeps 14
 # decimals — exact deterministic sums, ~1e-14 quantization per element.
 PDEC = "decimal(28,14)"
+
+
+def _dec_fold(arr: str, var: str, term: str) -> str:
+    """The exact-DECIMAL fold as SQL text: ``aggregate`` over ``arr``
+    from a PDEC zero, adding the PDEC ``term`` of each element ``var``
+    and re-casting every partial sum to PDEC.  The only definition of
+    the fold; the DuckDB twins' ``SUM(CAST(... AS DECIMAL(28,14)))``
+    and ``_cosine_kernel`` compute the same value."""
+    return (
+        f"aggregate({arr}, CAST(0 AS {PDEC}),"
+        f" (acc, {var}) -> CAST(acc + {term} AS {PDEC}))"
+    )
+
+
+def _dec_dot(
+    a: str,
+    b: str,
+    prod: str = "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)",
+    y: str = "y",
+) -> str:
+    """Position-ordered exact-DECIMAL fold of two arrays: element
+    ``x`` of ``a`` pairs with element ``y`` of ``b``, ``prod`` (default
+    the double product) is cast to PDEC and summed by ``_dec_fold``."""
+    return _dec_fold(
+        f"zip_with({a}, {b}, (x, {y}) -> CAST({prod} AS {PDEC}))", "v", "v"
+    )
+
+
+# squared norm of the ``embedding`` column
+_DEC_NORM = _dec_fold(
+    "embedding", "x", f"CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS {PDEC})"
+)
 
 
 def _exploded(df: DataFrame, id_out: str, val_out: str) -> DataFrame:
@@ -152,11 +190,7 @@ def exact_topk_fast(
     sc = emb.sparkSession.sparkContext
     if emb.rdd.getNumPartitions() < sc.defaultParallelism:
         emb = emb.repartition(sc.defaultParallelism)
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}), (acc, x) ->"
-        f" CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
+    norm = F.expr(_DEC_NORM)
     embn = emb.select("vec_id", "embedding", norm.alias("nrm"))
     qv = embn.where(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("qid"),
@@ -165,11 +199,7 @@ def exact_topk_fast(
     )
     pairs = embn.join(broadcast(qv)).where(F.col("vec_id") != F.col("qid"))
     if metric == "cosine":
-        dot = F.expr(
-            f"aggregate(zip_with(q_emb, embedding, (x, y) ->"
-            f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-            f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-        )
+        dot = F.expr(_dec_dot("q_emb", "embedding"))
         scored = pairs.select(
             "qid",
             F.col("vec_id").alias("vid"),
@@ -186,10 +216,12 @@ def exact_topk_fast(
         )
     else:  # squared L2
         d2 = F.expr(
-            f"aggregate(zip_with(q_emb, embedding, (x, y) ->"
-            f" CAST((CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-            f" * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) AS {PDEC})),"
-            f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
+            _dec_dot(
+                "q_emb",
+                "embedding",
+                "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+                " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))",
+            )
         )
         scored = pairs.select(
             "qid", F.col("vec_id").alias("vid"), d2.alias("score")
@@ -332,11 +364,7 @@ def _plane_dot(band: int, p: int, dim: int):
     arr = "array(" + ",".join(
         f"{s:.1f}D" for s in _plane_signs(band, p, dim)
     ) + ")"
-    return F.expr(
-        f"aggregate(zip_with(embedding, {arr}, (x, s) ->"
-        f" CAST(CAST(x AS DOUBLE) * s AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    return F.expr(_dec_dot("embedding", arr, "CAST(x AS DOUBLE) * s", y="s"))
 
 
 def _emb_dim(df: DataFrame) -> int:
@@ -389,10 +417,9 @@ def banded_hyperplane_buckets(
         F.from_json(F.lit(signs_json), "array<array<double>>"),
     )
     dots = (
-        f"transform(signs, s ->"
-        f" aggregate(zip_with(embedding, s, (x, sg) ->"
-        f" CAST(CAST(x AS DOUBLE) * sg AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC})))"
+        "transform(signs, s -> "
+        + _dec_dot("embedding", "s", "CAST(x AS DOUBLE) * sg", y="sg")
+        + ")"
     )
     # barrier: without it CollapseProject inlines the 64-fold dot
     # expression into every element_at() below — 64 recomputations of
@@ -452,11 +479,7 @@ def sim_ann_lsh(
     )
     # exact cosine on candidate PAIRS only: hoisted norms + zip_with
     # DECIMAL dot inside codegen — no explode, no per-pair shuffle
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}), (acc, x) ->"
-        f" CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
+    norm = F.expr(_DEC_NORM)
     embn = emb.select("vec_id", "embedding", norm.alias("nrm"))
     qv = embn.where(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("qid"),
@@ -468,11 +491,7 @@ def sim_ann_lsh(
         .join(broadcast(qv), "qid")
         .withColumn(
             "dot",
-            F.expr(
-                f"aggregate(zip_with(q_emb, embedding, (x, y) ->"
-                f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-                f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-            ),
+            F.expr(_dec_dot("q_emb", "embedding")),
         )
         .select(
             "qid",
@@ -569,27 +588,10 @@ def _exact_cosine_edges(
     bit-equal (same test), so the choice is pure performance.
     """
     if engine == "jvm":
-        scored = _exact_cosine_edges_jvm(emb, cands)
-        if not mirror:
-            return scored
-        # one materialization, two consumers (a plan-level union would
-        # re-run the whole scoring subtree per branch)
-        scored = scored.localCheckpoint(eager=False)
-        return scored.unionByName(
-            scored.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                "cosine",
-            )
-        )
-    from kachess_spark.pipeline._cosine_kernel import (
-        cosine_pair_batches,
-        cosine_pair_batches_mirrored,
-    )
-
-    if embn is None:
+        embn = emb.select("vec_id", "embedding", F.expr(_DEC_NORM).alias("nrm"))
+    elif embn is None:
         embn = _emb_with_norms(emb)
-    return (
+    pairs = (
         cands.join(
             embn.select(
                 F.col("vec_id").alias("dst"),
@@ -607,60 +609,33 @@ def _exact_cosine_edges(
             "src",
         )
         .select("src", "dst", "s_emb", "d_emb", "s_nrm", "d_nrm")
-        .mapInArrow(
+    )
+    if engine != "jvm":
+        from kachess_spark.pipeline._cosine_kernel import (
+            cosine_pair_batches,
+            cosine_pair_batches_mirrored,
+        )
+
+        return pairs.mapInArrow(
             cosine_pair_batches_mirrored if mirror else cosine_pair_batches,
             "src long, dst long, cosine double",
         )
+    scored = pairs.withColumn("dot", F.expr(_dec_dot("s_emb", "d_emb"))).select(
+        "src",
+        "dst",
+        F.round(
+            F.col("dot").cast("double")
+            / F.sqrt(F.col("s_nrm").cast("double") * F.col("d_nrm").cast("double")),
+            6,
+        ).alias("cosine"),
     )
-
-
-def _exact_cosine_edges_jvm(emb: DataFrame, cands: DataFrame) -> DataFrame:
-    """The original JVM-expression scorer (zip_with DECIMAL fold) —
-    the ``engine="jvm"`` path and the bit-equality reference for the
-    Arrow kernel."""
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}), (acc, x) ->"
-        f" CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
-    embn = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    return (
-        cands.join(
-            embn.select(
-                F.col("vec_id").alias("dst"),
-                F.col("embedding").alias("d_emb"),
-                F.col("nrm").alias("d_nrm"),
-            ),
-            "dst",
-        )
-        .join(
-            embn.select(
-                F.col("vec_id").alias("src"),
-                F.col("embedding").alias("s_emb"),
-                F.col("nrm").alias("s_nrm"),
-            ),
-            "src",
-        )
-        .withColumn(
-            "dot",
-            F.expr(
-                f"aggregate(zip_with(s_emb, d_emb, (x, y) ->"
-                f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-                f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-            ),
-        )
-        .select(
-            "src",
-            "dst",
-            F.round(
-                F.col("dot").cast("double")
-                / F.sqrt(
-                    F.col("s_nrm").cast("double")
-                    * F.col("d_nrm").cast("double")
-                ),
-                6,
-            ).alias("cosine"),
-        )
+    if not mirror:
+        return scored
+    # one materialization, two consumers (a plan-level union would
+    # re-run the whole scoring subtree per branch)
+    scored = scored.localCheckpoint(eager=False)
+    return scored.unionByName(
+        scored.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine")
     )
 
 
@@ -710,14 +685,8 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()  # union over bands
     )
-    both = _exact_cosine_edges(emb, cands, mirror=True)
-    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
-    return (
-        both.select(
-            "src", "dst", "cosine", F.row_number().over(w).alias("rk")
-        )
-        .where(F.col("rk") <= KNN_K)
-        .orderBy("src", "rk")
+    return _knn_topk(_exact_cosine_edges(emb, cands, mirror=True)).orderBy(
+        "src", "rk"
     )
 
 
@@ -769,12 +738,27 @@ def sim_knn_graph_ivf(
     directed — no mirror trick; the refinement rounds re-symmetrize by
     construction (reverse edges enter the candidate set).
     """
-    import os
-
     if index_dir is None:
         index_dir = build_ivf_index(spark, sf_dir)
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    cands, n = _ivf_graph_candidates(spark, emb, index_dir)
+    embn = _emb_with_norms(emb).localCheckpoint(eager=False)
+    topk = _knn_topk(_exact_cosine_edges(emb, cands, embn=embn))
+    for _ in range(refine):
+        topk = _knn_refine_round(spark, emb, topk, embn=embn, n=n)
+    return topk.orderBy("src", "rk")
+
+
+def _ivf_graph_candidates(
+    spark: SparkSession, emb: DataFrame, index_dir: str
+) -> tuple[DataFrame, int]:
+    """The stored-IVF graph candidates shared by sim_knn_graph_ivf and
+    sim_knn_graph_prescreened: every node probes its
+    ``knn_graph_n_probe`` nearest cells and pairs with those cells'
+    inverted lists.  Returns the (src, dst) frame, spread for the
+    CPU-bound scoring that follows, and the corpus size n."""
+    import os
+
     centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
     assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
     meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
@@ -816,11 +800,7 @@ def sim_knn_graph_ivf(
             "dst",
         )
     )
-    embn = _emb_with_norms(emb).localCheckpoint(eager=False)
-    topk = _knn_topk(_exact_cosine_edges(emb, cands, embn=embn))
-    for _ in range(refine):
-        topk = _knn_refine_round(spark, emb, topk, embn=embn, n=n)
-    return topk.orderBy("src", "rk")
+    return cands, n
 
 
 def _knn_topk(scored: DataFrame, k: int = KNN_K) -> DataFrame:
@@ -857,6 +837,50 @@ def _kernel_spread(spark: SparkSession, cands: DataFrame, n_pairs: int) -> DataF
     return cands.repartition(width, "src", "dst")
 
 
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The (src, dst) edges of a graph frame plus their reversals,
+    deduplicated and checkpointed: the adjacency every beam walk,
+    refine round and settle round expands over.  The checkpoint keeps
+    one materialization for its several consumers and the lineage flat
+    across rounds."""
+    e = edges.select("src", "dst")
+    return (
+        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _hop_candidates(und: DataFrame, dirty: DataFrame | None = None) -> DataFrame:
+    """One descent round's candidate pairs over the undirected
+    adjacency ``und``: each source's neighbours plus its two-hop
+    closure (self-pairs dropped), not deduplicated.  ``dirty`` (a
+    frame of ``src``), when given, keeps only those sources: the serve
+    maintainer's settle round."""
+    near = und if dirty is None else und.join(dirty, "src", "left_semi")
+    two_hop = (
+        near.alias("a")
+        .join(und.alias("b"), F.col("a.dst") == F.col("b.src"))
+        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+    )
+    return near.unionByName(two_hop)
+
+
+def _no_new_edges(nxt: DataFrame, prev: DataFrame) -> bool:
+    """Zero-update probe: True when every (src, dst) of ``nxt`` is
+    already in ``prev``.  Both are unique-(src, dst) top-k frames, so
+    this equals an empty ``exceptAll`` while the anti join broadcasts
+    ``prev`` instead of exchanging both sides (round-14)."""
+    return (
+        nxt.select("src", "dst")
+        .join(prev.select("src", "dst"), ["src", "dst"], "left_anti")
+        .limit(1)
+        .count()
+        == 0
+    )
+
+
 def _knn_refine_round(
     spark: SparkSession,
     emb: DataFrame,
@@ -874,20 +898,6 @@ def _knn_refine_round(
     small self-join shuffle and one scoring pass regardless of corpus
     size.  The graph oracles unroll the identical round(s) in SQL, so
     refinement stays hash-certified."""
-    edges = topk.select("src", "dst")
-    und = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    # checkpoint the (tiny) adjacency: it feeds both sides of the
-    # two-hop self-join and the candidate union — one materialization,
-    # three consumers, and the lineage stays flat across rounds
-    und = und.localCheckpoint(eager=False)
-    two_hop = (
-        und.alias("a")
-        .join(und.alias("b"), F.col("a.dst") == F.col("b.src"))
-        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
     # the candidate SET is symmetric (und is undirected; the two-hop
     # closure of a symmetric relation is symmetric), and the rounded
     # DECIMAL cosine is direction-independent (position-ordered fold
@@ -907,7 +917,11 @@ def _knn_refine_round(
     # exchange from bytes, so the scoring width still grows with the
     # corpus; the JVM-fold maintainer (sim_knn_graph_incremental)
     # KEEPS its explicit spread — its per-pair cost is ~100x higher.
-    half = und.unionByName(two_hop).where(F.col("src") < F.col("dst")).distinct()
+    half = (
+        _hop_candidates(_undirected(topk))
+        .where(F.col("src") < F.col("dst"))
+        .distinct()
+    )
     if n is not None:
         # scale-gated kernel-width spread (see _kernel_spread): the
         # distinct's partial agg and single exchange stay; a SECOND
@@ -968,41 +982,10 @@ def sim_knn_graph_prescreened(
     LSH 0.6045 @ 333 s, plain IVF 0.6717 @ 363 s, descent 0.278 @
     164 s — and its full-precision work is linear in n.  Plain IVF
     stays the recall-max alternative; descent the cheapest/linear one."""
-    import os
-
     if index_dir is None:
         index_dir = build_ivf_index(spark, sf_dir)
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
-    centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
-    meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
-    cells = int(meta["cells"])
-    n_probe = knn_graph_n_probe(cells)
-
-    # IVF candidate generation — identical to sim_knn_graph_ivf
-    qprobe = ivf_assign(spark, emb, centroids, n=n_probe).select(
-        F.col("vid").alias("src"), F.col("cell").alias("data_cell")
-    )
-    # n from the already-fetched meta row, not a count() action in the
-    # timed path (ADVICE r12) — see sim_knn_graph_ivf's note
-    n = int(meta["n_built"])
-    cands = (
-        assign.join(qprobe, "data_cell")
-        .where(F.col("vid") != F.col("src"))
-        .select("src", F.col("vid").alias("dst"))
-        # no distinct: (src, dst) pairs are unique by construction —
-        # dst has ONE home cell, probe cells are unique per src (see
-        # sim_knn_graph_ivf's note; the removed no-op .distinct() cost
-        # two HashAggregate dedup passes over the n^1.5 stream)
-        # the prescreen folds are CPU-bound — spread (r10 lesson);
-        # width sized from the known n·np·cell cardinality (r11 #6)
-        .repartition(
-            partitions_for_rows(spark, n * n_probe * max(1, n // cells)),
-            "src",
-            "dst",
-        )
-    )
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    cands, n = _ivf_graph_candidates(spark, emb, index_dir)
 
     # prefix prescreen: exact DECIMAL cosine over the first
     # {KNN_PRESCREEN_DIMS} components, same join shape as the full
@@ -1079,16 +1062,22 @@ def knn_descent_rounds(n: int, base_n: int = KNN_DESCENT_BASE_N) -> int:
     return KNN_DESCENT_ROUNDS + _ceil_log2_ratio(n, base_n)
 
 
-def _knn_descent_init(emb: DataFrame, n: int) -> DataFrame:
-    """Deterministic pseudo-random init edges: {KNN_DESCENT_INIT_BANDS}
-    independent md5 hashes drop every node into a bucket of expected
-    size {KNN_DESCENT_BUCKET}; all in-bucket pairs are the seed
-    candidates (~(bucket-1)·bands partners per node, O(n) total).
-    md5 of the id is the repo's standard deterministic-random draw —
-    the DuckDB twin replays the identical hex-prefix arithmetic.  A
-    node alone in all its buckets starts isolated (P ≈ e^-bucket per
-    band, ~2e-5 for two bands) and stays so — same contract as
-    sim_knn_graph's no-shared-bucket nodes, replayed by the oracle."""
+def _md5_band_pairs(df: DataFrame, n: int, salt: str) -> DataFrame:
+    """Deterministic pseudo-random candidate pairs over ``df``'s
+    ``vec_id``: {KNN_DESCENT_INIT_BANDS} independent md5 hashes of
+    salt || band || '|' || vec_id drop every node into a bucket of expected
+    size {KNN_DESCENT_BUCKET} (n // {KNN_DESCENT_BUCKET} buckets); all
+    in-bucket pairs, both directions, are the candidates
+    (~(bucket-1)·bands partners per node, O(n) total).  md5 of the id
+    is the repo's standard deterministic-random draw — the DuckDB twin
+    (``_sql_md5_band_pairs``) replays the identical hex-prefix
+    arithmetic.  A node alone in all its buckets gets no pair
+    (P ≈ e^-bucket per band, ~2e-5 for two bands) — same contract as
+    sim_knn_graph's no-shared-bucket nodes, replayed by the oracle.
+
+    Salts: "knnd" seeds the descent builder; "knndinc" seeds the delta
+    batch of the serve maintainer, so near-dup pairs WITHIN a delta are
+    found without an all-pairs |delta|² stage."""
     n_buckets = max(1, n // KNN_DESCENT_BUCKET)
     per_band = []
     for j in range(KNN_DESCENT_INIT_BANDS):
@@ -1096,7 +1085,7 @@ def _knn_descent_init(emb: DataFrame, n: int) -> DataFrame:
             F.substring(
                 F.md5(
                     F.concat(
-                        F.lit(f"knnd{j}|"), F.col("vec_id").cast("string")
+                        F.lit(f"{salt}{j}|"), F.col("vec_id").cast("string")
                     )
                 ),
                 1,
@@ -1106,7 +1095,7 @@ def _knn_descent_init(emb: DataFrame, n: int) -> DataFrame:
             10,
         ).cast("bigint")
         per_band.append(
-            emb.select(
+            df.select(
                 F.col("vec_id").alias("vid"),
                 F.lit(j).alias("band"),
                 (h % F.lit(n_buckets)).alias("bucket"),
@@ -1206,7 +1195,7 @@ def _knn_descent_graph(
     # removal as _knn_refine_round's — the re-ship existed to widen the
     # JVM-fold scoring stage; the Arrow kernel rides the distinct's own
     # AQE-sized exchange (bytes-proportional at any corpus size)
-    cands = _knn_descent_init(emb, n).where(F.col("src") < F.col("dst"))
+    cands = _md5_band_pairs(emb, n, "knnd").where(F.col("src") < F.col("dst"))
     embn = _emb_with_norms(emb).localCheckpoint(eager=False)
     topk = _knn_topk(
         _exact_cosine_edges(emb, cands, mirror=True, embn=embn),
@@ -1229,18 +1218,7 @@ def _knn_descent_graph(
         # probe is an exceptAll+limit job costing ~0.3-1 s of driver
         # latency at fixture scale; on weakly-clustered corpora the
         # probe never fires and was pure overhead).
-        # left_anti replaces exceptAll (round-14): both frames are
-        # _knn_topk outputs, so (src, dst) is unique per frame and
-        # "exceptAll empty" == "anti-join empty" == nxt ⊆ topk; the
-        # anti form broadcasts the right side instead of exchanging
-        # BOTH sides through exceptAll's union-aggregate.
-        if r < rounds - 1 and r % 2 == 1 and (
-            nxt.select("src", "dst")
-            .join(topk.select("src", "dst"), ["src", "dst"], "left_anti")
-            .limit(1)
-            .count()
-            == 0
-        ):
+        if r < rounds - 1 and r % 2 == 1 and _no_new_edges(nxt, topk):
             topk = nxt
             break
         topk = nxt
@@ -1311,6 +1289,51 @@ def build_graph_serve_state(
     return state_dir
 
 
+def _walk_entries(ids: DataFrame, n: int) -> DataFrame:
+    """The beam walk's entry points among ``ids`` (vec_id): the
+    ``gs_entry_count(n)`` lowest md5('gsv|'||vec_id) digests, vec_id
+    tie-break, broadcast as (dst)."""
+    return F.broadcast(
+        ids.orderBy(
+            F.md5(F.concat(F.lit("gsv|"), F.col("vec_id").cast("string"))),
+            "vec_id",
+        )
+        .limit(gs_entry_count(n))
+        .select(F.col("vec_id").alias("dst"))
+    )
+
+
+def _beam_walk(
+    seed: DataFrame, und: DataFrame, score, hops: int, beam: int
+) -> DataFrame:
+    """Greedy beam search from scored seed pairs (src, dst, cosine):
+    each of ``hops`` hops keeps every src's top-``beam`` by (cosine
+    desc, dst), expands them over the undirected adjacency ``und``,
+    and scores the kept ∪ expanded set with ``score`` (which drops
+    self-pairs).  Returns the distinct union of the seed and every
+    hop's scored set — the best-seen accumulator: a node scored at ANY
+    hop stays eligible for the caller's final top-k.  With beam >= the
+    caller's k the last hop alone would do (the beam re-enters each
+    hop's scored set), but the accumulator is the contract, so a
+    narrower beam cannot silently drop early discoveries; the oracles
+    (``_sql_beam_walk``) replay it."""
+    rank = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
+    nbrs = und.select(F.col("src").alias("dst"), F.col("dst").alias("nxt"))
+    scored = seen = seed
+    for _ in range(hops):
+        front = (
+            scored.select("src", "dst", F.row_number().over(rank).alias("rn"))
+            .where(F.col("rn") <= beam)
+            .select("src", "dst")
+        )
+        neigh = front.join(nbrs, "dst").select("src", F.col("nxt").alias("dst"))
+        scored = score(front.unionByName(neigh).distinct()).localCheckpoint(
+            eager=False
+        )
+        seen = seen.unionByName(scored)
+    return seen.distinct()
+
+
 @query("sim_graph_stored_topk")  # oracle attached post-hoc below
 def sim_graph_stored_topk(
     spark: SparkSession,
@@ -1328,9 +1351,9 @@ def sim_graph_stored_topk(
     top-{GS_BEAM}, exploring ≤ entries + hops·beam·2·degree nodes per
     query regardless of n (IVF probes ~n_probe·n/cells ~ sqrt n rows;
     LSH buckets ~corpus/2^planes).  Output = per-query top-{TOP_K} of
-    the union of all hops' scored sets (the best-seen accumulator —
-    see the inline note at ``seen``; with beam >= TOP_K this equals
-    the last hop's set, but the accumulator is the contract).
+    the union of all hops' scored sets (the best-seen accumulator of
+    ``_beam_walk``; with beam >= TOP_K this equals the last hop's set,
+    but the accumulator is the contract).
 
     Determinism end-to-end: entries are the {GS_ENTRIES} lowest
     md5('gsv|'||vec_id) digests (the repo's deterministic-sample
@@ -1357,30 +1380,10 @@ def sim_graph_stored_topk(
     n_built = int(
         spark.read.parquet(os.path.join(state_dir, "meta")).head()["n_built"]
     )
-    g = spark.read.parquet(os.path.join(state_dir, "graph")).select(
-        "src", "dst"
-    )
-    und = (
-        g.unionByName(
-            g.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    entries = F.broadcast(
-        emb.select("vec_id")
-        .orderBy(
-            F.md5(F.concat(F.lit("gsv|"), F.col("vec_id").cast("string"))),
-            "vec_id",
-        )
-        .limit(gs_entry_count(n_built))
-        .select(F.col("vec_id").alias("dst"))
-    )
+    und = _undirected(spark.read.parquet(os.path.join(state_dir, "graph")))
+    entries = _walk_entries(emb.select("vec_id"), n_built)
     queries = emb.where(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("src")
-    )
-    beam_rank = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst")
     )
 
     # one norm pass for the walk's 1 + {GS_HOPS} scoring calls
@@ -1391,42 +1394,16 @@ def sim_graph_stored_topk(
             emb, cands.where(F.col("src") != F.col("dst")), embn=embn
         )
 
-    scored = score(queries.crossJoin(entries)).localCheckpoint(eager=False)
-    seen = scored  # best-seen accumulator: a node scored at ANY hop
-    # stays eligible for the final top-k.  With beam >= TOP_K this is
-    # provably redundant (the beam re-enters each hop's scored set, so
-    # the last set retains every global top-TOP_K-seen node) — kept as
-    # the structural guarantee so a future beam < TOP_K dial change
-    # cannot silently drop early discoveries; the oracle replays it.
-    for _ in range(GS_HOPS):
-        beam = (
-            scored.select(
-                "src", "dst", F.row_number().over(beam_rank).alias("rn")
-            )
-            .where(F.col("rn") <= GS_BEAM)
-            .select("src", "dst")
-        )
-        neigh = (
-            beam.join(
-                und.select(
-                    F.col("src").alias("dst"), F.col("dst").alias("nxt")
-                ),
-                "dst",
-            )
-            .select("src", F.col("nxt").alias("dst"))
-        )
-        cands = beam.unionByName(neigh).distinct()
-        scored = score(cands).localCheckpoint(eager=False)
-        seen = seen.unionByName(scored)
+    seen = _beam_walk(
+        score(queries.crossJoin(entries)).localCheckpoint(eager=False),
+        und,
+        score,
+        GS_HOPS,
+        GS_BEAM,
+    )
     return (
-        seen.distinct()
-        .select(
-            F.col("src").alias("qid"),
-            F.col("dst").alias("vid"),
-            "cosine",
-            F.row_number().over(beam_rank).alias("rk"),
-        )
-        .where(F.col("rk") <= TOP_K)
+        _knn_topk(seen, k=TOP_K)
+        .select(F.col("src").alias("qid"), F.col("dst").alias("vid"), "cosine", "rk")
         .orderBy("qid", "rk")
     )
 
@@ -1688,47 +1665,6 @@ INC_PLACE_BEAM = KNN_DESCENT_K  # placement beam = the working degree
 INC_REFINE_ROUNDS = 2  # restricted repair rounds (zero-update stop)
 
 
-def _inc_plus_band_pairs(plus: DataFrame, n_plus: int) -> DataFrame:
-    """All in-bucket pairs of the DELTA batch under the descent init
-    banding (distinct salt), so near-dup pairs WITHIN the delta are
-    seeded without an all-pairs |delta|² stage — linear in |delta|."""
-    n_buckets = max(1, n_plus // KNN_DESCENT_BUCKET)
-    per_band = []
-    for j in range(KNN_DESCENT_INIT_BANDS):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"knndinc{j}|"),
-                        F.col("vec_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        per_band.append(
-            plus.select(
-                F.col("vec_id").alias("vid"),
-                F.lit(j).alias("band"),
-                (h % F.lit(n_buckets)).alias("bucket"),
-            )
-        )
-    b = per_band[0]
-    for p in per_band[1:]:
-        b = b.unionByName(p)
-    a = b.select(F.col("vid").alias("src"), "band", "bucket")
-    c = b.select(F.col("vid").alias("dst"), "band", "bucket")
-    return (
-        a.join(c, ["band", "bucket"])
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-
-
 def _serve_incremental_working(
     spark: SparkSession,
     sf_dir: str,
@@ -1776,16 +1712,7 @@ def _serve_incremental_working(
     # 2. PLACE — beam walk over the surviving graph; counts are
     # bounded metadata actions (|survivors|, |delta|) that size the
     # entry schedule and the delta banding
-    und = (
-        surv.select("src", "dst")
-        .unionByName(
-            surv.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(surv)
     survivors = emb.join(
         minus_src.withColumnRenamed("src", "vec_id"), "vec_id", "left_anti"
     ).select("vec_id")
@@ -1802,17 +1729,7 @@ def _serve_incremental_working(
     ).first()
     n_surv = int(sizes["n_surv"] or 0)
     n_plus = int(sizes["n_plus"] or 0)
-    entries = F.broadcast(
-        survivors.orderBy(
-            F.md5(F.concat(F.lit("gsv|"), F.col("vec_id").cast("string"))),
-            "vec_id",
-        )
-        .limit(gs_entry_count(n_surv))
-        .select(F.col("vec_id").alias("dst"))
-    )
-    beam_rank = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst")
-    )
+    entries = _walk_entries(survivors, n_surv)
 
     # spread only the scoring inputs that arrive with NO exchange of
     # their own: the placement-seed cross join inherits the corpus
@@ -1841,29 +1758,15 @@ def _serve_incremental_working(
             c = c.repartition(score_width, "src", "dst")
         return _exact_cosine_edges(emb2, c, embn=embn2)
 
-    queries_df = plus.select(F.col("vec_id").alias("src"))
-    scored = score(queries_df.crossJoin(entries), spread=True).localCheckpoint(
-        eager=False
-    )
-    place = scored
-    for _ in range(INC_PLACE_HOPS):
-        beam = (
-            scored.select(
-                "src", "dst", F.row_number().over(beam_rank).alias("rn")
-            )
-            .where(F.col("rn") <= INC_PLACE_BEAM)
-            .select("src", "dst")
-        )
-        neigh = beam.join(
-            und.select(F.col("src").alias("dst"), F.col("dst").alias("nxt")),
-            "dst",
-        ).select("src", F.col("nxt").alias("dst"))
-        scored = score(
-            beam.unionByName(neigh).distinct()
-        ).localCheckpoint(eager=False)
-        place = place.unionByName(scored)
-    place = place.distinct().localCheckpoint(eager=False)
-    pp = score(_inc_plus_band_pairs(plus, n_plus))
+    seeds = plus.select(F.col("vec_id").alias("src")).crossJoin(entries)
+    place = _beam_walk(
+        score(seeds, spread=True).localCheckpoint(eager=False),
+        und,
+        score,
+        INC_PLACE_HOPS,
+        INC_PLACE_BEAM,
+    ).localCheckpoint(eager=False)
+    pp = score(_md5_band_pairs(plus, n_plus, "knndinc"))
     plus_lists = _knn_topk(
         place.unionByName(pp).distinct(), k=KNN_DESCENT_K
     )
@@ -1898,22 +1801,7 @@ def _serve_incremental_working(
     ).distinct()
     dirty = F.broadcast(dirty)
     for r in range(INC_REFINE_ROUNDS):
-        e = g.select("src", "dst")
-        u = (
-            e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        ud = u.join(dirty, "src", "left_semi")
-        two_hop = (
-            ud.alias("a")
-            .join(u.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-        )
-        cands = ud.unionByName(two_hop).distinct()
+        cands = _hop_candidates(_undirected(g), dirty).distinct()
         refined = _knn_topk(score(cands), k=KNN_DESCENT_K).localCheckpoint(
             eager=False
         )
@@ -1923,20 +1811,8 @@ def _serve_incremental_working(
         # builder's global stop).  Probe skipped on the last round —
         # it can save nothing there (round-13: the probe never fires
         # at fixture scale, so its count job was pure overhead).
-        # left_anti replaces exceptAll (round-14): both sides are
-        # unique-(src, dst) top-k frames, so the zero test is identical
-        # while the anti join broadcasts instead of exchanging both
-        # sides (the descent probe's argument).
-        if r < INC_REFINE_ROUNDS - 1 and (
-            refined.select("src", "dst")
-            .join(
-                g.join(dirty, "src", "left_semi").select("src", "dst"),
-                ["src", "dst"],
-                "left_anti",
-            )
-            .limit(1)
-            .count()
-            == 0
+        if r < INC_REFINE_ROUNDS - 1 and _no_new_edges(
+            refined, g.join(dirty, "src", "left_semi")
         ):
             g = nxt
             break
@@ -1967,7 +1843,7 @@ def sim_graph_serve_incremental(
        SURVIVING graph: the stored graph is itself the ANN index that
        places its own inserts (the HNSW insertion idea).  Delta-x-delta
        near-dups are seeded by the descent init banding over the delta
-       batch only (``_inc_plus_band_pairs``).
+       batch only (``_md5_band_pairs``).
     3. REPAIR — survivors that lost an edge (endpoint removed/changed)
        or were DISCOVERED by a placement walk re-rank over their
        surviving edges plus the mirrored placement pairs (already
@@ -4190,22 +4066,14 @@ def sim_range_search(
     # production N the certificate's fold CPU grows linearly and the
     # kernel would win — revisit if the certificate ever dominates at
     # scale.
-    norm = F.expr(
-        f"aggregate(embedding, CAST(0 AS {PDEC}), (acc, x) ->"
-        f" CAST(acc + CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)"
-        f" AS {PDEC}) AS {PDEC}))"
-    )
+    norm = F.expr(_DEC_NORM)
     embn = emb.select("vec_id", "embedding", norm.alias("nrm"))
     qv = embn.where(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    dot = F.expr(
-        f"aggregate(zip_with(q_emb, embedding, (x, y) ->"
-        f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC}))"
-    )
+    dot = F.expr(_dec_dot("q_emb", "embedding"))
     cos_expr = F.round(
         dot.cast("double")
         / F.sqrt(F.col("nrm").cast("double") * F.col("q_nrm").cast("double")),
@@ -4328,20 +4196,7 @@ def _sim_knn_graph_oracle(
       SELECT vid, SUM(CAST(dv * dv AS DECIMAL(28,14))) AS nn
       FROM k_d GROUP BY vid
     ),
-    k_sc AS (
-      SELECT t.src, t.dst,
-             ROUND(CAST(t.dot AS DOUBLE)
-                   / SQRT(CAST(n1.nn AS DOUBLE)
-                          * CAST(n2.nn AS DOUBLE)), 6) AS cosine
-      FROM (SELECT c.src, c.dst,
-                   SUM(CAST(q.dv * d.dv AS DECIMAL(28,14))) AS dot
-            FROM k_cand c
-            JOIN k_d d ON d.vid = c.dst
-            JOIN k_d q ON q.vid = c.src AND q.pos = d.pos
-            GROUP BY c.src, c.dst) t
-      JOIN k_norms n1 ON n1.vid = t.dst
-      JOIN k_norms n2 ON n2.vid = t.src
-    )
+    {_sql_score_edges("k_cand", "k_sc", d="k_d", norms="k_norms")}
     SELECT src, dst, cosine, rk FROM (
       SELECT src, dst, cosine,
              ROW_NUMBER() OVER (PARTITION BY src
@@ -4353,6 +4208,31 @@ def _sim_knn_graph_oracle(
 
 
 _add_oracle("sim_ivfpq_residual_topk", _sim_ivfpq_residual_oracle())
+
+
+def _sql_score_edges(
+    cand: str, out: str, d: str = "g_d", norms: str = "g_norms"
+) -> str:
+    """_exact_cosine_edges in DuckDB over a (src, dst) candidate CTE:
+    exact-DECIMAL dot, 6-dp cosine, over the per-dim table ``d`` and
+    norm table ``norms`` (default the v1 expansion; the
+    serve-incremental twin passes the v2 one)."""
+    return f"""{out} AS MATERIALIZED (
+      SELECT t.src, t.dst,
+             ROUND(CAST(t.dot AS DOUBLE)
+                   / SQRT(CAST(n1.nn AS DOUBLE)
+                          * CAST(n2.nn AS DOUBLE)), 6) AS cosine
+      FROM (SELECT c.src, c.dst,
+                   SUM(CAST(q.dv * d.dv AS DECIMAL(28,14))) AS dot
+            FROM {cand} c
+            JOIN {d} d ON d.vid = c.dst
+            JOIN {d} q ON q.vid = c.src AND q.pos = d.pos
+            GROUP BY c.src, c.dst) t
+      JOIN {norms} n1 ON n1.vid = t.dst
+      JOIN {norms} n2 ON n2.vid = t.src
+    )"""
+
+
 def _sql_knn_score_rank(
     cand: str,
     out: str,
@@ -4361,10 +4241,8 @@ def _sql_knn_score_rank(
     norms: str = "g_norms",
 ) -> str:
     """_exact_cosine_edges + _knn_topk in DuckDB over a (src, dst)
-    candidate CTE: exact-DECIMAL dot, 6-dp cosine, per-src
-    top-``k`` (default {KNN_K}) with the (cosine DESC, dst)
-    tie-break.  ``d``/``norms`` select the per-dim/norm tables (the
-    serve-incremental twin scores over the v2 expansion).
+    candidate CTE: ``_sql_score_edges``, then per-src top-``k``
+    (default {KNN_K}) with the (cosine DESC, dst) tie-break.
 
     MATERIALIZED: DuckDB inlines CTEs at every reference, and the
     refine rounds reference each other — inlined, a 6-round unroll
@@ -4372,29 +4250,26 @@ def _sql_knn_score_rank(
     descent oracle exhausted the process FD limit re-opening the
     parquet scan).  Materializing the round outputs bounds the oracle
     to linear work, matching the Spark side's localCheckpoint."""
-    return f"""{out}_dot AS MATERIALIZED (
-      SELECT c.src, c.dst,
-             SUM(CAST(q.dv * d.dv AS DECIMAL(28,14))) AS dot
-      FROM {cand} c
-      JOIN {d} d ON d.vid = c.dst
-      JOIN {d} q ON q.vid = c.src AND q.pos = d.pos
-      GROUP BY c.src, c.dst
-    ),
+    return f"""{_sql_score_edges(cand, f"{out}_sc", d=d, norms=norms)},
     {out} AS MATERIALIZED (
       SELECT src, dst, cosine, rk FROM (
-        SELECT s.src, s.dst,
-               ROUND(CAST(s.dot AS DOUBLE)
-                     / SQRT(CAST(n1.nn AS DOUBLE)
-                            * CAST(n2.nn AS DOUBLE)), 6) AS cosine,
-               ROW_NUMBER() OVER (PARTITION BY s.src
-                                  ORDER BY ROUND(CAST(s.dot AS DOUBLE)
-                     / SQRT(CAST(n1.nn AS DOUBLE)
-                            * CAST(n2.nn AS DOUBLE)), 6) DESC,
-                                  s.dst) AS rk
-        FROM {out}_dot s
-        JOIN {norms} n1 ON n1.vid = s.dst
-        JOIN {norms} n2 ON n2.vid = s.src
+        SELECT src, dst, cosine,
+               ROW_NUMBER() OVER (PARTITION BY src
+                                  ORDER BY cosine DESC, dst) AS rk
+        FROM {out}_sc
       ) WHERE rk <= {k}
+    )"""
+
+
+def _sql_undirected(name: str, edges: str, where: str = "") -> str:
+    """_undirected in DuckDB: the (src, dst) pairs of ``edges`` plus
+    their reversals, deduplicated, as CTE ``name``; ``where`` is an
+    optional trailing WHERE clause."""
+    return f"""{name} AS MATERIALIZED (
+      SELECT DISTINCT src, dst FROM (
+        SELECT src, dst FROM {edges}
+        UNION ALL
+        SELECT dst AS src, src AS dst FROM {edges}){where}
     )"""
 
 
@@ -4412,45 +4287,123 @@ def _sql_knn_refine_round(
     unchanged, which is exactly the Spark side not running the round
     at all.  Gated rounds score into g_s{{r+1}} and union the
     pass-through into g_e{{r+1}}."""
+    where = "" if gate is None else f"\n      WHERE (SELECT act FROM g_on{r})"
+    out = f"g_e{r + 1}" if gate is None else f"g_s{r + 1}"
+    body = f"""{_sql_undirected(f"g_und{r}", prev, where)},
+    g_rc{r} AS MATERIALIZED (
+      SELECT DISTINCT src, dst FROM (
+        SELECT src, dst FROM g_und{r}
+        UNION ALL
+        SELECT a.src, b.dst FROM g_und{r} a
+        JOIN g_und{r} b ON a.dst = b.src
+        WHERE a.src <> b.dst)
+    ),
+    {_sql_knn_score_rank(f"g_rc{r}", out, k=k)}"""
     if gate is None:
-        return f"""g_und{r} AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM {prev}
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM {prev})
-    ),
-    g_rc{r} AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM g_und{r}
-        UNION ALL
-        SELECT a.src, b.dst FROM g_und{r} a
-        JOIN g_und{r} b ON a.dst = b.src
-        WHERE a.src <> b.dst)
-    ),
-    {_sql_knn_score_rank(f"g_rc{r}", f"g_e{r + 1}", k=k)}"""
+        return body
     return f"""g_on{r} AS (SELECT ({gate}) AS act),
-    g_und{r} AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM {prev}
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM {prev})
-      WHERE (SELECT act FROM g_on{r})
-    ),
-    g_rc{r} AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM g_und{r}
-        UNION ALL
-        SELECT a.src, b.dst FROM g_und{r} a
-        JOIN g_und{r} b ON a.dst = b.src
-        WHERE a.src <> b.dst)
-    ),
-    {_sql_knn_score_rank(f"g_rc{r}", f"g_s{r + 1}", k=k)},
+    {body},
     g_e{r + 1} AS MATERIALIZED (
       SELECT src, dst, cosine, rk FROM g_s{r + 1}
       UNION ALL
       SELECT src, dst, cosine, rk FROM {prev}
       WHERE NOT (SELECT act FROM g_on{r})
     )"""
+
+
+def _sql_md5_band_pairs(p: str, corpus: str, salt: str, out: str) -> str:
+    """_md5_band_pairs(corpus, COUNT(corpus), salt) in DuckDB: CTEs
+    ``{p}nb`` (bucket count), ``{p}bb`` (per-band md5 buckets) and
+    ``out`` (all in-bucket pairs, both directions)."""
+    return f"""{p}nb AS (
+      SELECT GREATEST(1, COUNT(*) // {KNN_DESCENT_BUCKET}) AS nb
+      FROM {corpus}
+    ),
+    {p}bb AS (
+      SELECT j.band, e.vec_id AS vid,
+             CAST(('0x' || substr(md5('{salt}' || CAST(j.band AS VARCHAR)
+                   || '|' || CAST(e.vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
+               % (SELECT nb FROM {p}nb) AS bucket
+      FROM {corpus} e CROSS JOIN (
+        SELECT UNNEST(generate_series(0, {KNN_DESCENT_INIT_BANDS - 1}))
+          AS band) j
+    ),
+    {out} AS (
+      SELECT DISTINCT a.vid AS src, b.vid AS dst
+      FROM {p}bb a
+      JOIN {p}bb b ON a.band = b.band AND a.bucket = b.bucket
+      WHERE a.vid <> b.vid
+    )"""
+
+
+def _sql_beam_walk(
+    p: str,
+    graph: str,
+    alive: str,
+    queries: str,
+    hops: int,
+    beam: int,
+    d: str = "g_d",
+    norms: str = "g_norms",
+) -> str:
+    """_beam_walk in DuckDB, seeded the way both walkers seed it: the
+    ``gs_entry_count`` md5('gsv|'||vec_id)-ordered entry points among
+    the embeddings matching ``alive`` (a WHERE clause, or ""), crossed
+    with the ``queries`` (src) relation.  ``graph`` is the edge CTE
+    walked undirected.  Ends in CTE ``{p}walk`` (src, dst, cosine): the
+    distinct best-seen union of every hop's scored set."""
+    ec = (
+        f"CASE WHEN n <= {ANN_BASE_N} THEN {GS_ENTRIES}"
+        f" ELSE {GS_ENTRIES} + 8 * {_sql_ceil_log2_ratio('n', ANN_BASE_N)}"
+        f" END"
+    )
+    parts = [
+        f"""{_sql_undirected(f"{p}und", graph)},
+    {p}ec AS (
+      SELECT {ec} AS ec FROM (SELECT COUNT(*) AS n FROM embeddings{alive})
+    ),
+    {p}entries AS (
+      SELECT dst FROM (
+        SELECT vec_id AS dst,
+               ROW_NUMBER() OVER (ORDER BY
+                 md5('gsv|' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
+        FROM embeddings{alive}) WHERE rn <= (SELECT ec FROM {p}ec)
+    ),
+    {p}c0 AS (
+      SELECT q.src, e.dst FROM {queries} q CROSS JOIN {p}entries e
+      WHERE q.src <> e.dst
+    ),
+    {_sql_score_edges(f"{p}c0", f"{p}s0", d=d, norms=norms)}"""
+    ]
+    for h in range(1, hops + 1):
+        parts.append(
+            f"""{p}b{h} AS (
+      SELECT src, dst FROM (
+        SELECT src, dst,
+               ROW_NUMBER() OVER (PARTITION BY src
+                                  ORDER BY cosine DESC, dst) AS rn
+        FROM {p}s{h - 1}) WHERE rn <= {beam}
+    ),
+    {p}c{h} AS (
+      SELECT DISTINCT src, dst FROM (
+        SELECT src, dst FROM {p}b{h}
+        UNION ALL
+        SELECT b.src, u.dst FROM {p}b{h} b
+        JOIN {p}und u ON u.src = b.dst)
+      WHERE src <> dst
+    ),
+    {_sql_score_edges(f"{p}c{h}", f"{p}s{h}", d=d, norms=norms)}"""
+        )
+    union_all = "\n        UNION ALL\n        ".join(
+        f"SELECT src, dst, cosine FROM {p}s{h}" for h in range(hops + 1)
+    )
+    parts.append(
+        f"""{p}walk AS MATERIALIZED (
+      SELECT DISTINCT src, dst, cosine FROM (
+        {union_all})
+    )"""
+    )
+    return ",\n    ".join(parts)
 
 
 def _sql_ivf_graph_cands() -> str:
@@ -4627,25 +4580,7 @@ def _sim_knn_graph_descent_oracle(
       SELECT vid, SUM(CAST(dv * dv AS DECIMAL(28,14))) AS nn
       FROM g_d GROUP BY vid
     ),
-    g_nb AS (
-      SELECT GREATEST(1, COUNT(*) // {KNN_DESCENT_BUCKET}) AS nb
-      FROM embeddings
-    ),
-    g_binit AS (
-      SELECT j.band, e.vec_id AS vid,
-             CAST(('0x' || substr(md5('knnd' || CAST(j.band AS VARCHAR)
-                   || '|' || CAST(e.vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
-               % (SELECT nb FROM g_nb) AS bucket
-      FROM embeddings e CROSS JOIN (
-        SELECT UNNEST(generate_series(0, {KNN_DESCENT_INIT_BANDS - 1}))
-          AS band) j
-    ),
-    g_c0 AS (
-      SELECT DISTINCT a.vid AS src, b.vid AS dst
-      FROM g_binit a
-      JOIN g_binit b ON a.band = b.band AND a.bucket = b.bucket
-      WHERE a.vid <> b.vid
-    ),
+    {_sql_md5_band_pairs("g_", "embeddings", "knnd", "g_c0")},
     {_sql_knn_score_rank("g_c0", "g_e0", k=KNN_DESCENT_K)}{rounds_sql}
     {tail}
 """
@@ -4660,104 +4595,31 @@ _add_oracle(
 _add_oracle("sim_knn_graph_descent", _sim_knn_graph_descent_oracle())
 
 
-def _sql_gs_score(
-    cand: str, out: str, d: str = "g_d", norms: str = "g_norms"
-) -> str:
-    """Beam-hop scoring block: exact-DECIMAL dot vs the query, 6-dp
-    cosine — the walk's re-rank key, over ``d``/``norms`` (default the
-    v1 expansion; the serve-incremental twin passes the v2 one)."""
-    return f"""{out} AS MATERIALIZED (
-      SELECT t.src, t.dst,
-             ROUND(CAST(t.dot AS DOUBLE)
-                   / SQRT(CAST(n1.nn AS DOUBLE)
-                          * CAST(n2.nn AS DOUBLE)), 6) AS cosine
-      FROM (SELECT c.src, c.dst,
-                   SUM(CAST(q.dv * d.dv AS DECIMAL(28,14))) AS dot
-            FROM {cand} c
-            JOIN {d} d ON d.vid = c.dst
-            JOIN {d} q ON q.vid = c.src AND q.pos = d.pos
-            GROUP BY c.src, c.dst) t
-      JOIN {norms} n1 ON n1.vid = t.dst
-      JOIN {norms} n2 ON n2.vid = t.src
-    )"""
-
-
 def _sim_graph_stored_oracle() -> str:
     """sim_graph_stored_topk: rebuild the descent WORKING graph (the
     stored state is parameter-keyed to this exact chain), then replay
     the beam walk — md5-ordered entries, {GS_HOPS} unrolled hops of
     expand → re-rank → top-{GS_BEAM}, final top-{TOP_K} of the
     all-hops best-seen set."""
-    r = KNN_DESCENT_MAX_UNROLL  # the gated chain's final CTE
     qin = ", ".join(str(q) for q in QUERY_IDS)
-    ec = (
-        f"CASE WHEN n <= {ANN_BASE_N} THEN {GS_ENTRIES}"
-        f" ELSE {GS_ENTRIES} + 8 * {_sql_ceil_log2_ratio('n', ANN_BASE_N)}"
-        f" END"
+    walk = _sql_beam_walk(
+        "gs_",
+        f"g_e{KNN_DESCENT_MAX_UNROLL}",  # the gated chain's final CTE
+        "",
+        f"(SELECT vec_id AS src FROM embeddings WHERE vec_id IN ({qin}))",
+        GS_HOPS,
+        GS_BEAM,
     )
-    parts = [
-        f""",
-    gs_und AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM g_e{r}
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM g_e{r})
-    ),
-    gs_ec AS (
-      SELECT {ec} AS ec FROM (SELECT COUNT(*) AS n FROM embeddings)
-    ),
-    gs_entries AS (
-      SELECT dst FROM (
-        SELECT vec_id AS dst,
-               ROW_NUMBER() OVER (ORDER BY
-                 md5('gsv|' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
-        FROM embeddings) WHERE rn <= (SELECT ec FROM gs_ec)
-    ),
-    gs_q AS (SELECT vec_id AS src FROM embeddings
-             WHERE vec_id IN ({qin})),
-    gs_c0 AS (
-      SELECT q.src, e.dst FROM gs_q q CROSS JOIN gs_entries e
-      WHERE q.src <> e.dst
-    ),
-    {_sql_gs_score("gs_c0", "gs_s0")}""",
-    ]
-    for h in range(1, GS_HOPS + 1):
-        parts.append(
-            f""",
-    gs_b{h} AS (
-      SELECT src, dst FROM (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY cosine DESC, dst) AS rn
-        FROM gs_s{h - 1}) WHERE rn <= {GS_BEAM}
-    ),
-    gs_c{h} AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM gs_b{h}
-        UNION ALL
-        SELECT b.src, u.dst FROM gs_b{h} b
-        JOIN gs_und u ON u.src = b.dst)
-      WHERE src <> dst
-    ),
-    {_sql_gs_score(f"gs_c{h}", f"gs_s{h}")}"""
-        )
-    union_all = "\n        UNION ALL\n        ".join(
-        f"SELECT src, dst, cosine FROM gs_s{h}" for h in range(GS_HOPS + 1)
-    )
-    parts.append(
-        f""",
-    gs_all AS (
-      SELECT DISTINCT src, dst, cosine FROM (
-        {union_all})
-    )
+    return _sim_knn_graph_descent_oracle(
+        tail=f""",
+    {walk}
     SELECT src AS qid, dst AS vid, cosine, rk FROM (
       SELECT src, dst, cosine,
              ROW_NUMBER() OVER (PARTITION BY src
                                 ORDER BY cosine DESC, dst) AS rk
-      FROM gs_all) WHERE rk <= {TOP_K}
+      FROM gs_walk) WHERE rk <= {TOP_K}
     ORDER BY qid, rk"""
     )
-    return _sim_knn_graph_descent_oracle(tail="".join(parts))
 
 
 _add_oracle("sim_graph_stored_topk", _sim_graph_stored_oracle())
@@ -4780,10 +4642,15 @@ def _sim_graph_serve_incremental_oracle() -> str:
     )
 
     g1 = f"g_e{KNN_DESCENT_MAX_UNROLL}"
-    ec = (
-        f"CASE WHEN n <= {ANN_BASE_N} THEN {GS_ENTRIES}"
-        f" ELSE {GS_ENTRIES} + 8 * {_sql_ceil_log2_ratio('n', ANN_BASE_N)}"
-        f" END"
+    walk = _sql_beam_walk(
+        "inc_",
+        "inc_surv",
+        " WHERE vec_id NOT IN (SELECT vid FROM inc_minus)",
+        "(SELECT vec_id AS src FROM inc_plus)",
+        INC_PLACE_HOPS,
+        INC_PLACE_BEAM,
+        d="inc_d",
+        norms="inc_norms",
     )
     parts = [
         f""",
@@ -4822,95 +4689,22 @@ def _sim_graph_serve_incremental_oracle() -> str:
       WHERE src NOT IN (SELECT vid FROM inc_minus)
         AND dst IN (SELECT vid FROM inc_minus)
     ),
-    inc_und AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM inc_surv
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM inc_surv)
-    ),
-    inc_ec AS (
-      SELECT {ec} AS ec FROM (
-        SELECT COUNT(*) AS n FROM embeddings
-        WHERE vec_id NOT IN (SELECT vid FROM inc_minus))
-    ),
-    inc_entries AS (
-      SELECT dst FROM (
-        SELECT vec_id AS dst,
-               ROW_NUMBER() OVER (ORDER BY
-                 md5('gsv|' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
-        FROM embeddings
-        WHERE vec_id NOT IN (SELECT vid FROM inc_minus))
-      WHERE rn <= (SELECT ec FROM inc_ec)
-    ),
-    inc_c0 AS (
-      SELECT p.vec_id AS src, e.dst
-      FROM inc_plus p CROSS JOIN inc_entries e
-      WHERE p.vec_id <> e.dst
-    ),
-    {_sql_gs_score("inc_c0", "inc_s0", d="inc_d", norms="inc_norms")}""",
-    ]
-    for h in range(1, INC_PLACE_HOPS + 1):
-        parts.append(
-            f""",
-    inc_b{h} AS (
-      SELECT src, dst FROM (
-        SELECT src, dst,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY cosine DESC, dst) AS rn
-        FROM inc_s{h - 1}) WHERE rn <= {INC_PLACE_BEAM}
-    ),
-    inc_c{h} AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM inc_b{h}
-        UNION ALL
-        SELECT b.src, u.dst FROM inc_b{h} b
-        JOIN inc_und u ON u.src = b.dst)
-      WHERE src <> dst
-    ),
-    {_sql_gs_score(f"inc_c{h}", f"inc_s{h}", d="inc_d", norms="inc_norms")}"""
-        )
-    union_all = "\n        UNION ALL\n        ".join(
-        f"SELECT src, dst, cosine FROM inc_s{h}"
-        for h in range(INC_PLACE_HOPS + 1)
-    )
-    parts.append(
-        f""",
-    inc_place AS MATERIALIZED (
-      SELECT DISTINCT src, dst, cosine FROM (
-        {union_all})
-    ),
-    inc_nb AS (
-      SELECT GREATEST(1, COUNT(*) // {KNN_DESCENT_BUCKET}) AS nb
-      FROM inc_plus
-    ),
-    inc_bb AS (
-      SELECT j.band, p.vec_id AS vid,
-             CAST(('0x' || substr(md5('knndinc' || CAST(j.band AS VARCHAR)
-                   || '|' || CAST(p.vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
-               % (SELECT nb FROM inc_nb) AS bucket
-      FROM inc_plus p CROSS JOIN (
-        SELECT UNNEST(generate_series(0, {KNN_DESCENT_INIT_BANDS - 1}))
-          AS band) j
-    ),
-    inc_pp AS (
-      SELECT DISTINCT a.vid AS src, b.vid AS dst
-      FROM inc_bb a JOIN inc_bb b ON a.band = b.band AND a.bucket = b.bucket
-      WHERE a.vid <> b.vid
-    ),
-    {_sql_gs_score("inc_pp", "inc_pps", d="inc_d", norms="inc_norms")},
+    {walk},
+    {_sql_md5_band_pairs("inc_", "inc_plus", "knndinc", "inc_pp")},
+    {_sql_score_edges("inc_pp", "inc_pps", d="inc_d", norms="inc_norms")},
     inc_plus_lists AS MATERIALIZED (
       SELECT src, dst, cosine, rk FROM (
         SELECT src, dst, cosine,
                ROW_NUMBER() OVER (PARTITION BY src
                                   ORDER BY cosine DESC, dst) AS rk
         FROM (SELECT DISTINCT src, dst, cosine FROM (
-          SELECT src, dst, cosine FROM inc_place
+          SELECT src, dst, cosine FROM inc_walk
           UNION ALL
           SELECT src, dst, cosine FROM inc_pps))
       ) WHERE rk <= {KNN_DESCENT_K}
     ),
     inc_mirror AS (
-      SELECT dst AS src, src AS dst, cosine FROM inc_place
+      SELECT dst AS src, src AS dst, cosine FROM inc_walk
     ),
     inc_dirty_surv AS MATERIALIZED (
       SELECT src FROM inc_lost
@@ -4942,17 +4736,12 @@ def _sim_graph_serve_incremental_oracle() -> str:
       UNION
       SELECT vec_id AS src FROM inc_plus
     )"""
-    )
+    ]
     for r in range(1, INC_REFINE_ROUNDS + 1):
         prev = f"inc_g{r - 1}"
         parts.append(
             f""",
-    inc_u{r} AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT src, dst FROM {prev}
-        UNION ALL
-        SELECT dst AS src, src AS dst FROM {prev})
-    ),
+    {_sql_undirected(f"inc_u{r}", prev)},
     inc_ud{r} AS (
       SELECT src, dst FROM inc_u{r}
       WHERE src IN (SELECT src FROM inc_dirty)
@@ -5659,10 +5448,9 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     signs_json = json.dumps([_rp_signs(j, dim) for j in range(RP_DIM)])
     dots = (
-        f"transform(signs, s ->"
-        f" aggregate(zip_with(embedding, s, (x, sg) ->"
-        f" CAST(CAST(x AS DOUBLE) * sg AS {PDEC})),"
-        f" CAST(0 AS {PDEC}), (acc, v) -> CAST(acc + v AS {PDEC})))"
+        "transform(signs, s -> "
+        + _dec_dot("embedding", "s", "CAST(x AS DOUBLE) * sg", y="sg")
+        + ")"
     )
     return (
         emb.withColumn(

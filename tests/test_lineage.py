@@ -890,6 +890,30 @@ def test_union_does_not_mutate_shared_table_dataset(extract):
     assert not rel.child_select_item_id.isin(phys_items.id).any()
 
 
+def test_union_rehomes_later_branch_predicates(extract):
+    """A later UNION branch is merged into the first and dropped; its
+    WHERE/JOIN items move with it, so they must name the merged dataset
+    (a dangling dataset_id breaks the select_items foreign key)."""
+    s = extract(
+        """
+        use dw;
+        SELECT col100l FROM tab10 WHERE col103i > 1
+        UNION ALL
+        SELECT a.col200l FROM tab20 a JOIN stage.tab30 b
+          ON a.col200l = b.col300l
+        WHERE b.col303i < 5;
+        """
+    )
+    f = _pdf(s)
+    ds, si = f["datasets"], f["select_items"]
+    assert set(si.dataset_id) <= set(ds.id)
+    merged = ds[ds.extra_info == "_UNION_APPLIED_"].id
+    assert len(merged) == 1
+    preds = si[si.usage_context.isin(["WHERE", "JOIN"])]
+    assert len(preds) == 3
+    assert (preds.dataset_id == merged.iloc[0]).all()
+
+
 def test_vendor_ddl_options_stripped_and_extracted(spark):
     """Teradata/Oracle/DB2/MySQL CREATE TABLE options the reference's
     grammar parses-and-ignores (Bingql.g4:369-429) are shim-stripped so

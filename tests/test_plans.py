@@ -1233,20 +1233,21 @@ def test_knn_descent_stages_no_cartesian(spark, sf_dir):
     """sim_knn_graph_descent's two stage shapes (the final plan is
     checkpoint-truncated, so assert the pieces): the md5-banded init is
     a (band, bucket) equality self-join and a refine round is edge-set
-    self-joins — never a cartesian/all-pairs product, scoring always
-    JVM-side (zip_with DECIMAL folds, no EvalPython)."""
+    self-joins — never a cartesian/all-pairs product.  Scoring runs in
+    the Arrow kernel (MapInArrow), never a row-at-a-time Python UDF
+    (no EvalPython)."""
     from kachess_spark.catalog import Tables
     from kachess_spark.pipeline.similarity import (
         KNN_DESCENT_K,
         _exact_cosine_edges,
-        _knn_descent_init,
         _knn_refine_round,
         _knn_topk,
+        _md5_band_pairs,
     )
 
     emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     n = emb.count()
-    init_scored = _exact_cosine_edges(emb, _knn_descent_init(emb, n))
+    init_scored = _exact_cosine_edges(emb, _md5_band_pairs(emb, n, "knnd"))
     plan = _plan(init_scored)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -1264,32 +1265,35 @@ def test_knn_descent_stages_no_cartesian(spark, sf_dir):
 def test_serve_incremental_stages_no_cartesian(spark, sf_dir):
     """sim_graph_serve_incremental's unbounded-volume stages (the
     delta banding pair join and the restricted settle round) must be
-    equality joins with JVM-side scoring — never cartesian, never
-    EvalPython.  (The placement walk's crossJoin with the broadcast
-    entry set is BOUNDED by gs_entry_count and intentional, same as
-    the serving walk's.)"""
+    equality joins — never cartesian — scored by the Arrow kernel
+    (MapInArrow), never EvalPython.  (The placement walk's crossJoin
+    with the broadcast entry set is BOUNDED by gs_entry_count and
+    intentional, same as the serving walk's.)"""
     from kachess_spark.catalog import Tables
     from kachess_spark.pipeline.similarity import (
         KNN_DESCENT_K,
         _exact_cosine_edges,
-        _inc_plus_band_pairs,
+        _hop_candidates,
         _knn_topk,
+        _md5_band_pairs,
+        _undirected,
     )
 
     emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     n = emb.count()
-    pairs = _exact_cosine_edges(emb, _inc_plus_band_pairs(emb, n))
+    pairs = _exact_cosine_edges(emb, _md5_band_pairs(emb, n, "knndinc"))
     plan = _plan(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "EvalPython" not in plan
-    # a restricted settle round is the refine shape semi-joined to the
-    # dirty set — reuse the builder's round over a semi-join input
+    # a restricted settle round: the maintainer's candidate builder over
+    # the current graph, restricted to a dirty source set
     from pyspark.sql import functions as F
 
     topk = _knn_topk(pairs, k=KNN_DESCENT_K).localCheckpoint(eager=False)
-    dirty = emb.select(F.col("vec_id").alias("src")).limit(50)
-    e = topk.select("src", "dst").join(dirty, "src", "left_semi")
-    rplan = _plan(_knn_topk(_exact_cosine_edges(emb, e), k=KNN_DESCENT_K))
+    dirty = F.broadcast(emb.select(F.col("vec_id").alias("src")).limit(50))
+    cands = _hop_candidates(_undirected(topk), dirty).distinct()
+    rplan = _plan(_knn_topk(_exact_cosine_edges(emb, cands), k=KNN_DESCENT_K))
     assert "CartesianProduct" not in rplan
+    assert "BroadcastNestedLoopJoin" not in rplan
     assert "EvalPython" not in rplan

@@ -20,6 +20,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import prep_indexes, stage_snapshot  # noqa: E402
+
 
 def main() -> None:
     args = sys.argv[1:]
@@ -48,25 +50,9 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
 
     if prep:
-        from kachess_spark.pipeline.similarity import (
-            build_graph_serve_state,
-            build_ivf_index,
-            build_ivfpq_index,
-            build_knn_state,
-            build_pq_index,
-        )
-
-        for d in [warm_dir, sf_dir]:
-            build_ivf_index(spark, d)
-            build_pq_index(spark, d)
-            build_ivfpq_index(spark, d)
-            build_knn_state(spark, d)
-            build_graph_serve_state(spark, d)
+        prep_indexes(spark, [warm_dir, sf_dir])
 
     import gc
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from profile_stages import _stages  # noqa: E402
 
     out: dict[str, dict] = {}
     for name in names:
@@ -79,11 +65,11 @@ def main() -> None:
                 pass
             spark.catalog.clearCache()
             gc.collect()
-            before = _stages(spark)
+            before = stage_snapshot(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
             walls.append(round(time.perf_counter() - t0, 3))
-            after = _stages(spark)
+            after = stage_snapshot(spark)
             new = {k: v for k, v in after.items() if k not in before}
             mb = 1024 * 1024
             profs.append(

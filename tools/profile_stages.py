@@ -17,26 +17,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _stages(spark):
-    store = spark.sparkContext._jsc.sc().statusStore()
-    empty = spark.sparkContext._jvm.java.util.ArrayList()
-    defaults = [getattr(store, f"stageList$default${i}")() for i in range(2, 6)]
-    out = {}
-    it = store.stageList(empty, *defaults).iterator()
-    while it.hasNext():
-        sd = it.next()
-        out[(sd.stageId(), sd.attemptId())] = (
-            sd.name(),
-            sd.executorRunTime(),
-            sd.executorCpuTime(),
-            sd.inputBytes(),
-            sd.shuffleReadBytes(),
-            sd.shuffleWriteBytes(),
-            sd.numTasks(),
-            sd.numCompleteTasks(),
-        )
-    return out
+from bench import prep_indexes, stage_snapshot  # noqa: E402
 
 
 def main() -> None:
@@ -55,20 +36,8 @@ def main() -> None:
     if "--prep" in sys.argv:
         # bench.py's untimed offline index prep, so the profiled run
         # measures the serving/build path the bench times
-        from kachess_spark.pipeline.similarity import (
-            build_graph_serve_state,
-            build_ivf_index,
-            build_ivfpq_index,
-            build_knn_state,
-            build_pq_index,
-        )
-
         for d in ["/root/testdata/sf0.001", sf_dir]:
-            build_ivf_index(spark, d)
-            build_pq_index(spark, d)
-            build_ivfpq_index(spark, d)
-            build_knn_state(spark, d)
-            build_graph_serve_state(spark, d)
+            prep_indexes(spark, [d])
 
     if warm:
         warm_dir = "/root/testdata/sf0.001"
@@ -78,11 +47,11 @@ def main() -> None:
             print(f"warm failed: {e}")
         spark.catalog.clearCache()
 
-    before = _stages(spark)
+    before = stage_snapshot(spark)
     t0 = time.perf_counter()
     rows = fn(spark, sf_dir).count()
     wall = time.perf_counter() - t0
-    after = _stages(spark)
+    after = stage_snapshot(spark)
 
     new = {k: v for k, v in after.items() if k not in before}
     print(f"\n{name}: wall={wall:.2f}s rows={rows} stages={len(new)}")
