@@ -109,6 +109,93 @@ def _oracle_minhash(i: int) -> str:
     )
 
 
+# ----------------------------------------- MinHash-LSH banding, defined once
+# Band b is mh_{b*BAND_SIZE} .. mh_{(b+1)*BAND_SIZE-1} joined with '|'.
+# Every LSH operator here and every ingest gate (streaming/windows.py)
+# bands through _band_rows; every oracle through _sql_sig_bands.
+
+
+def _band_rows(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) rows of a minhash signature frame.  One
+    posexplode, not a union of per-band selects (which would re-derive
+    the signature once per branch)."""
+    band_structs = F.array(
+        *[
+            F.concat_ws(
+                "|", *[F.col(f"mh_{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
+            )
+            for b in range(N_HASHES // BAND_SIZE)
+        ]
+    )
+    return sigs.select(
+        "doc_id", F.posexplode(band_structs).alias("band", "band_key")
+    )
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, of docs sharing a band
+    bucket: the band-equality self-join."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _jaccard(inter: str, n_a: str, n_b: str):
+    """Exact Jaccard of two distinct-shingle sets from the intersection
+    size and the two set sizes, rounded to 6 places."""
+    return F.round(
+        F.col(inter).cast("double")
+        / (F.col(n_a) + F.col(n_b) - F.col(inter)),
+        6,
+    )
+
+
+def _jaccard_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``_jaccard`` over the ``shingles`` lists of table
+    aliases ``a`` and ``b``, unrounded: callers round (or not) themselves."""
+    inter = f"len(list_intersect({a}.shingles, {b}.shingles))"
+    return (
+        f"CAST({inter} AS DOUBLE)"
+        f" / (len({a}.shingles) + len({b}.shingles) - {inter})"
+    )
+
+
+def _sql_sig_bands() -> str:
+    """The ``sigs`` + ``bands`` CTEs, without the leading WITH (callers
+    add WITH or WITH RECURSIVE): the SQL twin of ``minhash_signature``
+    + ``_band_rows`` over the >=3-word docs."""
+    bands = "\n      UNION ALL\n      ".join(
+        f"SELECT doc_id, {b} AS band, "
+        + " || '|' || ".join(f"mh_{b * BAND_SIZE + j}" for j in range(BAND_SIZE))
+        + " AS band_key FROM sigs"
+        for b in range(N_HASHES // BAND_SIZE)
+    )
+    return f"""sigs AS (
+      SELECT doc_id, {", ".join(_oracle_minhash(i) for i in range(N_HASHES))}
+      FROM documents
+      WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
+    ),
+    bands AS (
+      {bands}
+    )"""
+
+
+# the SQL twin of _band_pairs over the ``bands`` CTE
+_BAND_PAIRS_SQL = """
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.band_key = b.band_key
+       AND a.doc_id < b.doc_id"""
+
+
 @query(
     "dedup_exact",
     oracle="""
@@ -146,23 +233,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash_lsh",
-    oracle=f"""
-    WITH sigs AS (
-      SELECT doc_id, {", ".join(_oracle_minhash(i) for i in range(N_HASHES))}
-      FROM documents
-      WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, mh_0 || '|' || mh_1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 1 AS band, mh_2 || '|' || mh_3 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 2 AS band, mh_4 || '|' || mh_5 AS band_key FROM sigs
-    )
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    """,
+    oracle=f"WITH {_sql_sig_bands()}{_BAND_PAIRS_SQL}",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup candidates: shingle → 6 minhashes → 3
@@ -187,29 +258,7 @@ def _lsh_candidates(sh: DataFrame) -> DataFrame:
     shared by dedup_minhash_lsh and the verified chain so callers that
     already hold a materialized shingle frame don't recompute it."""
     sigs = sh.select("doc_id", *_minhash_cols())
-    band_structs = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.col(f"mh_{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
-            )
-            for b in range(N_HASHES // BAND_SIZE)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_structs).alias("band", "band_key")
-    ).localCheckpoint(eager=False)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _band_pairs(_band_rows(sigs).localCheckpoint(eager=False))
 
 
 @query(
@@ -659,23 +708,8 @@ def dedup_embedding_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_CTES = f"""
-    WITH RECURSIVE sigs AS (
-      SELECT doc_id, {", ".join(_oracle_minhash(i) for i in range(N_HASHES))}
-      FROM documents
-      WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, mh_0 || '|' || mh_1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 1 AS band, mh_2 || '|' || mh_3 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 2 AS band, mh_4 || '|' || mh_5 AS band_key FROM sigs
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
+    WITH RECURSIVE {_sql_sig_bands()},
+    pairs AS ({_BAND_PAIRS_SQL}
     ),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -736,45 +770,12 @@ def _lsh_pairs_and_universe(
     # (running dedup_minhash_lsh + a separate shingle pass would run the
     # regex/shingle/md5 chain twice — measured 10.3s -> ~6s at sf0.1)
     sigs = minhash_signature(t.documents).localCheckpoint(eager=False)
-    band_structs = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.col(f"mh_{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
-            )
-            for b in range(N_HASHES // BAND_SIZE)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", F.posexplode(band_structs).alias("band", "band_key")
-    ).localCheckpoint(eager=False)
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    universe = sigs.select("doc_id")
-    return pairs, universe
+    pairs = _band_pairs(_band_rows(sigs).localCheckpoint(eager=False))
+    return pairs, sigs.select("doc_id")
 
 
 _INCR_ORACLE = f"""
-    WITH sigs AS (
-      SELECT doc_id, {", ".join(_oracle_minhash(i) for i in range(6))}
-      FROM documents
-      WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, mh_0 || '|' || mh_1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 1 AS band, mh_2 || '|' || mh_3 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 2 AS band, mh_4 || '|' || mh_5 AS band_key FROM sigs
-    )
+    WITH {_sql_sig_bands()}
     SELECT DISTINCT a.doc_id AS new_doc, b.doc_id AS hist_doc
     FROM bands a JOIN bands b
       ON a.band = b.band AND a.band_key = b.band_key
@@ -797,35 +798,24 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment the index compacts periodically (sink_compaction) and
     new batches append their own bands after the probe.
     """
-    import os
+    import uuid
 
     from kachess_spark.operators.sinks import _scratch
 
     t = Tables(spark, sf_dir)
-    store = _scratch("lsh_band_store")
+    # unique per call: a second call in the same session must not
+    # overwrite the store an earlier call's returned (lazy) frame reads
+    store = _scratch(f"lsh_band_store_{uuid.uuid4().hex[:8]}")
 
-    def bands_of(docs: DataFrame) -> DataFrame:
-        sigs = minhash_signature(docs)
-        band_structs = F.array(
-            *[
-                F.concat_ws(
-                    "|",
-                    *[F.col(f"mh_{b * BAND_SIZE + j}") for j in range(BAND_SIZE)],
-                )
-                for b in range(N_HASHES // BAND_SIZE)
-            ]
-        )
-        return sigs.select(
-            "doc_id", F.posexplode(band_structs).alias("band", "band_key")
-        )
-
-    # one-time historical index build (idempotent per scratch dir)
+    # one-time historical index build
     hist = t.documents.where(F.col("doc_id") % 2 == 0)
-    hist_bands = bands_of(hist)
+    hist_bands = _band_rows(minhash_signature(hist))
     hist_bands.write.mode("overwrite").partitionBy("band").parquet(store)
 
     new_docs = t.documents.where(F.col("doc_id") % 2 == 1)
-    new_bands = bands_of(new_docs).localCheckpoint(eager=False)
+    new_bands = _band_rows(minhash_signature(new_docs)).localCheckpoint(
+        eager=False
+    )
     # explicit schema: an EMPTY historical corpus writes no partition
     # directories, and the probe against an empty index must return a
     # clean 0-row result, not an inference AnalysisException
@@ -1708,23 +1698,8 @@ def dedup_semantic_cluster_scaled(
 MINHASH_VERIFY_TAU = 0.5
 
 _MHV_CTES = f"""
-    WITH sigs AS (
-      SELECT doc_id, {", ".join(_oracle_minhash(i) for i in range(N_HASHES))}
-      FROM documents
-      WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, mh_0 || '|' || mh_1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 1 AS band, mh_2 || '|' || mh_3 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 2 AS band, mh_4 || '|' || mh_5 AS band_key FROM sigs
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
+    WITH {_sql_sig_bands()},
+    cand AS ({_BAND_PAIRS_SQL}
     ),
     sh AS (
       SELECT doc_id, {_SHINGLES_SQL} AS shingles
@@ -1732,19 +1707,12 @@ _MHV_CTES = f"""
       WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
     ),
     verified AS (
-      SELECT c.doc_a, c.doc_b,
-             ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                   / (len(a.shingles) + len(b.shingles)
-                      - len(list_intersect(a.shingles, b.shingles))), 6)
-               AS jaccard,
+      SELECT c.doc_a, c.doc_b, ROUND({_jaccard_sql("a", "b")}, 6) AS jaccard,
              c.doc_b AS drop_doc
       FROM cand c
       JOIN sh a ON a.doc_id = c.doc_a
       JOIN sh b ON b.doc_id = c.doc_b
-      WHERE ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                  / (len(a.shingles) + len(b.shingles)
-                     - len(list_intersect(a.shingles, b.shingles))), 6)
-            >= {MINHASH_VERIFY_TAU}
+      WHERE ROUND({_jaccard_sql("a", "b")}, 6) >= {MINHASH_VERIFY_TAU}
     )
 """
 
@@ -1816,16 +1784,11 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
         )
     )
-    jac = F.round(
-        F.col("inter").cast("double")
-        / (F.col("na") + F.col("nb") - F.col("inter")),
-        6,
-    )
     return (
         inter.select(
             "doc_a",
             "doc_b",
-            jac.alias("jaccard"),
+            _jaccard("inter", "na", "nb").alias("jaccard"),
             F.col("doc_b").alias("drop_doc"),
         )
         .where(F.col("jaccard") >= MINHASH_VERIFY_TAU)
@@ -1848,28 +1811,10 @@ _LSH_EVAL_ORACLE = f"""
       FROM sh a JOIN sh b
         ON a.lang = b.lang AND a.len_bucket = b.len_bucket
        AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))
-            >= {MINHASH_VERIFY_TAU}
+      WHERE {_jaccard_sql("a", "b")} >= {MINHASH_VERIFY_TAU}
     ),
-    sigs AS (
-      SELECT doc_id, {", ".join(_oracle_minhash(i) for i in range(N_HASHES))}
-      FROM documents
-      WHERE len(string_split({_CANON_SQL}, ' ')) >= 3
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, mh_0 || '|' || mh_1 AS band_key FROM sigs
-      UNION ALL
-      SELECT doc_id, 1, mh_2 || '|' || mh_3 FROM sigs
-      UNION ALL
-      SELECT doc_id, 2, mh_4 || '|' || mh_5 FROM sigs
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
+    {_sql_sig_bands()},
+    cand AS ({_BAND_PAIRS_SQL}
     ),
     hit AS (
       SELECT t.doc_a FROM truth t JOIN cand c
@@ -1901,14 +1846,9 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     for candidates); the hit count is one more equality join on the
     pair key.
     """
-    t = Tables(spark, sf_dir)
     truth = (
-        dedup_ngram_jaccard.__wrapped__(spark, sf_dir)
-        if hasattr(dedup_ngram_jaccard, "__wrapped__")
-        else dedup_ngram_jaccard(spark, sf_dir)
-    )
-    truth = (
-        truth.where(F.col("jaccard") >= MINHASH_VERIFY_TAU)
+        dedup_ngram_jaccard(spark, sf_dir)
+        .where(F.col("jaccard") >= MINHASH_VERIFY_TAU)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)
     )

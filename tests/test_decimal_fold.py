@@ -1,8 +1,15 @@
-"""The exact-DECIMAL fold has one definition, no Spark session needed:
-``similarity._dec_fold`` is the only place under ``kachess_spark/pipeline/``
-that spells the fold's DECIMAL zero, so a copy of the fold cannot creep
-back in, and the SQL text it builds is pinned (a changed text would
-change every plan that scores with it)."""
+"""Shared SQL/Spark rules have one definition each, no Spark session needed.
+
+A pattern that spells a rule may appear only once under ``kachess_spark/``,
+inside the function that owns it, so a copy cannot creep back in:
+
+* the exact-DECIMAL cosine fold's DECIMAL zero, in ``similarity._dec_fold``;
+* the MinHash-LSH band rows, in ``dedup._band_rows`` (Spark) and
+  ``dedup._sql_sig_bands`` (the DuckDB twins) — a second copy could miss a
+  change to ``N_HASHES`` / ``BAND_SIZE`` and desync Spark from its oracles.
+
+The texts the owners build are pinned too (a changed text would change
+every plan or oracle built on it)."""
 
 from __future__ import annotations
 
@@ -11,32 +18,47 @@ import os
 import re
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_PIPELINE = os.path.join(_REPO, "kachess_spark", "pipeline")
+_PKG = os.path.join(_REPO, "kachess_spark")
 _FOLD_ZERO = re.compile(
     r"CAST\(\s*0\s+AS\s+(\{PDEC\}|decimal\(\s*28\s*,\s*14\s*\))", re.IGNORECASE
 )
+_SQL_BAND = re.compile(r"AS band_key FROM sigs")
+_SPARK_BAND = re.compile(r"posexplode\(band_structs\)")
+
+
+def _assert_defined_once(pattern: re.Pattern, owner_file: str, owner: str):
+    """``pattern`` matches exactly one line under kachess_spark/, and that
+    line lies inside the module-level function ``owner`` of ``owner_file``."""
+    hits = []
+    for root, _, files in os.walk(_PKG):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                for lineno, line in enumerate(f, 1):
+                    if pattern.search(line):
+                        hits.append((os.path.relpath(path, _PKG), lineno))
+    assert len(hits) == 1, f"{pattern.pattern!r} spelled outside {owner}: {hits}"
+    with open(os.path.join(_PKG, owner_file)) as f:
+        tree = ast.parse(f.read())
+    (fn,) = [
+        n
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == owner
+    ]
+    ((name, lineno),) = hits
+    assert name == owner_file
+    assert fn.lineno <= lineno <= fn.end_lineno, hits
 
 
 def test_decimal_fold_defined_once():
-    hits = []
-    for name in sorted(os.listdir(_PIPELINE)):
-        if not name.endswith(".py"):
-            continue
-        with open(os.path.join(_PIPELINE, name)) as f:
-            for lineno, line in enumerate(f, 1):
-                if _FOLD_ZERO.search(line):
-                    hits.append((name, lineno))
-    with open(os.path.join(_PIPELINE, "similarity.py")) as f:
-        tree = ast.parse(f.read())
-    (fold,) = [
-        n
-        for n in tree.body
-        if isinstance(n, ast.FunctionDef) and n.name == "_dec_fold"
-    ]
-    assert len(hits) == 1, f"DECIMAL fold spelled outside _dec_fold: {hits}"
-    name, lineno = hits[0]
-    assert name == "similarity.py"
-    assert fold.lineno <= lineno <= fold.end_lineno, hits
+    _assert_defined_once(_FOLD_ZERO, "pipeline/similarity.py", "_dec_fold")
+
+
+def test_lsh_banding_defined_once():
+    _assert_defined_once(_SQL_BAND, "pipeline/dedup.py", "_sql_sig_bands")
+    _assert_defined_once(_SPARK_BAND, "pipeline/dedup.py", "_band_rows")
 
 
 def test_decimal_fold_text():
@@ -53,3 +75,21 @@ def test_decimal_fold_text():
         f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {d})),"
         f" CAST(0 AS {d}), (acc, v) -> CAST(acc + v AS {d}))"
     )
+
+
+def test_sig_bands_sql_follows_band_constants():
+    """The SQL builder emits N_HASHES // BAND_SIZE bands, band b over
+    mh_{b*BAND_SIZE} .. mh_{(b+1)*BAND_SIZE-1}: together every signature
+    column mh_0 .. mh_{N_HASHES-1}, each once, in order."""
+    from kachess_spark.pipeline.dedup import BAND_SIZE, N_HASHES, _sql_sig_bands
+
+    sql = _sql_sig_bands()
+    bands = re.findall(
+        r"SELECT doc_id, (\d+) AS band, (.+?) AS band_key FROM sigs", sql
+    )
+    assert [int(b) for b, _ in bands] == list(range(N_HASHES // BAND_SIZE))
+    cols = [c.strip() for _, key in bands for c in key.split("|| '|' ||")]
+    assert cols == [f"mh_{i}" for i in range(N_HASHES)]
+    assert all(len(key.split("|| '|' ||")) == BAND_SIZE for _, key in bands)
+    sigs = sql[: sql.index("bands AS")]
+    assert re.findall(r"AS (mh_\d+)", sigs) == cols

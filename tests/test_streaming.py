@@ -994,6 +994,19 @@ def test_ingest_gate_empty_and_all_duplicate_streams(spark, sf_dir, tmp_path):
     assert r1.count() == n1  # would fail if call 2 rmtree'd call 1's sink
 
 
+def test_incremental_lsh_calls_do_not_clobber(spark, sf_dir):
+    """Two dedup_incremental_lsh calls in one session: the first call's
+    returned (lazy) frame must still read its own band store after the
+    second call writes one (each call owns its store directory)."""
+    from kachess_spark.pipeline.dedup import dedup_incremental_lsh
+
+    r1 = dedup_incremental_lsh(spark, sf_dir)
+    n1 = r1.count()
+    r2 = dedup_incremental_lsh(spark, sf_dir)
+    assert r2.count() == n1
+    assert r1.count() == n1  # fails if call 2 overwrote call 1's store
+
+
 def test_ingest_gate_verified_superset(spark, sf_dir):
     """The verified gate admits a SUPERSET of the collision-only gate
     (exact-Jaccard confirmation can only rescue LSH false positives,
@@ -1057,47 +1070,78 @@ def test_ingest_gate_lattice(spark, sf_dir):
     assert growing <= static <= verified
 
 
+_TEXT_HIST = "alpha beta gamma delta epsilon"
+_TEXT_NEW = "red green blue cyan magenta"
+# (doc_id, text, lang, source, n_chars): near-duplicate NEW docs arriving
+# in different micro-batches of the growing gates
+_NEW_VS_NEW_DOCS = [
+    # evens = history
+    (2, _TEXT_HIST, "en", "web", len(_TEXT_HIST)),
+    (4, "one two three four five", "en", "web", 23),
+    # odds = incoming; bucket = ((doc_id-1)/2) % 4
+    (1, _TEXT_NEW, "en", "web", len(_TEXT_NEW)),  # bucket 0 — admit
+    (9, _TEXT_NEW, "en", "web", len(_TEXT_NEW)),  # bucket 0 — same-batch dup of 1
+    (3, _TEXT_NEW, "en", "web", len(_TEXT_NEW)),  # bucket 1 — cross-batch dup of 1
+    (5, _TEXT_HIST, "en", "web", len(_TEXT_HIST)),  # bucket 2 — dup of history
+    (7, "solar lunar tidal orbital vector", "en", "web", 32),  # bucket 3 — admit
+]
+# admitted ids per gate; the duplicates are exact copies, so verification
+# (Jaccard 1.0) drops exactly what collision alone drops
+_NEW_VS_NEW_ADMITTED = {"growing": [1, 7], "static": [1, 3, 7, 9]}
+
+
+@pytest.mark.parametrize("verified", [False, True])
+@pytest.mark.parametrize("growing", [False, True])
+def test_ingest_gate_oracles_new_vs_new(growing, verified):
+    """DuckDB only: the gate-oracle builder, on the new-vs-new corpus,
+    admits what the growing / static gates must admit."""
+    import duckdb
+
+    from kachess_spark.streaming.windows import _gate_oracle
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents (doc_id BIGINT, text VARCHAR, lang VARCHAR,"
+        " source VARCHAR, n_chars BIGINT)"
+    )
+    con.executemany(
+        "INSERT INTO documents VALUES (?, ?, ?, ?, ?)", _NEW_VS_NEW_DOCS
+    )
+    got = [r[0] for r in con.execute(_gate_oracle(growing, verified)).fetchall()]
+    assert got == _NEW_VS_NEW_ADMITTED["growing" if growing else "static"]
+
+
 @pytest.mark.slow  # >=20 s measured; excluded from the default gate run (pytest.ini)
 def test_ingest_gate_growing_catches_new_vs_new(spark, tmp_path):
     """The round-7 verdict scenario: near-duplicate NEW docs arriving in
-    DIFFERENT micro-batches.  The static gate admits both; the growing
-    gate admits the first and drops the second (its probe hits the
-    index grown with batch 0's admitted bands), and also drops a
-    same-batch later-id duplicate (keep-first-by-id)."""
+    DIFFERENT micro-batches.  The static gates admit both; the growing
+    gates admit the first and drop the second (its probe hits the index
+    grown with batch 0's admitted bands), and also drop a same-batch
+    later-id duplicate (keep-first-by-id).  The verified twins agree:
+    every duplicate here is an exact copy."""
+    import os
+
     import pandas as pd
 
     from kachess_spark.streaming.windows import (
         ingest_dedup_gate_batch,
         ingest_gate_growing_batch,
+        ingest_gate_growing_verified_batch,
+        ingest_gate_verified_batch,
     )
 
-    text_hist = "alpha beta gamma delta epsilon"
-    text_new = "red green blue cyan magenta"
-    rows = [
-        # evens = history
-        (2, text_hist, "en", "web", len(text_hist)),
-        (4, "one two three four five", "en", "web", 23),
-        # odds = incoming; bucket = ((doc_id-1)/2) % 4
-        (1, text_new, "en", "web", len(text_new)),   # bucket 0 — admit
-        (9, text_new, "en", "web", len(text_new)),   # bucket 0 — same-batch dup of 1
-        (3, text_new, "en", "web", len(text_new)),   # bucket 1 — cross-batch dup of 1
-        (5, text_hist, "en", "web", len(text_hist)), # bucket 2 — dup of history
-        (7, "solar lunar tidal orbital vector", "en", "web", 32),  # bucket 3 — admit
-    ]
     pdf = pd.DataFrame(
-        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+        _NEW_VS_NEW_DOCS,
+        columns=["doc_id", "text", "lang", "source", "n_chars"],
     )
     sf = str(tmp_path / "tiny_sf")
-    import os
-
     os.makedirs(sf)
     pdf.to_parquet(os.path.join(sf, "documents.parquet"), index=False)
 
-    growing = sorted(
-        r.doc_id for r in ingest_gate_growing_batch(spark, sf).collect()
-    )
-    static = sorted(
-        r.doc_id for r in ingest_dedup_gate_batch(spark, sf).collect()
-    )
-    assert growing == [1, 7]
-    assert static == [1, 3, 7, 9]
+    def ids(fn):
+        return sorted(r.doc_id for r in fn(spark, sf).collect())
+
+    for fn in (ingest_gate_growing_batch, ingest_gate_growing_verified_batch):
+        assert ids(fn) == _NEW_VS_NEW_ADMITTED["growing"], fn.__name__
+    for fn in (ingest_dedup_gate_batch, ingest_gate_verified_batch):
+        assert ids(fn) == _NEW_VS_NEW_ADMITTED["static"], fn.__name__

@@ -52,11 +52,11 @@ NOTES = {
     "sim_int8_topk": "Quantization is one codegen map; the <=3-row probe side broadcasts (deliberate small-side BNLJ); dots are pure int64 zip_with folds.",
     "emb_int8_quantize": "Zero exchanges before the presentation sort: scale, codes, and saturation counts are per-row lambda folds in one WholeStageCodegen span.",
     "dedup_source_overlap": "All heavy work is the verified-dedup chain; source labels join broadcast; the groupBy key space is #sources^2 at most.",
-    "stream_ingest_dedup_gate": "Batch twin of the foreachBatch admission gate: per-batch signatures only, band-equality semi-join against the stored index, anti-join back — the historical corpus is never re-shingled.",
+    "stream_ingest_dedup_gate": "Batch twin of the foreachBatch admission gate: per-batch signatures only, one band-equality probe join against the stored index, distinct, anti-join back — the historical corpus is never re-shingled.",
     "sim_ivf_stored_topk": "Probe-only IVF: centroids + inverted lists read from the stored index (no max_by corpus assignment anywhere); only the tiny query set assigns at probe time.",
     "sim_ivfpq_stored_topk": "IVF+PQ composition: probed-cell candidate pairs gate the code scan (ADC input = scan fraction x corpus), distance table broadcast, exact re-rank on the shortlist.",
     "dedup_cut_spans": "Span pipeline unchanged (one df-capped postings exchange); the cut is a broadcast span-array join + a per-row lambda filter — no new exchange, no Python.",
-    "stream_ingest_gate_growing": "Round-9 shape: batch bands broadcast into the streamed stored index (no shuffle of either side), ONE checkpoint barrier per batch, admitted ids derived from the final index in one closing job.",
+    "stream_ingest_gate_growing": "Round-9 shape: batch bands broadcast into the streamed stored index (no shuffle of either side), one probe join per batch catches history and same-batch collisions, ONE checkpoint barrier per batch, admitted ids derived from the final index in one closing job.",
     "sim_range_search": "Radius query over the LSH index: bucket-equality candidates, exact cosine filter, and the in-plan completeness certificate (exact range set from a linear codegen kernel, broadcast back).",
     "join_fuzzy_editdist": "FastSS fuzzy join: deletion-neighborhood explode on DISTINCT names, candidates from an EQUALITY join on the variant string (inverted index, no cartesian), exact levenshtein verify on collisions.",
     "text_repetition_signals": "Gopher repetition filters: n-grams assembled inside the array column, ONE repartition(doc_id) exchange, two chained hash aggs reuse its clustering; top-2gram argmax is MIN of a sign-flipped struct (no window, no joins).",
