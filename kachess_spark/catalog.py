@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -164,7 +165,6 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
         # (b) long nanos under spark.sql.legacy.parquet.nanosAsLong.
         # Normalize both to a session-tz (UTC) TIMESTAMP column.
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -187,6 +187,25 @@ def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = T
     """Register each parquet table as a same-named temp view (enables spark.sql)."""
     for name in tables:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema``'s column order; a
+    StructType or a DDL string) as a DataFrame.  Built from a
+    ``pyarrow.Table``, it becomes a local relation with size statistics:
+    scans of it start no Python worker, and joins against it can
+    broadcast (a Python list would be parallelized as an RDD)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class Tables:

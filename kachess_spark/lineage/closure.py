@@ -6,9 +6,17 @@ schema notes they "may be populated later", i.e. computed downstream of the
 parser; validate_0010.sql builds the same closure ad hoc with scratch
 tables).
 
+Both the full closure and the seeded lookups first make one bounded
+probe of the raw edges (``src, dst`` only, at most SMALL_GRAPH_EDGES + 1
+rows collected).  A metadata-sized edge frame is walked on the driver;
+duplicate edges and self-loops change no BFS result, so the probe runs
+no ``distinct`` and no shuffle.
+
 At enterprise scale the edge set is the one lineage artifact that is
-data-sized (10⁶–10⁸ edges), so closure runs as an iterative DataFrame
-self-join (BFS over the DAG), not a driver-side walk:
+data-sized (10⁶–10⁸ edges), so the full closure runs as an iterative
+DataFrame self-join (BFS over the DAG), not a driver-side walk.  Only
+this distributed branch drops self-loops and duplicate edges
+(``_edge_pairs``, a ``distinct``):
 
 * each round joins the frontier to the edge table on ``_src``; every
   round is a separate action over a fresh plan, so the edge table's
@@ -20,13 +28,12 @@ self-join (BFS over the DAG), not a driver-side walk:
 
 Seeded lookups (``impacted_by``, ``feeds_into``, and the dashboard walk in
 export.py) never build the whole closure; they walk from their seed
-columns only.  A metadata-sized edge frame (≤ SMALL_GRAPH_EDGES edges,
-found by one bounded collect) is walked on the driver, as the full
-closure is.  A larger one is walked one hop per filtered scan (``src IN
-frontier``, pushed into a parquet scan), collecting only the edges that
-leave the frontier and keeping one visited-set per seed.  That walk holds
-at most SMALL_GRAPH_EDGES edges and pairs on the driver: the first scan
-or hop that would hold more hands the pairs found before it, and their
+columns only.  When the probe finds more than SMALL_GRAPH_EDGES edges,
+the graph is walked one hop per filtered scan (``src IN frontier``,
+pushed into a parquet scan), collecting only the edges that leave the
+frontier and keeping one visited-set per seed.  That walk holds at most
+SMALL_GRAPH_EDGES edges and pairs on the driver: the first scan or hop
+that would hold more hands the pairs found before it, and their
 frontier, to the same distributed loop the full closure runs.
 """
 
@@ -34,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kachess_spark.catalog import local_frame
 
 
 # below this many edges the graph is metadata-sized: a driver-side BFS
@@ -87,22 +96,9 @@ def _pairs(seen: dict[int, dict[int, int]]) -> list[tuple[int, int, int]]:
 
 
 def _closure_frame(spark, rows: list[tuple[int, int, int]]) -> DataFrame:
-    """Driver-side closure rows as a DataFrame.  Built from Arrow, a
-    metadata-sized result becomes a local relation, so reading it back
-    runs no Spark job (a Python list would be parallelized)."""
-    import pyarrow as pa
-
-    cols = list(zip(*rows)) or [(), (), ()]
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "ancestor_id": pa.array(cols[0], pa.int64()),
-                "descendant_id": pa.array(cols[1], pa.int64()),
-                "distance": pa.array(cols[2], pa.int32()),
-            }
-        ),
-        _CLOSURE_SCHEMA,
-    )
+    """Driver-side closure rows as a local relation: reading a
+    metadata-sized result back runs no Spark job."""
+    return local_frame(spark, rows, _CLOSURE_SCHEMA)
 
 
 def _closure_bfs_local(
@@ -194,14 +190,15 @@ def transitive_closure(
     minimum hop count per pair (column_lineage.distance,
     db_setup_ddl.sql:187).
 
-    Hybrid execution: metadata-sized graphs (≤ SMALL_GRAPH_EDGES) run a
-    driver BFS — per-iteration Spark job overhead would dominate;
-    enterprise-scale edge sets run the distributed iterative self-join.
+    Hybrid execution: metadata-sized graphs (≤ SMALL_GRAPH_EDGES raw
+    edges, one bounded probe) run a driver BFS — per-iteration Spark job
+    overhead would dominate; enterprise-scale edge sets run the
+    distributed iterative self-join.
     """
-    base = _edge_pairs(edges, src_col, dst_col)
-    sample = _collect_small(base)
+    sample = _collect_small(edges.select(src_col, dst_col))
     if sample is not None:
         return _closure_bfs_local(edges.sparkSession, sample, max_hops)
+    base = _edge_pairs(edges, src_col, dst_col)
     closure = base.withColumn("distance", F.lit(1))
     return _semi_naive(base, closure, closure, 2, max_hops)
 

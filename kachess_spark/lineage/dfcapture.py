@@ -26,6 +26,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from kachess_spark.catalog import local_frame
+
 _ATTR = "org.apache.spark.sql.catalyst.expressions.AttributeReference"
 _ALIAS = "org.apache.spark.sql.catalyst.expressions.Alias"
 
@@ -148,6 +150,6 @@ def dataframe_column_lineage(df: DataFrame) -> list[tuple[str, str, str]]:
 def lineage_frame(df: DataFrame) -> DataFrame:
     """The edge list as a DataFrame (out_column, src_table, src_column)."""
     rows = dataframe_column_lineage(df)
-    return df.sparkSession.createDataFrame(
-        rows, "out_column string, src_table string, src_column string"
+    return local_frame(
+        df.sparkSession, rows, "out_column string, src_table string, src_column string"
     )

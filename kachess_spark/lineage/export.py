@@ -78,7 +78,12 @@ def provenance_report(frames: dict[str, DataFrame]) -> DataFrame:
             ),
             F.col("rel.usage_context"),
         )
-        .orderBy("src_schema", "src_table", "src_column", "dst_column")
+        # total order: rows that tie on the first four keys would
+        # otherwise come back in plan-dependent order
+        .orderBy(
+            "src_schema", "src_table", "src_column", "dst_column",
+            "dst_dataset", "dst_dataset_type", "usage_context",
+        )
     )
 
 

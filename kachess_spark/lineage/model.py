@@ -20,6 +20,8 @@ from itertools import count
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from kachess_spark.catalog import local_frame
+
 # DatasetType (persistable/DatasetType.java:3-9)
 SUBQUERY = "SUBQUERY"
 CTE = "CTE"
@@ -231,19 +233,15 @@ def frames(spark: SparkSession, store: "GraphStore") -> dict[str, DataFrame]:
         for pa in store.partition_adds
     ]
     return {
-        "datasets": spark.createDataFrame(ds_rows, DATASET_SCHEMA),
-        "select_items": spark.createDataFrame(item_rows, SELECT_ITEM_SCHEMA),
-        "select_item_rel": spark.createDataFrame(
-            sorted(rel_set), SELECT_ITEM_REL_SCHEMA
-        ),
-        "dataset_rel": spark.createDataFrame(dsrel_rows, DATASET_REL_SCHEMA),
-        "table_insert": spark.createDataFrame(ins_rows, TABLE_INSERT_SCHEMA),
-        "table_add_partition": spark.createDataFrame(part_rows, PARTITION_ADD_SCHEMA),
-        "sql_sources": spark.createDataFrame(
-            list(store.sql_sources), SQL_SOURCE_SCHEMA
-        ),
-        "dashboard_dataset": spark.createDataFrame(
-            list(store.dashboard_links), DASHBOARD_DATASET_SCHEMA
+        "datasets": local_frame(spark, ds_rows, DATASET_SCHEMA),
+        "select_items": local_frame(spark, item_rows, SELECT_ITEM_SCHEMA),
+        "select_item_rel": local_frame(spark, sorted(rel_set), SELECT_ITEM_REL_SCHEMA),
+        "dataset_rel": local_frame(spark, dsrel_rows, DATASET_REL_SCHEMA),
+        "table_insert": local_frame(spark, ins_rows, TABLE_INSERT_SCHEMA),
+        "table_add_partition": local_frame(spark, part_rows, PARTITION_ADD_SCHEMA),
+        "sql_sources": local_frame(spark, store.sql_sources, SQL_SOURCE_SCHEMA),
+        "dashboard_dataset": local_frame(
+            spark, store.dashboard_links, DASHBOARD_DATASET_SCHEMA
         ),
     }
 
@@ -252,7 +250,9 @@ def frames(spark: SparkSession, store: "GraphStore") -> dict[str, DataFrame]:
 class GraphStore:
     """Everything one extraction session accumulates (driver-side; lineage
     is metadata-sized — the reference's MySQL writes collapse to DataFrame
-    construction here)."""
+    construction here).  ``frames()`` builds each table as an Arrow local
+    relation with size statistics, so no lineage frame starts a Python
+    worker and joins between them broadcast."""
 
     datasets: list[Dataset] = field(default_factory=list)
     item_owner: dict[int, int] = field(default_factory=dict)  # item id → ds id

@@ -4,8 +4,8 @@
 The closure operators are oracle-checked: both engines consume the SAME
 deterministic edge list (frozen below from extracting ``_CORPUS`` with seed
 1000 — ``tests/test_lineage_queries.py`` pins the extractor to it), Spark
-runs the distributed iterative-self-join closure (closure.py) and DuckDB
-runs the equivalent ``WITH RECURSIVE``.  Live extraction itself is a
+runs closure.py's closure (the driver BFS at this size) and DuckDB runs
+the equivalent ``WITH RECURSIVE``.  Live extraction itself is a
 driver-side parse (no SQL equivalent) → rows-only check.
 """
 
@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kachess_spark.catalog import local_frame
 from kachess_spark.registry import query
 
 # The multi-scope golden query (reference test case 0002's shape:
@@ -65,6 +66,7 @@ DS_EDGES: list[tuple[int, int]] = [
     (1000, 1034), (1005, 1034), (1010, 1024),
     (1015, 1020), (1020, 1024), (1024, 1034),
 ]
+_DS_EDGES_DDL = "parent_dataset_id BIGINT, child_dataset_id BIGINT"
 
 
 def _edges_values_sql(edges: list[tuple[int, int]]) -> str:
@@ -90,6 +92,7 @@ FROM walk GROUP BY 1, 2 ORDER BY 1, 2
 
 
 _ITEM_PAIRS = sorted({(a, b) for a, b, _ in ITEM_EDGES})
+_ITEM_PAIRS_DDL = "parent_select_item_id BIGINT, child_select_item_id BIGINT"
 
 
 @query(
@@ -99,13 +102,13 @@ _ITEM_PAIRS = sorted({(a, b) for a, b, _ in ITEM_EDGES})
     ),
 )
 def lineage_column_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed transitive closure of the column-lineage DAG
-    (column_lineage.distance, db_setup_ddl.sql:178-190)."""
+    """Transitive closure of the column-lineage DAG
+    (column_lineage.distance, db_setup_ddl.sql:178-190).  The 68 frozen
+    edges are metadata-sized, so closure.py walks them with its driver
+    BFS; the distributed self-join runs above SMALL_GRAPH_EDGES."""
     from kachess_spark.lineage.closure import column_lineage
 
-    edges = spark.createDataFrame(
-        _ITEM_PAIRS, "parent_select_item_id BIGINT, child_select_item_id BIGINT"
-    )
+    edges = local_frame(spark, _ITEM_PAIRS, _ITEM_PAIRS_DDL)
     return column_lineage(edges).select(
         F.col("parent_select_item_id"),
         F.col("child_select_item_id"),
@@ -121,9 +124,7 @@ def lineage_table_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """table_lineage closure over dataset edges (db_setup_ddl.sql:164-176)."""
     from kachess_spark.lineage.closure import table_lineage
 
-    edges = spark.createDataFrame(
-        DS_EDGES, "parent_dataset_id BIGINT, child_dataset_id BIGINT"
-    )
+    edges = local_frame(spark, DS_EDGES, _DS_EDGES_DDL)
     return table_lineage(edges).select(
         F.col("parent_dataset_id"),
         F.col("child_dataset_id"),
@@ -290,6 +291,10 @@ def _values(rows, cols: str) -> str:
 
 
 _EDGE_COLS = "parent_schema, parent_table, child_schema, child_table"
+_EDGE_DDL = (
+    "parent_schema string, parent_table string, child_schema string,"
+    " child_table string"
+)
 
 _SYMLINK_EXPAND_ORACLE = f"""
 WITH e AS (SELECT * FROM {_values(TBL_NAME_EDGES, _EDGE_COLS)}),
@@ -321,8 +326,9 @@ def lineage_symlink_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     found outside parsing such as by LatestOperator or Storage-Linked")."""
     from kachess_spark.lineage.sidetables import expand_symlinks
 
-    edges = spark.createDataFrame(TBL_NAME_EDGES, _EDGE_COLS.split(", "))
-    sl = spark.createDataFrame(
+    edges = local_frame(spark, TBL_NAME_EDGES, _EDGE_DDL)
+    sl = local_frame(
+        spark,
         SYMLINKS,
         "src_schema string, src_table string, dst_schema string,"
         " dst_table string, linkage_src_key string, linkage_src_value string",
@@ -353,8 +359,8 @@ def lineage_storage_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     db_setup_ddl.sql:139)."""
     from kachess_spark.lineage.sidetables import storage_links
 
-    parts = spark.createDataFrame(
-        ADD_PARTITIONS, "db_schema string, db_table string, location string"
+    parts = local_frame(
+        spark, ADD_PARTITIONS, "db_schema string, db_table string, location string"
     )
     return storage_links(parts).orderBy(
         "src_schema", "src_table", "dst_schema", "dst_table"
@@ -388,9 +394,9 @@ def lineage_sqoop_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     external source."""
     from kachess_spark.lineage.sidetables import sqoop_root_provenance
 
-    edges = spark.createDataFrame(TBL_NAME_EDGES, _EDGE_COLS.split(", "))
-    sq = spark.createDataFrame(
-        SQOOP, "db_schema string, db_table string, etl_task_name string"
+    edges = local_frame(spark, TBL_NAME_EDGES, _EDGE_DDL)
+    sq = local_frame(
+        spark, SQOOP, "db_schema string, db_table string, etl_task_name string"
     )
     return sqoop_root_provenance(edges, sq).orderBy("db_schema", "db_table")
 
@@ -490,9 +496,7 @@ def lineage_impact_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kachess_spark.lineage.closure import impacted_by
 
-    edges = spark.createDataFrame(
-        _ITEM_PAIRS, "parent_select_item_id BIGINT, child_select_item_id BIGINT"
-    )
+    edges = local_frame(spark, _ITEM_PAIRS, _ITEM_PAIRS_DDL)
     return (
         impacted_by(edges, [_IMPACT_ROOT])
         .select("impacted_item_id", F.col("distance").cast("long").alias("distance"))
@@ -543,9 +547,7 @@ def lineage_cycle_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kachess_spark.lineage.closure import transitive_closure
 
-    edges = spark.createDataFrame(
-        CYCLE_EDGES, "parent_dataset_id BIGINT, child_dataset_id BIGINT"
-    )
+    edges = local_frame(spark, CYCLE_EDGES, _DS_EDGES_DDL)
     closure = transitive_closure(
         edges, "parent_dataset_id", "child_dataset_id"
     )
@@ -659,6 +661,6 @@ def lineage_script_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [(s, o, "added") for (s, o, _) in sorted(v2 - v1)]
         + [(s, o, "kept") for (s, o, _) in sorted(v1 & v2)]
     )
-    return spark.createDataFrame(
-        rows, "source_column string, output_column string, change string"
+    return local_frame(
+        spark, rows, "source_column string, output_column string, change string"
     ).orderBy("change", "source_column", "output_column")

@@ -14,7 +14,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from kachess_spark.lineage import LineageSession, fixture_metastore
+from kachess_spark.lineage import LineageSession, fixture_metastore, model
 from kachess_spark.lineage.closure import column_lineage, table_lineage
 from kachess_spark.lineage.preprocess import preprocess, split_statements
 
@@ -669,6 +669,50 @@ def test_graph_referential_integrity(extract):
     assert set(ti.source_dataset_id) <= ds_ids
     # item ids are globally unique
     assert len(f["select_items"]) == len(item_ids)
+
+
+_FRAME_SCHEMAS = {
+    "datasets": model.DATASET_SCHEMA,
+    "select_items": model.SELECT_ITEM_SCHEMA,
+    "select_item_rel": model.SELECT_ITEM_REL_SCHEMA,
+    "dataset_rel": model.DATASET_REL_SCHEMA,
+    "table_insert": model.TABLE_INSERT_SCHEMA,
+    "table_add_partition": model.PARTITION_ADD_SCHEMA,
+    "sql_sources": model.SQL_SOURCE_SCHEMA,
+    "dashboard_dataset": model.DASHBOARD_DATASET_SCHEMA,
+}
+
+
+@pytest.mark.parametrize("populated", [True, False], ids=["populated", "empty"])
+def test_frames_keep_schemas(spark, populated):
+    """Each of the 8 frames carries its model schema exactly (names,
+    types and nullability, as the JVM holds it), with rows or without."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    if populated:
+        s = LineageSession(
+            spark, fixture_metastore(), seed=1000, system_source="DASHBOARD"
+        )
+        s.extract_script(
+            """
+            CREATE TABLE adhoc.part_t (k bigint, v string) PARTITIONED BY (ds string);
+            INSERT OVERWRITE TABLE adhoc.part_t PARTITION (ds='2017-01-01')
+            SELECT a.col100l, b.col201s FROM dw.tab10 a
+            JOIN dw.tab20 b ON a.col100l = b.col200l WHERE b.col202b;
+            ALTER TABLE adhoc.part_t ADD PARTITION (ds='2017-01-02')
+            LOCATION '/data/part_t';
+            SELECT k, count(*) AS n FROM adhoc.part_t GROUP BY k;
+            """
+        )
+        assert not s.skipped
+        frames = s.frames()
+    else:
+        frames = model.frames(spark, model.GraphStore())
+    assert frames.keys() == _FRAME_SCHEMAS.keys()
+    for name, df in frames.items():
+        schema = _parse_datatype_json_string(df._jdf.schema().json())
+        assert schema == _FRAME_SCHEMAS[name], name
+        assert (df.count() > 0) == populated, name
 
 
 def test_determinism_across_sessions(spark):

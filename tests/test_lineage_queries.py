@@ -1,6 +1,7 @@
-"""Pin the frozen edge lists in lineage/queries.py to live extraction, and
-check the distributed closure against DuckDB's WITH RECURSIVE — the same
-comparison the driver runs."""
+"""Pin the frozen edge lists in lineage/queries.py to live extraction,
+check the closure against DuckDB's WITH RECURSIVE — the same comparison
+the driver runs — and check that the lineage frames and queries read
+local relations."""
 
 from __future__ import annotations
 
@@ -122,40 +123,119 @@ def test_extract_edges_golden_ctas_script(spark):
     ]
 
 
-def test_provenance_report_golden_ctas_script(spark):
-    """provenance_report over the CTAS fixture: the exact flat
-    (physical source column -> derived column) set, including the
-    count(*) S_COL_ASTERISK convention and the JOIN-key fan-out to
-    every derived output."""
+# provenance_report of _CTAS_SCRIPT at seed 2000: the exact flat
+# (physical source column -> derived column) set, including the count(*)
+# S_COL_ASTERISK convention and the JOIN-key fan-out to every derived
+# output.
+_CTAS_PROVENANCE = [
+    ("dw", "tab10", "S_COL_ASTERISK", "SUBQUERY", "2010", "n_rows", "SELECT"),
+    ("dw", "tab10", "col100l", "SUBQUERY", "2010", "label", "JOIN"),
+    ("dw", "tab10", "col100l", "SUBQUERY", "2010", "max_i", "JOIN"),
+    ("dw", "tab10", "col100l", "SUBQUERY", "2010", "n_rows", "JOIN"),
+    ("dw", "tab10", "col100l", "SUBQUERY", "2010", "t.col100l = s.col300l", "JOIN"),
+    ("dw", "tab10", "col101s", "SUBQUERY", "2010", "label", "SELECT"),
+    ("dw", "tab10", "col102b", "SUBQUERY", "2010", "label", "WHERE"),
+    ("dw", "tab10", "col102b", "SUBQUERY", "2010", "max_i", "WHERE"),
+    ("dw", "tab10", "col102b", "SUBQUERY", "2010", "n_rows", "WHERE"),
+    ("dw", "tab10", "col102b", "SUBQUERY", "2010", "t.col102b", "WHERE"),
+    ("stage", "tab30", "S_COL_ASTERISK", "SUBQUERY", "2010", "n_rows", "SELECT"),
+    ("stage", "tab30", "col300l", "SUBQUERY", "2010", "label", "JOIN"),
+    ("stage", "tab30", "col300l", "SUBQUERY", "2010", "max_i", "JOIN"),
+    ("stage", "tab30", "col300l", "SUBQUERY", "2010", "n_rows", "JOIN"),
+    ("stage", "tab30", "col300l", "SUBQUERY", "2010", "t.col100l = s.col300l", "JOIN"),
+    ("stage", "tab30", "col303i", "SUBQUERY", "2010", "max_i", "SELECT"),
+]
+
+
+def _ctas_report(spark):
     from kachess_spark.lineage.export import provenance_report
 
     s = LineageSession(spark, fixture_metastore(), seed=2000)
     s.extract_script(_CTAS_SCRIPT)
-    got = sorted(tuple(r) for r in provenance_report(s.frames()).collect())
-    assert got == sorted([
-        ("dw", "tab10", "S_COL_ASTERISK", "SUBQUERY", "2010", "n_rows",
-         "SELECT"),
-        ("dw", "tab10", "col100l", "SUBQUERY", "2010", "label", "JOIN"),
-        ("dw", "tab10", "col100l", "SUBQUERY", "2010", "max_i", "JOIN"),
-        ("dw", "tab10", "col100l", "SUBQUERY", "2010", "n_rows", "JOIN"),
-        ("dw", "tab10", "col100l", "SUBQUERY", "2010",
-         "t.col100l = s.col300l", "JOIN"),
-        ("dw", "tab10", "col101s", "SUBQUERY", "2010", "label", "SELECT"),
-        ("dw", "tab10", "col102b", "SUBQUERY", "2010", "label", "WHERE"),
-        ("dw", "tab10", "col102b", "SUBQUERY", "2010", "max_i", "WHERE"),
-        ("dw", "tab10", "col102b", "SUBQUERY", "2010", "n_rows", "WHERE"),
-        ("dw", "tab10", "col102b", "SUBQUERY", "2010", "t.col102b",
-         "WHERE"),
-        ("stage", "tab30", "S_COL_ASTERISK", "SUBQUERY", "2010", "n_rows",
-         "SELECT"),
-        ("stage", "tab30", "col300l", "SUBQUERY", "2010", "label", "JOIN"),
-        ("stage", "tab30", "col300l", "SUBQUERY", "2010", "max_i", "JOIN"),
-        ("stage", "tab30", "col300l", "SUBQUERY", "2010", "n_rows", "JOIN"),
-        ("stage", "tab30", "col300l", "SUBQUERY", "2010",
-         "t.col100l = s.col300l", "JOIN"),
-        ("stage", "tab30", "col303i", "SUBQUERY", "2010", "max_i",
-         "SELECT"),
-    ])
+    return provenance_report(s.frames())
+
+
+def _report_order(row):
+    """provenance_report's sort keys, in order: the source column, then
+    dst_column, dst_dataset, dst_dataset_type and usage_context."""
+    return row[0], row[1], row[2], row[5], row[4], row[3], row[6]
+
+
+def test_provenance_report_golden_ctas_script(spark):
+    got = sorted(tuple(r) for r in _ctas_report(spark).collect())
+    assert got == sorted(_CTAS_PROVENANCE)
+
+
+# two CTEs read the same columns under the same names: their report rows
+# tie on the source column and dst_column, and the edges of "zz" come
+# first in select_item_rel although "aa" sorts first
+_TIE_SCRIPT = """
+WITH aa AS (SELECT col101s, col100l FROM dw.tab10),
+     zz AS (SELECT col101s, col100l FROM dw.tab10)
+SELECT aa.col101s FROM aa JOIN zz ON aa.col100l = zz.col100l;
+"""
+
+
+def test_provenance_report_order_is_total(spark):
+    """The rows come back in the seven-key order as collected, unsorted:
+    rows that tie on the source column and dst_column (the same derived
+    column in two datasets or two contexts) must not come back in
+    whatever order the join plan left them."""
+    from kachess_spark.lineage.export import provenance_report
+    from kachess_spark.lineage.queries import PROVENANCE_ROWS, lineage_provenance_report
+
+    got = [tuple(r) for r in _ctas_report(spark).collect()]
+    assert got == sorted(_CTAS_PROVENANCE, key=_report_order)
+    got = [tuple(r) for r in lineage_provenance_report(spark, "").collect()]
+    assert got == sorted(PROVENANCE_ROWS, key=_report_order)
+    s = LineageSession(spark, fixture_metastore(), seed=2000)
+    s.extract_script(_TIE_SCRIPT)
+    got = [tuple(r) for r in provenance_report(s.frames()).collect()]
+    assert got == [
+        ("dw", "tab10", c, "CTE", d, c, "SELECT")
+        for c in ("col100l", "col101s")
+        for d in ("aa", "zz")
+    ]
+
+
+def _leaf_classes(df) -> set[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+
+
+def test_lineage_frames_are_local_relations(spark, sf_dir):
+    """Every lineage frame and every registered lineage_* query reads
+    driver-built rows as local relations, never as a parallelized Python
+    RDD (a LogicalRDD leaf: no size statistics, Python workers per scan).
+    The leaf class is tested, not the string "Scan ExistingRDD", which
+    checkpoint output shares."""
+    from kachess_spark import registry
+
+    s = LineageSession(spark, fixture_metastore(), seed=1000)
+    s.extract_script(_CORPUS)
+    for name, df in s.frames().items():
+        assert "LogicalRDD" not in _leaf_classes(df), name
+    registry.load_all()
+    names = sorted(n for n in registry.QUERIES if n.startswith("lineage_"))
+    assert len(names) >= 12
+    for name in names:
+        df = registry.QUERIES[name](spark, sf_dir)
+        assert "LogicalRDD" not in _leaf_classes(df), name
+
+
+def test_provenance_report_joins_broadcast(spark):
+    """The report's four joins read local relations with size statistics,
+    so they plan as broadcast hash joins, never sort-merge joins."""
+    from kachess_spark.lineage.queries import lineage_provenance_report
+
+    df = lineage_provenance_report(spark, "")
+    df.collect()  # finalize the adaptive plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("BroadcastHashJoin") == 4
+    # the only shuffle is the global sort's own range partitioning
+    assert final.count("Exchange ") - final.count("BroadcastExchange") == 1
 
 
 def test_dashboard_columns_golden_select_script(spark):

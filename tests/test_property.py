@@ -445,18 +445,9 @@ def _rel_frame(spark, edges):
     walk's per-hop scans then cost no Spark job, which keeps these
     examples fast; the perf guards below read list- and parquet-backed
     frames."""
-    import pyarrow as pa
+    from kachess_spark.catalog import local_frame
 
-    cols = list(zip(*edges))
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "parent_select_item_id": pa.array(cols[0], pa.int64()),
-                "child_select_item_id": pa.array(cols[1], pa.int64()),
-            }
-        ),
-        _REL_SCHEMA,
-    )
+    return local_frame(spark, edges, _REL_SCHEMA)
 
 
 def _lookups(spark, edges, seeds, max_hops):
@@ -493,6 +484,46 @@ def seeded_graphs(draw, graphs):
 
 
 _DIAMOND = [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (6, 4)]
+
+
+@st.composite
+def noisy_graphs(draw):
+    """(edges, raw): a graph and its edge rows with duplicate rows and
+    self-loops mixed in, one on a node outside the graph."""
+    edges = draw(st.one_of(dags(), cyclic_graphs()))
+    nodes = sorted({v for e in edges for v in e})
+    dups = draw(st.lists(st.sampled_from(edges), min_size=1, max_size=10))
+    loops = draw(st.lists(st.sampled_from(nodes + [99]), min_size=1, max_size=4))
+    return edges, draw(st.permutations(edges + dups + [(v, v) for v in loops]))
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(noisy_graphs())
+@example((_DIAMOND, _DIAMOND + [(1, 2), (4, 5), (4, 4), (99, 99)]))
+def test_closure_ignores_duplicate_edges_and_self_loops(spark, case):
+    """The full closure's size probe reads the raw edges (no distinct),
+    so duplicate rows and self-loops reach the driver BFS: they change no
+    pair and no distance there, nor in the distributed loop."""
+    from kachess_spark.lineage import closure as C
+
+    edges, raw = case
+    df = spark.createDataFrame(raw, "src BIGINT, dst BIGINT")
+    old = C.SMALL_GRAPH_EDGES
+    try:
+        for limit in (old, 0):
+            C.SMALL_GRAPH_EDGES = limit
+            got = [
+                ((r.ancestor_id, r.descendant_id), r.distance)
+                for r in C.transitive_closure(df, "src", "dst").collect()
+            ]
+            assert len(got) == len(dict(got))
+            assert dict(got) == _bfs_closure(edges)
+    finally:
+        C.SMALL_GRAPH_EDGES = old
 
 
 @settings(

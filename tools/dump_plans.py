@@ -70,6 +70,7 @@ NOTES = {
     "mm_scene_cut": "Frame explode keyed by doc_id shuffles once onto the lag-window partition; per-video state is one lag value; rollup reuses the same clustering.",
     "ts_seasonal_decompose": "One exchange onto the event_type window partition (bounded ROWS frame), then a map-side-combinable (event_type, hour) agg — output is metadata-sized.",
     "win_rolling_median": "suppkey filter pushed to the parquet scan; one window exchange; percentile state is O(frame) via the 7-row ROWS frame.",
+    "lineage_provenance_report": "Every source a LocalTableScan; the four joins broadcast; no Exchange before the sort's own range partitioning.",
 }
 
 
