@@ -673,10 +673,9 @@ def dedup_embedding_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stored table — the DuckDB twin REBUILDS the chain plus this keep
     rule, so both the stored asset and the composition stay
     hash-certified end-to-end."""
-    import os
-
     from kachess_spark.pipeline.similarity import (
         KNN_K,
+        _read_state,
         build_graph_serve_state,
     )
 
@@ -684,9 +683,7 @@ def dedup_embedding_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = build_graph_serve_state(spark, sf_dir)
     # the stored graph is k_work-ranked; rk <= KNN_K is exactly
     # sim_knn_graph_descent's delivered edge set
-    g = spark.read.parquet(os.path.join(state_dir, "graph")).where(
-        F.col("rk") <= KNN_K
-    )
+    g = _read_state(spark, state_dir, "graph")[0].where(F.col("rk") <= KNN_K)
     dropped = (
         g.where(
             (F.col("cosine") >= COS_THRESHOLD)

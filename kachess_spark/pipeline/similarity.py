@@ -356,20 +356,39 @@ def _plane_signs(band: int, p: int, dim: int) -> list[float]:
     return _md5_signs(f"b{band}p{p}", dim)
 
 
-def _plane_dot(band: int, p: int, dim: int):
-    """Signed-projection dot against the (band, p) hyperplane as a
-    literal-array zip_with fold — whole-stage codegen, no explode, no
-    shuffle; the DECIMAL fold makes the sum order-independent so the
-    bucket bit matches the old SUM-aggregate exactly."""
-    arr = "array(" + ",".join(
-        f"{s:.1f}D" for s in _plane_signs(band, p, dim)
-    ) + ")"
-    return F.expr(_dec_dot("embedding", arr, "CAST(x AS DOUBLE) * s", y="s"))
-
-
 def _emb_dim(df: DataFrame) -> int:
     row = df.select(F.size("embedding")).first()
     return int(row[0]) if row else 0
+
+
+def _signed_dots(df: DataFrame, signs: list[list[float]]) -> DataFrame:
+    """(vec_id, dots): every row's exact-DECIMAL dot with each ±1 row of
+    ``signs`` — the one signed projection behind the LSH plane bits
+    (``banded_hyperplane_buckets``) and ``emb_random_projection``.
+
+    The corpus is spread first: single-row-group parquet arrives in few
+    splits and the folds are CPU-bound.  The sign matrix travels as ONE
+    string literal decoded by from_json, which ConstantFolding collapses
+    to a literal array at optimize time — a single expression node, so
+    analysis stays milliseconds (a 4k-element nested-literal tree cost
+    10 s+ of driver analysis; the earlier 1-row broadcast-DataFrame join
+    was fast but planned as a BroadcastNestedLoopJoin, muddying the
+    no-all-pairs plan assertions) and the executor-side fold reads a
+    constant."""
+    import json
+
+    dots = (
+        "transform(signs, s -> "
+        + _dec_dot("embedding", "s", "CAST(x AS DOUBLE) * sg", y="sg")
+        + ")"
+    )
+    return (
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism, "vec_id")
+        .withColumn(
+            "signs", F.from_json(F.lit(json.dumps(signs)), "array<array<double>>")
+        )
+        .select("vec_id", F.expr(dots).alias("dots"))
+    )
 
 
 def banded_hyperplane_buckets(
@@ -393,49 +412,22 @@ def banded_hyperplane_buckets(
     dim = _emb_dim(df)
     if n_bands is None:
         n_bands = ann_n_bands(df.count())
-    # single-row-group parquet → spread before the CPU-bound folds
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, "vec_id")
-    # The L·b sign matrix travels as ONE string literal decoded by
-    # from_json, which ConstantFolding collapses to a literal array at
-    # optimize time — a single expression node, so analysis stays
-    # milliseconds (a 4k-element nested-literal tree cost 10 s+ of
-    # driver analysis; the earlier 1-row broadcast-DataFrame join was
-    # fast but planned as a BroadcastNestedLoopJoin, muddying the
-    # no-all-pairs plan assertions) and the executor-side fold reads a
-    # constant.
-    import json
-
-    signs_json = json.dumps(
-        [
-            _plane_signs(b, p, dim)
-            for b in range(n_bands)
-            for p in range(n_planes)
-        ]
-    )
-    df = df.withColumn(
-        "signs",
-        F.from_json(F.lit(signs_json), "array<array<double>>"),
-    )
-    dots = (
-        "transform(signs, s -> "
-        + _dec_dot("embedding", "s", "CAST(x AS DOUBLE) * sg", y="sg")
-        + ")"
-    )
+    signs = [
+        _plane_signs(b, p, dim) for b in range(n_bands) for p in range(n_planes)
+    ]
     # barrier: without it CollapseProject inlines the 64-fold dot
     # expression into every element_at() below — 64 recomputations of
     # the whole fold per row
-    sig = df.select(
-        F.col("vec_id").alias("vid"), F.expr(dots).alias("dots")
-    ).localCheckpoint(eager=False)
+    sig = _signed_dots(df, signs).localCheckpoint(eager=False)
     bucket_terms = " + ".join(
         f"(CASE WHEN element_at(dots, b * {n_planes} + {p} + 1) > 0"
         f" THEN {1 << p} ELSE 0 END)"
         for p in range(n_planes)
     )
     buckets = f"transform(sequence(0, {n_bands - 1}), b -> {bucket_terms})"
-    return sig.select("vid", F.expr(buckets).alias("bkts")).select(
-        "vid", F.posexplode("bkts").alias("band", "bucket")
-    )
+    return sig.select(
+        F.col("vec_id").alias("vid"), F.expr(buckets).alias("bkts")
+    ).select("vid", F.posexplode("bkts").alias("band", "bucket"))
 
 
 @query("sim_ann_lsh")  # rows-only: candidate generation; recall asserted in tests
@@ -757,12 +749,10 @@ def _ivf_graph_candidates(
     ``knn_graph_n_probe`` nearest cells and pairs with those cells'
     inverted lists.  Returns the (src, dst) frame, spread for the
     CPU-bound scoring that follows, and the corpus size n."""
-    import os
-
-    centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
-    meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
-    cells = int(meta["cells"])
+    centroids, assign, meta = _read_state(
+        spark, index_dir, "centroids", "assignments", "meta"
+    )
+    cells = meta["cells"]
     n_probe = knn_graph_n_probe(cells)
     # corpus-wide multi-probe: every node's n_probe nearest cells
     qprobe = ivf_assign(spark, emb, centroids, n=n_probe).select(
@@ -772,7 +762,7 @@ def _ivf_graph_candidates(
     # an emb.count() action here re-scanned the corpus inside the timed
     # query); n_built only drifts from |corpus| via post-build inserts,
     # and sizing tolerates that slack
-    n = int(meta["n_built"])
+    n = meta["n_built"]
     cands = (
         assign.join(qprobe, "data_cell")  # inverted lists x probe sets
         .where(F.col("vid") != F.col("src"))
@@ -1225,6 +1215,108 @@ def _knn_descent_graph(
     return topk
 
 
+# ------------------------------------ stored ANN state lifecycle
+# Every stored asset (the IVF, PQ and residual IVFPQ indexes, the LSH
+# k-NN state, the NN-descent serve graph) is one offline build followed
+# by many probes (REPOSE, ICDE 2021): a parameter-keyed default dir, a
+# reuse-or-clear check against the stored meta row, the build's tables,
+# and the meta row written last — so a crash mid-build leaves no meta
+# and the next call rebuilds.
+
+
+def _stored_state(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    state_dir: str | None,
+    meta: dict,
+    tables,
+) -> str:
+    """Build or reuse the stored state ``kind`` and return its dir.
+
+    The default dir is ``{kind}_{md5(abs sf_dir | kind | meta values)}``
+    over every meta value except the corpus counts ``n_built`` and
+    ``n_vectors`` (kind keeps states with equal parameters apart).  A
+    dir whose meta matches ``meta`` is reused untouched; otherwise
+    ``tables()`` (name → DataFrameWriter, built lazily so a reuse runs
+    no training) is written, then ``meta``."""
+    import hashlib
+    import os
+
+    from kachess_spark.operators.sinks import _scratch
+
+    if state_dir is None:
+        params = [
+            str(v) for k, v in meta.items() if k not in ("n_built", "n_vectors")
+        ]
+        key = hashlib.md5(
+            "|".join([os.path.abspath(sf_dir), kind, *params]).encode()
+        ).hexdigest()[:12]
+        state_dir = _scratch(f"{kind}_{key}")
+    want = {k: v for k, v in meta.items() if k != "n_vectors"}
+    if not _reuse_or_clear_index(spark, state_dir, want):
+        _write_state(spark, state_dir, tables(), meta)
+    return state_dir
+
+
+def _reuse_or_clear_index(
+    spark: SparkSession, index_dir: str, want: dict
+) -> bool:
+    """True if ``index_dir`` holds a state whose meta row matches
+    ``want`` (reuse it); otherwise clear the dir for a rebuild.
+    ``_stored_state`` passes every meta column but ``n_vectors``.
+    Reuse used to key on meta-dir EXISTENCE alone, so a later call with
+    an explicit dir and different parameters silently served the stale
+    index (round-8 advice, medium).  ``n_built`` (corpus size at build
+    time) is compared too — same params over a different corpus
+    snapshot is also a stale index; post-build inserts update
+    ``n_vectors`` but never ``n_built``, so legitimate incremental
+    growth does not trigger a rebuild."""
+    import os
+    import shutil
+
+    if not os.path.isdir(os.path.join(index_dir, "meta")):
+        return False
+    (meta,) = _read_state(spark, index_dir, "meta")
+    if all(meta.get(k) == v for k, v in want.items()):
+        return True
+    shutil.rmtree(index_dir, ignore_errors=True)
+    return False
+
+
+def _write_state(
+    spark: SparkSession, state_dir: str, tables: dict, meta: dict
+) -> None:
+    """Overwrite each of ``tables`` (name → DataFrameWriter) under
+    ``state_dir``, then the one-row meta/ table from ``meta``: strings
+    as string, the corpus counts ``n_built``/``n_vectors`` as long,
+    every other integer as int."""
+    import os
+
+    for name, writer in tables.items():
+        writer.mode("overwrite").parquet(os.path.join(state_dir, name))
+    ddl = ", ".join(
+        f"{k} string" if isinstance(v, str)
+        else f"{k} long" if k in ("n_built", "n_vectors")
+        else f"{k} int"
+        for k, v in meta.items()
+    )
+    meta_df = spark.createDataFrame([tuple(meta.values())], ddl)
+    meta_df.write.mode("overwrite").parquet(os.path.join(state_dir, "meta"))
+
+
+def _read_state(spark: SparkSession, state_dir: str, *parts: str) -> list:
+    """The named tables of a stored state, in order; the part "meta"
+    comes back as its one row, a dict."""
+    import os
+
+    out = []
+    for part in parts:
+        df = spark.read.parquet(os.path.join(state_dir, part))
+        out.append(df.head().asDict() if part == "meta" else df)
+    return out
+
+
 # ------------------------------ graph-served ANN (beam search)
 
 GS_ENTRIES = 8  # entry points at the base corpus size
@@ -1254,39 +1346,20 @@ def build_graph_serve_state(
     not the delivered top-{KNN_K}) as the navigable serving asset —
     graph-based ANN serving (HNSW's base-layer idea) needs the wider
     degree to stay connected under greedy pruning.  Idempotent and
-    parameter-keyed like build_ivf_index/build_knn_state; ``n_built``
-    joins the meta comparison (round-12 verdict weak item) so a
-    re-materialized corpus at the same path triggers a rebuild instead
-    of silently serving the stale graph — same contract as the
-    LSH/IVF/PQ/IVFPQ stored states."""
-    import hashlib
-    import os
-
-    from kachess_spark.operators.sinks import _scratch
-
-    n = int(Tables(spark, sf_dir).embeddings.count())
+    parameter-keyed (``_stored_state``, like every stored state);
+    ``n_built`` joins the meta comparison (round-12 verdict weak item)
+    so a re-materialized corpus at the same path triggers a rebuild
+    instead of silently serving the stale graph."""
+    n = Tables(spark, sf_dir).embeddings.count()
     rounds = knn_descent_rounds(n)
-    meta = {
-        "rounds": int(rounds),
-        "k_work": int(KNN_DESCENT_K),
-        "n_built": n,
-    }
-    if state_dir is None:
-        key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|gserve|{rounds}"
-            f"|{KNN_DESCENT_K}".encode()
-        ).hexdigest()[:12]
-        state_dir = _scratch(f"gserve_state_{key}")
-    if _reuse_or_clear_index(spark, state_dir, meta):
-        return state_dir
-    _knn_descent_graph(spark, sf_dir, rounds=rounds).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(state_dir, "graph"))
-    spark.createDataFrame(
-        [(meta["rounds"], meta["k_work"], meta["n_built"])],
-        "rounds int, k_work int, n_built long",
-    ).write.mode("overwrite").parquet(os.path.join(state_dir, "meta"))
-    return state_dir
+    return _stored_state(
+        spark,
+        sf_dir,
+        "gserve_state",
+        state_dir,
+        {"rounds": rounds, "k_work": KNN_DESCENT_K, "n_built": n},
+        lambda: {"graph": _knn_descent_graph(spark, sf_dir, rounds=rounds).write},
+    )
 
 
 def _walk_entries(ids: DataFrame, n: int) -> DataFrame:
@@ -1368,8 +1441,6 @@ def sim_graph_stored_topk(
     ~(entries + hops·beam·2k)/n of the corpus and recall tracks that
     fraction (RECALL.md frontier context) — the pytest floor is set
     accordingly and the dials are the corpus owner's."""
-    import os
-
     if state_dir is None:
         state_dir = build_graph_serve_state(spark, sf_dir)
     t = Tables(spark, sf_dir)
@@ -1377,11 +1448,9 @@ def sim_graph_stored_topk(
     # entry schedule from the stored meta's n_built (the corpus the
     # graph was built over — the right n for walking it), not a
     # count() action in the timed serving path
-    n_built = int(
-        spark.read.parquet(os.path.join(state_dir, "meta")).head()["n_built"]
-    )
-    und = _undirected(spark.read.parquet(os.path.join(state_dir, "graph")))
-    entries = _walk_entries(emb.select("vec_id"), n_built)
+    meta, graph = _read_state(spark, state_dir, "meta", "graph")
+    und = _undirected(graph)
+    entries = _walk_entries(emb.select("vec_id"), meta["n_built"])
     queries = emb.where(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("src")
     )
@@ -1462,39 +1531,23 @@ def build_knn_state(
     """Persist the v1 LSH-graph state an incremental maintainer reads:
     the banded signature table (buckets/), the v1 neighbor graph
     (graph/), and meta (n at build time + the plane/band schedule that
-    n fixed).  Idempotent and parameter-keyed like build_ivf_index —
+    n fixed).  Idempotent and parameter-keyed (``_stored_state``) —
     the graph-build cost is paid once per corpus version and amortized
     over every incremental update until the next full rebuild."""
-    import hashlib
-    import os
-
-    from kachess_spark.operators.sinks import _scratch
-
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     n = emb.count()
     bands, planes = ann_n_bands(n), knn_n_planes(n)
-    if state_dir is None:
-        key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|knng|{bands}|{planes}".encode()
-        ).hexdigest()[:12]
-        state_dir = _scratch(f"knn_state_{key}")
-    if _reuse_or_clear_index(
+    return _stored_state(
         spark,
+        sf_dir,
+        "knn_state",
         state_dir,
-        {"n_built": int(n), "bands": int(bands), "planes": int(planes)},
-    ):
-        return state_dir
-    buckets = banded_hyperplane_buckets(emb, bands, planes)
-    buckets.write.mode("overwrite").parquet(os.path.join(state_dir, "buckets"))
-    sim_knn_graph(spark, sf_dir).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "graph")
+        {"n_built": n, "bands": bands, "planes": planes},
+        lambda: {
+            "buckets": banded_hyperplane_buckets(emb, bands, planes).write,
+            "graph": sim_knn_graph(spark, sf_dir).write,
+        },
     )
-    spark.createDataFrame(
-        [(int(n), int(bands), int(planes))],
-        "n_built long, bands int, planes int",
-    ).write.mode("overwrite").parquet(os.path.join(state_dir, "meta"))
-    return state_dir
 
 
 @query("sim_knn_graph_incremental")  # oracle attached post-hoc below
@@ -1546,16 +1599,12 @@ def sim_knn_graph_incremental(
     stored graph) are read, anti-joined and unioned but never
     re-scored (BASELINE.md round-11 records cost tracking the delta).
     """
-    import os
-
     if state_dir is None:
         state_dir = build_knn_state(spark, sf_dir)
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    meta = spark.read.parquet(os.path.join(state_dir, "meta")).head()
-    bands, planes = int(meta["bands"]), int(meta["planes"])
-    b1 = spark.read.parquet(os.path.join(state_dir, "buckets"))
-    g1 = spark.read.parquet(os.path.join(state_dir, "graph"))
+    meta, b1, g1 = _read_state(spark, state_dir, "meta", "buckets", "graph")
+    bands, planes = meta["bands"], meta["planes"]
 
     removed, edited, _, kept, added = _snapshot_v2_parts(emb)
     emb2 = kept.unionByName(added)
@@ -1675,13 +1724,11 @@ def _serve_incremental_working(
     cuts it to the delivered top-{KNN_K}; ``update_graph_serve_state``
     persists it whole as the maintained serving asset.  See the
     registered wrapper's docstring for the full contract."""
-    import os
-
     if state_dir is None:
         state_dir = build_graph_serve_state(spark, sf_dir)
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    g1 = spark.read.parquet(os.path.join(state_dir, "graph")).select(
+    g1 = _read_state(spark, state_dir, "graph")[0].select(
         "src", "dst", "cosine", "rk"
     )
 
@@ -1901,17 +1948,11 @@ def update_graph_serve_state(
     # the WORKING-degree graph is what serving needs (degree k_work,
     # not the delivered top-{KNN_K} cut)
     g2 = _serve_incremental_working(spark, sf_dir, state_dir=state_dir)
-    meta_v1 = spark.read.parquet(os.path.join(state_dir, "meta")).head()
-    n2 = int(
-        knn_snapshot_v2(
-            Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
-        ).count()
-    )
-    g2.write.mode("overwrite").parquet(os.path.join(out_dir, "graph"))
-    spark.createDataFrame(
-        [(int(meta_v1["rounds"]), int(meta_v1["k_work"]), n2)],
-        "rounds int, k_work int, n_built long",
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "meta"))
+    (meta_v1,) = _read_state(spark, state_dir, "meta")
+    n2 = knn_snapshot_v2(
+        Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    ).count()
+    _write_state(spark, out_dir, {"graph": g2.write}, {**meta_v1, "n_built": n2})
     return out_dir
 
 
@@ -1942,25 +1983,16 @@ def ivf_assign(
     # single-task stage, profiled)
     from kachess_spark.pipeline._cosine_kernel import (
         cosine_pair_batches_unrounded,
-        norm_batches,
     )
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    def with_nrm(df: DataFrame) -> DataFrame:
-        d2 = df.select("vec_id", "embedding")
-        sch = StructType(
-            list(d2.schema.fields) + [StructField("nrm", DoubleType())]
-        )
-        return d2.mapInArrow(norm_batches, sch)
 
     vid_t = emb.schema["vec_id"].dataType.simpleString()
     cell_t = centroids.schema["vec_id"].dataType.simpleString()
-    e = with_nrm(emb).select(
+    e = _emb_with_norms(emb).select(
         F.col("vec_id").cast("long").alias("src"),
         F.col("embedding").alias("s_emb"),
         F.col("nrm").alias("s_nrm"),
     )
-    c = with_nrm(centroids).select(
+    c = _emb_with_norms(centroids).select(
         F.col("vec_id").cast("long").alias("dst"),
         F.col("embedding").alias("d_emb"),
         F.col("nrm").alias("d_nrm"),
@@ -2039,6 +2071,27 @@ def _ivf_search(
     )
 
 
+def _ivf_probe_pairs(
+    spark: SparkSession,
+    queries: DataFrame,
+    centroids: DataFrame,
+    assign: DataFrame,
+    n_probe: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The query-side IVF probe every stored-index ranker shares:
+    (qprobe, cand) — each query's ``n_probe`` nearest cells (qid,
+    data_cell), and the (vid, data_cell) inverted lists ``assign``
+    joined with them broadcast, self-pairs dropped (data_cell, vid,
+    qid).  Each caller projects ``cand`` for its own scan."""
+    qprobe = ivf_assign(spark, queries, centroids, n=n_probe).select(
+        F.col("vid").alias("qid"), F.col("cell").alias("data_cell")
+    )
+    cand = assign.join(broadcast(qprobe), "data_cell").where(
+        F.col("vid") != F.col("qid")
+    )
+    return qprobe, cand
+
+
 def _ivf_probe(
     spark: SparkSession,
     emb: DataFrame,
@@ -2055,13 +2108,9 @@ def _ivf_probe(
     caller's (in-plan for the self-contained operators, a STORED table
     for the offline-index probe)."""
     queries = emb.where(F.col("vec_id").isin(*probe_ids))
-    qprobe = ivf_assign(spark, queries, centroids, n=n_probe).select(
-        F.col("vid").alias("qid"), F.col("cell").alias("data_cell")
-    )
+    _, cand = _ivf_probe_pairs(spark, queries, centroids, assign, n_probe)
     cand_ids = (
-        assign.join(broadcast(qprobe), "data_cell")
-        .where(F.col("vid") != F.col("qid"))
-        .select("qid", "vid")
+        cand.select("qid", "vid")
         .distinct()
         # consumed twice (cand_vecs + the rank semi-join) — the plan
         # duplication is accepted: the serving contract (plan-asserted)
@@ -2113,21 +2162,23 @@ def sim_ivf_topk(
     )
 
 
-def kmeans_centroids(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
-    """Lloyd's k-means trained inside the engine (IVF coarse quantizer),
-    {IVF_BUILD_ITERS} round(s).
+def _lloyd(emb: DataFrame, k: int, assign, iters: int) -> DataFrame:
+    """Lloyd's k-means, the one loop behind both trained quantizers:
+    ``assign(emb, cent)`` → (vid, centroid id) is the assignment rule
+    (``ivf_assign``'s cosine argmax for the IVF cells, ``_assign_l2``'s
+    squared-L2 argmin for the PQ codebooks), run for ``iters`` rounds.
 
     Deterministic throughout: seeding = the k lowest-id vectors (no RNG;
-    RECALL.md records the farthest-first seeding sweep that lost to
-    it), per-dimension means via exact DECIMAL sums
-    (combine-order-proof), and ties in assignment broken by cell id
-    (ivf_assign's row_number).
+    RECALL.md records the farthest-first and lowest-xxhash seedings that
+    lost to it — PQ recall@5 0.93 vs 0.60 at sf0.1, k=16 — so don't
+    "fix" it without re-running that sweep), per-dimension means via
+    exact DECIMAL sums (combine-order-proof), and assignment ties broken
+    by centroid id inside ``assign``.
 
-    Scale shape per iteration: one broadcast-join assignment pass over
-    the data + one (cell, pos) aggregation — both shuffle-light; the
-    centroid frame is k rows and localCheckpointed so the loop never
-    builds a rounds-deep plan.  Returns (vec_id=cell, embedding).
-    """
+    Scale shape per round: one assignment pass over the data + one
+    (centroid, pos) aggregation — both shuffle-light; the centroid frame
+    is k rows and localCheckpointed so the loop never builds a
+    rounds-deep plan.  Returns (vec_id=centroid id, embedding)."""
     cent = (
         emb.orderBy("vec_id")
         .limit(k)
@@ -2138,11 +2189,12 @@ def kmeans_centroids(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     d = _exploded(emb, "vid", "dv").localCheckpoint(eager=False)
-    for _ in range(IVF_BUILD_ITERS):
-        assign = ivf_assign(spark, emb, cent, n=1).select("vid", "cell")
+    for _ in range(iters):
+        a = assign(emb, cent)
+        key = a.columns[1]  # cell (IVF) or code (PQ)
         means = (
-            d.join(assign, "vid")
-            .groupBy("cell", "pos")
+            d.join(a, "vid")
+            .groupBy(key, "pos")
             .agg(
                 (
                     F.sum(F.col("dv").cast(PDEC)) / F.count("*")
@@ -2150,17 +2202,30 @@ def kmeans_centroids(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
             )
         )
         cent = (
-            means.groupBy("cell")
+            means.groupBy(key)
             .agg(
                 F.expr(
                     "transform(sort_array(collect_list(struct(pos, mv))),"
                     " s -> s.mv)"
                 ).alias("embedding")
             )
-            .select(F.col("cell").alias("vec_id"), "embedding")
+            .select(F.col(key).alias("vec_id"), "embedding")
             .localCheckpoint(eager=True)
         )
     return cent
+
+
+def kmeans_centroids(spark: SparkSession, emb: DataFrame, k: int) -> DataFrame:
+    """Lloyd's k-means trained inside the engine (IVF coarse quantizer):
+    {IVF_BUILD_ITERS} round(s) of ``_lloyd`` under ``ivf_assign``'s
+    cosine argmax (cell-id tie-break).  Returns (vec_id=cell, embedding).
+    """
+    return _lloyd(
+        emb,
+        k,
+        lambda e, c: ivf_assign(spark, e, c, n=1).select("vid", "cell"),
+        IVF_BUILD_ITERS,
+    )
 
 
 @query("sim_ivf_kmeans_topk")  # rows-only: approximate; recall in tests
@@ -2326,6 +2391,23 @@ def _ann_index_build_oracle() -> str:
     FROM i_asgF GROUP BY cell ORDER BY cell"""
 
 
+def _sql_insert_growth(src: str, keys: tuple[str, ...]) -> str:
+    """The insert reports' closing SELECT over a CTE ``src`` of the
+    FULL corpus's (vid, keys...) rows: per key, n_base (the base rows,
+    vid % 10 <> 0), n_total and n_inserted — ``_insert_report``'s
+    DuckDB twin."""
+    k = ", ".join(keys)
+    return f"""
+    SELECT {", ".join(f"CAST(t.{c} AS INTEGER) AS {c}" for c in keys)},
+           COALESCE(b.n_base, 0) AS n_base,
+           t.n_total,
+           t.n_total - COALESCE(b.n_base, 0) AS n_inserted
+    FROM (SELECT {k}, COUNT(*) AS n_total FROM {src} GROUP BY {k}) t
+    LEFT JOIN (SELECT {k}, COUNT(*) AS n_base FROM {src}
+               WHERE vid % 10 <> 0 GROUP BY {k}) b USING ({k})
+    ORDER BY {k}"""
+
+
 def _ann_index_insert_oracle() -> str:
     """Train on the 90% base corpus, then assign the FULL corpus to the
     frozen base centroids — base rows reproduce the stored lists, delta
@@ -2341,122 +2423,67 @@ def _ann_index_insert_oracle() -> str:
       SELECT vid, SUM(CAST(dv * dv AS DECIMAL(28,14))) AS nn
       FROM f_d GROUP BY vid
     ),
-    {_sql_ivf_assign("f_d", "f_norms", "b_centF", "f_asg")}
-    SELECT CAST(t.cell AS INTEGER) AS cell,
-           COALESCE(b.n_base, 0) AS n_base,
-           t.n_total,
-           t.n_total - COALESCE(b.n_base, 0) AS n_inserted
-    FROM (SELECT cell, COUNT(*) AS n_total FROM f_asg GROUP BY cell) t
-    LEFT JOIN (SELECT cell, COUNT(*) AS n_base FROM f_asg
-               WHERE vid % 10 <> 0 GROUP BY cell) b USING (cell)
-    ORDER BY cell"""
-
-
-def _reuse_or_clear_index(
-    spark: SparkSession, index_dir: str, want: dict
-) -> bool:
-    """True if ``index_dir`` holds an index built with exactly the
-    requested parameters (reuse it); otherwise clear the dir for a
-    rebuild.  Reuse used to key on meta-dir EXISTENCE alone, so a later
-    call with an explicit ``index_dir`` and different cells/n_probe/
-    iters/seeding silently served the stale index with the old
-    parameters (round-8 advice, medium).  ``n_built`` (corpus size at
-    build time) is compared too — same params over a different corpus
-    snapshot is also a stale index; post-build inserts update
-    ``n_vectors`` but never ``n_built``, so legitimate incremental
-    growth does not trigger a rebuild."""
-    import os
-    import shutil
-
-    meta_dir = os.path.join(index_dir, "meta")
-    if not os.path.isdir(meta_dir):
-        return False
-    meta = spark.read.parquet(meta_dir).head().asDict()
-    if all(meta.get(k) == v for k, v in want.items()):
-        return True
-    shutil.rmtree(index_dir, ignore_errors=True)
-    return False
+    {_sql_ivf_assign("f_d", "f_norms", "b_centF", "f_asg")}\
+{_sql_insert_growth("f_asg", ("cell",))}"""
 
 
 def build_ivf_index(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str | None = None,
-    cells: int | None = None,
-    n_probe: int | None = None,
     emb: DataFrame | None = None,
 ) -> str:
     """Train-once IVF index build: k-means centroids + the corpus-wide
     cell assignment (the inverted lists), written as parquet tables
     under ``index_dir`` (centroids/, assignments/, meta/).  Idempotent:
-    training is fully deterministic, so an existing index for the same
-    parameters is reused as-is (the default dir is keyed on them).
+    training is fully deterministic, so an existing index with the same
+    meta is reused as-is (``_stored_state``; the default dir is keyed on
+    the parameters).  ``emb`` (default: the corpus at ``sf_dir``) is the
+    set to train on and index — the insert demos build on a base subset.
 
-    Training is ``IVF_BUILD_ITERS`` (1) Lloyd round from first-k
-    seeds — the round-10 POPULATION-recall winner after the probe-bias
-    correction in RECALL.md (the round-9 iters=0 default was an
-    artifact of probing the seed vectors themselves).  The meta row
-    still records ``iters`` and ``seeding`` so indexes stay
-    comparable across builds.
+    Cells and probes come from the corpus size: ``ivf_n_cells(n)`` and
+    ``ivf_n_probe(cells)``.  Training is ``IVF_BUILD_ITERS`` (1) Lloyd
+    round from first-k seeds — the round-10 POPULATION-recall winner
+    after the probe-bias correction in RECALL.md (the round-9 iters=0
+    default was an artifact of probing the seed vectors themselves).
+    The meta row still records ``iters`` and ``seeding`` so indexes
+    stay comparable across builds.
 
     This is where the n·cells assignment cost lives at production
     scale — paid once per corpus version, amortized over every query
     ``sim_ivf_stored_topk`` serves.
     """
-    import hashlib
-    import os
-
-    from kachess_spark.operators.sinks import _scratch
-
     if emb is None:
-        t = Tables(spark, sf_dir)
-        emb = t.embeddings.select("vec_id", "embedding")
+        emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     n = emb.count()
-    if cells is None:
-        cells = ivf_n_cells(n)
-    if n_probe is None:
-        n_probe = ivf_n_probe(cells)
-    if index_dir is None:
-        key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|{cells}|{n_probe}"
-            f"|{IVF_BUILD_ITERS}|first"
-            .encode()
-        ).hexdigest()[:12]
-        index_dir = _scratch(f"ivf_index_{key}")
-    if _reuse_or_clear_index(
-        spark,
-        index_dir,
-        {
-            "n_built": int(n),
-            "cells": int(cells),
-            "n_probe": int(n_probe),
-            "iters": IVF_BUILD_ITERS,
-            "seeding": "first",
-        },
-    ):
-        return index_dir  # deterministic build + same params → reuse
-    meta_dir = os.path.join(index_dir, "meta")
-    centroids = kmeans_centroids(spark, emb, cells)
-    assign = ivf_assign(spark, emb, centroids, n=1).select(
-        "vid", F.col("cell").alias("data_cell")
-    )
-    centroids.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "centroids")
-    )
-    # the inverted lists are PARTITIONED BY cell: a probe's broadcast
-    # of its n_probe cells dynamically prunes the scan to those cells'
-    # files (DPP — asserted in the plan test), which at 100 TB means
-    # reading probe/cells of the index, not all of it.  repartition
-    # first so each cell writes one file, not one per input task
-    assign.repartition("data_cell").write.partitionBy(
-        "data_cell"
-    ).mode("overwrite").parquet(os.path.join(index_dir, "assignments"))
-    spark.createDataFrame(
-        [(int(n), int(cells), int(n_probe), IVF_BUILD_ITERS, "first", int(n))],
-        "n_vectors long, cells int, n_probe int, iters int,"
-        " seeding string, n_built long",
-    ).write.mode("overwrite").parquet(meta_dir)
-    return index_dir
+    cells = ivf_n_cells(n)
+
+    def tables() -> dict:
+        centroids = kmeans_centroids(spark, emb, cells)
+        assign = ivf_assign(spark, emb, centroids, n=1).select(
+            "vid", F.col("cell").alias("data_cell")
+        )
+        # the inverted lists are PARTITIONED BY cell: a probe's broadcast
+        # of its n_probe cells dynamically prunes the scan to those cells'
+        # files (DPP — asserted in the plan test), which at 100 TB means
+        # reading probe/cells of the index, not all of it.  repartition
+        # first so each cell writes one file, not one per input task
+        return {
+            "centroids": centroids.write,
+            "assignments": assign.repartition("data_cell").write.partitionBy(
+                "data_cell"
+            ),
+        }
+
+    meta = {
+        "n_vectors": n,
+        "cells": cells,
+        "n_probe": ivf_n_probe(cells),
+        "iters": IVF_BUILD_ITERS,
+        "seeding": "first",
+        "n_built": n,
+    }
+    return _stored_state(spark, sf_dir, "ivf_index", index_dir, meta, tables)
 
 
 def ivf_index_insert(
@@ -2474,35 +2501,19 @@ def ivf_index_insert(
     does)."""
     import os
 
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids"))
+    cent, meta = _read_state(spark, index_dir, "centroids", "meta")
     assign = ivf_assign(spark, new_vectors, cent, n=1).select(
         "vid", F.col("cell").alias("data_cell")
     )
     assign.repartition("data_cell").write.partitionBy("data_cell").mode(
         "append"
     ).parquet(os.path.join(index_dir, "assignments"))
-    meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
     # n_vectors recounted from the stored table, not read-head-then-
     # incremented (round-8 advice, low): a crash between the append and
     # this overwrite leaves the count recoverable on the next insert,
     # and the count can never drift from the lists it describes
-    n_now = spark.read.parquet(
-        os.path.join(index_dir, "assignments")
-    ).count()
-    spark.createDataFrame(
-        [
-            (
-                int(n_now),
-                int(meta["cells"]),
-                int(meta["n_probe"]),
-                int(meta["iters"]),
-                meta["seeding"],
-                int(meta["n_built"]),
-            )
-        ],
-        "n_vectors long, cells int, n_probe int, iters int,"
-        " seeding string, n_built long",
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "meta"))
+    (lists,) = _read_state(spark, index_dir, "assignments")
+    _write_state(spark, index_dir, {}, {**meta, "n_vectors": lists.count()})
 
 
 @query("ann_index_insert", _ann_index_insert_oracle())
@@ -2517,42 +2528,52 @@ def ann_index_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell, n_base, n_total, n_inserted), the numbers an index
     operator watches between re-trains (drifting inserts concentrate
     in few cells → time to rebuild)."""
-    import os
+    return _insert_report(
+        spark,
+        sf_dir,
+        build_ivf_index,
+        ivf_index_insert,
+        "assignments",
+        [F.col("data_cell").alias("cell")],
+    )
+
+
+def _insert_report(
+    spark: SparkSession, sf_dir: str, build, insert, table: str, keys: list
+) -> DataFrame:
+    """The base/delta body of both insert reports: ``build`` a fresh
+    index on the 90% base corpus (vec_id % 10 != 0), ``insert`` the 10%
+    delta, and return the growth of the stored ``table`` grouped by
+    ``keys`` — (keys..., n_base, n_total, n_inserted), ordered by key.
+    The DuckDB twins end in the same ``_sql_insert_growth``."""
     import uuid
 
     from kachess_spark.operators.sinks import _scratch
 
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
-    base = emb.where(F.col("vec_id") % 10 != 0)
-    delta = emb.where(F.col("vec_id") % 10 == 0)
-    idx = _scratch(f"ivf_insdemo_{uuid.uuid4().hex[:8]}")
-    build_ivf_index(spark, sf_dir, index_dir=idx, emb=base)
-    before = (
-        spark.read.parquet(os.path.join(idx, "assignments"))
-        .groupBy(F.col("data_cell").alias("cell"))
-        .agg(F.count("*").alias("n_base"))
-        # materialize BEFORE the append — a lazy read would re-list
-        # the directory after the insert and count the delta twice
-        .localCheckpoint(eager=True)
-    )
-    ivf_index_insert(spark, idx, delta)
-    after = (
-        spark.read.parquet(os.path.join(idx, "assignments"))
-        .groupBy(F.col("data_cell").alias("cell"))
-        .agg(F.count("*").alias("n_total"))
-    )
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    idx = _scratch(f"{table}_insdemo_{uuid.uuid4().hex[:8]}")
+    build(spark, sf_dir, index_dir=idx, emb=emb.where(F.col("vec_id") % 10 != 0))
+
+    def counts(name: str) -> DataFrame:
+        (stored,) = _read_state(spark, idx, table)
+        return stored.groupBy(*keys).agg(F.count("*").alias(name))
+
+    # materialize BEFORE the append — a lazy read would re-list the
+    # directory after the insert and count the delta twice
+    before = counts("n_base").localCheckpoint(eager=True)
+    insert(spark, idx, emb.where(F.col("vec_id") % 10 == 0))
+    after = counts("n_total")
+    names = after.columns[:-1]
+    n_base = F.coalesce("n_base", F.lit(0))
     return (
-        after.join(before, "cell", "left")
+        after.join(before, names, "left")
         .select(
-            "cell",
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
+            *names,
+            n_base.alias("n_base"),
             "n_total",
-            (F.col("n_total") - F.coalesce("n_base", F.lit(0))).alias(
-                "n_inserted"
-            ),
+            (F.col("n_total") - n_base).alias("n_inserted"),
         )
-        .orderBy("cell")
+        .orderBy(*names)
     )
 
 
@@ -2567,10 +2588,7 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile — one row per cell with its list size, the number a
     capacity planner reads (skewed cells = skewed probe fan-out).
     """
-    import os
-
-    index_dir = build_ivf_index(spark, sf_dir)
-    assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
+    (assign,) = _read_state(spark, build_ivf_index(spark, sf_dir), "assignments")
     return (
         assign.groupBy(F.col("data_cell").alias("cell"))
         .agg(F.count("*").alias("n_vectors"))
@@ -2615,11 +2633,9 @@ def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same property as the serving rankers); two metadata-sized
     aggregations after one per-cell count.
     """
-    import os
-
-    index_dir = build_ivf_index(spark, sf_dir)
-    assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
+    assign, cents = _read_state(
+        spark, build_ivf_index(spark, sf_dir), "assignments", "centroids"
+    )
     lists = assign.groupBy("data_cell").agg(F.count("*").alias("c"))
     tot = lists.agg(
         F.sum("c").alias("n_vectors"),
@@ -2666,19 +2682,15 @@ def sim_ivf_stored_topk(
     cost — the train-once/probe-many split a production deployment
     runs.
     """
-    import os
-
     if index_dir is None:
         index_dir = build_ivf_index(spark, sf_dir)
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assign = spark.read.parquet(os.path.join(index_dir, "assignments"))
-    n_probe = int(
-        spark.read.parquet(os.path.join(index_dir, "meta")).head()["n_probe"]
+    centroids, assign, meta = _read_state(
+        spark, index_dir, "centroids", "assignments", "meta"
     )
     return _ivf_probe(
-        spark, emb, assign, centroids, certify, n_probe, probe_ids
+        spark, emb, assign, centroids, certify, meta["n_probe"], probe_ids
     )
 
 
@@ -2866,17 +2878,8 @@ def _ann_pq_index_insert_oracle() -> str:
     ),
     pb_src AS (SELECT * FROM pf_src WHERE vid % 10 <> 0),
     pb_n AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id % 10 <> 0),
-    {_sql_pq_chain("pb_src", "pb_n", "pi_", enc_src="pf_src")}
-    SELECT CAST(t.m AS INTEGER) AS m, CAST(t.code AS INTEGER) AS code,
-           COALESCE(b.n_base, 0) AS n_base,
-           t.n_total,
-           t.n_total - COALESCE(b.n_base, 0) AS n_inserted
-    FROM (SELECT m, code, COUNT(*) AS n_total FROM pi_codes
-          GROUP BY m, code) t
-    LEFT JOIN (SELECT m, code, COUNT(*) AS n_base FROM pi_codes
-               WHERE vid % 10 <> 0 GROUP BY m, code) b
-      ON t.m = b.m AND t.code = b.code
-    ORDER BY m, code"""
+    {_sql_pq_chain("pb_src", "pb_n", "pi_", enc_src="pf_src")}\
+{_sql_insert_growth("pi_codes", ("m", "code"))}"""
 
 
 @query("ann_pq_index_insert", _ann_pq_index_insert_oracle())
@@ -2893,42 +2896,8 @@ def ann_pq_index_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram an index operator watches for quantization drift
     between re-trains (inserts piling into few codes → the books no
     longer fit the data → rebuild)."""
-    import os
-    import uuid
-
-    from kachess_spark.operators.sinks import _scratch
-
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
-    base = emb.where(F.col("vec_id") % 10 != 0)
-    delta = emb.where(F.col("vec_id") % 10 == 0)
-    idx = _scratch(f"pq_insdemo_{uuid.uuid4().hex[:8]}")
-    build_pq_index(spark, sf_dir, index_dir=idx, emb=base)
-    before = (
-        spark.read.parquet(os.path.join(idx, "codes"))
-        .groupBy("m", "code")
-        .agg(F.count("*").alias("n_base"))
-        # materialize BEFORE the append (lazy would re-list the dir)
-        .localCheckpoint(eager=True)
-    )
-    pq_index_insert(spark, idx, delta)
-    after = (
-        spark.read.parquet(os.path.join(idx, "codes"))
-        .groupBy("m", "code")
-        .agg(F.count("*").alias("n_total"))
-    )
-    return (
-        after.join(before, ["m", "code"], "left")
-        .select(
-            "m",
-            "code",
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            "n_total",
-            (F.col("n_total") - F.coalesce("n_base", F.lit(0))).alias(
-                "n_inserted"
-            ),
-        )
-        .orderBy("m", "code")
+    return _insert_report(
+        spark, sf_dir, build_pq_index, pq_index_insert, "codes", ["m", "code"]
     )
 
 
@@ -2972,49 +2941,14 @@ def _assign_l2(sub: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _pq_kmeans_l2(sub: DataFrame, k: int) -> DataFrame:
-    """Lloyd's k-means under SQUARED-L2 assignment — what PQ minimizes.
-    (kmeans_centroids assigns by cosine, right for the IVF coarse
-    quantizer but wrong for subspace codebooks: on low-dim subvectors
-    angles concentrate and cosine cells collapse — measured recall
-    1/15 vs 10/15 with L2 here.)"""
-    # First-k-by-id seeding: deterministic, and measured BETTER than
-    # pseudo-random (lowest-xxhash) seeding on this corpus (recall@5
-    # 0.93 vs 0.60 at sf0.1, k=16) — don't "fix" it without re-running
-    # the RECALL.md sweep.
-    cent = (
-        sub.orderBy("vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("vec_id"),
-            "embedding",
+def _pq_subspaces(emb: DataFrame):
+    """(m, sub) for each of the {PQ_M} subspaces: ``sub`` is (vec_id,
+    embedding) with the embedding cut to its m-th {PQ_DIMS}-dim slice."""
+    for m in range(PQ_M):
+        yield m, emb.select(
+            "vec_id",
+            F.slice("embedding", m * PQ_DIMS + 1, PQ_DIMS).alias("embedding"),
         )
-        .localCheckpoint(eager=True)
-    )
-    d = _exploded(sub, "vid", "dv").localCheckpoint(eager=False)
-    for _ in range(PQ_ITERS):
-        assign = _assign_l2(sub, cent)
-        means = (
-            d.join(assign, "vid")
-            .groupBy("code", "pos")
-            .agg(
-                (F.sum(F.col("dv").cast(PDEC)) / F.count("*"))
-                .cast("double")
-                .alias("mv")
-            )
-        )
-        cent = (
-            means.groupBy("code")
-            .agg(
-                F.expr(
-                    "transform(sort_array(collect_list(struct(pos, mv))),"
-                    " s -> s.mv)"
-                ).alias("embedding")
-            )
-            .select(F.col("code").alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
-        )
-    return cent
 
 
 def pq_train_encode(
@@ -3023,17 +2957,22 @@ def pq_train_encode(
     """→ (codebooks, codes): per-subspace k-means codebooks
     (m, code, embedding) and the encoded corpus (vid, m, code).
 
+    The codebooks are ``_lloyd`` under SQUARED-L2 assignment — what PQ
+    minimizes ({PQ_ITERS} rounds).  Cosine assignment (the IVF coarse
+    quantizer's) is wrong for subspace codebooks: on low-dim subvectors
+    angles concentrate and cosine cells collapse — measured recall 1/15
+    vs 10/15 with L2 here.
+
     Storage math: 64 float32 dims (256 B) → M×log2(k) bits per vector
     (128× compression at k=16); the codebooks are M×k×(D/M) floats
     total — broadcast-sized at any corpus scale.
     """
+    from functools import reduce
+
     books = []
     codes = []
-    for m in range(PQ_M):
-        sub = emb.select(
-            "vec_id", F.slice("embedding", m * PQ_DIMS + 1, PQ_DIMS).alias("embedding")
-        )
-        cent = _pq_kmeans_l2(sub, k)
+    for m, sub in _pq_subspaces(emb):
+        cent = _lloyd(sub, k, _assign_l2, PQ_ITERS)
         books.append(
             cent.select(
                 F.lit(m).alias("m"), F.col("vec_id").alias("code"), "embedding"
@@ -3042,8 +2981,6 @@ def pq_train_encode(
         codes.append(
             _assign_l2(sub, cent).select("vid", F.lit(m).alias("m"), "code")
         )
-    from functools import reduce
-
     return (
         reduce(DataFrame.unionByName, books).localCheckpoint(eager=True),
         reduce(DataFrame.unionByName, codes).localCheckpoint(eager=True),
@@ -3202,55 +3139,51 @@ def build_pq_index(
     spark: SparkSession,
     sf_dir: str,
     index_dir: str | None = None,
-    shortlist: int | None = None,
     emb: DataFrame | None = None,
 ) -> str:
     """Train-once PQ index build: per-subspace codebooks + the encoded
     corpus (the 16-bit codes), written as parquet tables under
     ``index_dir`` (books/, codes/, meta/) — the compression leg's
     offline twin of ``build_ivf_index``.  Idempotent: training is
-    deterministic, so an existing index for the same parameters is
-    reused.  The n·k training dots and the corpus encoding pass both
+    deterministic, so an existing index with the same meta is reused
+    (``_stored_state``).  Codewords and the probe shortlist come from
+    the corpus size (``pq_codewords(n)``, ``pq_shortlist(n)``); ``emb``
+    (default: the corpus at ``sf_dir``) is the set to train on and
+    encode.  The n·k training dots and the corpus encoding pass both
     live here, paid once per corpus version."""
-    import hashlib
-    import os
-
-    from kachess_spark.operators.sinks import _scratch
-
     if emb is None:
-        t = Tables(spark, sf_dir)
-        emb = t.embeddings.select("vec_id", "embedding")
+        emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    return _pq_state(spark, sf_dir, "pq_index", index_dir, emb, lambda: emb)
+
+
+def _pq_state(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    index_dir: str | None,
+    emb: DataFrame,
+    train,
+) -> str:
+    """The PQ-family build shared by ``build_pq_index`` and
+    ``build_ivfpq_index``: codebooks trained on, and codes encoding,
+    ``train()`` (the vectors themselves, or their IVF residuals), sized
+    by the corpus ``emb``; meta (n_vectors, codewords, shortlist, iters,
+    n_built)."""
     n = emb.count()
     codewords = pq_codewords(n)
-    if shortlist is None:
-        shortlist = pq_shortlist(n)
-    if index_dir is None:
-        key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|{codewords}|{shortlist}|{PQ_ITERS}"
-            .encode()
-        ).hexdigest()[:12]
-        index_dir = _scratch(f"pq_index_{key}")
-    if _reuse_or_clear_index(
-        spark,
-        index_dir,
-        {
-            "n_built": int(n),
-            "codewords": int(codewords),
-            "shortlist": int(shortlist),
-            "iters": PQ_ITERS,
-        },
-    ):
-        return index_dir
-    meta_dir = os.path.join(index_dir, "meta")
-    books, codes = pq_train_encode(spark, emb, codewords)
-    books.write.mode("overwrite").parquet(os.path.join(index_dir, "books"))
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
-    spark.createDataFrame(
-        [(int(n), int(codewords), int(shortlist), PQ_ITERS, int(n))],
-        "n_vectors long, codewords int, shortlist int, iters int,"
-        " n_built long",
-    ).write.mode("overwrite").parquet(meta_dir)
-    return index_dir
+
+    def tables() -> dict:
+        books, codes = pq_train_encode(spark, train(), codewords)
+        return {"books": books.write, "codes": codes.write}
+
+    meta = {
+        "n_vectors": n,
+        "codewords": codewords,
+        "shortlist": pq_shortlist(n),
+        "iters": PQ_ITERS,
+        "n_built": n,
+    }
+    return _stored_state(spark, sf_dir, kind, index_dir, meta, tables)
 
 
 def pq_index_insert(
@@ -3265,41 +3198,25 @@ def pq_index_insert(
     import os
     from functools import reduce
 
-    books = spark.read.parquet(os.path.join(index_dir, "books"))
-    parts = []
-    for m in range(PQ_M):
-        sub = new_vectors.select(
-            "vec_id",
-            F.slice("embedding", m * PQ_DIMS + 1, PQ_DIMS).alias("embedding"),
-        )
-        cent = books.where(F.col("m") == m).select(
-            F.col("code").alias("vec_id"), "embedding"
-        )
-        parts.append(
-            _assign_l2(sub, cent).select("vid", F.lit(m).alias("m"), "code")
-        )
+    books, meta = _read_state(spark, index_dir, "books", "meta")
+    parts = [
+        _assign_l2(
+            sub,
+            books.where(F.col("m") == m).select(
+                F.col("code").alias("vec_id"), "embedding"
+            ),
+        ).select("vid", F.lit(m).alias("m"), "code")
+        for m, sub in _pq_subspaces(new_vectors)
+    ]
     reduce(DataFrame.unionByName, parts).write.mode("append").parquet(
         os.path.join(index_dir, "codes")
     )
-    meta = spark.read.parquet(os.path.join(index_dir, "meta")).head()
     # recount from the codes table (M rows per vector) — same crash-
     # safe recount as ivf_index_insert (round-8 advice, low)
-    n_now = (
-        spark.read.parquet(os.path.join(index_dir, "codes")).count() // PQ_M
+    (codes,) = _read_state(spark, index_dir, "codes")
+    _write_state(
+        spark, index_dir, {}, {**meta, "n_vectors": codes.count() // PQ_M}
     )
-    spark.createDataFrame(
-        [
-            (
-                int(n_now),
-                int(meta["codewords"]),
-                int(meta["shortlist"]),
-                int(meta["iters"]),
-                int(meta["n_built"]),
-            )
-        ],
-        "n_vectors long, codewords int, shortlist int, iters int,"
-        " n_built long",
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "meta"))
 
 
 @query("ann_pq_index_build", _ann_pq_index_build_oracle())
@@ -3312,10 +3229,12 @@ def ann_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy profile — rows per (subspace, code), the histogram a
     capacity planner reads (empty codes = wasted codebook entries,
     overfull codes = quantization hot spots)."""
-    import os
+    return _code_occupancy(spark, build_pq_index(spark, sf_dir))
 
-    index_dir = build_pq_index(spark, sf_dir)
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+
+def _code_occupancy(spark: SparkSession, index_dir: str) -> DataFrame:
+    """(m, code, n_vectors): rows per code of a stored PQ-family index."""
+    (codes,) = _read_state(spark, index_dir, "codes")
     return (
         codes.groupBy("m", "code")
         .agg(F.count("*").alias("n_vectors"))
@@ -3338,21 +3257,13 @@ def sim_pq_stored_topk(
     checkpoint in the returned plan; per query it scans 2-byte codes
     plus ``shortlist`` full vectors.  Results are bit-identical to
     ``sim_pq_adc_topk`` (same codebooks, same probe path)."""
-    import os
-
     if index_dir is None:
         index_dir = build_pq_index(spark, sf_dir)
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    books = spark.read.parquet(os.path.join(index_dir, "books"))
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    shortlist = int(
-        spark.read.parquet(os.path.join(index_dir, "meta")).head()[
-            "shortlist"
-        ]
-    )
+    books, codes, meta = _read_state(spark, index_dir, "books", "codes", "meta")
     return _pq_adc_probe(
-        spark, emb, books, codes, certify, shortlist, probe_ids
+        spark, emb, books, codes, certify, meta["shortlist"], probe_ids
     )
 
 
@@ -3370,41 +3281,35 @@ def sim_ivfpq_stored_topk(
     lists), PQ-ADC ranks WHAT remains from 2-byte codes, and the
     shortlist is re-ranked exactly.  Per query the scan touches
     (probe/cells × corpus) codes plus ``shortlist`` full vectors —
-    both knobs corpus-adaptive — instead of corpus floats.
+    n_probe and shortlist are read from the two indexes' meta, both
+    sized from the corpus at build time — instead of corpus floats.
 
     Serves entirely from ``build_ivf_index`` + ``build_pq_index``
     tables; no training, encoding, or corpus-wide assignment in the
     plan.  Residual encoding (codes on x − centroid) is the quality
     refinement production systems add; it changes the codebook
     training input, not this serving plan."""
-    import os
-
     ivf_dir = build_ivf_index(spark, sf_dir)
     pq_dir = build_pq_index(spark, sf_dir)
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    centroids = spark.read.parquet(os.path.join(ivf_dir, "centroids"))
-    assign = spark.read.parquet(os.path.join(ivf_dir, "assignments"))
-    n_probe = int(
-        spark.read.parquet(os.path.join(ivf_dir, "meta")).head()["n_probe"]
+    centroids, assign, ivf_meta = _read_state(
+        spark, ivf_dir, "centroids", "assignments", "meta"
     )
-    books = spark.read.parquet(os.path.join(pq_dir, "books"))
-    codes = spark.read.parquet(os.path.join(pq_dir, "codes"))
-    shortlist = int(
-        spark.read.parquet(os.path.join(pq_dir, "meta")).head()["shortlist"]
-    )
+    books, codes, pq_meta = _read_state(spark, pq_dir, "books", "codes", "meta")
     queries = emb.where(F.col("vec_id").isin(*probe_ids))
-    qprobe = ivf_assign(spark, queries, centroids, n=n_probe).select(
-        F.col("vid").alias("qid"), F.col("cell").alias("data_cell")
-    )
-    cand = (
-        assign.join(broadcast(qprobe), "data_cell")
-        .where(F.col("vid") != F.col("qid"))
-        .select("qid", "vid")
-        .distinct()
+    _, cand = _ivf_probe_pairs(
+        spark, queries, centroids, assign, ivf_meta["n_probe"]
     )
     return _pq_adc_probe(
-        spark, emb, books, codes, certify, shortlist, probe_ids, cand=cand
+        spark,
+        emb,
+        books,
+        codes,
+        certify,
+        pq_meta["shortlist"],
+        probe_ids,
+        cand=cand.select("qid", "vid").distinct(),
     )
 
 
@@ -3420,58 +3325,38 @@ def build_ivfpq_index(
     centroids/assignments for the coarse layer; writes books/codes/meta
     under ``index_dir``.  Deterministic, idempotent, reused if present.
     """
-    import hashlib
-    import os
-
-    from kachess_spark.operators.sinks import _scratch
-
     ivf_dir = build_ivf_index(spark, sf_dir)
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
-    n = emb.count()
-    codewords, shortlist = pq_codewords(n), pq_shortlist(n)
-    if index_dir is None:
-        key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|res|{codewords}|{shortlist}|{PQ_ITERS}"
-            .encode()
-        ).hexdigest()[:12]
-        index_dir = _scratch(f"ivfpq_index_{key}")
-    if _reuse_or_clear_index(
-        spark,
-        index_dir,
-        {
-            "n_built": int(n),
-            "codewords": int(codewords),
-            "shortlist": int(shortlist),
-            "iters": PQ_ITERS,
-        },
-    ):
-        return index_dir
-    meta_dir = os.path.join(index_dir, "meta")
-    assign = spark.read.parquet(os.path.join(ivf_dir, "assignments"))
-    cent = spark.read.parquet(os.path.join(ivf_dir, "centroids")).select(
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+
+    def residuals() -> DataFrame:
+        assign, cent = _read_state(spark, ivf_dir, "assignments", "centroids")
+        return _minus_centroid(
+            emb.join(assign, emb["vec_id"] == assign["vid"]),
+            cent,
+            ["vec_id"],
+            "embedding",
+        )
+
+    return _pq_state(spark, sf_dir, "ivfpq_index", index_dir, emb, residuals)
+
+
+def _minus_centroid(
+    df: DataFrame, centroids: DataFrame, keep: list[str], out: str
+) -> DataFrame:
+    """``keep`` plus ``out`` = embedding − centroid(data_cell), each
+    row's residual against its IVF cell's centroid (broadcast) — the
+    residual both the IVFPQ build (corpus rows) and the residual probe
+    (query × probed cell rows) encode."""
+    cent = centroids.select(
         F.col("vec_id").alias("data_cell"), F.col("embedding").alias("c_emb")
     )
-    res = (
-        emb.join(assign, emb["vec_id"] == assign["vid"])
-        .join(broadcast(cent), "data_cell")
-        .select(
-            "vec_id",
-            F.expr(
-                "zip_with(embedding, c_emb, (x, y) ->"
-                " CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-            ).alias("embedding"),
-        )
+    return df.join(broadcast(cent), "data_cell").select(
+        *keep,
+        F.expr(
+            "zip_with(embedding, c_emb, (x, y) ->"
+            " CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+        ).alias(out),
     )
-    books, codes = pq_train_encode(spark, res, codewords)
-    books.write.mode("overwrite").parquet(os.path.join(index_dir, "books"))
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
-    spark.createDataFrame(
-        [(int(n), int(codewords), int(shortlist), PQ_ITERS, int(n))],
-        "n_vectors long, codewords int, shortlist int, iters int,"
-        " n_built long",
-    ).write.mode("overwrite").parquet(meta_dir)
-    return index_dir
 
 
 @query("ann_ivfpq_index_build", _ann_ivfpq_index_build_oracle())
@@ -3483,15 +3368,7 @@ def ann_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     the residual-trained codebooks + codes and report code occupancy
     per subspace (same capacity-planning histogram as the flat PQ
     build, but over residual space)."""
-    import os
-
-    index_dir = build_ivfpq_index(spark, sf_dir)
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    return (
-        codes.groupBy("m", "code")
-        .agg(F.count("*").alias("n_vectors"))
-        .orderBy("m", "code")
-    )
+    return _code_occupancy(spark, build_ivfpq_index(spark, sf_dir))
 
 
 @query("sim_ivfpq_residual_topk")  # rows-only: approximate; recall in
@@ -3515,40 +3392,23 @@ def sim_ivfpq_residual_topk(
     query — #queries × n_probe × M × K entries, still broadcast-sized.
     RECALL.md records the measured A/B on this corpus.
     """
-    import os
-
     ivf_dir = build_ivf_index(spark, sf_dir)
     pq_dir = build_ivfpq_index(spark, sf_dir)
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    centroids = spark.read.parquet(os.path.join(ivf_dir, "centroids"))
-    assign = spark.read.parquet(os.path.join(ivf_dir, "assignments"))
-    n_probe = int(
-        spark.read.parquet(os.path.join(ivf_dir, "meta")).head()["n_probe"]
+    centroids, assign, ivf_meta = _read_state(
+        spark, ivf_dir, "centroids", "assignments", "meta"
     )
-    books = spark.read.parquet(os.path.join(pq_dir, "books"))
-    codes = spark.read.parquet(os.path.join(pq_dir, "codes"))
-    shortlist_n = int(
-        spark.read.parquet(os.path.join(pq_dir, "meta")).head()["shortlist"]
-    )
+    books, codes, pq_meta = _read_state(spark, pq_dir, "books", "codes", "meta")
     queries = emb.where(F.col("vec_id").isin(*probe_ids))
-    qprobe = ivf_assign(spark, queries, centroids, n=n_probe).select(
-        F.col("vid").alias("qid"), F.col("cell").alias("data_cell")
+    qprobe, cand = _ivf_probe_pairs(
+        spark, queries, centroids, assign, ivf_meta["n_probe"]
     )
-    cent = centroids.select(
-        F.col("vec_id").alias("data_cell"), F.col("embedding").alias("c_emb")
-    )
-    qres = (
-        queries.join(broadcast(qprobe), queries["vec_id"] == qprobe["qid"])
-        .join(broadcast(cent), "data_cell")
-        .select(
-            "qid",
-            "data_cell",
-            F.expr(
-                "zip_with(embedding, c_emb, (x, y) ->"
-                " CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-            ).alias("q_res"),
-        )
+    qres = _minus_centroid(
+        queries.join(broadcast(qprobe), queries["vec_id"] == qprobe["qid"]),
+        centroids,
+        ["qid", "data_cell"],
+        "q_res",
     )
     # single posexplode + arithmetic subspace split — see _pq_adc_probe
     qsub = qres.select(
@@ -3575,9 +3435,6 @@ def sim_ivfpq_residual_topk(
             ).alias("d2")
         )
     )
-    cand = assign.join(broadcast(qprobe), "data_cell").where(
-        F.col("vid") != F.col("qid")
-    )
     wa = Window.partitionBy("qid").orderBy(
         F.col("adc_dist").asc(), F.col("vid")
     )
@@ -3587,7 +3444,7 @@ def sim_ivfpq_residual_topk(
         .groupBy("qid", "vid")
         .agg(F.sum("d2").alias("adc_dist"))
         .select("qid", "vid", F.row_number().over(wa).alias("ark"))
-        .where(F.col("ark") <= shortlist_n)
+        .where(F.col("ark") <= pq_meta["shortlist"])
         .select("qid", "vid")
     )
     return _exact_rerank(emb, queries, short, certify, probe_ids)
@@ -5426,37 +5283,24 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies every component.
 
     Scale: the {RP_DIM}·dim sign matrix travels as ONE constant-folded
-    from_json literal (same trick as banded_hyperplane_buckets — a
-    nested-literal tree costs driver analysis time, a broadcast join
-    plans as BroadcastNestedLoopJoin); the projection itself is
-    {RP_DIM} zip_with DECIMAL folds in one narrow codegen projection —
-    a per-row map, embarrassingly parallel.  ONE spreading exchange
-    precedes it (the repartition below): the fixture corpus arrives in
+    from_json literal (``_signed_dots``, shared with
+    banded_hyperplane_buckets — a nested-literal tree costs driver
+    analysis time, a broadcast join plans as BroadcastNestedLoopJoin);
+    the projection itself is {RP_DIM} zip_with DECIMAL folds in one
+    narrow codegen projection — a per-row map, embarrassingly parallel.
+    ONE spreading exchange precedes it (``_signed_dots``'s
+    repartition): the fixture corpus arrives in
     a handful of files and the folds are CPU-bound, so without the
     spread the whole projection runs on a few cores (the same AQE/
     few-input-splits trap as sim_knn_graph_ivf's scoring stage).  On a
     100 TB corpus already split across thousands of files the exchange
     is unnecessary — drop it and the projection is fully narrow.
     """
-    import json
-
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
     dim = _emb_dim(emb)
-    emb = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    )
-    signs_json = json.dumps([_rp_signs(j, dim) for j in range(RP_DIM)])
-    dots = (
-        "transform(signs, s -> "
-        + _dec_dot("embedding", "s", "CAST(x AS DOUBLE) * sg", y="sg")
-        + ")"
-    )
     return (
-        emb.withColumn(
-            "signs", F.from_json(F.lit(signs_json), "array<array<double>>")
-        )
-        .select("vec_id", F.expr(dots).alias("dots"))
+        _signed_dots(emb, [_rp_signs(j, dim) for j in range(RP_DIM)])
         .select("vec_id", F.posexplode("dots").alias("out_dim", "dt"))
         .select(
             "vec_id",

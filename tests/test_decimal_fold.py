@@ -6,7 +6,14 @@ inside the function that owns it, so a copy cannot creep back in:
 * the exact-DECIMAL cosine fold's DECIMAL zero, in ``similarity._dec_fold``;
 * the MinHash-LSH band rows, in ``dedup._band_rows`` (Spark) and
   ``dedup._sql_sig_bands`` (the DuckDB twins) — a second copy could miss a
-  change to ``N_HASHES`` / ``BAND_SIZE`` and desync Spark from its oracles.
+  change to ``N_HASHES`` / ``BAND_SIZE`` and desync Spark from its oracles;
+* the Lloyd centroid re-assembly, in ``similarity._lloyd`` (the IVF and PQ
+  trainers both run it);
+* the stored-state meta write, in ``similarity._write_state`` (every
+  builder and insert writes meta through it, so no copy re-types the
+  schema);
+* the signed ±1 projection fold, in ``similarity._signed_dots`` (the LSH
+  plane bits and the random projection).
 
 The texts the owners build are pinned too (a changed text would change
 every plan or oracle built on it)."""
@@ -24,6 +31,9 @@ _FOLD_ZERO = re.compile(
 )
 _SQL_BAND = re.compile(r"AS band_key FROM sigs")
 _SPARK_BAND = re.compile(r"posexplode\(band_structs\)")
+_LLOYD_MEANS = re.compile(r"collect_list\(struct\(pos, mv\)\)")
+_META_WRITE = re.compile(r'parquet\(os\.path\.join\(\w+, "meta"\)\)')
+_SIGNED_FOLD = re.compile(r"transform\(signs, s ->")
 
 
 def _assert_defined_once(pattern: re.Pattern, owner_file: str, owner: str):
@@ -59,6 +69,13 @@ def test_decimal_fold_defined_once():
 def test_lsh_banding_defined_once():
     _assert_defined_once(_SQL_BAND, "pipeline/dedup.py", "_sql_sig_bands")
     _assert_defined_once(_SPARK_BAND, "pipeline/dedup.py", "_band_rows")
+
+
+def test_similarity_steps_defined_once():
+    sim = "pipeline/similarity.py"
+    _assert_defined_once(_LLOYD_MEANS, sim, "_lloyd")
+    _assert_defined_once(_META_WRITE, sim, "_write_state")
+    _assert_defined_once(_SIGNED_FOLD, sim, "_signed_dots")
 
 
 def test_decimal_fold_text():

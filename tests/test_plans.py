@@ -702,74 +702,142 @@ def test_pq_index_insert_equivalence(spark, sf_dir, tmp_path):
 @pytest.mark.slow  # >=20 s measured; excluded from the default gate run (pytest.ini)
 def test_stored_index_param_mismatch_rebuilds(spark, sf_dir, tmp_path):
     """Round-8 advice (medium): with an explicit index_dir, a build
-    call whose parameters differ from the stored index's must REBUILD,
-    not silently serve the stale index — and the serving path must then
-    use the NEW n_probe/centroids.  Matching parameters still reuse
-    (no retrain: meta mtime unchanged)."""
-    import os
-
-    from kachess_spark.pipeline.similarity import (
-        build_ivf_index,
-        build_pq_index,
-    )
-
-    idx = str(tmp_path / "idx")
-    build_ivf_index(spark, sf_dir, index_dir=idx, cells=4, n_probe=2)
-    meta = spark.read.parquet(os.path.join(idx, "meta")).head()
-    assert (meta["cells"], meta["n_probe"]) == (4, 2)
-    n_cent = spark.read.parquet(os.path.join(idx, "centroids")).count()
-    assert n_cent == 4
-    mtime = os.path.getmtime(os.path.join(idx, "meta"))
-
-    # same params → reuse, no rewrite
-    build_ivf_index(spark, sf_dir, index_dir=idx, cells=4, n_probe=2)
-    assert os.path.getmtime(os.path.join(idx, "meta")) == mtime
-
-    # different cells → rebuilt with the new quantizer
-    build_ivf_index(spark, sf_dir, index_dir=idx, cells=8, n_probe=3)
-    meta = spark.read.parquet(os.path.join(idx, "meta")).head()
-    assert (meta["cells"], meta["n_probe"]) == (8, 3)
-    assert spark.read.parquet(os.path.join(idx, "centroids")).count() == 8
-
-    # PQ twin: shortlist change must not serve the old index
-    pidx = str(tmp_path / "pq_idx")
-    build_pq_index(spark, sf_dir, index_dir=pidx, shortlist=64)
-    build_pq_index(spark, sf_dir, index_dir=pidx, shortlist=128)
-    meta = spark.read.parquet(os.path.join(pidx, "meta")).head()
-    assert meta["shortlist"] == 128
-
-
-def test_index_insert_meta_recount(spark, sf_dir, tmp_path):
-    """Round-8 advice (low): after an insert, meta.n_vectors is
-    recounted from the stored table (crash between append and meta
-    overwrite can understate a cached count, and the recount can never
-    drift), while n_built keeps the build-time corpus size so the
-    param-match reuse check ignores legitimate incremental growth."""
+    call whose meta differs from the stored index's must REBUILD, not
+    silently serve the stale index.  The base corpus (vec_id % 10 != 0)
+    and the full corpus build different meta (n_built); matching meta
+    still reuses (no retrain: meta mtime unchanged)."""
     import os
 
     from pyspark.sql import functions as F
 
     from kachess_spark.catalog import Tables
     from kachess_spark.pipeline.similarity import (
+        PQ_M,
         build_ivf_index,
-        ivf_index_insert,
+        build_pq_index,
     )
 
     emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     base = emb.where(F.col("vec_id") % 10 != 0)
-    delta = emb.where(F.col("vec_id") % 10 == 0)
+    n_base, n_full = base.count(), emb.count()
+    assert n_base < n_full
+
     idx = str(tmp_path / "idx")
     build_ivf_index(spark, sf_dir, index_dir=idx, emb=base)
-    n_base = base.count()
-    ivf_index_insert(spark, idx, delta)
     meta = spark.read.parquet(os.path.join(idx, "meta")).head()
-    assert meta["n_vectors"] == emb.count()
     assert meta["n_built"] == n_base
-    # a re-build call over the same base corpus + params still reuses
-    # the grown index (insert must not trigger a rebuild)
     mtime = os.path.getmtime(os.path.join(idx, "meta"))
+
+    # same meta → reuse, no rewrite
     build_ivf_index(spark, sf_dir, index_dir=idx, emb=base)
     assert os.path.getmtime(os.path.join(idx, "meta")) == mtime
+
+    # different corpus → rebuilt: new meta, lists over the full corpus
+    build_ivf_index(spark, sf_dir, index_dir=idx)
+    meta = spark.read.parquet(os.path.join(idx, "meta")).head()
+    assert (meta["n_built"], meta["n_vectors"]) == (n_full, n_full)
+    assert spark.read.parquet(os.path.join(idx, "assignments")).count() == n_full
+
+    # PQ twin: a corpus change must not serve the old index either
+    pidx = str(tmp_path / "pq_idx")
+    build_pq_index(spark, sf_dir, index_dir=pidx, emb=base)
+    build_pq_index(spark, sf_dir, index_dir=pidx)
+    meta = spark.read.parquet(os.path.join(pidx, "meta")).head()
+    assert (meta["n_built"], meta["n_vectors"]) == (n_full, n_full)
+    assert spark.read.parquet(os.path.join(pidx, "codes")).count() == (
+        n_full * PQ_M
+    )
+
+
+def test_index_insert_meta_recount(spark, sf_dir, tmp_path):
+    """Round-8 advice (low): after each insert, meta.n_vectors is
+    recounted from the stored table (crash between append and meta
+    overwrite can understate a cached count, and the recount can never
+    drift), while every other build-time column keeps its value and
+    type — n_built keeps the build-time corpus size so the param-match
+    reuse check ignores legitimate incremental growth.  Both inserts:
+    IVF (one assignment row per vector) and PQ (PQ_M code rows)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from kachess_spark.catalog import Tables
+    from kachess_spark.pipeline.similarity import (
+        PQ_M,
+        build_ivf_index,
+        build_pq_index,
+        ivf_index_insert,
+        pq_index_insert,
+    )
+
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    base = emb.where(F.col("vec_id") % 10 != 0)
+    batches = [emb.where(F.col("vec_id") % 20 == r) for r in (0, 10)]
+    n_base = base.count()
+    for build, insert, table, rows_per_vec in (
+        (build_ivf_index, ivf_index_insert, "assignments", 1),
+        (build_pq_index, pq_index_insert, "codes", PQ_M),
+    ):
+        idx = str(tmp_path / table)
+        meta_dir = os.path.join(idx, "meta")
+        build(spark, sf_dir, index_dir=idx, emb=base)
+        built = spark.read.parquet(meta_dir)
+        want = built.head().asDict()
+        assert want["n_built"] == want["n_vectors"] == n_base
+        for batch in batches:
+            insert(spark, idx, batch)
+            meta = spark.read.parquet(meta_dir)
+            rows = spark.read.parquet(os.path.join(idx, table)).count()
+            assert meta.schema == built.schema
+            assert meta.head().asDict() == {
+                **want, "n_vectors": rows // rows_per_vec
+            }
+        assert rows == emb.count() * rows_per_vec
+        # a re-build call over the same base corpus + params still
+        # reuses the grown index (insert must not trigger a rebuild)
+        mtime = os.path.getmtime(meta_dir)
+        build(spark, sf_dir, index_dir=idx, emb=base)
+        assert os.path.getmtime(meta_dir) == mtime
+
+
+def test_default_state_dirs_distinct_and_reused(spark, sf_dir):
+    """One corpus, five stored states: their default dirs are pairwise
+    distinct, and a second call to each builder returns the same dir
+    without rewriting its meta.  The PQ and residual IVFPQ indexes
+    store identical meta, so only the state kind in the dir key keeps
+    them apart."""
+    import os
+
+    from kachess_spark.pipeline.similarity import (
+        build_graph_serve_state,
+        build_ivf_index,
+        build_ivfpq_index,
+        build_knn_state,
+        build_pq_index,
+    )
+
+    builders = (
+        build_ivf_index,
+        build_pq_index,
+        build_ivfpq_index,
+        build_knn_state,
+        build_graph_serve_state,
+    )
+
+    def meta_mtimes(d):
+        m = os.path.join(d, "meta")
+        return {f: os.path.getmtime(os.path.join(m, f)) for f in os.listdir(m)}
+
+    dirs = [build(spark, sf_dir) for build in builders]
+    assert len(set(dirs)) == len(dirs), dirs
+    pq_meta, ivfpq_meta = (
+        spark.read.parquet(os.path.join(d, "meta")).head().asDict()
+        for d in dirs[1:3]
+    )
+    assert pq_meta == ivfpq_meta
+    mtimes = [meta_mtimes(d) for d in dirs]
+    assert [build(spark, sf_dir) for build in builders] == dirs
+    assert [meta_mtimes(d) for d in dirs] == mtimes
 
 
 def test_png_roundtrip_arrow_batched(spark, sf_dir):

@@ -89,7 +89,9 @@ def main() -> None:
     ]
     for name, note in NOTES.items():
         df = registry.QUERIES[name](spark, sf)
-        df.count()
+        # run the frame's OWN plan: df.count() executes a separate
+        # aggregate plan and leaves df's adaptive plan un-run (initial)
+        df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         if len(plan) > 3500:
             plan = plan[:3500] + "\n... (truncated)"
