@@ -590,7 +590,7 @@ def dedup_embedding_cosine(
     components);
     the plan shape (bucket → join → verify) is identical.
     """
-    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _cos, _dec_dot
 
     t = Tables(spark, sf_dir)
     if sign_bits is None:
@@ -631,17 +631,11 @@ def dedup_embedding_cosine(
     # posexplode → groupBy shape shuffled 64 rows per candidate pair —
     # the dominant cost at scale)
     dot = F.expr(_dec_dot("ea", "eb"))
-    cos = F.round(
-        F.col("dot").cast("double")
-        / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        6,
-    )
     return (
-        cand.withColumn("dot", dot)
-        .select(
+        cand.select(
             F.col("va").alias("vec_a"),
             F.col("vb").alias("vec_b"),
-            cos.alias("cosine"),
+            _cos(dot, F.col("na"), F.col("nb")).alias("cosine"),
         )
         .where(F.col("cosine") >= COS_THRESHOLD)
         .orderBy("vec_a", "vec_b")
@@ -1162,7 +1156,7 @@ def sem_assign(embeddings: DataFrame, k: int) -> DataFrame:
     min(struct) argmin — the only shuffle is n rows keyed on vec_id.
 
     Returns (vec_id, cluster, cent_cos, embedding, nrm)."""
-    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _cos, _dec_dot
 
     # single-row-group parquet → spread before the k·n CPU-bound folds
     embeddings = embeddings.repartition(
@@ -1180,40 +1174,44 @@ def sem_assign(embeddings: DataFrame, k: int) -> DataFrame:
         )
     )
     dot_vc = F.expr(_dec_dot("embedding", "cemb"))
-    cent_cos = F.round(
-        F.col("dvc").cast("double")
-        / F.sqrt(F.col("nrm").cast("double") * F.col("cnrm").cast("double")),
-        6,
+    scored = emb.crossJoin(cent).select(
+        "vec_id",
+        "embedding",
+        "nrm",
+        F.col("cid").alias("cluster"),
+        _cos(dot_vc, F.col("nrm"), F.col("cnrm")).alias("cent_cos"),
     )
-    scored = (
-        emb.crossJoin(cent)
-        .select("vec_id", "embedding", "nrm", "cnrm", "cid", dot_vc.alias("dvc"))
-        .select("vec_id", "embedding", "nrm", "cid", cent_cos.alias("cent_cos"))
-    )
-    # argmin as ONE map-side-combinable min(struct) pass — no join back
-    # to scored (which would recompute every k·n fold a second time):
-    # (-cos + 0.0) ascending == cos descending, the +0.0 normalising any
-    # -0.0 so the double compare matches the oracle's ORDER BY; ties
-    # fall to centroid id.  embedding/nrm ride along via first() (equal
-    # on every row of a vec_id group by construction).
+    return _nearest(scored, "vec_id", "cluster", "cent_cos", ["embedding", "nrm"])
+
+
+def _nearest(
+    scored: DataFrame, key: str, cid: str, cos: str, carry: list[str]
+) -> DataFrame:
+    """Per ``key``, the ``cid`` with the highest rounded cosine ``cos``,
+    ties to the lower id — the nearest-centroid argmax of the SemDeDup
+    assignments as ONE map-side-combinable min(struct) pass, with no
+    join back to ``scored`` (which would recompute every fold a second
+    time): (-cos + 0.0) ascending == cos descending, the +0.0
+    normalising any -0.0 so the double compare matches the oracle's
+    ORDER BY.  The ``carry`` columns ride along via first() (equal on
+    every row of a ``key`` group by construction).  Returns (key, cid,
+    cos, *carry)."""
     return (
-        scored.groupBy("vec_id")
+        scored.groupBy(key)
         .agg(
             F.min(
                 F.struct(
-                    (-F.col("cent_cos") + F.lit(0.0)).alias("negcos"),
-                    F.col("cid").alias("cid"),
+                    (-F.col(cos) + F.lit(0.0)).alias("negcos"),
+                    F.col(cid).alias("id"),
                 )
             ).alias("m"),
-            F.first("embedding").alias("embedding"),
-            F.first("nrm").alias("nrm"),
+            *[F.first(c).alias(c) for c in carry],
         )
         .select(
-            "vec_id",
-            F.col("m.cid").alias("cluster"),
-            (-F.col("m.negcos") + F.lit(0.0)).alias("cent_cos"),
-            "embedding",
-            "nrm",
+            key,
+            F.col("m.id").alias(cid),
+            (-F.col("m.negcos") + F.lit(0.0)).alias(cos),
+            *carry,
         )
     )
 
@@ -1259,7 +1257,7 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
     probed groups is assigned to the best IN-PROBE centroid — cluster
     quality degrades gracefully, dedup semantics (pairs within a
     cluster) stay exact."""
-    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _cos, _dec_dot
 
     spark = embeddings.sparkSession
     embeddings = embeddings.repartition(
@@ -1288,28 +1286,19 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
     )
     # fine -> coarse groups: broadcast argmin, the sem_assign idiom
     dot_fc = F.expr(_dec_dot("cemb", "gemb"))
-    fc_cos = F.round(
-        F.col("dfc").cast("double")
-        / F.sqrt(F.col("cnrm").cast("double") * F.col("gnrm").cast("double")),
-        6,
-    )
-    fine_groups = (
-        fine.crossJoin(F.broadcast(coarse))
-        .select("cid", "cemb", "cnrm", "gid", dot_fc.alias("dfc"), "gnrm")
-        .select("cid", "cemb", "cnrm", "gid", fc_cos.alias("gcos"))
-        .groupBy("cid")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("gcos") + F.lit(0.0)).alias("negcos"),
-                    F.col("gid").alias("gid"),
-                )
-            ).alias("m"),
-            F.first("cemb").alias("cemb"),
-            F.first("cnrm").alias("cnrm"),
-        )
-        .select("cid", F.col("m.gid").alias("gid"), "cemb", "cnrm")
-    )
+    fine_groups = _nearest(
+        fine.crossJoin(F.broadcast(coarse)).select(
+            "cid",
+            "cemb",
+            "cnrm",
+            "gid",
+            _cos(dot_fc, F.col("cnrm"), F.col("gnrm")).alias("gcos"),
+        ),
+        "cid",
+        "gid",
+        "gcos",
+        ["cemb", "cnrm"],
+    ).select("cid", "gid", "cemb", "cnrm")
     # vector -> top-SEM_COARSE_PROBE coarse groups: ALL coarse scores in
     # one per-row codegen projection (1-row broadcast array of structs),
     # ranked by an array_sort comparator — no row explosion, no window
@@ -1345,36 +1334,14 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
     )
     # candidates: the probed groups' fine centroids; exact argmin within
     dot_vc = F.expr(_dec_dot("embedding", "cemb"))
-    vc_cos = F.round(
-        F.col("dvc").cast("double")
-        / F.sqrt(F.col("nrm").cast("double") * F.col("cnrm").cast("double")),
-        6,
+    scored = probes.join(F.broadcast(fine_groups), "gid").select(
+        "vec_id",
+        "embedding",
+        "nrm",
+        F.col("cid").alias("cluster"),
+        _cos(dot_vc, F.col("nrm"), F.col("cnrm")).alias("cent_cos"),
     )
-    return (
-        probes.join(F.broadcast(fine_groups), "gid")
-        .select(
-            "vec_id", "embedding", "nrm", "cid", dot_vc.alias("dvc"), "cnrm"
-        )
-        .select("vec_id", "embedding", "nrm", "cid", vc_cos.alias("cent_cos"))
-        .groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("cent_cos") + F.lit(0.0)).alias("negcos"),
-                    F.col("cid").alias("cid"),
-                )
-            ).alias("m"),
-            F.first("embedding").alias("embedding"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select(
-            "vec_id",
-            F.col("m.cid").alias("cluster"),
-            (-F.col("m.negcos") + F.lit(0.0)).alias("cent_cos"),
-            "embedding",
-            "nrm",
-        )
-    )
+    return _nearest(scored, "vec_id", "cluster", "cent_cos", ["embedding", "nrm"])
 
 
 _SEM_ORACLE = f"""
@@ -1621,15 +1588,11 @@ def _sem_keep_tail(assigned: DataFrame) -> DataFrame:
     (vec_id, cluster, cent_cos, embedding, nrm): in-cluster pairs,
     exact DECIMAL cosine, drop every vector with a ≥ SEM_TAU neighbor
     of lower keep-priority (centroid-outlier rule, id tie-break)."""
-    from kachess_spark.pipeline.similarity import _dec_dot
+    from kachess_spark.pipeline.similarity import _cos, _dec_dot
 
     a, b = assigned.alias("a"), assigned.alias("b")
     dot_pair = F.expr(_dec_dot("a.embedding", "b.embedding"))
-    pair_cos = F.round(
-        F.col("dp").cast("double")
-        / F.sqrt(F.col("a.nrm").cast("double") * F.col("b.nrm").cast("double")),
-        6,
-    )
+    pair_cos = _cos(F.col("dp"), F.col("a.nrm"), F.col("b.nrm"))
     dominated = (
         a.join(
             b,

@@ -57,7 +57,23 @@ def get_spark(app_name: str = "kachess_spark", master: str | None = None) -> Spa
         .config("spark.driver.memory", os.environ.get("KACHESS_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark)
+    return spark
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Put the directory holding ``kachess_spark`` on the Python
+    workers' path, so Arrow and pandas tasks import the package from
+    any working directory (a worker otherwise sees only its cwd and
+    site-packages).  Workers read the path from the context's
+    ``environment`` when each Python function is created, so this runs
+    before any query is built."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [root])
 
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
@@ -65,7 +81,8 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
 
     The driver hands us its own SparkSession in ``__spark_entry__.entry``;
     only runtime-mutable confs can be set there.  Confs this build
-    refuses are skipped and named in one warning.
+    refuses are skipped and named in one warning.  The package is put
+    on the Python workers' path as in ``get_spark``.
     """
     unset = []
     for k, v in [
@@ -85,4 +102,5 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
             "tune_for_session could not set: " + "; ".join(unset),
             stacklevel=2,
         )
+    _ship_package(spark)
     return spark

@@ -13,7 +13,15 @@ inside the function that owns it, so a copy cannot creep back in:
   builder and insert writes meta through it, so no copy re-types the
   schema);
 * the signed ±1 projection fold, in ``similarity._signed_dots`` (the LSH
-  plane bits and the random projection).
+  plane bits and the random projection);
+* the squared-L2 fold term, in ``similarity._dec_l2`` (the exact L2
+  scores, the codeword assignment and the ADC distance tables);
+* the rounded cosine, in ``similarity._cos``, across ``similarity.py``
+  and ``dedup.py`` (``operators/`` keeps its own unrelated ratios);
+* the positional explode of an embedding, in ``similarity._exploded``
+  (``operators/lateral.py`` demonstrates LATERAL VIEW on purpose), and
+  ``_exploded`` itself is called only from ``similarity._lloyd``: every
+  exact score is a fold, only the per-position k-means means explode.
 
 The texts the owners build are pinned too (a changed text would change
 every plan or oracle built on it)."""
@@ -34,17 +42,27 @@ _SPARK_BAND = re.compile(r"posexplode\(band_structs\)")
 _LLOYD_MEANS = re.compile(r"collect_list\(struct\(pos, mv\)\)")
 _META_WRITE = re.compile(r'parquet\(os\.path\.join\(\w+, "meta"\)\)')
 _SIGNED_FOLD = re.compile(r"transform\(signs, s ->")
+_L2_TERM = re.compile(r"\*\s*\(CAST\(x AS DOUBLE\) - CAST\(y AS DOUBLE\)\)")
+_ROUNDED_COS = re.compile(r"/ F\.sqrt\(")
+_EMB_EXPLODE = re.compile(r'posexplode\("embedding"\)')
+_EXPLODED_CALL = re.compile(r"(?<!def )\b_exploded\(")
+_SCORING = ("pipeline/similarity.py", "pipeline/dedup.py")
 
 
-def _assert_defined_once(pattern: re.Pattern, owner_file: str, owner: str):
-    """``pattern`` matches exactly one line under kachess_spark/, and that
-    line lies inside the module-level function ``owner`` of ``owner_file``."""
+def _assert_defined_once(
+    pattern: re.Pattern, owner_file: str, owner: str, scope=None
+):
+    """``pattern`` matches exactly one line under kachess_spark/ (or in
+    the ``scope`` files only), and that line lies inside the
+    module-level function ``owner`` of ``owner_file``."""
     hits = []
     for root, _, files in os.walk(_PKG):
         for name in sorted(files):
             if not name.endswith(".py"):
                 continue
             path = os.path.join(root, name)
+            if scope is not None and os.path.relpath(path, _PKG) not in scope:
+                continue
             with open(path) as f:
                 for lineno, line in enumerate(f, 1):
                     if pattern.search(line):
@@ -76,10 +94,18 @@ def test_similarity_steps_defined_once():
     _assert_defined_once(_LLOYD_MEANS, sim, "_lloyd")
     _assert_defined_once(_META_WRITE, sim, "_write_state")
     _assert_defined_once(_SIGNED_FOLD, sim, "_signed_dots")
+    _assert_defined_once(_L2_TERM, sim, "_dec_l2")
+    _assert_defined_once(_EXPLODED_CALL, sim, "_lloyd")
+
+
+def test_probe_scoring_defined_once():
+    sim = "pipeline/similarity.py"
+    _assert_defined_once(_ROUNDED_COS, sim, "_cos", _SCORING)
+    _assert_defined_once(_EMB_EXPLODE, sim, "_exploded", _SCORING)
 
 
 def test_decimal_fold_text():
-    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot
+    from kachess_spark.pipeline.similarity import _DEC_NORM, _dec_dot, _dec_l2
 
     d = "decimal(28,14)"
     assert _DEC_NORM == (
@@ -90,6 +116,12 @@ def test_decimal_fold_text():
     assert _dec_dot("a", "b") == (
         f"aggregate(zip_with(a, b, (x, y) ->"
         f" CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS {d})),"
+        f" CAST(0 AS {d}), (acc, v) -> CAST(acc + v AS {d}))"
+    )
+    diff = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+    assert _dec_l2("a", "b") == (
+        f"aggregate(zip_with(a, b, (x, y) ->"
+        f" CAST({diff} * {diff} AS {d})),"
         f" CAST(0 AS {d}), (acc, v) -> CAST(acc + v AS {d}))"
     )
 

@@ -2,7 +2,7 @@
 variables the package reads are exactly the ones README.md's
 Configuration table documents — so an A/B switch cannot creep back in
 undocumented — and tune_for_session reports the confs it could not
-set."""
+set and puts the package on the Python workers' path."""
 
 from __future__ import annotations
 
@@ -108,8 +108,12 @@ def test_tune_for_session_names_unset_confs_in_one_warning():
                 raise RuntimeError("not runtime-settable")
             self.set_ok[k] = v
 
+    class Context:
+        environment = {"PYTHONPATH": "/elsewhere"}
+
     class Session:
         conf = Conf()
+        sparkContext = Context()
 
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
@@ -119,3 +123,9 @@ def test_tune_for_session_names_unset_confs_in_one_warning():
     assert "spark.sql.adaptive.skewJoin.enabled=true" in msg
     assert "spark.sql.autoBroadcastJoinThreshold=64m" in msg
     assert s.conf.set_ok["spark.sql.session.timeZone"] == "UTC"
+    # the package's parent dir joins the workers' path, once
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        tune_for_session(s)
+    path = s.sparkContext.environment["PYTHONPATH"].split(os.pathsep)
+    assert path == ["/elsewhere", _REPO]

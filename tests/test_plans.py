@@ -431,7 +431,7 @@ def test_banded_lsh_no_cartesian(spark, sf_dir):
     bnlj = cplan.count("BroadcastNestedLoopJoin")
     assert bnlj <= 1
     if bnlj:
-        # the BNLJ's build side is the broadcast side; exact_topk_fast
+        # the BNLJ's build side is the broadcast side; _probe_scores
         # broadcasts qv (the query vectors), so the join must be
         # BuildRight over a plan whose broadcast input is the filtered
         # <=15-row query relation.
@@ -967,7 +967,7 @@ def test_int8_quantize_no_shuffle_narrow(spark, sf_dir):
 def test_int8_topk_broadcast_small_side(spark, sf_dir):
     """sim_int8_topk: the corpus is never collected — the ≤3-row probe
     side broadcasts (a deliberate small-side BNLJ, same contract as
-    exact_topk_fast); integer dots stay in codegen."""
+    _probe_scores); integer dots stay in codegen."""
     from kachess_spark.pipeline.similarity import sim_int8_topk
 
     df = sim_int8_topk(spark, sf_dir)
@@ -981,21 +981,19 @@ def test_int8_topk_broadcast_small_side(spark, sf_dir):
         assert "BuildRight" in plan
 
 
-def test_int8_topk_recall_vs_float_exact(spark, sf_dir):
+def test_int8_topk_recall_vs_float_exact(spark, sf_dir, duck):
     """int8 quantization must preserve retrieval quality: top-5 by
-    quantized cosine vs top-5 by exact float cosine, recall ≥ 0.8
-    averaged over the probe queries."""
+    quantized cosine vs top-5 by exact float cosine (sim_cosine_topk's
+    DuckDB oracle), recall ≥ 0.8 averaged over the probe queries."""
     from kachess_spark.pipeline.similarity import (
         QUERY_IDS,
         TOP_K,
-        exact_topk_fast,
         sim_int8_topk,
     )
-    from kachess_spark.catalog import Tables
+    from kachess_spark.registry import ORACLES
 
     got = sim_int8_topk(spark, sf_dir).toPandas()
-    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    exact = exact_topk_fast(emb, TOP_K, "cosine").toPandas()
+    exact = duck.execute(ORACLES["sim_cosine_topk"]).df()
     hits = total = 0
     for qid in QUERY_IDS:
         g = set(got[got.qid == qid].vid)
@@ -1156,18 +1154,15 @@ def test_source_overlap_report_shape(spark, sf_dir):
     assert (pdf.avg_jaccard <= 1.0).all()
 
 
-def test_range_search_plan_and_certificate(spark, sf_dir):
+def test_range_search_plan_and_certificate(spark, sf_dir, duck):
     """sim_range_search: candidates come from the LSH bucket join —
     no CartesianProduct, no Python eval — and the in-plan range_recall
     certificate is 1.0 on this fixture only if the kept set covers the
-    exact range set (spot-checked against a brute-force recompute)."""
-    from pyspark.sql import functions as F
-
-    from kachess_spark.catalog import Tables
+    exact range set (spot-checked against a brute-force DuckDB
+    recompute, explode and SUM)."""
     from kachess_spark.pipeline.similarity import (
         QUERY_IDS,
         RANGE_TAU,
-        cosine_topk,
         sim_range_search,
     )
 
@@ -1177,13 +1172,31 @@ def test_range_search_plan_and_certificate(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
 
-    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    queries = emb.where(F.col("vec_id").isin(*QUERY_IDS))
-    exact = {
-        (r["qid"], r["vid"])
-        for r in cosine_topk(spark, emb, queries, k=10**9).collect()
-        if r["cosine"] >= RANGE_TAU
-    }
+    exact = set(
+        duck.execute(
+            f"""
+            WITH d AS (
+              SELECT vec_id AS vid, generate_subscripts(embedding, 1) AS pos,
+                     CAST(unnest(embedding) AS DOUBLE) AS dv
+              FROM embeddings
+            ),
+            q AS (SELECT vid AS qid, pos, dv AS qv FROM d WHERE vid IN {QUERY_IDS}),
+            n AS (
+              SELECT vid, SUM(CAST(dv * dv AS DECIMAL(28,14))) AS nn
+              FROM d GROUP BY vid
+            ),
+            s AS (
+              SELECT qid, vid, SUM(CAST(qv * dv AS DECIMAL(28,14))) AS dot
+              FROM d JOIN q USING (pos) WHERE qid <> vid GROUP BY qid, vid
+            )
+            SELECT s.qid, s.vid FROM s
+            JOIN n n1 ON n1.vid = s.vid JOIN n n2 ON n2.vid = s.qid
+            WHERE ROUND(CAST(dot AS DOUBLE)
+                        / sqrt(CAST(n1.nn AS DOUBLE) * CAST(n2.nn AS DOUBLE)),
+                        6) >= {RANGE_TAU}
+            """
+        ).fetchall()
+    )
     got = {(r["qid"], r["vid"]) for r in rows}
     assert got <= exact  # every kept row is truly in radius
     # the in-plan certificate equals the brute-force recall per query

@@ -60,7 +60,7 @@ NOTES = {
     "sim_range_search": "Radius query over the LSH index: bucket-equality candidates, exact cosine filter, and the in-plan completeness certificate (exact range set from a linear codegen kernel, broadcast back).",
     "join_fuzzy_editdist": "FastSS fuzzy join: deletion-neighborhood explode on DISTINCT names, candidates from an EQUALITY join on the variant string (inverted index, no cartesian), exact levenshtein verify on collisions.",
     "text_repetition_signals": "Gopher repetition filters: n-grams assembled inside the array column, ONE repartition(doc_id) exchange, two chained hash aggs reuse its clustering; top-2gram argmax is MIN of a sign-flipped struct (no window, no joins).",
-    "sim_mmr_topk": "MMR re-rank: relational lattice sims (DECIMAL dots over shortlist^2 pairs), greedy picks in one applyInPandas over pre-scored pair rows; exact-top1 verification broadcast back.",
+    "sim_mmr_topk": "MMR re-rank: shortlist and pair sims from the one probe scorer (map-side DECIMAL folds, the pair sims over the shortlist^2 member pairs, no explode), greedy picks in one applyInPandas over pre-scored pair rows; exact-top1 verification broadcast back.",
     "sim_knn_graph": "All-nodes k-NN: signature table checkpointed once, bucket-equality SELF-join (shuffle hash, nothing broadcast), unordered pairs scored once then mirrored; per-source top-k window bounded by L*bucket.",
     "sim_knn_graph_ivf": "Stored-index graph: all-nodes multi-probe (knn_graph_n_probe = 2x serving) against broadcast centroids, inverted-list candidate join, explicit spread before the CPU-bound DECIMAL scoring; then one NN-descent round — adjacency checkpointed once, two-hop self-join is O(n*(2K)^2) rows, re-score + re-rank.",
     "text_unicode_normalize": "NFC is the ONE ArrowEvalPython node (no built-in exists); control-strip and collapse are codegen regexp_replace around it; no exchange before the presentation sort.",
