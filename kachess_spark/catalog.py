@@ -11,8 +11,10 @@ only this module would change.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TABLES = (
@@ -134,16 +136,13 @@ _CACHE_ATTR = "_kachess_table_cache"
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    try:
-        # timestamp semantics must not depend on who built the session
-        # (the external driver supplies its own): epoch arithmetic in the
-        # oracles assumes UTC, and this conf is runtime-settable.  Pinned
-        # on EVERY load — including cache hits — so a caller flipping the
-        # session timezone between queries can't leak local-tz semantics
-        # into a cached table's downstream plan.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    # timestamp semantics must not depend on who built the session (the
+    # external driver supplies its own): epoch arithmetic in the oracles
+    # assumes UTC, and this conf is runtime-settable, so a failed set is a
+    # real fault and raises.  Pinned on EVERY load — including cache hits —
+    # so a caller flipping the session timezone between queries can't leak
+    # local-tz semantics into a cached table's downstream plan.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     per_session = getattr(spark, _CACHE_ATTR, None)
     if per_session is None:
         per_session = {}
@@ -158,29 +157,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = table_path(sf_dir, name)
     if name == "events":
-        # events.ts is TIMESTAMP(NANOS) parquet.  Depending on the Spark
-        # build it arrives as (a) timestamp_ntz — native nanos support,
-        # truncated to micros exactly like DuckDB's ns→us cast — or
-        # (b) long nanos under spark.sql.legacy.parquet.nanosAsLong.
-        # Normalize both to a session-tz (UTC) TIMESTAMP column.
-        from pyspark.sql import functions as F
+        return _events_ts(spark, lambda: spark.read.parquet(path))
+    return spark.read.parquet(path)
 
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # integer division, NOT /1000: nanos-since-epoch exceeds 2^53,
-            # so float division rounds the low microsecond up on ~half the
-            # values — `div` truncates exactly like DuckDB's ns→us cast
-            return df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(table_path(sf_dir, name))
+
+def _events_ts(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """``read()``'s events frame with ``ts`` as a session-tz (UTC)
+    TIMESTAMP: the one rule for the batch table and its file stream.
+
+    events.ts is TIMESTAMP(NANOS) parquet.  Depending on the Spark build
+    it arrives as (a) timestamp_ntz — native nanos support, truncated to
+    micros exactly like DuckDB's ns→us cast — or (b) long nanos under the
+    legacy nanos-as-long parquet conf, which is set before ``read`` runs
+    (a runtime conf: a failed set raises)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        # integer division, NOT /1000: nanos-since-epoch exceeds 2^53, so
+        # float division rounds the low microsecond up on ~half the
+        # values — `div` truncates exactly like DuckDB's ns→us cast
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

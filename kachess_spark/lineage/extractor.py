@@ -256,7 +256,6 @@ class LineageSession:
                 data_type=it.data_type, position=pos,
             )
             col.parents.add(it.id)
-            self.store.item_owner[col.id] = ds.id
             ds.items.append(col)
         self._register_table(ds)
 
@@ -282,8 +281,6 @@ class LineageSession:
         self._register_table(ds)
 
     def _register_table(self, ds: M.Dataset) -> None:
-        for it in ds.items:
-            self.store.item_owner[it.id] = ds.id
         self.store.datasets.append(ds)
         key = f"{(ds.schema_name or '').lower()}.{(ds.table_name or '').lower()}"
         self.table_cache[key] = ds
@@ -438,7 +435,6 @@ class LineageSession:
                     data_type=it.data_type, position=pos,
                     parents={it.id},
                 )
-                self.store.item_owner[w_it.id] = wrapper.id
                 wrapper.items.append(w_it)
             self.store.datasets.append(wrapper)
             first = wrapper
@@ -463,7 +459,6 @@ class LineageSession:
                 # the dropped branch's predicates now belong to `first`
                 for it in other.filter_items + other.join_items:
                     it.dataset_id = first.id
-                    self.store.item_owner[it.id] = first.id
                 first.filter_items.extend(other.filter_items)
                 first.join_items.extend(other.join_items)
                 if other in self.store.datasets:
@@ -592,7 +587,6 @@ class LineageSession:
                 definition=nm, data_type=_hive_type(attr.get("dataType")),
                 position=pos,
             )
-            self.store.item_owner[it.id] = ds.id
             ds.items.append(it)
         self.store.datasets.append(ds)
         return ds
@@ -628,7 +622,6 @@ class LineageSession:
                 definition=nm, position=pos,
             )
             it.parents |= parents
-            self.store.item_owner[it.id] = ds.id
             ds.items.append(it)
         ds.extra_info = f"{fname}({arg_txt})"
         self.store.datasets.append(ds)
@@ -685,7 +678,6 @@ class LineageSession:
         # own datasets, reference-style nested-scope visits
         for sub in _collect_subplans(cond):
             self._query(sub)
-        self.store.item_owner[it.id] = ds_id
         return it
 
     def _add_select_item(
@@ -707,7 +699,6 @@ class LineageSession:
                         data_type=src_it.data_type, position=pos,
                     )
                     it.parents.add(src_it.id)
-                    self.store.item_owner[it.id] = ds.id
                     ds.items.append(it)
                     pos += 1
             return pos
@@ -755,7 +746,6 @@ class LineageSession:
                     it.parents.add(hit.id)
             for sub in _collect_subplans(inner):
                 self._query(sub)
-        self.store.item_owner[it.id] = ds.id
         ds.items.append(it)
         return pos + 1
 
@@ -821,14 +811,6 @@ class LineageSession:
             hit = scoped.dataset.find_item(ref[0])
             if hit is not None:
                 return hit
-        if len(ref) > 2:
-            # table.column.field — drop trailing struct fields
-            qual = ref[0].lower()
-            for scoped in scope.sources:
-                if qual in scoped.names():
-                    hit = scoped.dataset.find_item(ref[1])
-                    if hit is not None:
-                        return hit
         return None
 
     def _asterisk(self, ds: M.Dataset) -> M.SelectItem:
@@ -837,7 +819,6 @@ class LineageSession:
                 id=self.ids.next(), dataset_id=ds.id, name=M.ASTERISK,
                 alias=None, definition="*",
             )
-            self.store.item_owner[ds._asterisk_item.id] = ds.id
         return ds._asterisk_item
 
 

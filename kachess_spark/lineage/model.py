@@ -193,11 +193,13 @@ def frames(spark: SparkSession, store: "GraphStore") -> dict[str, DataFrame]:
     # + INSERT IGNORE semantics (db_setup_ddl.sql:90-100,
     # LineageDbService.addSelectColumnPair:50-66)
     rel_set: set[tuple[int, int, str]] = set()
+    owner: dict[int, int] = {}  # item id → its dataset id
     for d in store.datasets:
         all_items = list(d.items) + d.filter_items + d.join_items
         if d._asterisk_item is not None:
             all_items.append(d._asterisk_item)
         for it in all_items:
+            owner[it.id] = it.dataset_id
             item_rows.append(
                 (it.id, it.dataset_id, it.name, it.alias, it.definition,
                  it.data_type, it.usage_context, it.position)
@@ -220,9 +222,9 @@ def frames(spark: SparkSession, store: "GraphStore") -> dict[str, DataFrame]:
     for d in store.datasets:
         for it in list(d.items) + d.filter_items + d.join_items:
             for pid in it.parents:
-                owner = store.item_owner.get(pid)
-                if owner is not None and owner != d.id:
-                    dsrel.add((owner, d.id))
+                src = owner.get(pid)
+                if src is not None and src != d.id:
+                    dsrel.add((src, d.id))
     dsrel_rows = sorted(dsrel)
     ins_rows = [
         (ti.target_dataset_id, ti.source_dataset_id, ti.insert_type, ti.partition_spec)
@@ -255,7 +257,6 @@ class GraphStore:
     worker and joins between them broadcast."""
 
     datasets: list[Dataset] = field(default_factory=list)
-    item_owner: dict[int, int] = field(default_factory=dict)  # item id → ds id
     table_inserts: list[TableInsert] = field(default_factory=list)
     partition_adds: list[PartitionAdd] = field(default_factory=list)
     # (id, tag, dialect, system_source) per extracted script

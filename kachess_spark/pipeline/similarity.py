@@ -2850,17 +2850,62 @@ def _ann_ivfpq_index_build_oracle() -> str:
     FROM r_codes GROUP BY m, code ORDER BY m, code"""
 
 
+def _pq_long(emb: DataFrame) -> DataFrame:
+    """The PQ long layout of (vec_id, embedding): one row per (vector,
+    subspace m), id ``vec_id * {PQ_M} + m``, the m-th {PQ_DIMS}-dim
+    slice.  Codewords share the layout (id ``code * {PQ_M} + m``), so one
+    ``_lloyd`` run trains every subspace's book at once: its
+    ``k * {PQ_M}`` lowest-id seeds are exactly the k lowest vectors'
+    slices, seed r being code ``r div {PQ_M}`` of subspace
+    ``r mod {PQ_M}``."""
+    m = F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m")
+    return emb.select("vec_id", "embedding", m).select(
+        (F.col("vec_id") * PQ_M + F.col("m")).alias("vec_id"),
+        F.expr(f"slice(embedding, m * {PQ_DIMS} + 1, {PQ_DIMS})").alias(
+            "embedding"
+        ),
+    )
+
+
+def _pq_split(c: str) -> tuple:
+    """(floor(id / {PQ_M}), pmod(id, {PQ_M})) of a long-layout id column:
+    exact integer arithmetic, so any integer id splits back."""
+    m = f"pmod({c}, {PQ_M})"
+    return F.expr(f"({c} - {m}) div {PQ_M}"), F.expr(m).cast("int")
+
+
 def _assign_l2(sub: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vid, code): nearest codeword by exact squared-L2 per sub-vector —
-    the L2 fold against every codeword of the broadcast codebook
-    (k rows), ties to the lower code."""
-    c = cent.select(F.col("vec_id").alias("code"), F.col("embedding").alias("c_emb"))
-    d2 = sub.join(broadcast(c)).select(
+    """(vid, code): each long-layout row's nearest codeword of its own
+    subspace by exact squared L2 — an equi-join on the subspace against
+    the broadcast codebooks (k rows per subspace), ties to the lower
+    code.  ``sub`` and ``cent`` are (vec_id, embedding) in the
+    ``_pq_long`` layout."""
+    c = cent.select(
+        _pq_split("vec_id")[1].alias("m"),
+        F.col("vec_id").alias("code"),
+        F.col("embedding").alias("c_emb"),
+    )
+    d2 = sub.withColumn("m", _pq_split("vec_id")[1]).join(
+        broadcast(c), "m"
+    ).select(
         F.col("vec_id").alias("vid"),
         "code",
         F.expr(_dec_l2("embedding", "c_emb")).alias("d2"),
     )
     return _knn_topk(d2, 1, asc=True).select("vid", "code")
+
+
+def _pq_encode(emb: DataFrame, books: DataFrame) -> DataFrame:
+    """(vid, m, code): every vector of ``emb`` encoded against the
+    (m, code, embedding) codebooks — one ``_assign_l2`` pass."""
+    cent = books.select(
+        (F.col("code") * PQ_M + F.col("m")).alias("vec_id"), "embedding"
+    )
+    vid, m = _pq_split("vid")
+    code = _pq_split("code")[0].cast("int")
+    return _assign_l2(_pq_long(emb), cent).select(
+        vid.alias("vid"), m.alias("m"), code.alias("code")
+    )
 
 
 def _adc_table(q: DataFrame, books: DataFrame) -> DataFrame:
@@ -2876,16 +2921,6 @@ def _adc_table(q: DataFrame, books: DataFrame) -> DataFrame:
     )
 
 
-def _pq_subspaces(emb: DataFrame):
-    """(m, sub) for each of the {PQ_M} subspaces: ``sub`` is (vec_id,
-    embedding) with the embedding cut to its m-th {PQ_DIMS}-dim slice."""
-    for m in range(PQ_M):
-        yield m, emb.select(
-            "vec_id",
-            F.slice("embedding", m * PQ_DIMS + 1, PQ_DIMS).alias("embedding"),
-        )
-
-
 def pq_train_encode(
     spark: SparkSession, emb: DataFrame, k: int = PQ_K
 ) -> tuple[DataFrame, DataFrame]:
@@ -2898,28 +2933,20 @@ def pq_train_encode(
     angles concentrate and cosine cells collapse — measured recall 1/15
     vs 10/15 with L2 here.
 
+    All {PQ_M} books train in ONE ``_lloyd`` run over the ``_pq_long``
+    layout (k·{PQ_M} codewords, assignment within each subspace), so
+    every round is one job for all subspaces.
+
     Storage math: 64 float32 dims (256 B) → M×log2(k) bits per vector
     (128× compression at k=16); the codebooks are M×k×(D/M) floats
     total — broadcast-sized at any corpus scale.
     """
-    from functools import reduce
-
-    books = []
-    codes = []
-    for m, sub in _pq_subspaces(emb):
-        cent = _lloyd(sub, k, _assign_l2, PQ_ITERS)
-        books.append(
-            cent.select(
-                F.lit(m).alias("m"), F.col("vec_id").alias("code"), "embedding"
-            )
-        )
-        codes.append(
-            _assign_l2(sub, cent).select("vid", F.lit(m).alias("m"), "code")
-        )
-    return (
-        reduce(DataFrame.unionByName, books).localCheckpoint(eager=True),
-        reduce(DataFrame.unionByName, codes).localCheckpoint(eager=True),
-    )
+    cent = _lloyd(_pq_long(emb), k * PQ_M, _assign_l2, PQ_ITERS)
+    code, m = _pq_split("vec_id")
+    books = cent.select(
+        m.alias("m"), code.cast("int").alias("code"), "embedding"
+    ).localCheckpoint(eager=True)
+    return books, _pq_encode(emb, books).localCheckpoint(eager=True)
 
 
 @query("sim_pq_adc_topk")  # rows-only: approximate; recall asserted in tests
@@ -3094,19 +3121,9 @@ def pq_index_insert(
     until a scheduled ``build_pq_index`` re-train.  At-most-once per
     batch (caller owns insert-batch dedup)."""
     import os
-    from functools import reduce
 
     books, meta = _read_state(spark, index_dir, "books", "meta")
-    parts = [
-        _assign_l2(
-            sub,
-            books.where(F.col("m") == m).select(
-                F.col("code").alias("vec_id"), "embedding"
-            ),
-        ).select("vid", F.lit(m).alias("m"), "code")
-        for m, sub in _pq_subspaces(new_vectors)
-    ]
-    reduce(DataFrame.unionByName, parts).write.mode("append").parquet(
+    _pq_encode(new_vectors, books).write.mode("append").parquet(
         os.path.join(index_dir, "codes")
     )
     # recount from the codes table (M rows per vector) — same crash-

@@ -2,9 +2,13 @@
 has no streaming constructs; BASELINE.json's north star allows extensions).
 
 Batch twins of every windowed aggregation live in ``windows.py`` and are
-oracle-checked; the streaming paths run the same logical plans through
-``readStream`` with watermarks and are exercised by tests with
-``trigger(availableNow=True)``.
+oracle-checked.  Each batch/stream pair shares one transformation, a
+private body in ``windows.py``: the batch twin applies it to the static
+table, the streaming twin to the watermarked file stream
+(``stream_events``), exercised by tests with
+``trigger(availableNow=True)``; the ``foreachBatch`` runners drain through
+one helper, ``windows._drain``.  The module docstring of ``windows.py``
+lists the bodies and the pairs written twice on purpose.
 """
 
 from kachess_spark.streaming.windows import (

@@ -1,72 +1,102 @@
 """Windowed event aggregations — batch twins + streaming paths.
 
-Each aggregation exists twice over the SAME logical plan:
+Each batch/stream pair runs ONE transformation, written once in this
+module as a private body (``_tumbling``, ``_sliding``, ``_enrich``,
+``_trending_counts`` + ``_top_trending``, ``_interval_join``; the
+per-key folds ``_running_totals`` and ``_ewma_update`` are pure pandas):
 
-* a **batch** function on the static ``events`` table, registered in the
-  driver contract with a DuckDB oracle (epoch-bucket arithmetic reproduces
-  ``F.window``'s epoch-aligned assignment exactly);
-* a **streaming** function over ``readStream`` with a watermark, exercised
-  by tests with ``trigger(availableNow=True)`` into a memory sink.
+* the **batch** twin applies the body to the static ``events`` table
+  (``load_table``) and adds its ``orderBy``; it is registered in the
+  driver contract with a DuckDB oracle (epoch-bucket arithmetic
+  reproduces ``F.window``'s epoch-aligned assignment exactly);
+* the **streaming** twin applies the same body to the watermarked file
+  stream (``stream_events``, whose ``ts`` goes through the batch table's
+  own rule, ``catalog._events_ts``), exercised by tests with
+  ``trigger(availableNow=True)``; the ``foreachBatch`` runners (upsert,
+  trending rank, ingest gate) all drain through ``_drain``.
+
+Written twice on purpose: session windows (the batch twin is
+gaps-and-islands so its session keys are ordinals; the stream uses the
+native ``session_window`` state machine), the dedup counts (a DISTINCT
+on one side, a watermarked ``dropDuplicates`` on the other) and the
+upsert (the stream merges scaled decimals into a versioned table).
 
 Scale design: watermarks bound state (without one, a windowed streaming agg
 keeps every window open forever — the 100 TB failure mode); state lives in
 the HDFS/RocksDB state store keyed by (window, group) so a 1000-executor
 job partitions it by the same shuffle hash as the batch plan; session
 windows additionally key state by user_id, and the custom stateful
-operator uses ``applyInPandasWithState`` with an explicit timeout so
-abandoned keys are evicted.
+operators use ``applyInPandasWithState`` with an event-time timeout so
+abandoned keys are evicted (``_per_user_state``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import os
 
-from kachess_spark.catalog import load_table, table_path
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from kachess_spark.catalog import _events_ts, load_table, table_path
 from kachess_spark.operators._util import davg, dsum, oracle_dsum
 from kachess_spark.registry import query
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),  # TIMESTAMP(NANOS) — see below
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
+
+def _file_stream(
+    spark: SparkSession, sf_dir: str, name: str, schema: str
+) -> DataFrame:
+    """Table ``name`` of ``sf_dir`` as an unbounded source, one file per
+    trigger.  Each table is a single parquet file and FileStreamSource
+    watches a directory, so the stream reads the sf dir with a glob
+    pinned to that file; in production this is the same call with a
+    Kafka/Kinesis format string — everything downstream is identical."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
     )
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``events`` as an unbounded source.  File-streaming the same parquet
-    the batch path reads; in production this is the same call with a
-    Kafka/Kinesis format string — everything downstream is identical."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    # events.ts is TIMESTAMP(NANOS): Spark builds with native nanos
-    # support read it as timestamp_ntz (micro-truncated); older builds
-    # honor nanosAsLong and hand back long nanos.  Probe the batch
-    # reader's view (one footer read) and mirror it in the stream schema.
-    batch_ts = (
-        spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType
+    """``events`` as an unbounded source, ``ts`` normalized by the batch
+    table's rule."""
+
+    def read() -> DataFrame:
+        # the raw ts type depends on the Spark build (see _events_ts):
+        # probe the batch reader's view (one footer read) and mirror it
+        # in the stream schema
+        ts = spark.read.parquet(table_path(sf_dir, "events")).schema["ts"]
+        schema = (
+            f"event_id BIGINT, ts {ts.dataType.simpleString()}, user_id BIGINT,"
+            " event_type STRING, value DOUBLE, props STRING"
+        )
+        return _file_stream(spark, sf_dir, "events", schema)
+
+    return _events_ts(spark, read)
+
+
+def _watermarked(ev: DataFrame) -> DataFrame:
+    return ev.withWatermark("ts", "2 hours")
+
+
+def _drain(stream: DataFrame, fn, checkpoint: str, mode: str = "append") -> None:
+    """Run ``fn(batch_df, batch_id)`` on every micro-batch of ``stream``
+    (``foreachBatch``, checkpointed at ``checkpoint``) until the
+    availableNow backlog is drained.  availableNow drains a bounded
+    backlog; still running after 120 s means something is wedged —
+    reading the sink then would return a silently partial table — so
+    the query is stopped and ``TimeoutError`` raised."""
+    q = (
+        stream.writeStream.foreachBatch(fn)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    # events.parquet is a single file; FileStreamSource watches a directory,
-    # so stream the sf dir with a glob pinned to that file
-    raw = (
-        spark.readStream.schema(_events_schema(batch_ts))
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(batch_ts, T.LongType):
-        # exact integer division — see catalog.load_table's nanos note
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    if not q.awaitTermination(120):
+        q.stop()
+        raise TimeoutError("streaming query did not drain within 120s")
 
 
 # ------------------------------------------------------------------ batch
@@ -86,10 +116,7 @@ ORDER BY window_epoch, event_type
 """
 
 
-@query("stream_tumbling_counts", _TUMBLING_ORACLE)
-def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows: count + sum per event_type."""
-    ev = load_table(spark, sf_dir, "events")
+def _tumbling(ev: DataFrame) -> DataFrame:
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"), dsum("value", "sum_value"))
@@ -99,8 +126,14 @@ def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             "sum_value",
         )
-        .orderBy("window_epoch", "event_type")
     )
+
+
+@query("stream_tumbling_counts", _TUMBLING_ORACLE)
+def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour tumbling windows: count + sum per event_type."""
+    ev = load_table(spark, sf_dir, "events")
+    return _tumbling(ev).orderBy("window_epoch", "event_type")
 
 
 # sliding(1h, 30m): every event lands in exactly 2 windows — the 30-min
@@ -123,16 +156,19 @@ ORDER BY 1
 """
 
 
-@query("stream_sliding_avg", _SLIDING_ORACLE)
-def sliding_window_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour windows sliding every 30 minutes: volume + average value."""
-    ev = load_table(spark, sf_dir, "events")
+def _sliding(ev: DataFrame) -> DataFrame:
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count("*").alias("cnt"), davg("value", "avg_value"))
         .select(F.unix_timestamp("w.start").alias("window_epoch"), "cnt", "avg_value")
-        .orderBy("window_epoch")
     )
+
+
+@query("stream_sliding_avg", _SLIDING_ORACLE)
+def sliding_window_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour windows sliding every 30 minutes: volume + average value."""
+    ev = load_table(spark, sf_dir, "events")
+    return _sliding(ev).orderBy("window_epoch")
 
 
 # session windows (30-min gap) = classic gaps-and-islands: a new session
@@ -172,8 +208,6 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.session_window`` so the output keys (ordinal session numbers) are
     comparable; the streaming path uses the native ``session_window``
     state machine."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     marked = ev.withColumn(
@@ -200,37 +234,22 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------------------------- streaming
-# paths (same plans over readStream; tested with availableNow + memory sink)
+# paths (the batch bodies over the watermarked event stream; tested with
+# availableNow + memory sink)
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir)
-    return (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), dsum("value", "sum_value"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_epoch"),
-            "event_type", "cnt", "sum_value",
-        )
-    )
+    return _tumbling(_watermarked(stream_events(spark, sf_dir)))
 
 
 def streaming_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir)
-    return (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"), davg("value", "avg_value"))
-        .select(F.unix_timestamp("w.start").alias("window_epoch"), "cnt", "avg_value")
-    )
+    return _sliding(_watermarked(stream_events(spark, sf_dir)))
 
 
 def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window state machine (30-min gap) per user."""
-    ev = stream_events(spark, sf_dir)
     return (
-        ev.withWatermark("ts", "2 hours")
+        _watermarked(stream_events(spark, sf_dir))
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), dsum("value", "session_value"))
         .select(
@@ -247,39 +266,77 @@ _STATE_SCHEMA = "total_events BIGINT, total_value DOUBLE"
 _OUT_SCHEMA = "user_id BIGINT, total_events BIGINT, total_value DOUBLE"
 
 
-def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator: per-user running totals via
-    ``applyInPandasWithState`` (SURVEY.md §2.9 mapping for operators Spark's
-    built-ins can't express).  State is one row per user; a processing-time
-    timeout evicts idle keys so state can't grow unboundedly."""
+def _running_totals(user_id, totals: tuple, pdfs):
+    """Fold pandas batches of one user's events into the running totals
+    ``(total_events, total_value)``: returns the new state and its one
+    output row (``_OUT_SCHEMA``).  The fold of both stateful twins."""
+    import pandas as pd
+
+    total_events, total_value = totals
+    for pdf in pdfs:
+        total_events += len(pdf)
+        total_value += float(pdf["value"].fillna(0.0).sum())
+    row = pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "total_events": [total_events],
+            "total_value": [total_value],
+        }
+    )
+    return (total_events, total_value), row
+
+
+_IDLE_MS = 24 * 3600 * 1000  # event time a user may idle before eviction
+
+
+def _per_user_state(
+    ev: DataFrame, fold, empty: tuple, out_schema: str, state_schema: str
+) -> DataFrame:
+    """``applyInPandasWithState`` per user over the watermarked ``ev``:
+    ``fold(user_id, state, pdfs) -> (state, row)`` folds each call's
+    pandas batches into the user's state (``empty`` when the user has
+    none) and emits its row.
+
+    An EVENT-time timeout evicts idle users so state can't grow
+    unboundedly: it fires once the watermark passes the user's newest
+    event + 24 h, and the timed-out call only removes the state.  A
+    processing-time timeout would ask for another no-data batch after
+    every batch, so an availableNow query never drains."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        total_events, total_value = (
-            state.get if state.exists else (0, 0.0)
+        if state.hasTimedOut:
+            state.remove()
+            return
+        pdfs = list(pdfs)
+        new, row = fold(key[0], state.get if state.exists else empty, pdfs)
+        state.update(new)
+        newest = max(int(p["ts"].max().timestamp() * 1000) for p in pdfs)
+        state.setTimeoutTimestamp(
+            max(newest, state.getCurrentWatermarkMs()) + _IDLE_MS
         )
-        for pdf in pdfs:
-            total_events += len(pdf)
-            total_value += float(pdf["value"].fillna(0.0).sum())
-        state.update((total_events, total_value))
-        state.setTimeoutDuration(24 * 3600 * 1000)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "total_events": [total_events],
-                "total_value": [total_value],
-            }
-        )
+        yield row
 
-    ev = stream_events(spark, sf_dir)
-    return ev.groupBy("user_id").applyInPandasWithState(
+    return _watermarked(ev).groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom stateful operator: per-user running totals via
+    ``applyInPandasWithState`` (SURVEY.md §2.9 mapping for operators Spark's
+    built-ins can't express).  State is one row per user, evicted after
+    24 h of event-time idleness (``_per_user_state``)."""
+    return _per_user_state(
+        stream_events(spark, sf_dir),
+        _running_totals,
+        (0, 0.0),
+        _OUT_SCHEMA,
+        _STATE_SCHEMA,
     )
 
 
@@ -289,14 +346,14 @@ def streaming_user_running_totals_tws(
     """``transformWithStateInPandas`` twin of
     ``streaming_user_running_totals`` — the Spark 4.x arbitrary-state
     API (value state via a StatefulProcessor handle) computing the same
-    per-user running totals.
+    per-user running totals through the same fold, ``_running_totals``.
 
-    ENVIRONMENT-GATED: the TWS Python worker protocol needs
-    ``google.protobuf``, which this container lacks; the per-round
-    probe (tests/test_streaming.py::test_transform_with_state_probe)
-    skips with that record until the environment gains it, then runs
-    this twin against the batch totals.  ``applyInPandasWithState``
-    covers the stateful semantics either way."""
+    ENVIRONMENT-GATED and so UNEXERCISED where ``google.protobuf`` is
+    missing: the TWS Python worker protocol needs it, and
+    tests/test_streaming.py::test_transform_with_state_probe skips until
+    the environment gains it, then runs this twin against the batch
+    totals.  ``applyInPandasWithState`` covers the stateful semantics
+    either way."""
     try:
         import google.protobuf  # noqa: F401
     except ImportError as exc:  # pragma: no cover - env-dependent
@@ -314,22 +371,13 @@ def streaming_user_running_totals_tws(
             self._totals = handle.getValueState("totals", _STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            total_events, total_value = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
+            totals, row = _running_totals(
+                key[0],
+                self._totals.get() if self._totals.exists() else (0, 0.0),
+                rows,
             )
-            for pdf in rows:
-                total_events += len(pdf)
-                total_value += float(pdf["value"].fillna(0.0).sum())
-            self._totals.update((total_events, total_value))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "total_events": [total_events],
-                    "total_value": [total_value],
-                }
-            )
+            self._totals.update(totals)
+            yield row
 
         def close(self) -> None:
             pass
@@ -369,11 +417,7 @@ ORDER BY segment
 """
 
 
-@query("stream_static_enrich", _STATIC_ENRICH_ORACLE)
-def static_enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-static enrichment join: purchases joined
-    to the customer dimension, revenue per segment."""
-    ev = load_table(spark, sf_dir, "events")
+def _enrich(spark: SparkSession, sf_dir: str, ev: DataFrame) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -382,8 +426,15 @@ def static_enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(F.count("*").alias("n_events"), dsum("value", "seg_value"))
-        .orderBy("segment")
     )
+
+
+@query("stream_static_enrich", _STATIC_ENRICH_ORACLE)
+def static_enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of the stream-static enrichment join: purchases joined
+    to the customer dimension, revenue per segment."""
+    ev = load_table(spark, sf_dir, "events")
+    return _enrich(spark, sf_dir, ev).orderBy("segment")
 
 
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,16 +442,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     static dimension — Spark re-plans the join per batch, so the dim may
     even change between batches (slowly-changing enrich).  The static
     side is broadcast: no state store, no shuffle of the stream."""
-    ev = stream_events(spark, sf_dir)
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    return (
-        ev.where(F.col("event_type") == "purchase")
-        .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").alias("n_events"), dsum("value", "seg_value"))
-    )
+    return _enrich(spark, sf_dir, stream_events(spark, sf_dir))
 
 
 # -------------------------------------------------- stream-stream join
@@ -416,30 +458,42 @@ ORDER BY purchase_id, click_id
 """
 
 
+def _interval_join(ev: DataFrame, outer: bool, side=lambda df: df) -> DataFrame:
+    """Purchases and same-user clicks of the preceding hour
+    (``p.user_id = l.user_id AND l.ts <= p.ts < l.ts + 1 h``): one row
+    per (purchase, click) pair, or with ``outer`` every click LEFT OUTER
+    its purchases.  ``side`` applies to each filtered side before the
+    join — the streaming twins watermark each side there, so each side's
+    watermark follows its own event type."""
+    p = side(ev.where(F.col("event_type") == "purchase")).alias("p")
+    l = side(ev.where(F.col("event_type") == "click")).alias("l")
+    on = (
+        (F.col("p.user_id") == F.col("l.user_id"))
+        & (F.col("p.ts") >= F.col("l.ts"))
+        & (F.col("p.ts") < F.col("l.ts") + F.expr("INTERVAL 1 HOUR"))
+    )
+    secs = F.unix_timestamp("p.ts") - F.unix_timestamp("l.ts")
+    if outer:
+        return l.join(p, on, "left_outer").select(
+            F.col("l.event_id").alias("click_id"),
+            F.col("p.event_id").alias("purchase_id"),
+            F.col("l.user_id").alias("user_id"),
+            secs.alias("secs_to_purchase"),
+        )
+    return p.join(l, on).select(
+        F.col("p.event_id").alias("purchase_id"),
+        F.col("l.event_id").alias("click_id"),
+        F.col("p.user_id").alias("user_id"),
+        secs.alias("secs_after_click"),
+    )
+
+
 @query("stream_interval_join", _INTERVAL_JOIN_ORACLE)
 def interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the stream-stream interval join: purchases matched
     to same-user clicks in the preceding hour."""
     ev = load_table(spark, sf_dir, "events")
-    p = ev.where(F.col("event_type") == "purchase").alias("p")
-    l = ev.where(F.col("event_type") == "click").alias("l")
-    return (
-        p.join(
-            l,
-            (F.col("p.user_id") == F.col("l.user_id"))
-            & (F.col("p.ts") >= F.col("l.ts"))
-            & (F.col("p.ts") < F.col("l.ts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .select(
-            F.col("p.event_id").alias("purchase_id"),
-            F.col("l.event_id").alias("click_id"),
-            F.col("p.user_id").alias("user_id"),
-            (F.unix_timestamp("p.ts") - F.unix_timestamp("l.ts")).alias(
-                "secs_after_click"
-            ),
-        )
-        .orderBy("purchase_id", "click_id")
-    )
+    return _interval_join(ev, outer=False).orderBy("purchase_id", "click_id")
 
 
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,29 +502,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds only one hour (+watermark slack) of rows — the bounded-state
     requirement for joining two infinite streams (SURVEY.md §2.9)."""
     ev = stream_events(spark, sf_dir)
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .alias("p")
-    )
-    l = (
-        ev.where(F.col("event_type") == "click")
-        .withWatermark("ts", "2 hours")
-        .alias("l")
-    )
-    return p.join(
-        l,
-        (F.col("p.user_id") == F.col("l.user_id"))
-        & (F.col("p.ts") >= F.col("l.ts"))
-        & (F.col("p.ts") < F.col("l.ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select(
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("l.event_id").alias("click_id"),
-        F.col("p.user_id").alias("user_id"),
-        (F.unix_timestamp("p.ts") - F.unix_timestamp("l.ts")).alias(
-            "secs_after_click"
-        ),
-    )
+    return _interval_join(ev, outer=False, side=_watermarked)
 
 
 # ------------------------------------------------------- foreachBatch sink
@@ -492,8 +524,6 @@ def upsert_totals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (per-user event count + exact total) computed in one batch
     aggregation."""
     ev = load_table(spark, sf_dir, "events")
-    from kachess_spark.operators._util import dsum
-
     return (
         ev.groupBy("user_id")
         .agg(F.count("*").alias("n_events"), dsum("value", "total_value"))
@@ -535,12 +565,10 @@ def streaming_foreach_batch_upsert(
     Returns the final serving-table DataFrame (compare to
     ``stream_upsert_totals``).
     """
-    import os
     import re
     import shutil
 
     from kachess_spark.operators._util import money
-
     from kachess_spark.operators.sinks import _scratch
 
     if state_root is None:
@@ -611,18 +639,7 @@ def streaming_foreach_batch_upsert(
                 shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)
 
     ev = source if source is not None else stream_events(spark, sf_dir)
-    q = (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(state_root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        # availableNow drains a bounded backlog; still running after the
-        # window means something is wedged — reading the sink now would
-        # return a silently partial table
-        q.stop()
-        raise TimeoutError("streaming query did not drain within 120s")
+    _drain(ev, merge_batch, os.path.join(state_root, "_chk"))
     return (
         spark.read.parquet(current)
         .select(
@@ -726,20 +743,16 @@ ORDER BY window_epoch, rk
 """
 
 
-@query("stream_trending_topk", _TRENDING_ORACLE)
-def trending_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming trending detection: per 1-hour window,
-    the top-{_TRENDING_K} event types by count (deterministic tiebreak
-    on event_type).  One windowed aggregation, then a per-window rank —
-    the rank's partition is the window key, so its shuffle reuses the
-    aggregation's partitioning."""
-    from pyspark.sql import Window as W
-
-    ev = load_table(spark, sf_dir, "events")
-    counts = ev.groupBy(
+def _trending_counts(ev: DataFrame) -> DataFrame:
+    return ev.groupBy(
         F.window("ts", "1 hour").alias("w"), "event_type"
     ).agg(F.count("*").alias("cnt"))
-    w = W.partitionBy("w").orderBy(F.col("cnt").desc(), "event_type")
+
+
+def _top_trending(counts: DataFrame) -> DataFrame:
+    """The per-window rank: the top ``_TRENDING_K`` event types of each
+    window by count, ties to the lower event_type."""
+    w = Window.partitionBy("w").orderBy(F.col("cnt").desc(), "event_type")
     return (
         counts.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= _TRENDING_K)
@@ -749,8 +762,18 @@ def trending_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             "rk",
         )
-        .orderBy("window_epoch", "rk")
     )
+
+
+@query("stream_trending_topk", _TRENDING_ORACLE)
+def trending_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch twin of streaming trending detection: per 1-hour window,
+    the top-{_TRENDING_K} event types by count (deterministic tiebreak
+    on event_type).  One windowed aggregation, then a per-window rank —
+    the rank's partition is the window key, so its shuffle reuses the
+    aggregation's partitioning."""
+    ev = load_table(spark, sf_dir, "events")
+    return _top_trending(_trending_counts(ev)).orderBy("window_epoch", "rk")
 
 
 def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,10 +783,7 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over each emitted batch of finalized windows, the standard
     two-stage trending-detector shape.  Returns the final ranked table
     (compare to ``stream_trending_topk``)."""
-    import os
     import shutil
-
-    from pyspark.sql import Window as W
 
     from kachess_spark.operators.sinks import _scratch
 
@@ -772,41 +792,11 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(out_root, exist_ok=True)
     out_dir = os.path.join(out_root, "data")
 
-    ev = stream_events(spark, sf_dir)
-    counts = (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-    )
-
     def rank_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = W.partitionBy("w").orderBy(F.col("cnt").desc(), "event_type")
-        (
-            batch_df.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= _TRENDING_K)
-            .select(
-                F.unix_timestamp("w.start").alias("window_epoch"),
-                "event_type",
-                "cnt",
-                "rk",
-            )
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        _top_trending(batch_df).write.mode("append").parquet(out_dir)
 
-    q = (
-        counts.writeStream.foreachBatch(rank_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(out_root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        # availableNow drains a bounded backlog; still running after the
-        # window means something is wedged — reading the sink now would
-        # return a silently partial table
-        q.stop()
-        raise TimeoutError("streaming query did not drain within 120s")
+    counts = _trending_counts(_watermarked(stream_events(spark, sf_dir)))
+    _drain(counts, rank_batch, os.path.join(out_root, "_chk"), "complete")
     return spark.read.parquet(out_dir).orderBy("window_epoch", "rk")
 
 
@@ -885,26 +875,29 @@ def streaming_dedup_counts(
 # ------------------------------------------------ EWMA feature smoothing
 
 EWMA_ALPHA = 0.2
+_EWMA_SCHEMA = "user_id BIGINT, n_events BIGINT, ewma DOUBLE"
+
+
+def _ewma_update(user_id, n: int, y, pdf):
+    """Fold one user's events ``pdf`` into the EWMA state ``(n, y)``:
+    the sequential y = (1-α)·y + α·x over the (ts, event_id)-ordered
+    values, the first value seeding y — the exact recurrence the
+    oracle's list_reduce evaluates, same expression order so the float64
+    stream is bit-identical.  Returns the new state and its one output
+    row (``_EWMA_SCHEMA``).  The fold of both EWMA twins."""
+    import pandas as pd
+
+    for x in pdf.sort_values(["ts", "event_id"])["value"].astype("float64"):
+        y = x if n == 0 else 0.8 * y + 0.2 * x
+        n += 1
+    row = pd.DataFrame(
+        {"user_id": [user_id], "n_events": [n], "ewma": [round(y, 6)]}
+    )
+    return (n, y), row
 
 
 def _ewma_last(pdf):
-    """Sequential EWMA fold y = (1-α)·y + α·x over the (ts, event_id)-
-    ordered values — the exact recurrence the oracle's list_reduce
-    evaluates, same expression order so the float64 stream is
-    bit-identical."""
-    import pandas as pd
-
-    pdf = pdf.sort_values(["ts", "event_id"])
-    y = None
-    for x in pdf["value"].astype("float64"):
-        y = x if y is None else 0.8 * y + 0.2 * x
-    return pd.DataFrame(
-        {
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n_events": [len(pdf)],
-            "ewma": [round(y, 6)],
-        }
-    )
+    return _ewma_update(pdf["user_id"].iloc[0], 0, None, pdf)[1]
 
 
 _EWMA_ORACLE = """
@@ -935,21 +928,12 @@ def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical float64 — an exactness test of the kernel, not just a
     rows-only smoke.
     """
-    import pandas as pd  # noqa: F401 — kernel dependency
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("ewma", T.DoubleType()),
-        ]
-    )
     return (
         ev.groupBy("user_id")
-        .applyInPandas(_ewma_last, schema=out_schema)
+        .applyInPandas(_ewma_last, schema=_EWMA_SCHEMA)
         .orderBy("user_id")
     )
 
@@ -960,47 +944,18 @@ def streaming_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1-α)·y + α·x fold in (ts, event_id) order within each micro-batch
     — correct under in-order delivery (the standard EWMA streaming
     assumption; a late row would need an event-time reorder buffer).
-    A processing-time timeout evicts idle keys.  On the single-batch
-    availableNow replay of the static file this is bit-identical to
-    the batch twin, which the test asserts."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    Idle users are evicted as in ``_per_user_state``.  On the
+    single-batch availableNow replay of the static file this is
+    bit-identical to the batch twin, which the test asserts."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("ewma", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("y", T.DoubleType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
+    def fold(user_id, state: tuple, pdfs: list):
         import pandas as pd
 
-        n, y = state.get if state.exists else (0, None)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for x in rows["value"].astype("float64"):
-            y = x if n == 0 else 0.8 * y + 0.2 * x
-            n += 1
-        state.update((n, float(y) if y is not None else 0.0))
-        state.setTimeoutDuration(24 * 3600 * 1000)
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "ewma": [round(y, 6)]}
-        )
+        return _ewma_update(user_id, *state, pd.concat(pdfs, ignore_index=True))
 
     ev = stream_events(spark, sf_dir).select("user_id", "ts", "event_id", "value")
-    return ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _per_user_state(
+        ev, fold, (0, None), _EWMA_SCHEMA, "n BIGINT, y DOUBLE"
     )
 
 
@@ -1094,8 +1049,6 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("delay_us")
     )
     bm = ev.groupBy("batch_id").agg(F.max("ts_us").alias("batch_max"))
-    from pyspark.sql import Window
-
     w = Window.orderBy("batch_id").rowsBetween(
         Window.unboundedPreceding, -2
     )
@@ -1177,8 +1130,6 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass is a partition-local re-sort, no second exchange) — the same
     single-exchange shape as join_asof_nearest.
     """
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_id",
@@ -1257,26 +1208,7 @@ def outer_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion-attribution table, complement of stream_interval_join's
     inner flavor)."""
     ev = load_table(spark, sf_dir, "events")
-    l = ev.where(F.col("event_type") == "click").alias("l")
-    p = ev.where(F.col("event_type") == "purchase").alias("p")
-    return (
-        l.join(
-            p,
-            (F.col("p.user_id") == F.col("l.user_id"))
-            & (F.col("p.ts") >= F.col("l.ts"))
-            & (F.col("p.ts") < F.col("l.ts") + F.expr("INTERVAL 1 HOUR")),
-            "left_outer",
-        )
-        .select(
-            F.col("l.event_id").alias("click_id"),
-            F.col("p.event_id").alias("purchase_id"),
-            F.col("l.user_id").alias("user_id"),
-            (F.unix_timestamp("p.ts") - F.unix_timestamp("l.ts")).alias(
-                "secs_to_purchase"
-            ),
-        )
-        .orderBy("click_id", "purchase_id")
-    )
+    return _interval_join(ev, outer=True).orderBy("click_id", "purchase_id")
 
 
 def streaming_outer_join(
@@ -1298,53 +1230,20 @@ def streaming_outer_join(
     restart tests inject a file-at-a-time source over the same schema).
     """
     ev = source if source is not None else stream_events(spark, sf_dir)
-    l = (
-        ev.where(F.col("event_type") == "click")
-        .withWatermark("ts", "2 hours")
-        .alias("l")
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .alias("p")
-    )
-    return l.join(
-        p,
-        (F.col("p.user_id") == F.col("l.user_id"))
-        & (F.col("p.ts") >= F.col("l.ts"))
-        & (F.col("p.ts") < F.col("l.ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select(
-        F.col("l.event_id").alias("click_id"),
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("l.user_id").alias("user_id"),
-        (F.unix_timestamp("p.ts") - F.unix_timestamp("l.ts")).alias(
-            "secs_to_purchase"
-        ),
-    )
+    return _interval_join(ev, outer=True, side=_watermarked)
 
 
 # ------------------------------------- streaming ingestion dedup gate
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``documents`` as an unbounded source (same file-stream shape as
-    ``stream_events``; in production the format string points at the
-    ingestion bus and everything downstream is identical)."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    """``documents`` as an unbounded source (the ``stream_events`` file
+    stream)."""
+    return _file_stream(
+        spark,
+        sf_dir,
+        "documents",
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
     )
 
 
@@ -1722,7 +1621,6 @@ def streaming_ingest_dedup_gate(
     an existing sink + checkpoint + index instead of starting fresh (the
     restart path — exercised by the exactly-once pytests).
     """
-    import os
     import shutil
 
     from kachess_spark.operators.sinks import _scratch
@@ -1832,15 +1730,7 @@ def streaming_ingest_dedup_gate(
         if source is not None
         else stream_documents(spark, sf_dir)
     ).where(F.col("doc_id") % 2 == 1)
-    q = (
-        sdocs.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", os.path.join(out_root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise RuntimeError("ingest gate stream did not drain")
+    _drain(sdocs, gate, os.path.join(out_root, "_chk"))
     # batch=<id> partition dirs: recursive read, drop the partition col.
     # The gate skips empty micro-batches entirely, so a fully-duplicate
     # (or empty) stream leaves NO batch dirs — return an empty frame
@@ -1909,8 +1799,6 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation onto (event_type, hour) — ~types·24 output rows,
     metadata-sized at any corpus scale.
     """
-    from pyspark.sql import Window
-
     W = 2 * _SEAS_HALF + 1
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",

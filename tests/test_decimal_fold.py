@@ -21,7 +21,15 @@ inside the function that owns it, so a copy cannot creep back in:
 * the positional explode of an embedding, in ``similarity._exploded``
   (``operators/lateral.py`` demonstrates LATERAL VIEW on purpose), and
   ``_exploded`` itself is called only from ``similarity._lloyd``: every
-  exact score is a fold, only the per-position k-means means explode.
+  exact score is a fold, only the per-position k-means means explode;
+* the streaming twins' plumbing, in ``streaming/windows.py``: the one
+  file-stream reader (``_file_stream``), the one availableNow drain
+  (``_drain``) and the one interval-join condition (``_interval_join``),
+  plus the events ``ts`` rule shared with the batch table
+  (``catalog._events_ts``).
+
+The PQ trainer runs one ``_lloyd`` over all subspaces, so no per-subspace
+split (``_pq_subspaces``) may come back.
 
 The texts the owners build are pinned too (a changed text would change
 every plan or oracle built on it)."""
@@ -47,6 +55,11 @@ _ROUNDED_COS = re.compile(r"/ F\.sqrt\(")
 _EMB_EXPLODE = re.compile(r'posexplode\("embedding"\)')
 _EXPLODED_CALL = re.compile(r"(?<!def )\b_exploded\(")
 _SCORING = ("pipeline/similarity.py", "pipeline/dedup.py")
+_READ_STREAM = re.compile(r"\breadStream\b")
+_NANOS_AS_LONG = re.compile(r"nanosAsLong")
+_AWAIT = re.compile(r"awaitTermination\(")
+_HOUR_BOUND = re.compile(r'F\.expr\("INTERVAL 1 HOUR"\)')
+_PQ_SUBSPACES = re.compile(r"\b_pq_subspaces\b")
 
 
 def _assert_defined_once(
@@ -102,6 +115,24 @@ def test_probe_scoring_defined_once():
     sim = "pipeline/similarity.py"
     _assert_defined_once(_ROUNDED_COS, sim, "_cos", _SCORING)
     _assert_defined_once(_EMB_EXPLODE, sim, "_exploded", _SCORING)
+
+
+def test_streaming_plumbing_defined_once():
+    win = "streaming/windows.py"
+    _assert_defined_once(_READ_STREAM, win, "_file_stream")
+    _assert_defined_once(_AWAIT, win, "_drain")
+    _assert_defined_once(_HOUR_BOUND, win, "_interval_join")
+    _assert_defined_once(_NANOS_AS_LONG, "catalog.py", "_events_ts")
+
+
+def test_pq_trains_without_subspace_split():
+    hits = []
+    for root, _, files in os.walk(_PKG):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as f:
+                    hits += [name for line in f if _PQ_SUBSPACES.search(line)]
+    assert hits == []
 
 
 def test_decimal_fold_text():

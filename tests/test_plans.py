@@ -681,15 +681,17 @@ def test_pq_index_insert_equivalence(spark, sf_dir, tmp_path):
     books = spark.read.parquet(os.path.join(idx, "books"))
     scratch = set()
     for m in range(PQ_M):
+        # subspace m alone, in the long layout _assign_l2 matches on:
+        # vector id vec_id * PQ_M + m, codeword id code * PQ_M + m
         sub = emb.select(
-            "vec_id",
+            (F.col("vec_id") * PQ_M + m).alias("vec_id"),
             F.slice("embedding", m * PQ_DIMS + 1, PQ_DIMS).alias("embedding"),
         )
         cent = books.where(F.col("m") == m).select(
-            F.col("code").alias("vec_id"), "embedding"
+            (F.col("code") * PQ_M + m).alias("vec_id"), "embedding"
         )
         scratch |= {
-            (r["vid"], m, r["code"])
+            ((r["vid"] - m) // PQ_M, m, (r["code"] - m) // PQ_M)
             for r in _assign_l2(sub, cent).collect()
         }
     assert stored == scratch

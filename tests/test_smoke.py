@@ -32,6 +32,8 @@ from kachess_spark.session import tune_for_session
 spark = tune_for_session(SparkSession.builder.master("local[2]").getOrCreate())
 emb = Tables(spark, {sf_dir!r}).embeddings
 print("ROWS", _emb_with_norms(emb).count(), emb.count())
+keys = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+print("MODIFIABLE", *(spark.conf.isModifiable(k) for k in keys))
 """
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
@@ -46,6 +48,9 @@ print("ROWS", _emb_with_norms(emb).count(), emb.count())
     (line,) = [x for x in out.stdout.splitlines() if x.startswith("ROWS")]
     _, got, want = line.split()
     assert got == want != "0"
+    # the package sets both confs on the driver's session and lets a
+    # failed set raise: on a vanilla session both are runtime confs
+    assert "MODIFIABLE True True" in out.stdout.splitlines()
 
 
 def test_every_query_has_callable(spark):

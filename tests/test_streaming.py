@@ -18,7 +18,8 @@ def _run_stream(spark, sdf, mode: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # a wedged stream fails as one, not as a mismatch against a partial table
+    assert q.awaitTermination(120), "stream did not drain"
     return spark.table(name)
 
 
@@ -201,7 +202,7 @@ def test_streaming_file_sink_exactly_once(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not drain"
     import os
 
     assert os.path.isdir(os.path.join(out, "_spark_metadata"))

@@ -1,9 +1,11 @@
 """Time a subset of registered queries with bench.py's methodology
 (warm the shape at the small SF, time ``fn(spark, sf_dir).count()``,
 clear caches between runs) — the cheap A/B harness for optimization
-rounds.  Repeats each query ``--n`` times and reports every wall plus
-min/median, with the per-run stage-byte/task deltas that adjudicate
-wall swings (same bytes + same tasks + slower wall = host noise).
+rounds.  Each name also runs once, untimed, at the measured SF before
+its timed runs, so the first timed run carries no cold start.  Repeats
+each query ``--n`` times and reports every wall plus min/median, with
+the per-run stage-byte/task deltas that adjudicate wall swings (same
+bytes + same tasks + slower wall = host noise).
 
 Usage: python tools/bench_some.py [--n 3] [--sf DIR] [--cpus N]
                                   [--prep] name [name...]
@@ -57,6 +59,10 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in names:
         fn = registry.QUERIES[name]
+        # a session's first run at a new SF is 1-3 s slower than the next
+        # (sf0.1, 4 cores) even after the small-SF warm-up
+        fn(spark, sf_dir).count()
+        spark.catalog.clearCache()
         walls, profs = [], []
         for _ in range(n_runs):
             try:
