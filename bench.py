@@ -205,11 +205,11 @@ def _loadavg() -> list[float]:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     profile = "--no-profile" not in sys.argv
     load_start = _loadavg()
 
     from kachess_spark import registry
+    from kachess_spark.catalog import DEFAULT_SF_DIR as sf_dir
     from kachess_spark.session import get_spark
 
     registry.load_all()

@@ -251,7 +251,6 @@ def _match_paren(stmt: str, open_idx: int) -> int:
 
 
 _CAST_OPEN = re.compile(r"(?i)\b(?:TRY_)?CAST\s*\(")
-_TOP_AS = re.compile(r"(?i)\bAS\b")
 
 
 def _rewrite_cast_types(stmt: str) -> tuple[str, bool]:

@@ -74,7 +74,9 @@ def _edges_values_sql(edges: list[tuple[int, int]]) -> str:
     return f"(VALUES {rows}) AS e(src, dst)"
 
 
-def _recursive_closure_sql(edges: list[tuple[int, int]], pcol: str, ccol: str) -> str:
+def _recursive_walk_sql(edges: list[tuple[int, int]]) -> str:
+    """The WITH RECURSIVE ``walk(src, dst, distance)`` over ``edges``
+    (cycles cut at the start node, 20 hops), for a SELECT to follow."""
     return f"""
 WITH RECURSIVE edges(src, dst) AS (
   SELECT DISTINCT src, dst FROM {_edges_values_sql(edges)}
@@ -86,6 +88,11 @@ walk(src, dst, distance) AS (
   FROM walk w JOIN edges e ON w.dst = e.src
   WHERE w.distance < 20 AND w.src <> e.dst
 )
+"""
+
+
+def _recursive_closure_sql(edges: list[tuple[int, int]], pcol: str, ccol: str) -> str:
+    return _recursive_walk_sql(edges) + f"""\
 SELECT src AS {pcol}, dst AS {ccol}, MIN(distance) AS distance
 FROM walk GROUP BY 1, 2 ORDER BY 1, 2
 """
@@ -467,17 +474,7 @@ def lineage_dataframe_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IMPACT_ROOT = min(p for p, _ in _ITEM_PAIRS)
 
-_IMPACT_ORACLE = f"""
-WITH RECURSIVE edges(src, dst) AS (
-  SELECT DISTINCT src, dst FROM {_edges_values_sql(_ITEM_PAIRS)}
-),
-walk(src, dst, distance) AS (
-  SELECT src, dst, 1 FROM edges
-  UNION
-  SELECT w.src, e.dst, w.distance + 1
-  FROM walk w JOIN edges e ON w.dst = e.src
-  WHERE w.distance < 20 AND w.src <> e.dst
-)
+_IMPACT_ORACLE = _recursive_walk_sql(_ITEM_PAIRS) + f"""\
 SELECT dst AS impacted_item_id, CAST(MIN(distance) AS BIGINT) AS distance
 FROM walk WHERE src = {_IMPACT_ROOT}
 GROUP BY dst ORDER BY impacted_item_id

@@ -78,11 +78,3 @@ def oracle_money(expr: str) -> str:
 def oracle_dsum(expr: str, alias: str) -> str:
     """DuckDB twin of :func:`dsum`."""
     return f"CAST(SUM({oracle_money(expr)}) AS DOUBLE) / 10000 AS {alias}"
-
-
-def oracle_davg(expr: str, alias: str) -> str:
-    """DuckDB twin of :func:`davg`."""
-    return (
-        f"ROUND(CAST(SUM({oracle_money(expr)}) AS DOUBLE) / 10000"
-        f" / COUNT({expr}), 6) AS {alias}"
-    )

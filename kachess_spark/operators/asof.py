@@ -48,14 +48,10 @@ _ASOF_ORACLE = """
 """
 
 
-@query("join_asof_events", _ASOF_ORACLE)
-def join_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For every purchase, the user's most recent login at-or-before it.
-
-    Union+window as-of join; ties (same ts) resolve to the right side
-    being visible, matching ASOF's `>=` semantics (tag orders right rows
-    first within equal timestamps)."""
-    ev = load_table(spark, sf_dir, "events")
+def _asof_carried(ev: DataFrame) -> DataFrame:
+    """The purchase rows of ``ev``, each carrying the user's latest login
+    at-or-before it (``asof_login_id``, ``asof_login_ts``): the one
+    union+window as-of step of both as-of joins."""
     left = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts",
         F.lit(1).alias("tag"),
@@ -75,7 +71,7 @@ def join_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "tag", "login_event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    carried = (
+    return (
         left.unionByName(right)
         .withColumn(
             "asof_login_id", F.last("login_event_id", ignorenulls=True).over(w)
@@ -83,10 +79,20 @@ def join_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "asof_login_ts", F.last("login_ts", ignorenulls=True).over(w)
         )
+        .where(F.col("tag") == 1)
     )
+
+
+@query("join_asof_events", _ASOF_ORACLE)
+def join_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For every purchase, the user's most recent login at-or-before it.
+
+    Union+window as-of join; ties (same ts) resolve to the right side
+    being visible, matching ASOF's `>=` semantics (tag orders right rows
+    first within equal timestamps)."""
+    carried = _asof_carried(load_table(spark, sf_dir, "events"))
     return (
-        carried.where(F.col("tag") == 1)
-        .select(
+        carried.select(
             "event_id",
             "user_id",
             F.unix_timestamp("ts").alias("purchase_epoch"),
@@ -412,39 +418,11 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried state stays one row.  The oracle is DuckDB's native ASOF
     plus the same staleness CASE.
     """
-    ev = load_table(spark, sf_dir, "events")
-    left = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts",
-        F.lit(1).alias("tag"),
-        F.lit(None).cast("bigint").alias("login_event_id"),
-        F.lit(None).cast("timestamp").alias("login_ts"),
-    )
-    right = ev.where(F.col("event_type") == "login").select(
-        F.lit(None).cast("bigint").alias("event_id"),
-        "user_id", "ts",
-        F.lit(0).alias("tag"),
-        F.col("event_id").alias("login_event_id"),
-        F.col("ts").alias("login_ts"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "tag", "login_event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = (
-        left.unionByName(right)
-        .withColumn(
-            "asof_login_id", F.last("login_event_id", ignorenulls=True).over(w)
-        )
-        .withColumn(
-            "asof_login_ts", F.last("login_ts", ignorenulls=True).over(w)
-        )
-    )
+    carried = _asof_carried(load_table(spark, sf_dir, "events"))
     gap = F.unix_timestamp("ts") - F.unix_timestamp("asof_login_ts")
     fresh = gap <= ASOF_TOLERANCE_S
     return (
-        carried.where(F.col("tag") == 1)
-        .select(
+        carried.select(
             "event_id",
             "user_id",
             F.when(fresh, F.col("asof_login_id")).alias("login_event_id"),

@@ -138,9 +138,7 @@ def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.intersectAll(big)
 
 
-@query(
-    "cte_reused",
-    oracle="""
+_CTE_REUSED_SQL = """
     WITH nat AS (
       SELECT n_nationkey, n_name, r_name
       FROM nation JOIN region ON n_regionkey = r_regionkey
@@ -151,27 +149,16 @@ def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT a.r_name, a.n_name, COALESCE(b.n_cust, 0) AS n_cust
     FROM nat a LEFT JOIN cust_per_nat b ON a.n_nationkey = b.c_nationkey
-    """,
-)
+    """
+
+
+@query("cte_reused", oracle=_CTE_REUSED_SQL)
 def cte_reused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CTE WITH-clause (Bingql.g4:916-926; visitor :543-557), two CTEs,
     one referenced downstream — run through Spark SQL so Catalyst's CTE
     resolution is exercised."""
     register_views(spark, sf_dir, ("nation", "region", "customer"))
-    return spark.sql(
-        """
-        WITH nat AS (
-          SELECT n_nationkey, n_name, r_name
-          FROM nation JOIN region ON n_regionkey = r_regionkey
-        ),
-        cust_per_nat AS (
-          SELECT c_nationkey, COUNT(*) AS n_cust
-          FROM customer GROUP BY c_nationkey
-        )
-        SELECT a.r_name, a.n_name, COALESCE(b.n_cust, 0) AS n_cust
-        FROM nat a LEFT JOIN cust_per_nat b ON a.n_nationkey = b.c_nationkey
-        """
-    )
+    return spark.sql(_CTE_REUSED_SQL)
 
 
 @query(

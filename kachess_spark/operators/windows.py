@@ -536,7 +536,7 @@ def win_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 FUNNEL_WINDOW = "INTERVAL 1 DAY"  # each hop must land within 1 day
 
-_TB_FUNNEL_ORACLE = """
+_TB_FUNNEL_ORACLE = f"""
     WITH nxt AS (
       SELECT user_id, event_type, ts,
              min(CASE WHEN event_type = 'click' THEN ts END) OVER w
@@ -558,12 +558,12 @@ _TB_FUNNEL_ORACLE = """
     )
     SELECT count(*) AS n_signups,
            count(*) FILTER (t_click IS NOT NULL
-                            AND t_click <= t_signup + INTERVAL 1 DAY)
+                            AND t_click <= t_signup + {FUNNEL_WINDOW})
              AS n_clicked_in_window,
            count(*) FILTER (t_click IS NOT NULL
-                            AND t_click <= t_signup + INTERVAL 1 DAY
+                            AND t_click <= t_signup + {FUNNEL_WINDOW}
                             AND t_purchase IS NOT NULL
-                            AND t_purchase <= t_click + INTERVAL 1 DAY)
+                            AND t_purchase <= t_click + {FUNNEL_WINDOW})
              AS n_converted_in_window
     FROM signups
 """
@@ -615,13 +615,14 @@ def win_funnel_time_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") == F.col("cu")) & (F.col("t_click") == F.col("ct")),
         "left",
     )
+    hop = F.expr(FUNNEL_WINDOW)
     clicked = F.col("t_click").isNotNull() & (
-        F.col("t_click") <= F.col("t_signup") + F.expr("INTERVAL 1 DAY")
+        F.col("t_click") <= F.col("t_signup") + hop
     )
     converted = (
         clicked
         & F.col("t_purchase").isNotNull()
-        & (F.col("t_purchase") <= F.col("t_click") + F.expr("INTERVAL 1 DAY"))
+        & (F.col("t_purchase") <= F.col("t_click") + hop)
     )
     return joined.agg(
         F.count("*").alias("n_signups"),
@@ -1042,6 +1043,21 @@ ORDER BY v.event_id
 """
 
 
+def _scaled_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The first 2000 events as (event_id, event_type, vi): ``value``
+    as an exact 1e-4 fixed-point BIGINT, the input of both
+    aggregate-then-broadcast feature encoders."""
+    return (
+        Tables(spark, sf_dir)
+        .events.where(F.col("event_id") < 2000)
+        .select(
+            "event_id",
+            "event_type",
+            F.expr("CAST(floor(value * 10000 + 0.5) AS BIGINT)").alias("vi"),
+        )
+    )
+
+
 @query("win_zscore_features", _ZSCORE_ORACLE)
 def win_zscore_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group z-score standardization (x−μ)/σ — the feature-scaling
@@ -1057,15 +1073,7 @@ def win_zscore_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-then-broadcast-join shape is the 100 TB way to
     standardize features.
     """
-    v = (
-        Tables(spark, sf_dir)
-        .events.where(F.col("event_id") < 2000)
-        .select(
-            "event_id",
-            "event_type",
-            F.expr("CAST(floor(value * 10000 + 0.5) AS BIGINT)").alias("vi"),
-        )
-    )
+    v = _scaled_events(spark, sf_dir)
     stats = v.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("vi").cast("long").alias("sx"),
@@ -1357,15 +1365,7 @@ def win_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     side NEVER shuffles; the naive window formulation would shuffle
     every row on the category key and hot-spot on skewed categories.
     """
-    v = (
-        Tables(spark, sf_dir)
-        .events.where(F.col("event_id") < 2000)
-        .select(
-            "event_id",
-            "event_type",
-            F.expr("CAST(floor(value * 10000 + 0.5) AS BIGINT)").alias("vi"),
-        )
-    )
+    v = _scaled_events(spark, sf_dir)
     grp = v.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("vi").cast("bigint").alias("sv"),

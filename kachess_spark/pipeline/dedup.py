@@ -18,7 +18,7 @@ oracle twin is plain SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kachess_spark.catalog import Tables, scaled_partitions
@@ -72,6 +72,51 @@ def _with_shingles(docs: DataFrame) -> DataFrame:
         .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
         .localCheckpoint(eager=False)
     )
+
+
+def _shingle_postings(
+    docs: DataFrame, **block: Column
+) -> tuple[DataFrame, DataFrame]:
+    """``(sh, expl)``: per ≥3-word doc its (doc_id, lang, *block,
+    shingles) array row, and the exploded postings (doc_id, lang,
+    *block, n_sh, shingle); ``block`` columns are computed from
+    ``words``.  The same two physical rules as :func:`_with_shingles`:
+    spread before the CPU-bound shingle compute, and a lazy checkpoint
+    before the explode (else the Generate's pushed-down predicates
+    re-run the interpreted lambda chain per row on the pre-shuffle
+    single task); the postings are checkpointed too, since the
+    self-join reads them twice."""
+    sh = (
+        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .select("doc_id", "lang", F.expr(_WORDS_EXPR).alias("words"))
+        .where(F.size("words") >= 3)
+        .select(
+            "doc_id",
+            "lang",
+            *(c.alias(name) for name, c in block.items()),
+            F.expr(_SHINGLES_EXPR).alias("shingles"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    expl = sh.select(
+        "doc_id",
+        "lang",
+        *block,
+        F.size("shingles").alias("n_sh"),
+        F.explode("shingles").alias("shingle"),
+    ).localCheckpoint(eager=False)
+    return sh, expl
+
+
+def _shingle_matches(expl: DataFrame, pair: Column, *block: str) -> DataFrame:
+    """Self-join of shingle postings as ``a`` × ``b``: equal lang, equal
+    ``block`` keys and equal shingle, pairs kept by ``pair``.  One row
+    per shared shingle, so a pair's row count is its intersection."""
+    a, b = expl.alias("a"), expl.alias("b")
+    on = F.col("a.lang") == F.col("b.lang")
+    for key in (*block, "shingle"):
+        on = on & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+    return a.join(b, on & pair)
 
 
 _SHINGLES_SQL = f"""
@@ -295,39 +340,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen rather than a per-pair array lambda.  Same
     result set; ~50× wall-clock at sf0.1.
     """
-    t = Tables(spark, sf_dir)
-    # same two physical rules as _with_shingles: spread before the
-    # CPU-bound shingle compute, barrier before the explode (else the
-    # Generate's pushed-down predicates re-run the interpreted lambda
-    # chain per row on the pre-shuffle single task)
-    sh = (
-        t.documents.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        .select("doc_id", "lang", F.expr(_WORDS_EXPR).alias("words"))
-        .where(F.size("words") >= 3)
-        .select(
-            "doc_id",
-            "lang",
-            (F.size("words") / 50).cast("int").alias("len_bucket"),
-            F.expr(_SHINGLES_EXPR).alias("shingles"),
-        )
-        .localCheckpoint(eager=False)
+    _, expl = _shingle_postings(
+        Tables(spark, sf_dir).documents,
+        len_bucket=(F.size("words") / 50).cast("int"),
     )
-    expl = sh.select(
-        "doc_id", "lang", "len_bucket",
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    ).localCheckpoint(eager=False)
-    a, b = expl.alias("a"), expl.alias("b")
     common = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.len_bucket") == F.col("b.len_bucket"))
-            & (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _shingle_matches(expl, F.col("a.doc_id") < F.col("b.doc_id"), "len_bucket")
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -447,6 +465,19 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
+    return (
+        _hamming_pairs(bands, "simhash", SIMHASH_MAX_HAMMING)
+        .distinct()
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+def _hamming_pairs(bands: DataFrame, sig: str, max_hamming: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) of the banded signature rows
+    (doc_id, ``sig``, k, band_val) that agree on some band, doc_a <
+    doc_b, with at most ``max_hamming`` differing bits: the pigeonhole
+    band self-join verified by bit_count of the XOR.  A pair agreeing on
+    several bands repeats once per band."""
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -459,12 +490,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                F.col(f"a.{sig}").bitwiseXOR(F.col(f"b.{sig}"))
             ).alias("hamming"),
         )
-        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
+        .where(F.col("hamming") <= max_hamming)
     )
 
 
@@ -498,24 +527,13 @@ def emb_sign_bits(n_vectors: int, dim: int = 64) -> int:
     return max(_SIGN_BITS, min(dim - 1, need))
 
 
-def _emb_bucket_sql(bits: int) -> str:
-    return " + ".join(
-        f"(CASE WHEN embedding[{j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(bits)
-    )
-
-
-# Spark's arr[i] is 0-based while DuckDB lists are 1-based; element_at is
-# 1-based in both engines, so the Spark twin uses it instead
+# element_at is 1-based like the oracle's DuckDB embedding[j] (Spark's
+# arr[i] is 0-based), so bit j reads the same component in both engines
 def _emb_bucket_spark(bits: int) -> str:
     return " + ".join(
         f"(CASE WHEN element_at(embedding, {j + 1}) > 0 THEN {1 << j} ELSE 0 END)"
         for j in range(bits)
     )
-
-
-_EMB_BUCKET_SQL = _emb_bucket_sql(_SIGN_BITS)
-_EMB_BUCKET_SPARK = _emb_bucket_spark(_SIGN_BITS)
 
 # The oracle derives its bucket width from COUNT(*) with the SAME rule as
 # emb_sign_bits (GREATEST(8, ceil-log2 shift search) capped at 63), so the
@@ -1088,27 +1106,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at all; the "fix" traded that for a full postings exchange, a
     # cache write, and a sort-merge join.  The lazy-checkpoint shape
     # stays.
-    sh = (
-        t.documents.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", "lang", F.expr(_WORDS_EXPR).alias("words"))
-        .where(F.size("words") >= 3)
-        .select("doc_id", "lang", F.expr(_SHINGLES_EXPR).alias("shingles"))
-        .localCheckpoint(eager=False)
-    )
-    expl = sh.select(
-        "doc_id",
-        "lang",
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    ).localCheckpoint(eager=False)
-    a, b = expl.alias("a"), expl.alias("b")
+    _, expl = _shingle_postings(t.documents)
     common = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
+        _shingle_matches(expl, F.col("a.doc_id") != F.col("b.doc_id"))
         .groupBy(
             F.col("a.doc_id").alias("contained"),
             F.col("b.doc_id").alias("container"),
@@ -1857,19 +1857,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the square of per-shingle frequency.
     """
     t = Tables(spark, sf_dir)
-    sh = (
-        t.documents.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", "lang", F.expr(_WORDS_EXPR).alias("words"))
-        .where(F.size("words") >= 3)
-        .select("doc_id", "lang", F.expr(_SHINGLES_EXPR).alias("shingles"))
-        .localCheckpoint(eager=False)
-    )
-    expl = sh.select(
-        "doc_id",
-        "lang",
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    ).localCheckpoint(eager=False)
+    sh, expl = _shingle_postings(t.documents)
     dfreq = expl.groupBy("shingle").agg(F.count("*").alias("freq"))
     w = Window.partitionBy("doc_id").orderBy("freq", "shingle")
     prefix_len = F.floor(F.col("n_sh") / 2) + 1  # |Sa|-ceil(τ|Sa|)+1, τ=.5
@@ -1989,13 +1977,19 @@ def _diagonal_matches(
     ), posts
 
 
-_SUBRUN_ORACLE = f"""
+def _sql_shingle_matches(pos: str) -> str:
+    """The DuckDB twin of :func:`_diagonal_matches` as the CTEs ``w``
+    (canonical words), ``p`` (positional 3-gram shingles, position
+    ``pos`` of the 1-based unnest index ``t.i``), ``keep`` (the
+    df-capped shingles) and ``m`` (cross-doc matches, da < db), each
+    followed by a comma for the caller's next CTE."""
+    return f"""
     WITH w AS (
       SELECT doc_id, string_split({_CANON_SQL}, ' ') AS words
       FROM documents
     ),
     p AS (
-      SELECT doc_id, t.i AS pos,
+      SELECT doc_id, {pos} AS pos,
              words[t.i] || ' ' || words[t.i+1] || ' ' || words[t.i+2] AS sh
       FROM w, LATERAL (SELECT unnest(range(1, len(words) - 1)) AS i) t
       WHERE len(words) >= 3
@@ -2010,6 +2004,10 @@ _SUBRUN_ORACLE = f"""
       FROM p a JOIN p b USING (sh) JOIN keep USING (sh)
       WHERE a.doc_id < b.doc_id
     ),
+"""
+
+
+_SUBRUN_ORACLE = _sql_shingle_matches("t.i") + f"""\
     r AS (
       SELECT da, db, pa,
              pa - ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb
@@ -2079,27 +2077,9 @@ def dedup_substring_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_a", "doc_b")
 
 
-_SUBSPAN_ORACLE = f"""
-    WITH w AS (
-      SELECT doc_id, string_split({_CANON_SQL}, ' ') AS words
-      FROM documents
-    ),
-    p AS (
-      SELECT doc_id, t.i - 1 AS pos,
-             words[t.i] || ' ' || words[t.i+1] || ' ' || words[t.i+2] AS sh
-      FROM w, LATERAL (SELECT unnest(range(1, len(words) - 1)) AS i) t
-      WHERE len(words) >= 3
-    ),
-    keep AS (
-      SELECT sh FROM (
-        SELECT sh, count(DISTINCT doc_id) AS c FROM p GROUP BY sh
-      ) WHERE c BETWEEN 2 AND {SUBRUN_DF_CAP}
-    ),
-    m AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-      FROM p a JOIN p b USING (sh) JOIN keep USING (sh)
-      WHERE a.doc_id < b.doc_id
-    ),
+# positions are 0-based here: the spans are word offsets into the
+# cleaned corpus
+_SQL_SPAN_RUNS = _sql_shingle_matches("t.i - 1") + f"""\
     r AS (
       SELECT da, db, pb, pa - pb AS delta,
              pb - ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb
@@ -2111,6 +2091,8 @@ _SUBSPAN_ORACLE = f"""
       FROM r GROUP BY da, db, delta, grp
       HAVING count(*) >= {SUBRUN_MIN}
     ),
+"""
+_SUBSPAN_ORACLE = _SQL_SPAN_RUNS + f"""\
     ivl AS (SELECT DISTINCT doc_id, s, e FROM runs),
     flag AS (
       SELECT doc_id, s, e,
@@ -2214,38 +2196,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id", "span_start")
 
 
-_CUT_SPANS_ORACLE = f"""
-    WITH w AS (
-      SELECT doc_id, string_split({_CANON_SQL}, ' ') AS words
-      FROM documents
-    ),
-    p AS (
-      SELECT doc_id, t.i - 1 AS pos,
-             words[t.i] || ' ' || words[t.i+1] || ' ' || words[t.i+2] AS sh
-      FROM w, LATERAL (SELECT unnest(range(1, len(words) - 1)) AS i) t
-      WHERE len(words) >= 3
-    ),
-    keep AS (
-      SELECT sh FROM (
-        SELECT sh, count(DISTINCT doc_id) AS c FROM p GROUP BY sh
-      ) WHERE c BETWEEN 2 AND {SUBRUN_DF_CAP}
-    ),
-    m AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-      FROM p a JOIN p b USING (sh) JOIN keep USING (sh)
-      WHERE a.doc_id < b.doc_id
-    ),
-    r AS (
-      SELECT da, db, pb, pa - pb AS delta,
-             pb - ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb
-                                     ORDER BY pb) AS grp
-      FROM m
-    ),
-    runs AS (
-      SELECT db AS doc_id, MIN(pb) AS s, MIN(pb) + count(*) + 1 AS e
-      FROM r GROUP BY da, db, delta, grp
-      HAVING count(*) >= {SUBRUN_MIN}
-    ),
+_CUT_SPANS_ORACLE = _SQL_SPAN_RUNS + f"""\
     doc_spans AS (
       SELECT doc_id, list(list_value(s, e)) AS sp
       FROM (SELECT DISTINCT doc_id, s, e FROM runs) GROUP BY doc_id

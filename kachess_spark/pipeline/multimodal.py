@@ -13,7 +13,7 @@ pipeline is runnable and oracle-checkable end-to-end.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from kachess_spark.catalog import Tables
+from kachess_spark.pipeline.dedup import _hamming_pairs
 from kachess_spark.registry import query
 
 
@@ -163,6 +164,13 @@ def tiny_png(width: int, height: int) -> bytes:
     """A minimal valid RGB PNG built with stdlib only (zlib + struct) —
     lets tests and fixtures exercise the real-dimensions path in
     containers without PIL."""
+    raw = b"".join(b"\x00" + b"\x00\x00\x00" * width for _ in range(height))
+    return _rgb_png(width, height, raw)
+
+
+def _rgb_png(width: int, height: int, raw: bytes) -> bytes:
+    """An 8-bit RGB PNG of ``raw`` (filter-byte-prefixed scanlines),
+    built with stdlib zlib + struct."""
     import struct
     import zlib
 
@@ -175,7 +183,6 @@ def tiny_png(width: int, height: int) -> bytes:
         )
 
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + b"\x00\x00\x00" * width for _ in range(height))
     return (
         b"\x89PNG\r\n\x1a\n"
         + chunk(b"IHDR", ihdr)
@@ -529,7 +536,7 @@ def _pcm_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 # sample decode to the same little-endian int16 the numpy kernel reads.
 # peak/sq are exact integer aggregates; rms's ROUND(sqrt,4) is the
 # irrational-input round the cosine oracles already rely on.
-_PCM_ORACLE = """
+_PCM_NIBBLE_CTES = """
     WITH a AS (
       SELECT doc_id, hex(encode(text)) AS h,
              octet_length(encode(text)) // 2 AS n
@@ -543,6 +550,8 @@ _PCM_ORACLE = """
              strpos('0123456789ABCDEF', substr(h, 4*i + 2, 1)) - 1 AS l0
       FROM a, LATERAL (SELECT unnest(range(0, n)) AS i) t
     ),
+"""
+_PCM_ORACLE = _PCM_NIBBLE_CTES + """\
     v AS (
       SELECT doc_id, n,
              CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS x
@@ -754,29 +763,12 @@ def _group_pattern(group: int) -> int:
 def png_from_gray(gray) -> bytes:
     """Encode a 2-D uint8 array as a real RGB PNG (stdlib zlib/struct,
     filter-0 rows, R=G=B) — the patterned sibling of tiny_png."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
     h, w = gray.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     raw = b"".join(
         b"\x00" + bytes(v for px in row for v in (px, px, px))
         for row in gray.tolist()
     )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
+    return _rgb_png(w, h, raw)
 
 
 def decode_gray(payload: bytes | None):
@@ -867,6 +859,54 @@ def _ahash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+def _image_hash_bands(
+    spark: SparkSession,
+    sf_dir: str,
+    kernel: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
+    sig: str,
+) -> DataFrame:
+    """The image subset (every third doc, patterned per
+    :func:`ahash_groups` group) encoded to PNG, hashed by the
+    Arrow-batched ``kernel`` into the 64-bit column ``sig``, and cut
+    into 5 13-bit bands: rows (doc_id, ``sig``, k, band_val) for
+    :func:`dedup._hamming_pairs` — hamming ≤ 4 pairs agree on ≥1 band."""
+    t = Tables(spark, sf_dir)
+    imgs = (
+        t.documents.where(F.col("doc_id") % 3 == 0)
+        .select("doc_id")
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    )
+    g = ahash_groups(imgs.count())
+    imgs = imgs.withColumn("n_groups", F.lit(g).cast("long"))
+    encoded = imgs.mapInPandas(_ahash_encode_batches, schema=_PNG_ENCODE_SCHEMA)
+    hashed = encoded.mapInPandas(
+        kernel,
+        schema=StructType(
+            [
+                StructField("doc_id", LongType()),
+                StructField(sig, LongType()),
+            ]
+        ),
+    ).localCheckpoint(eager=False)
+    return hashed.select(
+        "doc_id",
+        sig,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(k).alias("k"),
+                        F.expr(
+                            f"shiftrightunsigned({sig}, {13 * k}) & 8191"
+                        ).alias("band_val"),
+                    )
+                    for k in range(5)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", sig, "band.k", "band.band_val")
+
+
 _AHASH_ORACLE = f"""
     WITH nn AS (
       SELECT GREATEST({AHASH_MIN_GROUPS},
@@ -904,57 +944,12 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's COUNT(*) CTE) so expected group — and with it in-group
     pair work per image — stays constant as the corpus grows.
     """
-    t = Tables(spark, sf_dir)
-    imgs = (
-        t.documents.where(F.col("doc_id") % 3 == 0)
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    g = ahash_groups(imgs.count())
-    imgs = imgs.withColumn("n_groups", F.lit(g).cast("long"))
-    encoded = imgs.mapInPandas(_ahash_encode_batches, schema=_PNG_ENCODE_SCHEMA)
-    hashed = encoded.mapInPandas(
-        _ahash_batches,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("ahash", LongType()),
-            ]
-        ),
-    ).localCheckpoint(eager=False)
-    bands = hashed.select(
-        "doc_id",
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("k"),
-                        F.expr(
-                            f"shiftrightunsigned(ahash, {13 * k}) & 8191"
-                        ).alias("band_val"),
-                    )
-                    for k in range(5)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "ahash", "band.k", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _hamming_pairs(
+            _image_hash_bands(spark, sf_dir, _ahash_batches, "ahash"),
+            "ahash",
+            AHASH_MAX_HAMMING,
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.ahash").bitwiseXOR(F.col("b.ahash"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= AHASH_MAX_HAMMING)
         .distinct()
         .orderBy("doc_a", "doc_b")
     )
@@ -1037,57 +1032,13 @@ def mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul — microseconds under numpy's BLAS, vectorizable further by
     batching the grays into one 3-D tensor per Arrow batch.
     """
-    t = Tables(spark, sf_dir)
-    imgs = (
-        t.documents.where(F.col("doc_id") % 3 == 0)
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    g = ahash_groups(imgs.count())
-    imgs = imgs.withColumn("n_groups", F.lit(g).cast("long"))
-    encoded = imgs.mapInPandas(_ahash_encode_batches, schema=_PNG_ENCODE_SCHEMA)
-    hashed = encoded.mapInPandas(
-        _phash_batches,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("phash", LongType()),
-            ]
-        ),
-    ).localCheckpoint(eager=False)
-    bands = hashed.select(
-        "doc_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("k"),
-                        F.expr(
-                            f"shiftrightunsigned(phash, {13 * k}) & 8191"
-                        ).alias("band_val"),
-                    )
-                    for k in range(5)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "phash", "band.k", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _hamming_pairs(
+            _image_hash_bands(spark, sf_dir, _phash_batches, "phash"),
+            "phash",
+            PHASH_MAX_HAMMING,
         )
-        .where(
-            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-            <= PHASH_MAX_HAMMING
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
+        .select("doc_a", "doc_b")
         .distinct()
         .orderBy("doc_a", "doc_b")
     )
@@ -1182,20 +1133,7 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VAD_FRAME = 20  # samples per frame
 _VAD_ENERGY_T = 6_000_000_000  # per-frame sum(x^2) threshold (exact int)
 
-_VAD_ORACLE = f"""
-    WITH a AS (
-      SELECT doc_id, hex(encode(text)) AS h,
-             octet_length(encode(text)) // 2 AS n
-      FROM documents WHERE doc_id % 3 = 1
-    ),
-    nib AS (
-      SELECT doc_id, n, i,
-             strpos('0123456789ABCDEF', substr(h, 4*i + 3, 1)) - 1 AS h1,
-             strpos('0123456789ABCDEF', substr(h, 4*i + 4, 1)) - 1 AS h0,
-             strpos('0123456789ABCDEF', substr(h, 4*i + 1, 1)) - 1 AS l1,
-             strpos('0123456789ABCDEF', substr(h, 4*i + 2, 1)) - 1 AS l0
-      FROM a, LATERAL (SELECT unnest(range(0, n)) AS i) t
-    ),
+_VAD_ORACLE = _PCM_NIBBLE_CTES + f"""\
     v AS (
       SELECT doc_id, n, i,
              CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS x

@@ -138,9 +138,9 @@ def _probe_scores(
     return pairs.select("qid", "vid", score)
 
 
-@query(
-    "sim_cosine_topk",
-    oracle=f"""
+# The DuckDB exact cosine of every QUERY_IDS probe against every other
+# vector, as the CTEs d, q, dots, norms and cos(qid, vid, cosine).
+_SQL_PROBE_COS = f"""
     WITH d AS (
       SELECT vec_id AS vid, generate_subscripts(embedding, 1) AS pos,
              CAST(unnest(embedding) AS DOUBLE) AS dv
@@ -167,7 +167,12 @@ def _probe_scores(
       JOIN norms n1 ON dots.vid = n1.vid
       JOIN norms n2 ON dots.qid = n2.vid
       WHERE dots.qid <> dots.vid
-    )
+    )"""
+
+
+@query(
+    "sim_cosine_topk",
+    oracle=_SQL_PROBE_COS + f"""
     SELECT qid, vid, cosine, rk FROM (
       SELECT qid, vid, cosine,
              ROW_NUMBER() OVER (PARTITION BY qid
@@ -281,6 +286,21 @@ def ann_n_bands(n: int) -> int:
         ANN_MAX_BANDS,
         N_BANDS + 8 * _ceil_log2_ratio(n, ANN_BASE_N),
     )
+
+
+# DuckDB twins of ann_n_bands over a column ``n``, and of the _md5_signs
+# entry of plane pp.p of band bb.b at (1-based) position ps.pos
+_SQL_N_BANDS = (
+    f"CASE WHEN n <= {ANN_BASE_N} THEN {N_BANDS}"
+    f" ELSE LEAST({ANN_MAX_BANDS}, {N_BANDS} + 8 *"
+    f" {_sql_ceil_log2_ratio('n', ANN_BASE_N)}) END"
+)
+_SQL_PLANE_SIGN = (
+    "CASE WHEN strpos('02468ace', substr(md5('b'"
+    " || CAST(bb.b AS VARCHAR) || 'p' || CAST(pp.p AS VARCHAR)"
+    " || '|' || CAST(ps.pos - 1 AS VARCHAR)), 1, 1)) > 0"
+    " THEN 1.0 ELSE -1.0 END"
+)
 
 
 def _md5_signs(prefix: str, dim: int) -> list[float]:
@@ -2068,18 +2088,35 @@ def sim_ivf_topk(
     RNG); a production index trains them offline — the query-time plan
     (assign → probe cells → exact top-k within candidates) is the real
     thing.  Candidates shrink by ~probe/cells vs brute force."""
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
-    cells = ivf_n_cells(emb.count())
-    centroids = (
-        emb.orderBy("vec_id").limit(cells)
-        .select(F.col("vec_id").alias("vec_id_c"), "embedding")
-        .withColumn(
-            "cell",
-            F.row_number().over(Window.orderBy("vec_id_c")) - 1,
+
+    def first_cells(emb: DataFrame, cells: int) -> DataFrame:
+        return (
+            emb.orderBy("vec_id").limit(cells)
+            .select(F.col("vec_id").alias("vec_id_c"), "embedding")
+            .withColumn(
+                "cell",
+                F.row_number().over(Window.orderBy("vec_id_c")) - 1,
+            )
+            .select(F.col("cell").alias("vec_id"), "embedding")
         )
-        .select(F.col("cell").alias("vec_id"), "embedding")
-    )
+
+    return _ivf_topk(spark, sf_dir, first_cells, certify, probe_ids)
+
+
+def _ivf_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    centroids_of,
+    certify: bool,
+    probe_ids: tuple[int, ...],
+) -> DataFrame:
+    """The in-plan IVF-flat serving of both IVF queries:
+    ``centroids_of(emb, cells)`` places the ``ivf_n_cells(n)`` coarse
+    centroids, then ``_ivf_search`` probes ``ivf_n_probe(cells)`` of
+    them per query."""
+    emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    cells = ivf_n_cells(emb.count())
+    centroids = centroids_of(emb, cells)
     return _ivf_search(
         spark, emb, centroids, certify, ivf_n_probe(cells), probe_ids
     )
@@ -2181,12 +2218,12 @@ def sim_ivf_kmeans_topk(
     vs 0.91 at 3 — were an artifact of the biased 100-pair probe set
     and are superseded.)  Converged training only pays off on genuinely
     clustered embeddings."""
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", "embedding")
-    cells = ivf_n_cells(emb.count())
-    centroids = kmeans_centroids(spark, emb, cells)
-    return _ivf_search(
-        spark, emb, centroids, certify, ivf_n_probe(cells), probe_ids
+    return _ivf_topk(
+        spark,
+        sf_dir,
+        lambda emb, cells: kmeans_centroids(spark, emb, cells),
+        certify,
+        probe_ids,
     )
 
 
@@ -3488,26 +3525,15 @@ def _sql_lsh_blocks() -> str:
     count l_L, md5-signed planes, per-(vid, band) buckets, the
     bucket-equality candidate pairs l_cand, norms l_norms, and the
     exact-cosine-scored candidates l_sc (qid, vid, cosine)."""
-    sign = (
-        "CASE WHEN strpos('02468ace', substr(md5('b'"
-        " || CAST(bb.b AS VARCHAR) || 'p' || CAST(pp.p AS VARCHAR)"
-        " || '|' || CAST(ps.pos - 1 AS VARCHAR)), 1, 1)) > 0"
-        " THEN 1.0 ELSE -1.0 END"
-    )
-    bands = (
-        f"CASE WHEN n <= {ANN_BASE_N} THEN {N_BANDS}"
-        f" ELSE LEAST({ANN_MAX_BANDS}, {N_BANDS} + 8 *"
-        f" {_sql_ceil_log2_ratio('n', ANN_BASE_N)}) END"
-    )
     return f"""l_d AS (
       SELECT vec_id AS vid, generate_subscripts(embedding, 1) AS pos,
              CAST(unnest(embedding) AS DOUBLE) AS dv
       FROM embeddings
     ),
-    l_L AS (SELECT {bands} AS L
+    l_L AS (SELECT {_SQL_N_BANDS} AS L
             FROM (SELECT COUNT(*) AS n FROM embeddings)),
     l_planes AS (
-      SELECT bb.b, pp.p, ps.pos, {sign} AS sg
+      SELECT bb.b, pp.p, ps.pos, {_SQL_PLANE_SIGN} AS sg
       FROM (SELECT UNNEST(generate_series(0,
               (SELECT L FROM l_L) - 1)) AS b) bb,
            (SELECT UNNEST(generate_series(0, {N_PLANES - 1})) AS p) pp,
@@ -3869,17 +3895,6 @@ def _sim_knn_graph_oracle(
     ``n_src`` the relation whose COUNT fixes the plane/band schedule
     (the V1 corpus — incremental updates hold the build-time bucket
     space, see sim_knn_graph_incremental)."""
-    sign = (
-        "CASE WHEN strpos('02468ace', substr(md5('b'"
-        " || CAST(bb.b AS VARCHAR) || 'p' || CAST(pp.p AS VARCHAR)"
-        " || '|' || CAST(ps.pos - 1 AS VARCHAR)), 1, 1)) > 0"
-        " THEN 1.0 ELSE -1.0 END"
-    )
-    bands = (
-        f"CASE WHEN n <= {ANN_BASE_N} THEN {N_BANDS}"
-        f" ELSE LEAST({ANN_MAX_BANDS}, {N_BANDS} + 8 *"
-        f" {_sql_ceil_log2_ratio('n', ANN_BASE_N)}) END"
-    )
     planes = (
         f"CASE WHEN n <= {KNN_TARGET_BUCKET} THEN {N_PLANES}"
         f" ELSE GREATEST({N_PLANES},"
@@ -3892,9 +3907,9 @@ def _sim_knn_graph_oracle(
       FROM {corpus}
     ),
     k_n AS (SELECT COUNT(*) AS n FROM {n_src}),
-    k_LP AS (SELECT {bands} AS L, {planes} AS P FROM k_n),
+    k_LP AS (SELECT {_SQL_N_BANDS} AS L, {planes} AS P FROM k_n),
     k_planes AS (
-      SELECT bb.b, pp.p, ps.pos, {sign} AS sg
+      SELECT bb.b, pp.p, ps.pos, {_SQL_PLANE_SIGN} AS sg
       FROM (SELECT UNNEST(generate_series(0,
               (SELECT L FROM k_LP) - 1)) AS b) bb,
            (SELECT UNNEST(generate_series(0,
@@ -4596,35 +4611,7 @@ def _mmr_oracle() -> str:
         f"SELECT qid, vid, {r} AS rank, ROUND(score, 7) AS mmr_score FROM p{r}"
         for r in range(1, TOP_K + 1)
     )
-    return f"""
-    WITH d AS (
-      SELECT vec_id AS vid, generate_subscripts(embedding, 1) AS pos,
-             CAST(unnest(embedding) AS DOUBLE) AS dv
-      FROM embeddings
-    ),
-    q AS (
-      SELECT vec_id AS qid, generate_subscripts(embedding, 1) AS pos,
-             CAST(unnest(embedding) AS DOUBLE) AS qv
-      FROM embeddings WHERE vec_id IN {QUERY_IDS}
-    ),
-    dots AS (
-      SELECT qid, vid, SUM(CAST(qv * dv AS DECIMAL(28,14))) AS dot
-      FROM d JOIN q USING (pos) GROUP BY qid, vid
-    ),
-    norms AS (
-      SELECT vid, SUM(CAST(dv * dv AS DECIMAL(28,14))) AS nn
-      FROM d GROUP BY vid
-    ),
-    cos AS (
-      SELECT dots.qid AS qid, dots.vid AS vid,
-             ROUND(CAST(dot AS DOUBLE)
-                   / sqrt(CAST(n1.nn AS DOUBLE) * CAST(n2.nn AS DOUBLE)),
-                   6) AS cosine
-      FROM dots
-      JOIN norms n1 ON dots.vid = n1.vid
-      JOIN norms n2 ON dots.qid = n2.vid
-      WHERE dots.qid <> dots.vid
-    ),
+    return _SQL_PROBE_COS + f""",
     short AS (
       SELECT qid, vid, cosine, rk FROM (
         SELECT qid, vid, cosine,

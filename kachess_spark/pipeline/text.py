@@ -131,23 +131,39 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_LANG_GUESS_SQL = f"""
+    CASE WHEN {_oracle_lang_score('en')} >= {_oracle_lang_score('de')}
+          AND {_oracle_lang_score('en')} >= {_oracle_lang_score('fr')}
+          AND {_oracle_lang_score('en')} >= {_oracle_lang_score('es')}
+          AND {_oracle_lang_score('en')} > 0 THEN 'en'
+         WHEN {_oracle_lang_score('de')} >= {_oracle_lang_score('fr')}
+          AND {_oracle_lang_score('de')} >= {_oracle_lang_score('es')}
+          AND {_oracle_lang_score('de')} > 0 THEN 'de'
+         WHEN {_oracle_lang_score('fr')} >= {_oracle_lang_score('es')}
+          AND {_oracle_lang_score('fr')} > 0 THEN 'fr'
+         WHEN {_oracle_lang_score('es')} > 0 THEN 'es'
+         ELSE 'unknown' END
+"""
+
+
+def _lang_guess(text: Column) -> Column:
+    """The Spark twin of ``_LANG_GUESS_SQL``: argmax of the per-language
+    marker counts, ties broken en>de>fr>es, 'unknown' with no marker."""
+    en, de = _lang_score(text, "en"), _lang_score(text, "de")
+    fr, es = _lang_score(text, "fr"), _lang_score(text, "es")
+    return (
+        F.when((en >= de) & (en >= fr) & (en >= es) & (en > 0), "en")
+        .when((de >= fr) & (de >= es) & (de > 0), "de")
+        .when((fr >= es) & (fr > 0), "fr")
+        .when(es > 0, "es")
+        .otherwise("unknown")
+    )
+
+
 @query(
     "text_lang_id",
     oracle=f"""
-    SELECT doc_id, lang,
-           CASE
-             WHEN {_oracle_lang_score('en')} >= {_oracle_lang_score('de')}
-              AND {_oracle_lang_score('en')} >= {_oracle_lang_score('fr')}
-              AND {_oracle_lang_score('en')} >= {_oracle_lang_score('es')}
-              AND {_oracle_lang_score('en')} > 0 THEN 'en'
-             WHEN {_oracle_lang_score('de')} >= {_oracle_lang_score('fr')}
-              AND {_oracle_lang_score('de')} >= {_oracle_lang_score('es')}
-              AND {_oracle_lang_score('de')} > 0 THEN 'de'
-             WHEN {_oracle_lang_score('fr')} >= {_oracle_lang_score('es')}
-              AND {_oracle_lang_score('fr')} > 0 THEN 'fr'
-             WHEN {_oracle_lang_score('es')} > 0 THEN 'es'
-             ELSE 'unknown'
-           END AS lang_guess
+    SELECT doc_id, lang, {_LANG_GUESS_SQL} AS lang_guess
     FROM documents
     """,
 )
@@ -155,16 +171,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language ID (n-gram heuristic): argmax over
     per-language marker counts, ties broken en>de>fr>es."""
     t = Tables(spark, sf_dir)
-    text = F.col("text")
-    en, de = _lang_score(text, "en"), _lang_score(text, "de")
-    fr, es = _lang_score(text, "fr"), _lang_score(text, "es")
-    guess = (
-        F.when((en >= de) & (en >= fr) & (en >= es) & (en > 0), "en")
-        .when((de >= fr) & (de >= es) & (de > 0), "de")
-        .when((fr >= es) & (fr > 0), "fr")
-        .when(es > 0, "es")
-        .otherwise("unknown")
-    )
+    guess = _lang_guess(F.col("text"))
     return t.documents.select("doc_id", "lang", guess.alias("lang_guess"))
 
 
@@ -377,6 +384,24 @@ _REPETITION_ORACLE = """
 """
 
 
+def _doc_words(docs: DataFrame) -> DataFrame:
+    """(doc_id, ws): each document's non-empty lower-cased letter words.
+    Spread before the CPU-bound split and checkpoint-barriered before
+    any explode (the pushdown trap — see dedup._with_shingles)."""
+    return (
+        docs.select("doc_id", "text")
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .select(
+            "doc_id",
+            F.expr(
+                "filter(split(lower(regexp_replace(text, '[^a-zA-Z ]', '')),"
+                " ' '), w -> w <> '')"
+            ).alias("ws"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
 @query("text_repetition_profile", _REPETITION_ORACLE)
 def text_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals per document: the
@@ -396,18 +421,7 @@ def text_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides already hash-partitioned by the groupBys.
     """
     t = Tables(spark, sf_dir)
-    words = (
-        t.documents.select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select(
-            "doc_id",
-            F.expr(
-                "filter(split(lower(regexp_replace(text, '[^a-zA-Z ]', '')),"
-                " ' '), w -> w <> '')"
-            ).alias("ws"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    words = _doc_words(t.documents)
     wc = (
         words.select("doc_id", F.explode("ws").alias("w"))
         .groupBy("doc_id", "w")
@@ -500,18 +514,7 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ln() ratio is one IEEE op chain — engine-identical.
     """
     t = Tables(spark, sf_dir)
-    words = (
-        t.documents.select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select(
-            "doc_id",
-            F.expr(
-                "filter(split(lower(regexp_replace(text, '[^a-zA-Z ]', '')),"
-                " ' '), w -> w <> '')"
-            ).alias("ws"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    words = _doc_words(t.documents)
     tf = (
         words.select("doc_id", F.explode("ws").alias("w"))
         .groupBy("doc_id", "w")
@@ -1262,21 +1265,6 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- lang-ID confusion matrix
 
-_LANG_GUESS_SQL = f"""
-    CASE WHEN {_oracle_lang_score('en')} >= {_oracle_lang_score('de')}
-          AND {_oracle_lang_score('en')} >= {_oracle_lang_score('fr')}
-          AND {_oracle_lang_score('en')} >= {_oracle_lang_score('es')}
-          AND {_oracle_lang_score('en')} > 0 THEN 'en'
-         WHEN {_oracle_lang_score('de')} >= {_oracle_lang_score('fr')}
-          AND {_oracle_lang_score('de')} >= {_oracle_lang_score('es')}
-          AND {_oracle_lang_score('de')} > 0 THEN 'de'
-         WHEN {_oracle_lang_score('fr')} >= {_oracle_lang_score('es')}
-          AND {_oracle_lang_score('fr')} > 0 THEN 'fr'
-         WHEN {_oracle_lang_score('es')} > 0 THEN 'es'
-         ELSE 'unknown' END
-"""
-
-
 @query(
     "text_lang_confusion",
     oracle=f"""
@@ -1305,16 +1293,7 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     over its own result.
     """
     t = Tables(spark, sf_dir)
-    text = F.col("text")
-    en, de = _lang_score(text, "en"), _lang_score(text, "de")
-    fr, es = _lang_score(text, "fr"), _lang_score(text, "es")
-    guess = (
-        F.when((en >= de) & (en >= fr) & (en >= es) & (en > 0), "en")
-        .when((de >= fr) & (de >= es) & (de > 0), "de")
-        .when((fr >= es) & (fr > 0), "fr")
-        .when(es > 0, "es")
-        .otherwise("unknown")
-    )
+    guess = _lang_guess(F.col("text"))
     guessed = t.documents.select(
         F.col("lang").alias("label"), guess.alias("guess")
     )

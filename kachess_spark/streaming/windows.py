@@ -269,7 +269,8 @@ _OUT_SCHEMA = "user_id BIGINT, total_events BIGINT, total_value DOUBLE"
 def _running_totals(user_id, totals: tuple, pdfs):
     """Fold pandas batches of one user's events into the running totals
     ``(total_events, total_value)``: returns the new state and its one
-    output row (``_OUT_SCHEMA``).  The fold of both stateful twins."""
+    output row (``_OUT_SCHEMA``).  The fold of
+    ``streaming_user_running_totals``."""
     import pandas as pd
 
     total_events, total_value = totals
@@ -337,57 +338,6 @@ def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame
         (0, 0.0),
         _OUT_SCHEMA,
         _STATE_SCHEMA,
-    )
-
-
-def streaming_user_running_totals_tws(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of
-    ``streaming_user_running_totals`` — the Spark 4.x arbitrary-state
-    API (value state via a StatefulProcessor handle) computing the same
-    per-user running totals through the same fold, ``_running_totals``.
-
-    ENVIRONMENT-GATED and so UNEXERCISED where ``google.protobuf`` is
-    missing: the TWS Python worker protocol needs it, and
-    tests/test_streaming.py::test_transform_with_state_probe skips until
-    the environment gains it, then runs this twin against the batch
-    totals.  ``applyInPandasWithState`` covers the stateful semantics
-    either way."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which "
-            "this environment does not provide"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            totals, row = _running_totals(
-                key[0],
-                self._totals.get() if self._totals.exists() else (0, 0.0),
-                rows,
-            )
-            self._totals.update(totals)
-            yield row
-
-        def close(self) -> None:
-            pass
-
-    ev = stream_events(spark, sf_dir)
-    return ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -874,7 +824,7 @@ def streaming_dedup_counts(
 
 # ------------------------------------------------ EWMA feature smoothing
 
-EWMA_ALPHA = 0.2
+EWMA_ALPHA = 0.2  # 1 - EWMA_ALPHA is exactly 0.8 in float64, as DuckDB reads "0.8"
 _EWMA_SCHEMA = "user_id BIGINT, n_events BIGINT, ewma DOUBLE"
 
 
@@ -888,7 +838,7 @@ def _ewma_update(user_id, n: int, y, pdf):
     import pandas as pd
 
     for x in pdf.sort_values(["ts", "event_id"])["value"].astype("float64"):
-        y = x if n == 0 else 0.8 * y + 0.2 * x
+        y = x if n == 0 else (1 - EWMA_ALPHA) * y + EWMA_ALPHA * x
         n += 1
     row = pd.DataFrame(
         {"user_id": [user_id], "n_events": [n], "ewma": [round(y, 6)]}
@@ -900,11 +850,11 @@ def _ewma_last(pdf):
     return _ewma_update(pdf["user_id"].iloc[0], 0, None, pdf)[1]
 
 
-_EWMA_ORACLE = """
+_EWMA_ORACLE = f"""
     SELECT user_id,
            count(*) AS n_events,
            ROUND(list_reduce(list(value ORDER BY ts, event_id),
-                             (a, x) -> 0.8 * a + 0.2 * x), 6) AS ewma
+                             (a, x) -> {1 - EWMA_ALPHA} * a + {EWMA_ALPHA} * x), 6) AS ewma
     FROM events
     GROUP BY user_id
     ORDER BY user_id

@@ -1,7 +1,15 @@
 """Shared SQL/Spark rules have one definition each, no Spark session needed.
 
-A pattern that spells a rule may appear only once under ``kachess_spark/``,
-inside the function that owns it, so a copy cannot creep back in:
+The clone guard (``test_no_cloned_code_runs``) fails on any run of
+``_CLONE_WINDOW`` code lines written twice, within a file or across files,
+under ``kachess_spark/``, ``tools/`` or in ``bench.py``.  Lines compare
+with comments, blank lines and docstrings dropped and whitespace
+collapsed, so a pasted block cannot hide behind reformatting.  A
+deliberate twin needs an entry, with its reason, in ``_CLONE_ALLOWED``.
+
+Shorter spellings slip under that window, so a pattern that spells a rule
+may also appear only once under ``kachess_spark/``, inside the function
+that owns it:
 
 * the exact-DECIMAL cosine fold's DECIMAL zero, in ``similarity._dec_fold``;
 * the MinHash-LSH band rows, in ``dedup._band_rows`` (Spark) and
@@ -37,8 +45,10 @@ every plan or oracle built on it)."""
 from __future__ import annotations
 
 import ast
+import io
 import os
 import re
+import tokenize
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG = os.path.join(_REPO, "kachess_spark")
@@ -61,6 +71,127 @@ _AWAIT = re.compile(r"awaitTermination\(")
 _HOUR_BOUND = re.compile(r'F\.expr\("INTERVAL 1 HOUR"\)')
 _PQ_SUBSPACES = re.compile(r"\b_pq_subspaces\b")
 
+_CLONE_WINDOW = 8
+# Deliberate twins: the sorted ("path::scope", "path::scope") pair of
+# the two copies' first lines (see _scope) → why the run stays twice.
+_CLONE_ALLOWED: dict[tuple[str, str], str] = {}
+
+
+def _py_files(top: str):
+    """Every ``.py`` file under ``top``, in a stable order."""
+    for root, dirs, files in os.walk(top):
+        dirs.sort()
+        for name in sorted(files):
+            if name.endswith(".py"):
+                yield os.path.join(root, name)
+
+
+def _code_lines(src: str) -> list[tuple[int, str]]:
+    """(line number, text) of each code line of ``src``: comments, blank
+    lines and docstrings (any string standing alone as a statement)
+    dropped, each run of whitespace collapsed to one space."""
+    comment_at: dict[int, int] = {}
+    doc_lines: set[int] = set()
+    prev, doc = tokenize.NEWLINE, None
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            comment_at[tok.start[0]] = tok.start[1]
+            continue
+        if tok.type == tokenize.NL:
+            continue
+        if doc is not None and tok.type == tokenize.NEWLINE:
+            doc_lines.update(range(doc.start[0], doc.end[0] + 1))
+        starts_statement = prev in (
+            tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT
+        )
+        doc = tok if tok.type == tokenize.STRING and starts_statement else None
+        prev = tok.type
+    out = []
+    for lineno, line in enumerate(src.splitlines(), 1):
+        text = " ".join(line[: comment_at.get(lineno)].split())
+        if text and lineno not in doc_lines:
+            out.append((lineno, text))
+    return out
+
+
+def _scope(path: str, lineno: int) -> str:
+    """``path::name`` of the innermost def or class holding ``lineno``
+    of the repo file ``path`` (``path::<module>`` outside any)."""
+    with open(os.path.join(_REPO, path)) as f:
+        tree = ast.parse(f.read())
+    holders = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and n.lineno <= lineno <= n.end_lineno
+    ]
+    inner = max(holders, key=lambda n: n.lineno, default=None)
+    return f"{path}::{inner.name if inner else '<module>'}"
+
+
+def test_no_cloned_code_runs():
+    """No run of ``_CLONE_WINDOW`` code lines appears twice under
+    kachess_spark/, tools/ or in bench.py, unless ``_CLONE_ALLOWED``
+    names the pair with a reason; every entry there still clones."""
+    paths = [
+        *_py_files(_PKG),
+        *_py_files(os.path.join(_REPO, "tools")),
+        os.path.join(_REPO, "bench.py"),
+    ]
+    first: dict[tuple[str, ...], tuple[str, int, int]] = {}
+    found: dict[tuple[str, str], str] = {}
+    for path in paths:
+        rel = os.path.relpath(path, _REPO)
+        with open(path) as f:
+            lines = _code_lines(f.read())
+        texts = [text for _, text in lines]
+        run = None  # the twin of the previous window, to report a run once
+        for i in range(len(lines) - _CLONE_WINDOW + 1):
+            window = tuple(texts[i : i + _CLONE_WINDOW])
+            if window not in first:
+                first[window] = (rel, i, lines[i][0])
+                run = None
+                continue
+            twin_rel, twin_i, twin_line = first[window]
+            if run != (twin_rel, twin_i - 1):
+                a, b = _scope(twin_rel, twin_line), _scope(rel, lines[i][0])
+                found.setdefault(
+                    (min(a, b), max(a, b)),
+                    f"{twin_rel}:{twin_line} == {rel}:{lines[i][0]}",
+                )
+            run = (twin_rel, twin_i)
+    assert all(_CLONE_ALLOWED.values()), "every allowed twin needs a reason"
+    clones = sorted(v for k, v in found.items() if k not in _CLONE_ALLOWED)
+    assert clones == [], (
+        f"runs of {_CLONE_WINDOW}+ code lines written twice; give the stage"
+        f" one private definition: {clones}"
+    )
+    stale = sorted(set(_CLONE_ALLOWED) - set(found))
+    assert stale == [], f"_CLONE_ALLOWED pairs that no longer clone: {stale}"
+
+
+def test_code_lines_drop_comments_blanks_and_docstrings():
+    """Multi-line strings other than docstrings (the SQL texts) stay,
+    one code line per physical line."""
+    src = (
+        '"""Module doc."""\n'
+        "\n"
+        "def f(a):  # note\n"
+        '    """Doc\n'
+        '    more."""\n'
+        '    q = """\n'
+        "      SELECT   a\n"
+        '    """\n'
+        "    return   q\n"
+    )
+    assert _code_lines(src) == [
+        (3, "def f(a):"),
+        (6, 'q = """'),
+        (7, "SELECT a"),
+        (8, '"""'),
+        (9, "return q"),
+    ]
+
 
 def _assert_defined_once(
     pattern: re.Pattern, owner_file: str, owner: str, scope=None
@@ -69,17 +200,13 @@ def _assert_defined_once(
     the ``scope`` files only), and that line lies inside the
     module-level function ``owner`` of ``owner_file``."""
     hits = []
-    for root, _, files in os.walk(_PKG):
-        for name in sorted(files):
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(root, name)
-            if scope is not None and os.path.relpath(path, _PKG) not in scope:
-                continue
-            with open(path) as f:
-                for lineno, line in enumerate(f, 1):
-                    if pattern.search(line):
-                        hits.append((os.path.relpath(path, _PKG), lineno))
+    for path in _py_files(_PKG):
+        if scope is not None and os.path.relpath(path, _PKG) not in scope:
+            continue
+        with open(path) as f:
+            for lineno, line in enumerate(f, 1):
+                if pattern.search(line):
+                    hits.append((os.path.relpath(path, _PKG), lineno))
     assert len(hits) == 1, f"{pattern.pattern!r} spelled outside {owner}: {hits}"
     with open(os.path.join(_PKG, owner_file)) as f:
         tree = ast.parse(f.read())
@@ -127,11 +254,9 @@ def test_streaming_plumbing_defined_once():
 
 def test_pq_trains_without_subspace_split():
     hits = []
-    for root, _, files in os.walk(_PKG):
-        for name in files:
-            if name.endswith(".py"):
-                with open(os.path.join(root, name)) as f:
-                    hits += [name for line in f if _PQ_SUBSPACES.search(line)]
+    for path in _py_files(_PKG):
+        with open(path) as f:
+            hits += [path for line in f if _PQ_SUBSPACES.search(line)]
     assert hits == []
 
 

@@ -139,10 +139,11 @@ def test_ivf_recall(spark, sf_dir):
 
 
 def test_partition_introspection_helpers(spark):
-    """MAX_PART_*/PART_COUNT/PART_LOC catalog helpers (Bingql.g4:1422-1429)
+    """MAX_PART_*/MIN_PART_*/PART_COUNT/PART_LOC catalog helpers (Bingql.g4:1422-1429)
     answer from SHOW PARTITIONS / DESCRIBE metadata, multi-level specs
     included."""
     import shutil
+    from datetime import date
     from urllib.parse import urlparse
 
     from kachess_spark.functions import partitions as P
@@ -159,6 +160,8 @@ def test_partition_introspection_helpers(spark):
     assert str(P.max_part_date(spark, "kch_pt_test", "dt")) == "2024-02-03"
     assert P.min_part_string(spark, "kch_pt_test", "dt") == "2024-01-01"
     assert P.max_part_int(spark, "kch_pt_test", "hr") == 7
+    assert P.min_part_int(spark, "kch_pt_test", "hr") == 5
+    assert P.min_part_date(spark, "kch_pt_test", "dt") == date(2024, 1, 1)
     assert P.part_count(spark, "kch_pt_test") == 3
     loc = P.part_loc(spark, "kch_pt_test", {"dt": "2024-01-01", "hr": "5"})
     assert loc and loc.endswith("dt=2024-01-01/hr=5")

@@ -92,42 +92,6 @@ def test_streaming_stateful_running_totals(spark, sf_dir):
     assert (merged.total_value - merged.total_value_want).abs().max() < 1e-6
 
 
-def test_transform_with_state_probe(spark, sf_dir):
-    """Per-round transformWithState probe (round-8 verdict #6): the TWS
-    Python worker protocol needs google.protobuf, absent from this
-    container — the skip below IS the round's re-recorded block.  If
-    the environment ever gains protobuf, this test stops skipping and
-    certifies the transformWithStateInPandas twin against the batch
-    per-user totals (same contract as the applyInPandasWithState
-    test above)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState blocked: no google.protobuf in this "
-        "environment (re-probed this round; applyInPandasWithState "
-        "covers the stateful semantics)",
-    )
-    from kachess_spark.catalog import load_table
-    from kachess_spark.streaming.windows import (
-        streaming_user_running_totals_tws,
-    )
-
-    got = _run_stream(
-        spark, streaming_user_running_totals_tws(spark, sf_dir), "update"
-    )
-    pdf = got.toPandas()
-    final = pdf.groupby("user_id").last().reset_index()
-    ev = load_table(spark, sf_dir, "events").toPandas()
-    want = (
-        ev.groupby("user_id")
-        .agg(total_events=("event_id", "size"), total_value=("value", "sum"))
-        .reset_index()
-    )
-    merged = final.merge(want, on="user_id", suffixes=("", "_want"))
-    assert len(merged) == len(want)
-    assert (merged.total_events == merged.total_events_want).all()
-    assert (merged.total_value - merged.total_value_want).abs().max() < 1e-6
-
-
 def test_streaming_dedup(spark, sf_dir):
     from kachess_spark.catalog import load_table
     from kachess_spark.streaming import streaming_dedup_events

@@ -23,11 +23,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import prep_indexes, stage_snapshot  # noqa: E402
+from kachess_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 
 
 def main() -> None:
     args = sys.argv[1:]
-    n_runs, sf_dir, prep = 3, "/root/testdata/sf0.1", False
+    n_runs, sf_dir, prep = 3, DEFAULT_SF_DIR, False
     names: list[str] = []
     i = 0
     while i < len(args):

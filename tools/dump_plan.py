@@ -20,10 +20,10 @@ sys.path.insert(0, REPO)
 def main() -> None:
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
 
     from kachess_spark import registry
+    from kachess_spark.catalog import DEFAULT_SF_DIR as sf_dir
     from kachess_spark.session import get_spark
 
     registry.load_all()

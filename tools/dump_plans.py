@@ -76,12 +76,12 @@ NOTES = {
 
 def main() -> None:
     from kachess_spark import registry
+    from kachess_spark.catalog import DEFAULT_SF_DIR as sf
     from kachess_spark.session import get_spark
 
     registry.load_all()
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out = [
         "# PLANS — physical plans of flagship queries (sf0.1, AQE final)\n",
         "Generated by `python tools/dump_plans.py`; regenerate after "

@@ -9,7 +9,7 @@ tool measures what a production query mix would see: a deterministic
 md5-ordered sample of N probe ids drawn from the WHOLE corpus.
 
 Usage: python tools/population_recall.py [sf_dir] [n_probes]
-       (defaults: /root/testdata/sf0.1, 150)
+       (defaults: catalog.DEFAULT_SF_DIR, 150)
 
 Prints one JSON line per method; paste-ready for RECALL.md.  The
 pytest ANN floors import ``population_recall`` below (round-11 ask #2:
@@ -84,9 +84,10 @@ def main() -> None:
         sim_ivf_stored_topk,
         sim_pq_stored_topk,
     )
+    from kachess_spark.catalog import DEFAULT_SF_DIR
     from kachess_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
     n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 150
 
     spark = get_spark("population-recall")

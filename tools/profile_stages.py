@@ -18,11 +18,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import prep_indexes, stage_snapshot  # noqa: E402
+from kachess_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 
 
 def main() -> None:
     name = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else "/root/testdata/sf0.1"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else DEFAULT_SF_DIR
     warm = "--warm" in sys.argv
 
     from kachess_spark import registry
