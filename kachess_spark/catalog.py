@@ -11,6 +11,7 @@ only this module would change.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -116,6 +117,54 @@ def partitions_for_rows(
         max(1, int(-(-n_rows // 65536))),
     )
     return max(floor, min(need, 100_000))
+
+
+# A physical-plan node that moves rows between tasks (shuffle, broadcast
+# or a reuse of either), or a subquery; AQE wraps every plan needing one.
+# Building such a plan's RDD runs those parts, so ``spread`` never does.
+_EXCHANGE_NODE = re.compile(
+    r"^[\s:|+\-*()\d]*(?:AdaptiveSparkPlan|\w*Exchange|\w*Subquery)", re.M
+)
+
+
+def spread(df: DataFrame, *keys) -> DataFrame:
+    """``df`` spread across the cores for a CPU-bound per-row stage:
+    ``repartition(cores, *keys)`` (round-robin with no keys).
+
+    A small table scans as ONE split, so without the spread a single
+    task runs the whole regex / fold / Python stage while the other
+    cores idle.  The exchange is skipped only when ``df`` already runs
+    at least one task per core with no exchange in its plan: a scan
+    that is already wide (production scale) then pays no corpus-sized
+    extra shuffle.  The split count is read only on an exchange-free
+    plan, so the call never starts a Spark job.  Row placement is
+    deterministic (round-robin sorts before it distributes), and no
+    caller's result depends on it."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if not _EXCHANGE_NODE.search(plan) and df.rdd.getNumPartitions() >= cores:
+        return df
+    return df.repartition(cores, *keys)
+
+
+def _kernel_spread(spark, cands: DataFrame, n_pairs: int) -> DataFrame:
+    """Widen the (src, dst) input of an Arrow-kernel scoring stage that
+    AQE would coalesce below the core count.  The stage's per-row cost
+    is the ~1 KB JOINED row (two embeddings), ~60x the 16-byte pair
+    AQE sizes the exchange by, so AQE leaves it 2-3 tasks wide at
+    fixture scale (profiled: five such stages carried ~9 s of the
+    descent builder's 10.5 s wall).  Gated on the pair bytes being
+    under cores x 1 MB (AQE's minPartitionSize target), exactly the
+    regime AQE under-spreads: at production pair volumes no second
+    exchange exists.  Width is ``partitions_for_rows``' work floor
+    (64k pairs a task, at most one per core); under 4 tasks the
+    exchange does not pay."""
+    if n_pairs * 16 >= spark.sparkContext.defaultParallelism * (1 << 20):
+        return cands
+    width = partitions_for_rows(spark, n_pairs, 16)
+    if width < 4:
+        return cands
+    return cands.repartition(width, "src", "dst")
 
 
 # Session-scoped DataFrame cache: spark.read.parquet costs a file

@@ -424,11 +424,10 @@ def skew_join_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto one hot key; the fact side is repartitioned so the join shuffle
     has many mappers — AQE's skew split is per-mapper chunks, so a
     single-mapper stage (one small parquet file) can never split."""
-    from kachess_spark.catalog import load_table
+    from kachess_spark.catalog import load_table, spread
 
-    spread = spark.sparkContext.defaultParallelism
     ev = load_table(spark, sf_dir, "events")
-    skewed = ev.repartition(spread).select(
+    skewed = spread(ev).select(
         F.when(F.col("user_id") % 2 == 0, 0)
         .otherwise(F.col("user_id"))
         .alias("skew_key"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import Tables
+from kachess_spark.catalog import Tables, spread
 from kachess_spark.registry import query
 
 _CURATION_ORACLE = """
@@ -626,20 +626,20 @@ def pipeline_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     union — at 100 TB that is five cached copies of the corpus), each
     document carries boolean survival flags s2..s5 and ONE aggregation
     computes every stage's (docs, tokens) pair as conditional sums,
-    unpivoted to the 5-row report with ``stack``.  The only cached
-    table is the shingle postings (computed once, feeding both the
-    containment pair join and the decontamination semi-join); the drop
-    sets come back as doc_id marker tables left-joined onto the
-    corpus, so the whole report is one linear job over one corpus
-    scan + two small marker joins.  The postings cache is persist()
-    (lineage kept: executor loss recomputes, round-4 VERDICT #5) and
-    is filled by one count() before the final job — two consumers of
-    an unfilled lazy cache inside one job race to compute it
-    concurrently, an intermittent 3x wall blowup measured on identical
-    runs (round-5/7 lesson).  It is released before returning (no
-    InMemoryRelation outlives the call, round-5 ADVICE).
+    unpivoted to the 5-row report with ``stack``.  The shingle
+    postings are ``dedup._shingle_postings`` of the exact-dedup
+    survivors (checkpointed once, feeding both the containment pair
+    join, ``dedup._shingle_matches``, and the decontamination
+    semi-join); the drop sets come back as doc_id marker tables
+    left-joined onto the corpus, so the report is one linear job over
+    one corpus scan + two small marker joins.
     """
-    from kachess_spark.pipeline.dedup import _SHINGLES_EXPR, _WORDS_EXPR
+    from kachess_spark.pipeline.dedup import (
+        _SHINGLES_EXPR,
+        _WORDS_EXPR,
+        _shingle_matches,
+        _shingle_postings,
+    )
 
     t = Tables(spark, sf_dir)
     text = F.col("text")
@@ -657,34 +657,9 @@ def pipeline_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("fp").orderBy("doc_id")
     flagged = base.withColumn("s2", F.row_number().over(w) == F.lit(1))
-    sh = (
-        flagged.where("s2")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", "lang", F.expr(_WORDS_EXPR).alias("words"))
-        .where(F.size("words") >= 3)
-        .select("doc_id", "lang", F.expr(_SHINGLES_EXPR).alias("shingles"))
-    )
-    # explode_outer, NOT explode: for an inner explode Catalyst infers
-    # `size(shingles) > 0 AND isnotnull(shingles)` and pushes it below
-    # the repartition, inlining the whole regexp+split+transform
-    # shingle expression ~3x into a per-row Filter (measured 25 s vs
-    # 1 s at sf0.1 — the round-6 sh.persist() used to block exactly
-    # this pushdown).  Output is identical: every >=3-word doc has
-    # >=1 shingle, so no null rows are produced.
-    expl = sh.select(
-        "doc_id",
-        "lang",
-        F.size("shingles").alias("n_sh"),
-        F.explode_outer("shingles").alias("shingle"),
-    ).persist()
-    a, b = expl.alias("a"), expl.alias("b")
+    _, expl = _shingle_postings(flagged.where("s2"))
     contained = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
+        _shingle_matches(expl, F.col("a.doc_id") != F.col("b.doc_id"))
         .groupBy(
             F.col("a.doc_id").alias("ad"),
             F.col("b.doc_id").alias("bd"),
@@ -771,17 +746,7 @@ def pipeline_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_docs").cast("long"),
         F.col("n_tokens").cast("long"),
     )
-    # Fill the postings cache with one linear job (two consumers of an
-    # unfilled lazy cache in one job race — measured 3x blowup), run
-    # the single-pass report, then release the cache (round-5 ADVICE:
-    # no InMemoryRelation outlives the call).  The report is one row
-    # per stage at ANY corpus size, so collecting it is driver-safe.
-    try:
-        expl.count()
-        rows = out.orderBy("stage").collect()
-    finally:
-        expl.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return out.orderBy("stage")
 
 
 # ------------------------------------------------- per-domain quota
@@ -1212,9 +1177,7 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     sent = (
-        t.documents.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        spread(t.documents, "doc_id")
         .select(
             "doc_id",
             F.explode(F.split(F.col("text"), "\\.")).alias("s"),

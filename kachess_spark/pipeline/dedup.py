@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import Tables, scaled_partitions
+from kachess_spark.catalog import Tables, scaled_partitions, spread
 from kachess_spark.registry import query
 
 N_HASHES = 6  # minhash signature length
@@ -48,28 +48,29 @@ _SHINGLES_EXPR = """
 """
 
 
-def _with_shingles(docs: DataFrame) -> DataFrame:
-    """doc_id + distinct word-3-gram shingle array (≥3-word docs only).
+def _with_shingles(docs: DataFrame, *keep: str, **block: Column) -> DataFrame:
+    """Per ≥3-word doc its (doc_id, *keep, *block, shingles) row: the
+    distinct word-3-gram shingle array, ``keep`` columns passed through
+    and ``block`` columns computed from ``words``.
 
-    Two load-bearing physical choices (each measured at sf0.1):
-
-    * repartition to core count BEFORE the compute — documents arrive as
-      one parquet row-group, so without the spread a single task does all
-      the regex/shingle work while 31 cores idle;
-    * localCheckpoint AFTER the compute — downstream explode()s inject
-      `isnotnull(shingles) AND size(shingles) > 0` predicates that
-      Catalyst pushes into a non-codegen Filter, re-evaluating the whole
-      interpreted lambda chain ~10× per row (observed 30s for a 0.5s
-      explode).  Materializing the shingle arrays once makes every
-      consumer read plain vectors.  At cluster scale persist(DISK_ONLY)
-      plays the same role."""
-    spread = docs.sparkSession.sparkContext.defaultParallelism
+    The documents are ``spread`` before the CPU-bound regex / shingle
+    compute, and the result is checkpointed (lazily) before any
+    consumer: downstream explode()s inject `isnotnull(shingles) AND
+    size(shingles) > 0` predicates that Catalyst pushes into a
+    non-codegen Filter, re-evaluating the whole interpreted lambda chain
+    ~10× per row (observed 30s for a 0.5s explode).  Materializing the
+    shingle arrays once makes every consumer read plain vectors.  At
+    cluster scale persist(DISK_ONLY) plays the same role."""
     return (
-        docs.select("doc_id", "text")
-        .repartition(spread, "doc_id")
-        .select("doc_id", F.expr(_WORDS_EXPR).alias("words"))
+        spread(docs.select("doc_id", *keep, "text"), "doc_id")
+        .select("doc_id", *keep, F.expr(_WORDS_EXPR).alias("words"))
         .where(F.size("words") >= 3)
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
+        .select(
+            "doc_id",
+            *keep,
+            *(c.alias(name) for name, c in block.items()),
+            F.expr(_SHINGLES_EXPR).alias("shingles"),
+        )
         .localCheckpoint(eager=False)
     )
 
@@ -77,27 +78,11 @@ def _with_shingles(docs: DataFrame) -> DataFrame:
 def _shingle_postings(
     docs: DataFrame, **block: Column
 ) -> tuple[DataFrame, DataFrame]:
-    """``(sh, expl)``: per ≥3-word doc its (doc_id, lang, *block,
-    shingles) array row, and the exploded postings (doc_id, lang,
-    *block, n_sh, shingle); ``block`` columns are computed from
-    ``words``.  The same two physical rules as :func:`_with_shingles`:
-    spread before the CPU-bound shingle compute, and a lazy checkpoint
-    before the explode (else the Generate's pushed-down predicates
-    re-run the interpreted lambda chain per row on the pre-shuffle
-    single task); the postings are checkpointed too, since the
-    self-join reads them twice."""
-    sh = (
-        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", "lang", F.expr(_WORDS_EXPR).alias("words"))
-        .where(F.size("words") >= 3)
-        .select(
-            "doc_id",
-            "lang",
-            *(c.alias(name) for name, c in block.items()),
-            F.expr(_SHINGLES_EXPR).alias("shingles"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    """``(sh, expl)``: the :func:`_with_shingles` rows keeping ``lang``
+    and ``block``, and their exploded postings (doc_id, lang, *block,
+    n_sh, shingle), checkpointed too, since the self-join reads them
+    twice."""
+    sh = _with_shingles(docs, "lang", **block)
     expl = sh.select(
         "doc_id",
         "lang",
@@ -618,9 +603,7 @@ def dedup_embedding_cosine(
     # order-independent, so this matches the oracle's any-order SUM
     norm = F.expr(_DEC_NORM)
     b = (
-        t.embeddings.repartition(
-            spark.sparkContext.defaultParallelism, "vec_id"
-        )
+        spread(t.embeddings, "vec_id")
         .select(
             "vec_id",
             "embedding",
@@ -1009,18 +992,10 @@ def dedup_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     that at test scale).
     """
     t = Tables(spark, sf_dir)
-    docs = t.documents
-    # A small corpus arrives as one parquet file, so the scan yields a
-    # single task and the regex+split+slice+xxhash span transform (the
-    # operator's entire CPU cost, paid once per self-join branch) runs
-    # serially — measured 1.7 s of a 2.2 s wall in ONE task at sf0.1.
-    # Spread it across the cores, but ONLY when the scan's natural
-    # split count is below the core count: at production scale
-    # maxPartitionBytes already yields thousands of splits and this
-    # exchange would be a pure corpus-sized extra shuffle (round-13).
-    cores = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < cores:
-        docs = docs.repartition(cores, "doc_id")
+    # the span transform is the operator's entire CPU cost, paid once
+    # per self-join branch (measured 1.7 s of a 2.2 s wall in ONE task
+    # at sf0.1 before the spread)
+    docs = spread(t.documents, "doc_id")
     spans = (
         docs.select(
             "doc_id", F.expr(_WORDS_EXPR).alias("words")
@@ -1158,10 +1133,7 @@ def sem_assign(embeddings: DataFrame, k: int) -> DataFrame:
     Returns (vec_id, cluster, cent_cos, embedding, nrm)."""
     from kachess_spark.pipeline.similarity import _DEC_NORM, _cos, _dec_dot
 
-    # single-row-group parquet → spread before the k·n CPU-bound folds
-    embeddings = embeddings.repartition(
-        embeddings.sparkSession.sparkContext.defaultParallelism, "vec_id"
-    )
+    embeddings = spread(embeddings, "vec_id")  # before the k·n folds
     norm = F.expr(_DEC_NORM)
     emb = embeddings.select("vec_id", "embedding", norm.alias("nrm"))
     cent = F.broadcast(
@@ -1259,10 +1231,7 @@ def sem_assign_scaled(embeddings: DataFrame, k_fine: int) -> DataFrame:
     cluster) stay exact."""
     from kachess_spark.pipeline.similarity import _DEC_NORM, _cos, _dec_dot
 
-    spark = embeddings.sparkSession
-    embeddings = embeddings.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    )
+    embeddings = spread(embeddings, "vec_id")
     norm = F.expr(_DEC_NORM)
     emb = embeddings.select("vec_id", "embedding", norm.alias("nrm"))
     k_coarse = sem_coarse_k(k_fine)

@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kachess_spark.catalog import Tables
+from kachess_spark.catalog import Tables, spread
 from kachess_spark.pipeline.dedup import _hamming_pairs
 from kachess_spark.registry import query
 
@@ -848,15 +848,30 @@ def _ahash_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
 
-def _ahash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        hashes = []
-        for p in pdf["payload"].values:
-            gray = decode_gray(p)
-            hashes.append(0 if gray is None else ahash64(gray))
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "ahash": pd.Series(hashes, dtype="int64")}
-        )
+def _hash_batches(
+    hash64: Callable, sig: str
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The Arrow-batched image-hash kernel ``_{sig}_batches``: each
+    (doc_id, payload) row's PNG decoded to gray and hashed by
+    ``hash64`` into the int64 column ``sig`` (0 for an undecodable
+    payload)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            hashes = []
+            for p in pdf["payload"].values:
+                gray = decode_gray(p)
+                hashes.append(0 if gray is None else hash64(gray))
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], sig: pd.Series(hashes, dtype="int64")}
+            )
+
+    # the name the plan's MapInPandas node shows
+    kernel.__name__ = kernel.__qualname__ = f"_{sig}_batches"
+    return kernel
+
+
+_ahash_batches = _hash_batches(ahash64, "ahash")
 
 
 def _image_hash_bands(
@@ -871,10 +886,8 @@ def _image_hash_bands(
     into 5 13-bit bands: rows (doc_id, ``sig``, k, band_val) for
     :func:`dedup._hamming_pairs` — hamming ≤ 4 pairs agree on ≥1 band."""
     t = Tables(spark, sf_dir)
-    imgs = (
-        t.documents.where(F.col("doc_id") % 3 == 0)
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    imgs = spread(
+        t.documents.where(F.col("doc_id") % 3 == 0).select("doc_id"), "doc_id"
     )
     g = ahash_groups(imgs.count())
     imgs = imgs.withColumn("n_groups", F.lit(g).cast("long"))
@@ -907,19 +920,26 @@ def _image_hash_bands(
     ).select("doc_id", sig, "band.k", "band.band_val")
 
 
-_AHASH_ORACLE = f"""
+def _image_hash_oracle(extra: str) -> str:
+    """The image-hash queries' oracle: the ground-truth group pairs of
+    the image subset (same ``ahash_groups`` rule as a COUNT(*) CTE),
+    selecting ``extra`` after (doc_a, doc_b)."""
+    return f"""
     WITH nn AS (
       SELECT GREATEST({AHASH_MIN_GROUPS},
              CAST(CEIL(COUNT(*) / {AHASH_TARGET_GROUP}.0) AS INTEGER)) AS g
       FROM documents WHERE doc_id % 3 = 0
     )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, 0 AS hamming
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b{extra}
     FROM documents a JOIN documents b ON
          a.doc_id % 3 = 0 AND b.doc_id % 3 = 0
      AND a.doc_id < b.doc_id, nn
     WHERE a.doc_id % nn.g = b.doc_id % nn.g
     ORDER BY doc_a, doc_b
 """
+
+
+_AHASH_ORACLE = _image_hash_oracle(", 0 AS hamming")
 
 
 @query("mm_image_ahash", _AHASH_ORACLE)
@@ -986,30 +1006,8 @@ def phash64(gray) -> int:
     return val
 
 
-def _phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        hashes = []
-        for p in pdf["payload"].values:
-            gray = decode_gray(p)
-            hashes.append(0 if gray is None else phash64(gray))
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "phash": pd.Series(hashes, dtype="int64")}
-        )
-
-
-_PHASH_ORACLE = f"""
-    WITH nn AS (
-      SELECT GREATEST({AHASH_MIN_GROUPS},
-             CAST(CEIL(COUNT(*) / {AHASH_TARGET_GROUP}.0) AS INTEGER)) AS g
-      FROM documents WHERE doc_id % 3 = 0
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM documents a JOIN documents b ON
-         a.doc_id % 3 = 0 AND b.doc_id % 3 = 0
-     AND a.doc_id < b.doc_id, nn
-    WHERE a.doc_id % nn.g = b.doc_id % nn.g
-    ORDER BY doc_a, doc_b
-"""
+_phash_batches = _hash_batches(phash64, "phash")
+_PHASH_ORACLE = _image_hash_oracle("")
 
 
 @query("mm_image_phash", _PHASH_ORACLE)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
 
-from kachess_spark.catalog import Tables, partitions_for_rows
+from kachess_spark.catalog import Tables, _kernel_spread, partitions_for_rows, spread
 from kachess_spark.registry import query
 
 QUERY_IDS = (1, 2, 3)
@@ -104,18 +104,9 @@ def _probe_scores(
     pairs, the exact baseline.  Each pair is one map-side fold with the
     norms hoisted per vector: no explode, no per-pair shuffle."""
     if cands is None:
-        # A small corpus scans as ONE split, so the whole #probes·N fold
-        # ran in a single task (~1.0 s serial inside EVERY certified ANN
-        # query at sf0.1 — round-13 measurement).  Spread it across the
-        # cores, gated on the scan's natural split count so the exchange
-        # never fires at production scale (round-robin repartition is
-        # deterministic via Spark's sort-before-repartition; row placement
-        # cannot affect the per-qid global ranking).  ``emb`` must be a
-        # bare scan here: reading the split count of a plan with an
-        # exchange runs that exchange.
-        sc = emb.sparkSession.sparkContext
-        if emb.rdd.getNumPartitions() < sc.defaultParallelism:
-            emb = emb.repartition(sc.defaultParallelism)
+        # the whole #probes·N fold (~1.0 s serial inside every certified
+        # ANN query at sf0.1 on one split)
+        emb = spread(emb)
     norm = F.expr(_DEC_NORM)
     embn = emb.select(F.col("vec_id").alias("vid"), "embedding", norm.alias("nrm"))
     qv = broadcast(
@@ -338,10 +329,10 @@ def _signed_dots(df: DataFrame, signs: list[list[float]]) -> DataFrame:
     ``signs`` — the one signed projection behind the LSH plane bits
     (``banded_hyperplane_buckets``) and ``emb_random_projection``.
 
-    The corpus is spread first: single-row-group parquet arrives in few
-    splits and the folds are CPU-bound.  The sign matrix travels as ONE
-    string literal decoded by from_json, which ConstantFolding collapses
-    to a literal array at optimize time — a single expression node, so
+    The corpus is ``spread`` first (the folds are CPU-bound).  The sign
+    matrix travels as ONE string literal decoded by from_json, which
+    ConstantFolding collapses to a literal array at optimize time — a
+    single expression node, so
     analysis stays milliseconds (a 4k-element nested-literal tree cost
     10 s+ of driver analysis; the earlier 1-row broadcast-DataFrame join
     was fast but planned as a BroadcastNestedLoopJoin, muddying the
@@ -355,7 +346,7 @@ def _signed_dots(df: DataFrame, signs: list[list[float]]) -> DataFrame:
         + ")"
     )
     return (
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism, "vec_id")
+        spread(df, "vec_id")
         .withColumn(
             "signs", F.from_json(F.lit(json.dumps(signs)), "array<array<double>>")
         )
@@ -746,30 +737,6 @@ def _knn_topk(scored: DataFrame, k: int = KNN_K, asc: bool = False) -> DataFrame
     ).where(F.col("rk") <= k)
 
 
-def _kernel_spread(spark: SparkSession, cands: DataFrame, n_pairs: int) -> DataFrame:
-    """Widen an Arrow-kernel scoring input whose own exchange AQE would
-    coalesce below the core count (round-14).  The scoring stage's
-    per-row cost is the ~1 KB JOINED row (two embeddings) serialized
-    into Arrow at ~250 MB/s/core — ~60x the 16-byte exchanged pair —
-    so AQE's bytes-of-the-thin-side sizing leaves the stage 2-3 tasks
-    wide at fixture scale (profiled: five such stages carried ~9 s of
-    the descent builder's 10.5 s wall).  Gate: only when the pair
-    frame's own bytes are under cores x 1 MB (AQE's minPartitionSize
-    target), i.e. exactly the regime AQE under-spreads — at production
-    pair volumes the gate never fires and NO second exchange exists
-    (the round-13 §11 removal stands there).  Width gives each task
-    ~64 MB of kernel input (64k pairs), capped at the core count."""
-    sc = spark.sparkContext
-    cores = sc.defaultParallelism
-    if n_pairs * 16 >= cores * (1 << 20):
-        return cands
-    width = min(cores, -(-n_pairs // 65536))
-    if width < 4:
-        # too little kernel work for a dedicated exchange to pay
-        return cands
-    return cands.repartition(width, "src", "dst")
-
-
 def _undirected(edges: DataFrame) -> DataFrame:
     """The (src, dst) edges of a graph frame plus their reversals,
     deduplicated and checkpointed: the adjacency every beam walk,
@@ -856,7 +823,7 @@ def _knn_refine_round(
         .distinct()
     )
     if n is not None:
-        # scale-gated kernel-width spread (see _kernel_spread): the
+        # scale-gated kernel-width spread (catalog._kernel_spread): the
         # distinct's partial agg and single exchange stay; a SECOND
         # exchange is added only at pair volumes AQE under-spreads
         half = _kernel_spread(spark, half, n * (2 * k) ** 2 // 2)
@@ -1587,8 +1554,8 @@ def sim_knn_graph_incremental(
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .repartition(spark.sparkContext.defaultParallelism, "src", "dst")
     )
+    full_cands = spread(full_cands, "src", "dst")
     # JVM engine, no hoisted norm frame: this maintainer makes only TWO
     # scoring calls over delta-proportional candidate sets, so the
     # Arrow kernel's fixed per-call costs outrun its per-pair win —
@@ -1612,8 +1579,8 @@ def sim_knn_graph_incremental(
         .select(F.col("vid").alias("src"), "dst")
         .join(full_set.withColumnRenamed("vid", "src"), "src", "left_anti")
         .distinct()
-        .repartition(spark.sparkContext.defaultParallelism, "src", "dst")
-    ).localCheckpoint(eager=False)
+    )
+    new_pairs = spread(new_pairs, "src", "dst").localCheckpoint(eager=False)
     merge_srcs = new_pairs.select(F.col("src").alias("vid")).distinct()
     merged = _knn_topk(
         _exact_cosine_edges(emb2, new_pairs, engine="jvm")
@@ -1742,15 +1709,15 @@ def _serve_incremental_working(
     # (measured at sf0.1: 17.6 s -> 12.0 s for the whole chain)
     embn2 = _emb_with_norms(emb2).localCheckpoint(eager=False)
 
-    def score(cands: DataFrame, spread: bool = False) -> DataFrame:
+    def score(cands: DataFrame, widen: bool = False) -> DataFrame:
         c = cands.where(F.col("src") != F.col("dst"))
-        if spread:
+        if widen:
             c = c.repartition(score_width, "src", "dst")
         return _exact_cosine_edges(emb2, c, embn=embn2)
 
     seeds = plus.select(F.col("vec_id").alias("src")).crossJoin(entries)
     place = _beam_walk(
-        score(seeds, spread=True).localCheckpoint(eager=False),
+        score(seeds, widen=True).localCheckpoint(eager=False),
         und,
         score,
         INC_PLACE_HOPS,
@@ -2977,7 +2944,11 @@ def pq_train_encode(
     Storage math: 64 float32 dims (256 B) → M×log2(k) bits per vector
     (128× compression at k=16); the codebooks are M×k×(D/M) floats
     total — broadcast-sized at any corpus scale.
+
+    ``emb`` is ``spread`` once for both: the Lloyd rounds and the encode
+    are CPU-bound folds over n·{PQ_M}·k scoring rows.
     """
+    emb = spread(emb, "vec_id")
     cent = _lloyd(_pq_long(emb), k * PQ_M, _assign_l2, PQ_ITERS)
     code, m = _pq_split("vec_id")
     books = cent.select(
@@ -3815,13 +3786,7 @@ def sim_range_search(
     — linear, broadcast queries, no shuffle."""
     t = Tables(spark, sf_dir)
     raw = t.embeddings.select("vec_id", "embedding")
-    # spread the single-split scan across the cores (the
-    # _probe_scores note): the plane dots and the kept side's folds
-    # otherwise run in one task; no-op when the scan is already parallel
-    emb = raw
-    if emb.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        emb = emb.repartition(spark.sparkContext.defaultParallelism)
-    buckets = banded_hyperplane_buckets(emb).localCheckpoint(eager=False)
+    buckets = banded_hyperplane_buckets(raw).localCheckpoint(eager=False)
     qb = buckets.where(F.col("vid").isin(*probe_ids)).select(
         F.col("vid").alias("qid"), "band", "bucket"
     )
@@ -3841,10 +3806,12 @@ def sim_range_search(
     # the certificate's fold CPU grows linearly and the kernel would
     # win — revisit if the certificate ever dominates at scale.
     queries = raw.where(F.col("vec_id").isin(*probe_ids))
-    kept = _probe_scores(emb, queries, cands).where(F.col("cosine") >= RANGE_TAU)
-    # exact full-corpus range set — the in-plan completeness
-    # certificate (its spread of the bare scan is the same exchange as
-    # the one above)
+    # the kept side's folds run on the same spread of the scan as the
+    # certificate's (one exchange, reused)
+    kept = _probe_scores(spread(raw), queries, cands).where(
+        F.col("cosine") >= RANGE_TAU
+    )
+    # exact full-corpus range set — the in-plan completeness certificate
     exact = (
         _probe_scores(raw, queries)
         .where(F.col("cosine") >= RANGE_TAU)
@@ -4812,9 +4779,7 @@ def emb_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     cells = (
-        t.embeddings.repartition(
-            spark.sparkContext.defaultParallelism, "vec_id"
-        )
+        spread(t.embeddings, "vec_id")
         .select(
             F.explode(
                 F.expr(
@@ -5115,13 +5080,9 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis time, a broadcast join plans as BroadcastNestedLoopJoin);
     the projection itself is {RP_DIM} zip_with DECIMAL folds in one
     narrow codegen projection — a per-row map, embarrassingly parallel.
-    ONE spreading exchange precedes it (``_signed_dots``'s
-    repartition): the fixture corpus arrives in
-    a handful of files and the folds are CPU-bound, so without the
-    spread the whole projection runs on a few cores (the same AQE/
-    few-input-splits trap as sim_knn_graph_ivf's scoring stage).  On a
-    100 TB corpus already split across thousands of files the exchange
-    is unnecessary — drop it and the projection is fully narrow.
+    ``_signed_dots`` spreads the corpus first (the fixture corpus is one
+    split); on a corpus already split across the cores ``spread`` adds
+    no exchange and the projection is fully narrow.
     """
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import Tables
+from kachess_spark.catalog import Tables, spread
 from kachess_spark.registry import query
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
@@ -269,8 +269,7 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + per-lang top-k window (tiny groups)."""
     t = Tables(spark, sf_dir)
     words = (
-        t.documents.select("doc_id", "lang", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        spread(t.documents.select("doc_id", "lang", "text"), "doc_id")
         .select(
             "lang",
             F.expr(
@@ -389,8 +388,7 @@ def _doc_words(docs: DataFrame) -> DataFrame:
     Spread before the CPU-bound split and checkpoint-barriered before
     any explode (the pushdown trap — see dedup._with_shingles)."""
     return (
-        docs.select("doc_id", "text")
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        spread(docs.select("doc_id", "text"), "doc_id")
         .select(
             "doc_id",
             F.expr(
@@ -865,9 +863,7 @@ def text_destutter_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "filter(split(lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '')), ' '),"
         " w -> w != '')"
     )
-    d = t.documents.select("doc_id", words.alias("words")).repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread(t.documents.select("doc_id", words.alias("words")), "doc_id")
     cleaned = F.expr(
         "filter(words, (w, i) -> i = 0 OR NOT (w <=> element_at(words, i)))"
     )
@@ -1038,9 +1034,7 @@ def text_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     freq = (
-        t.documents.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        spread(t.documents, "doc_id")
         .select("doc_id", F.explode(F.split("text", "")).alias("ch"))
         .groupBy("doc_id", "ch")
         .agg(F.count("*").alias("cnt"))
@@ -1254,9 +1248,7 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     return (
-        t.documents.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        spread(t.documents, "doc_id")
         .select("doc_id", "text")
         .mapInPandas(encode_batches, schema=out_schema)
         .orderBy("doc_id")
@@ -1362,9 +1354,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         " i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))"
     )
     sh = (
-        t.documents.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        spread(t.documents, "doc_id")
         .select("doc_id", F.expr(ws_expr).alias("ws"))
         .where(F.size("ws") >= 3)
         .select("doc_id", F.explode(F.expr(sh_expr)).alias("shingle"))

@@ -39,6 +39,10 @@ that owns it:
 The PQ trainer runs one ``_lloyd`` over all subspaces, so no per-subspace
 split (``_pq_subspaces``) may come back.
 
+Partition width has one owner: ``defaultParallelism`` and
+``getNumPartitions`` appear as code only in ``catalog.py`` (``spread`` and
+the sizing rules), so no call site sizes its own exchange.
+
 The texts the owners build are pinned too (a changed text would change
 every plan or oracle built on it)."""
 
@@ -70,6 +74,7 @@ _NANOS_AS_LONG = re.compile(r"nanosAsLong")
 _AWAIT = re.compile(r"awaitTermination\(")
 _HOUR_BOUND = re.compile(r'F\.expr\("INTERVAL 1 HOUR"\)')
 _PQ_SUBSPACES = re.compile(r"\b_pq_subspaces\b")
+_CORE_COUNT = re.compile(r"\b(?:defaultParallelism|getNumPartitions)\b")
 
 _CLONE_WINDOW = 8
 # Deliberate twins: the sorted ("path::scope", "path::scope") pair of
@@ -298,3 +303,18 @@ def test_sig_bands_sql_follows_band_constants():
     assert all(len(key.split("|| '|' ||")) == BAND_SIZE for _, key in bands)
     sigs = sql[: sql.index("bands AS")]
     assert re.findall(r"AS (mh_\d+)", sigs) == cols
+
+
+def test_partition_width_read_only_in_catalog():
+    hits = []
+    for path in _py_files(_PKG):
+        rel = os.path.relpath(path, _PKG)
+        if rel == "catalog.py":
+            continue
+        with open(path) as f:
+            hits += [
+                f"{rel}:{lineno}"
+                for lineno, text in _code_lines(f.read())
+                if _CORE_COUNT.search(text)
+            ]
+    assert hits == [], f"size the exchange with catalog.spread: {hits}"

@@ -1380,3 +1380,37 @@ def test_serve_incremental_stages_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in rplan
     assert "BroadcastNestedLoopJoin" not in rplan
     assert "EvalPython" not in rplan
+
+
+def test_spread_gate(spark, sf_dir, tmp_path):
+    """catalog.spread: a one-file scan gets ONE cores-wide exchange; a
+    scan already split at least once per core comes back unchanged; a
+    frame whose plan holds an exchange is spread without reading its
+    split count, so no call starts a Spark job."""
+    import re
+
+    from kachess_spark.catalog import spread, table_path
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    docs = spark.read.parquet(table_path(sf_dir, "documents"))
+    wide_dir = str(tmp_path / "wide")
+    docs.repartition(cores).write.parquet(wide_dir)
+    wide = spark.read.parquet(wide_dir)
+    grouped = docs.groupBy("lang").count()
+
+    before = job_ids()
+    one_split = spread(docs, "doc_id")
+    unchanged = spread(wide, "doc_id")
+    shuffled = spread(grouped)
+    assert job_ids() == before
+
+    exchanges = re.findall(r"Exchange (\w+)\(.*?(\d+)\)", _plan(one_split))
+    assert exchanges == [("hashpartitioning", str(cores))]
+    assert unchanged is wide
+    assert f"RoundRobinPartitioning({cores})" in _plan(shuffled)
