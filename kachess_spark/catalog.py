@@ -167,6 +167,26 @@ def _kernel_spread(spark, cands: DataFrame, n_pairs: int) -> DataFrame:
     return cands.repartition(width, "src", "dst")
 
 
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df`` cut from its plan: the one place a plan is truncated.
+
+    A barrier is kept for one of three reasons, named in a comment at
+    each call: a loop (an iterative plan would grow by a round each
+    pass), reuse (one materialization for two or more consumers), or a
+    boundary (a job boundary that a later stage's sizing, a conf
+    window or an optimizer trap such as the explode pushdown needs).
+
+    With a checkpoint dir set on the session's context (Spark's own
+    ``setCheckpointDir`` / deployment setting) the cut is a reliable
+    ``checkpoint`` whose blocks outlive an executor; otherwise it is a
+    ``localCheckpoint`` in executor block storage, which loses the
+    query with the executor.  Both keep the output exprIds and scan as
+    ``ExistingRDD``; ``eager`` runs the job at the call."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
 # Session-scoped DataFrame cache: spark.read.parquet costs a file
 # listing + schema RPC per call, and every query invocation paid it
 # again for every table it touches (~50-150 ms each — measured as a

@@ -8,9 +8,9 @@ tables).
 
 Both the full closure and the seeded lookups first make one bounded
 probe of the raw edges (``src, dst`` only, at most SMALL_GRAPH_EDGES + 1
-rows collected).  A metadata-sized edge frame is walked on the driver;
-duplicate edges and self-loops change no BFS result, so the probe runs
-no ``distinct`` and no shuffle.
+rows collected as one Arrow table).  A metadata-sized edge frame is
+walked on the driver; duplicate edges and self-loops change no BFS
+result, so the probe runs no ``distinct`` and no shuffle.
 
 At enterprise scale the edge set is the one lineage artifact that is
 data-sized (10⁶–10⁸ edges), so the full closure runs as an iterative
@@ -21,8 +21,8 @@ this distributed branch drops self-loops and duplicate edges
 * each round joins the frontier to the edge table on ``_src``; every
   round is a separate action over a fresh plan, so the edge table's
   ``distinct`` and ``repartition`` exchanges are re-run each round;
-* ``storageLevel``/localCheckpoint truncates the logical plan per round so
-  the lineage of a 20-hop graph doesn't build a 20-deep plan;
+* a ``catalog.barrier`` truncates the logical plan per round so the
+  lineage of a 20-hop graph doesn't build a 20-deep plan;
 * convergence by empty-frontier count (an AQE-sized count, cheap);
 * ``max_hops`` caps pathological cycles (self-referencing scripts).
 
@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import local_frame
+from kachess_spark.catalog import barrier, local_frame
 
 
 # below this many edges the graph is metadata-sized: a driver-side BFS
@@ -118,10 +118,14 @@ def _closure_bfs_local(
 
 
 def _collect_small(pairs: DataFrame) -> list | None:
-    """The rows of ``pairs`` if there are at most SMALL_GRAPH_EDGES of
-    them (one bounded collect), else None."""
-    sample = pairs.limit(SMALL_GRAPH_EDGES + 1).collect()
-    return sample if len(sample) <= SMALL_GRAPH_EDGES else None
+    """The (src, dst) tuples of the two-column ``pairs`` if there are at
+    most SMALL_GRAPH_EDGES of them (one bounded Arrow collect), else
+    None: an over-size probe builds no Python rows.  The probe reads one
+    partition, so its limit gathers no rows through a shuffle."""
+    table = pairs.coalesce(1).limit(SMALL_GRAPH_EDGES + 1).toArrow()
+    if table.num_rows > SMALL_GRAPH_EDGES:
+        return None
+    return list(zip(*(col.to_pylist() for col in table.columns)))
 
 
 def _edge_pairs(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -170,10 +174,12 @@ def _semi_naive(
             on=["ancestor_id", "descendant_id"],
             how="left_anti",
         ).dropDuplicates(["ancestor_id", "descendant_id"])
-        new_pairs = new_pairs.localCheckpoint(eager=True)  # truncate plan
+        # barrier: loop — truncates the plan each round
+        new_pairs = barrier(new_pairs, eager=True)
         if new_pairs.isEmpty():
             break
-        closure = closure.unionByName(new_pairs).localCheckpoint(eager=True)
+        # barrier: loop — the closure grows by a union each round
+        closure = barrier(closure.unionByName(new_pairs), eager=True)
         frontier = new_pairs
     return closure
 

@@ -12,7 +12,7 @@ Scale design mirrors lineage/closure.py's hybrid:
   per-iteration Spark job overhead would dominate;
 * larger graphs run iterative min-label propagation: each round is ONE
   shuffle (neighbor-min aggregation) on a partitioning reused across
-  rounds, localCheckpoint truncates the growing plan, and convergence is
+  rounds, a ``catalog.barrier`` truncates the growing plan, and convergence is
   an AQE-sized count.  Rounds needed = graph diameter (near-dup clusters
   are shallow — a handful of rounds in practice).
 """
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kachess_spark.catalog import barrier
 
 SMALL_GRAPH_EDGES = 50_000
 
@@ -68,17 +70,19 @@ def connected_components(
             edges.sparkSession, [(r[0], r[1]) for r in sample]
         )
 
-    sym = (
+    # barrier: reuse — every round joins the symmetric edges
+    sym = barrier(
         base.unionByName(base.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-        .localCheckpoint(eager=True)
+        .repartition("u"),
+        eager=True,
     )
-    labels = (
+    # barrier: loop — the labels are the round state
+    labels = barrier(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component_id", F.col("node"))
-        .repartition("node")
-        .localCheckpoint(eager=True)
+        .repartition("node"),
+        eager=True,
     )
     for _ in range(max_rounds):
         nbr_min = (
@@ -86,7 +90,8 @@ def connected_components(
             .groupBy(sym["u"].alias("node"))
             .agg(F.min("component_id").alias("nbr_min"))
         )
-        new_labels = (
+        # barrier: loop — truncates the plan each round
+        new_labels = barrier(
             labels.join(nbr_min, on="node", how="left")
             .select(
                 "node",
@@ -94,8 +99,8 @@ def connected_components(
                     F.col("component_id"), F.coalesce("nbr_min", "component_id")
                 ).alias("component_id"),
             )
-            .repartition("node")
-            .localCheckpoint(eager=True)
+            .repartition("node"),
+            eager=True,
         )
         changed = (
             new_labels.alias("n")

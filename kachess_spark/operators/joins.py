@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from kachess_spark.catalog import Tables
+from kachess_spark.catalog import Tables, barrier
 from kachess_spark.operators._util import oracle_dsum, dsum
 from kachess_spark.registry import query
 
@@ -467,10 +467,10 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in _SKEW_CONFS.items():
         spark.conf.set(k, v)
     try:
-        # materialize INSIDE the conf window (the plan is lazy; without
-        # this the finally-block restores defaults before execution and
-        # the splitter never engages)
-        return skew_join_build(spark, sf_dir).localCheckpoint(eager=True)
+        # barrier: boundary — run INSIDE the conf window (the plan is
+        # lazy; without this the finally-block restores defaults before
+        # execution and the splitter never engages)
+        return barrier(skew_join_build(spark, sf_dir), eager=True)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
@@ -597,7 +597,8 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in _BLOOM_CONFS.items():
         spark.conf.set(k, v)
     try:
-        return bloom_join_build(spark, sf_dir).localCheckpoint(eager=True)
+        # barrier: boundary — run inside the conf window
+        return barrier(bloom_join_build(spark, sf_dir), eager=True)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
@@ -715,7 +716,8 @@ def join_hint_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        return hint_join_build(spark, sf_dir).localCheckpoint(eager=True)
+        # barrier: boundary — run inside the conf window
+        return barrier(hint_join_build(spark, sf_dir), eager=True)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 

@@ -14,7 +14,7 @@ oracle unrolls the same 10 iterations as chained CTEs.
 
 Scale design: each iteration is ONE shuffle (contribution sum keyed on
 dst) plus a broadcast of the rank vector when #nodes is dim-sized; the
-rank state is localCheckpoint-truncated per round so the plan does not
+rank state is barrier-truncated per round so the plan does not
 grow with iteration count (the lineage/closure.py lesson).  For
 web-scale graphs the same loop holds with the rank vector hash-joined
 instead of broadcast — the code path is identical, only Catalyst's
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from kachess_spark.catalog import Tables
+from kachess_spark.catalog import Tables, barrier
 from kachess_spark.registry import query
 
 SCALE = 10**12
@@ -43,12 +43,13 @@ def pagerank_integer(
     """(node) × (src, dst) → (node, rank) after ``iterations`` rounds of
     damped integer PageRank.  Dangling mass is dropped (documented
     behavior, identical in the oracle)."""
-    # materialize the (possibly expensive) edge derivation ONCE — the
-    # loop references `edges` every iteration and would otherwise
-    # re-execute its upstream joins 10× (measured 8.8s → 3.7s at sf0.1)
-    edges = edges.localCheckpoint(eager=True)
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("od")).localCheckpoint(
-        eager=True
+    # barrier: reuse — materialize the (possibly expensive) edge
+    # derivation ONCE: the loop references `edges` every iteration and
+    # would otherwise re-execute its upstream joins 10× (measured 8.8s →
+    # 3.7s at sf0.1); the out-degrees are read every iteration too
+    edges = barrier(edges, eager=True)
+    outdeg = barrier(
+        edges.groupBy("src").agg(F.count("*").alias("od")), eager=True
     )
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     for _ in range(iterations):
@@ -59,7 +60,8 @@ def pagerank_integer(
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        ranks = (
+        # barrier: loop — the rank state is truncated each round
+        ranks = barrier(
             nodes.join(broadcast(contrib), nodes.node == contrib.dst, "left")
             .select(
                 "node",
@@ -67,8 +69,8 @@ def pagerank_integer(
                     F.lit(BASE)
                     + F.expr("85 * coalesce(contrib, 0L) div 100")
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return ranks
 
@@ -191,7 +193,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ nations² rows).
     """
     t = Tables(spark, sf_dir)
-    trade = (
+    # barrier: reuse — the triangle join reads the trade edges three times
+    trade = barrier(
         t.lineitem.select("l_orderkey", "l_suppkey")
         .join(t.orders.select("o_orderkey", "o_custkey"),
               F.col("l_orderkey") == F.col("o_orderkey"))
@@ -205,7 +208,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("s_nationkey", "c_nationkey").cast("long").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     e1, e2, e3 = trade.alias("e1"), trade.alias("e2"), trade.alias("e3")
     tri = (
@@ -297,12 +299,12 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the customer universe instead so the oracle stays cheap.
     """
     t = Tables(spark, sf_dir)
-    edges = (
+    # barrier: reuse — the degrees and both wedge sides read the edges
+    edges = barrier(
         t.orders.where(F.col("o_custkey") < LINKPRED_MAX_CUST)
         .join(t.lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = edges.groupBy("cust").agg(F.count("*").alias("d"))
     a, b = edges.alias("a"), edges.alias("b")

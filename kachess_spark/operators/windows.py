@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import Tables, register_views
+from kachess_spark.catalog import Tables, barrier, register_views
 from kachess_spark.operators._util import DEC
 from kachess_spark.registry import query
 
@@ -591,7 +591,8 @@ def win_funnel_time_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(1, Window.unboundedFollowing)
     )
-    nxt = ev.select(
+    # barrier: reuse — the signup and click sides both read the window
+    nxt = barrier(ev.select(
         "user_id",
         "event_type",
         "ts",
@@ -599,7 +600,7 @@ def win_funnel_time_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
           .alias("next_click"),
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).over(w)
           .alias("next_purchase"),
-    ).localCheckpoint(eager=False)
+    ))
     s = nxt.where(F.col("event_type") == "signup").select(
         "user_id",
         F.col("ts").alias("t_signup"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import Tables, scaled_partitions, spread
+from kachess_spark.catalog import Tables, barrier, scaled_partitions, spread
 from kachess_spark.registry import query
 
 N_HASHES = 6  # minhash signature length
@@ -59,9 +59,9 @@ def _with_shingles(docs: DataFrame, *keep: str, **block: Column) -> DataFrame:
     size(shingles) > 0` predicates that Catalyst pushes into a
     non-codegen Filter, re-evaluating the whole interpreted lambda chain
     ~10× per row (observed 30s for a 0.5s explode).  Materializing the
-    shingle arrays once makes every consumer read plain vectors.  At
-    cluster scale persist(DISK_ONLY) plays the same role."""
-    return (
+    shingle arrays once makes every consumer read plain vectors."""
+    # barrier: boundary — the explode-pushdown trap (see above)
+    return barrier(
         spread(docs.select("doc_id", *keep, "text"), "doc_id")
         .select("doc_id", *keep, F.expr(_WORDS_EXPR).alias("words"))
         .where(F.size("words") >= 3)
@@ -71,7 +71,6 @@ def _with_shingles(docs: DataFrame, *keep: str, **block: Column) -> DataFrame:
             *(c.alias(name) for name, c in block.items()),
             F.expr(_SHINGLES_EXPR).alias("shingles"),
         )
-        .localCheckpoint(eager=False)
     )
 
 
@@ -83,13 +82,14 @@ def _shingle_postings(
     n_sh, shingle), checkpointed too, since the self-join reads them
     twice."""
     sh = _with_shingles(docs, "lang", **block)
-    expl = sh.select(
+    # barrier: reuse — the self-join reads the postings twice
+    expl = barrier(sh.select(
         "doc_id",
         "lang",
         *block,
         F.size("shingles").alias("n_sh"),
         F.explode("shingles").alias("shingle"),
-    ).localCheckpoint(eager=False)
+    ))
     return sh, expl
 
 
@@ -276,8 +276,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The signature pipeline (regex → shingle → md5) runs ONCE: bands come
     from a posexplode (not a union of selects, which re-derives the
     signature per branch) and the banded frame is materialized before the
-    self-join so neither side recomputes it (localCheckpoint here;
-    persist(DISK_ONLY) at cluster scale — same intent).
+    self-join so neither side recomputes it (a ``catalog.barrier``).
     """
     t = Tables(spark, sf_dir)
     return _lsh_candidates(_with_shingles(t.documents))
@@ -288,7 +287,8 @@ def _lsh_candidates(sh: DataFrame) -> DataFrame:
     shared by dedup_minhash_lsh and the verified chain so callers that
     already hold a materialized shingle frame don't recompute it."""
     sigs = sh.select("doc_id", *_minhash_cols())
-    return _band_pairs(_band_rows(sigs).localCheckpoint(eager=False))
+    # barrier: reuse — both sides of the band self-join
+    return _band_pairs(barrier(_band_rows(sigs)))
 
 
 @query(
@@ -435,10 +435,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     sh = simhash(t.documents)
-    # materialize the banded signatures before the self-join — otherwise
-    # BOTH join sides recompute the full shingle→md5→32-vote pipeline
-    # (localCheckpoint here; persist(DISK_ONLY) at cluster scale)
-    bands = (
+    # barrier: reuse — materialize the banded signatures before the
+    # self-join; otherwise BOTH join sides recompute the full
+    # shingle→md5→32-vote pipeline
+    bands = barrier(
         sh.select(
             "doc_id",
             "simhash",
@@ -448,7 +448,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "band_val",
             F.expr("(simhash >> (8 * k)) & 255"),
         )
-        .localCheckpoint(eager=False)
     )
     return (
         _hamming_pairs(bands, "simhash", SIMHASH_MAX_HAMMING)
@@ -761,8 +760,10 @@ def _lsh_pairs_and_universe(
     # ONE signature pass: universe and LSH bands both derive from sigs
     # (running dedup_minhash_lsh + a separate shingle pass would run the
     # regex/shingle/md5 chain twice — measured 10.3s -> ~6s at sf0.1)
-    sigs = minhash_signature(t.documents).localCheckpoint(eager=False)
-    pairs = _band_pairs(_band_rows(sigs).localCheckpoint(eager=False))
+    # barrier: reuse — sigs feeds the universe and the bands, and the band
+    # rows feed both sides of the self-join
+    sigs = barrier(minhash_signature(t.documents))
+    pairs = _band_pairs(barrier(_band_rows(sigs)))
     return pairs, sigs.select("doc_id")
 
 
@@ -805,9 +806,9 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_bands.write.mode("overwrite").partitionBy("band").parquet(store)
 
     new_docs = t.documents.where(F.col("doc_id") % 2 == 1)
-    new_bands = _band_rows(minhash_signature(new_docs)).localCheckpoint(
-        eager=False
-    )
+    # barrier: boundary — the probe join reads materialized band rows
+    # (an A/B without this cut read slower at 4 cores)
+    new_bands = barrier(_band_rows(minhash_signature(new_docs)))
     # explicit schema: an EMPTY historical corpus writes no partition
     # directories, and the probe against an empty index must return a
     # clean 0-row result, not an inference AnalysisException
@@ -1549,7 +1550,8 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned = sem_assign_scaled(t.embeddings, sem_k_unbounded(n))
     else:
         assigned = sem_assign(t.embeddings, sem_k(n))
-    return _sem_keep_tail(assigned.localCheckpoint(eager=False))
+    # barrier: reuse — the in-cluster self-join and the keep join read it
+    return _sem_keep_tail(barrier(assigned))
 
 
 def _sem_keep_tail(assigned: DataFrame) -> DataFrame:
@@ -1616,9 +1618,8 @@ def dedup_semantic_cluster_scaled(
     exercised."""
     t = Tables(spark, sf_dir)
     k_fine = sem_k_unbounded(t.embeddings.count())
-    assigned = sem_assign_scaled(t.embeddings, k_fine).localCheckpoint(
-        eager=False
-    )
+    # barrier: reuse — the in-cluster self-join and the keep join read it
+    assigned = barrier(sem_assign_scaled(t.embeddings, k_fine))
     return _sem_keep_tail(assigned)
 
 
@@ -1677,9 +1678,10 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = Tables(spark, sf_dir)
     # ONE shingle materialization feeds both the LSH candidate pass and
-    # the exact verify (_with_shingles localCheckpoints internally)
+    # the exact verify (_with_shingles ends in a barrier)
     sh = _with_shingles(t.documents)
-    cand = _lsh_candidates(sh).localCheckpoint(eager=False)
+    # barrier: reuse — the doc filter and the verify join both read cand
+    cand = barrier(_lsh_candidates(sh))
     docs_in_cand = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
@@ -1775,13 +1777,13 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     for candidates); the hit count is one more equality join on the
     pair key.
     """
-    truth = (
+    # barrier: reuse — truth and cand each feed the hit join and a count
+    truth = barrier(
         dedup_ngram_jaccard(spark, sf_dir)
         .where(F.col("jaccard") >= MINHASH_VERIFY_TAU)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
     )
-    cand = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=False)
+    cand = barrier(dedup_minhash_lsh(spark, sf_dir))
     hit = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
     n_truth = truth.count()
     n_cand = cand.count()
@@ -2030,16 +2032,16 @@ def dedup_substring_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("run_len"))
     )
     try:
-        # pair-level output (tiny at any corpus size relative to the
-        # postings): materialize on the executors, then release the
-        # postings cache — no InMemoryRelation outlives the call
-        out = (
+        # barrier: boundary — pair-level output (tiny at any corpus size
+        # relative to the postings): materialize on the executors, then
+        # release the postings cache — no InMemoryRelation outlives the call
+        out = barrier(
             runs.groupBy(
                 F.col("da").alias("doc_a"), F.col("db").alias("doc_b")
             )
             .agg(F.max("run_len").alias("max_run"))
-            .where(F.col("max_run") >= SUBRUN_MIN)
-            .localCheckpoint(eager=True)
+            .where(F.col("max_run") >= SUBRUN_MIN),
+            eager=True,
         )
     finally:
         posts.unpersist()
@@ -2157,9 +2159,10 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     frame, posts = _substring_spans_frame(spark, sf_dir)
     try:
-        # span-level output (bounded by total document length, not by
-        # pair volume): materialize, then release the postings cache
-        out = frame.localCheckpoint(eager=True)
+        # barrier: boundary — span-level output (bounded by total document
+        # length, not by pair volume): materialize, then release the
+        # postings cache
+        out = barrier(frame, eager=True)
     finally:
         posts.unpersist()
     return out.orderBy("doc_id", "span_start")
@@ -2213,7 +2216,9 @@ def dedup_cut_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never read it (round-13: measured +0.8 s on the bench's count())
     frame, posts = _substring_spans_frame(spark, sf_dir)
     try:
-        span_rows = frame.localCheckpoint(eager=True)
+        # barrier: boundary — materialize before the postings cache is
+        # released
+        span_rows = barrier(frame, eager=True)
     finally:
         posts.unpersist()
     spans = span_rows.groupBy("doc_id").agg(

@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kachess_spark.catalog import Tables, spread
+from kachess_spark.catalog import Tables, barrier, spread
 from kachess_spark.pipeline.dedup import _hamming_pairs
 from kachess_spark.registry import query
 
@@ -892,7 +892,9 @@ def _image_hash_bands(
     g = ahash_groups(imgs.count())
     imgs = imgs.withColumn("n_groups", F.lit(g).cast("long"))
     encoded = imgs.mapInPandas(_ahash_encode_batches, schema=_PNG_ENCODE_SCHEMA)
-    hashed = encoded.mapInPandas(
+    # barrier: reuse — the Python hash kernel runs once for both sides of
+    # the band self-join
+    hashed = barrier(encoded.mapInPandas(
         kernel,
         schema=StructType(
             [
@@ -900,7 +902,7 @@ def _image_hash_bands(
                 StructField(sig, LongType()),
             ]
         ),
-    ).localCheckpoint(eager=False)
+    ))
     return hashed.select(
         "doc_id",
         sig,

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from kachess_spark.catalog import Tables
+from kachess_spark.catalog import Tables, barrier
 from kachess_spark.registry import query
 
 # ------------------------------------------------------------- BM25
@@ -327,7 +327,7 @@ def text_tfidf_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks the postings row to three int64s, and makes norms and dots
     EXACT integer sums — the scale factor cancels in the cosine ratio.
     The two stage caches are released before returning; the pair list
-    is materialized distributed (executor-side localCheckpoint), never
+    is materialized distributed (an executor-side barrier), never
     on the driver — a 100 TB deployment would swap the checkpoint for
     a direct sink write, leaving the rest of the plan unchanged.
     """
@@ -442,15 +442,13 @@ def text_tfidf_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (it doubled the pair-agg shuffle when measured) — and the
         # driver compare is order-insensitive, so none is needed.  No
         # driver collect either (a duplicate-heavy corpus makes the
-        # pair list near-quadratic — driver OOM at scale): the eager
-        # localCheckpoint materializes the pairs ON THE EXECUTORS,
-        # truncating lineage so the two stage caches can release in
-        # the finally without triggering a recompute of the unbarriered
-        # plan.  sortWithinPartitions gives deterministic display order
-        # at zero shuffle cost.
-        return out.sortWithinPartitions("doc_a", "doc_b").localCheckpoint(
-            eager=True
-        )
+        # pair list near-quadratic — driver OOM at scale).
+        # barrier: boundary — the eager barrier materializes the pairs ON
+        # THE EXECUTORS, truncating lineage so the two stage caches can
+        # release in the finally without triggering a recompute of the
+        # unbarriered plan.  sortWithinPartitions gives deterministic
+        # display order at zero shuffle cost.
+        return barrier(out.sortWithinPartitions("doc_a", "doc_b"), eager=True)
     finally:
         sh.unpersist()
         if kept is not None:

@@ -24,7 +24,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
 
-from kachess_spark.catalog import Tables, _kernel_spread, partitions_for_rows, spread
+from kachess_spark.catalog import (
+    Tables,
+    _kernel_spread,
+    barrier,
+    partitions_for_rows,
+    spread,
+)
 from kachess_spark.registry import query
 
 QUERY_IDS = (1, 2, 3)
@@ -198,12 +204,13 @@ def with_recall(
     semi-join on ≤ #queries·k rows — negligible against candidate
     generation at any corpus size.
     """
-    # result is <= #queries*k rows but its SUBTREE is the whole serving
-    # chain, and it is consumed twice (hits + the final join) — without
-    # a checkpoint every certified serving plan doubles (round-13 plan
-    # audit: sim_ivf_stored_topk carried 72 MapInArrow nodes / ~2300
-    # plan nodes from exactly this class of reuse-duplication)
-    result = result.localCheckpoint(eager=False)
+    # barrier: reuse — result is <= #queries*k rows but its SUBTREE is
+    # the whole serving chain, and it is consumed twice (hits + the
+    # final join) — without a checkpoint every certified serving plan
+    # doubles (round-13 plan audit: sim_ivf_stored_topk carried 72
+    # MapInArrow nodes / ~2300 plan nodes from exactly this class of
+    # reuse-duplication)
+    result = barrier(result)
     probes = emb.where(F.col("vec_id").isin(*probe_ids))
     exact = _knn_topk(
         _probe_scores(emb, probes, metric=metric), k, asc=metric != "cosine"
@@ -378,10 +385,10 @@ def banded_hyperplane_buckets(
     signs = [
         _plane_signs(b, p, dim) for b in range(n_bands) for p in range(n_planes)
     ]
-    # barrier: without it CollapseProject inlines the 64-fold dot
-    # expression into every element_at() below — 64 recomputations of
-    # the whole fold per row
-    sig = _signed_dots(df, signs).localCheckpoint(eager=False)
+    # barrier: boundary — without it CollapseProject inlines the 64-fold
+    # dot expression into every element_at() below — 64 recomputations
+    # of the whole fold per row
+    sig = barrier(_signed_dots(df, signs))
     bucket_terms = " + ".join(
         f"(CASE WHEN element_at(dots, b * {n_planes} + {p} + 1) > 0"
         f" THEN {1 << p} ELSE 0 END)"
@@ -413,16 +420,14 @@ def sim_ann_lsh(
     re-rank touches only the deduped candidate union."""
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
-    # materialize: the bucket table feeds BOTH the query filter and the
-    # probe join — without the barrier the 64-dot projection runs twice.
-    # localCheckpoint, NOT persist(): this operator returns a lazy plan,
+    # barrier: reuse — the bucket table feeds BOTH the query filter and
+    # the probe join; without it the 64-dot projection runs twice.
+    # A barrier, NOT persist(): this operator returns a lazy plan,
     # so a persist() here could never be unpersisted and its
     # InMemoryRelation would outlive the call for the whole session
     # (checkpoint blocks are GC-released with the plan); the ~0.3 s of
     # eager planning is the price of not leaking executor memory.
-    buckets = banded_hyperplane_buckets(emb).localCheckpoint(
-        eager=False
-    )
+    buckets = barrier(banded_hyperplane_buckets(emb))
     queries = buckets.where(F.col("vid").isin(*probe_ids)).select(
         F.col("vid").alias("qid"), "band", "bucket"
     )
@@ -463,7 +468,7 @@ def _emb_with_norms(emb: DataFrame) -> DataFrame:
     squared norms appended by the Arrow kernel — the scoring input
     every ``_exact_cosine_edges`` call joins against.  Iterative
     chains (beam walks, refine rounds, incremental maintenance)
-    compute this ONCE, localCheckpoint it, and pass it via ``embn``:
+    compute this ONCE, put it behind a barrier, and pass it via ``embn``:
     re-deriving it per scoring call re-pays a Python-boundary stage
     each time (measured: 17.6 s -> 12.0 s on the 8-score-call
     serve-incremental chain at sf0.1)."""
@@ -552,9 +557,9 @@ def _exact_cosine_edges(
     )
     if not mirror:
         return scored
-    # one materialization, two consumers (a plan-level union would
-    # re-run the whole scoring subtree per branch)
-    scored = scored.localCheckpoint(eager=False)
+    # barrier: reuse — one materialization, two consumers (a plan-level
+    # union would re-run the whole scoring subtree per branch)
+    scored = barrier(scored)
     return scored.unionByName(
         scored.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine")
     )
@@ -589,9 +594,10 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
     n = emb.count()
-    buckets = banded_hyperplane_buckets(
+    # barrier: reuse — both sides of the bucket self-join
+    buckets = barrier(banded_hyperplane_buckets(
         emb, ann_n_bands(n), knn_n_planes(n)
-    ).localCheckpoint(eager=False)
+    ))
     a = buckets.select(
         F.col("vid").alias("src"), "band", "bucket"
     )
@@ -663,7 +669,8 @@ def sim_knn_graph_ivf(
         index_dir = build_ivf_index(spark, sf_dir)
     emb = Tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     cands, n = _ivf_graph_candidates(spark, emb, index_dir)
-    embn = _emb_with_norms(emb).localCheckpoint(eager=False)
+    # barrier: reuse — the norm frame feeds every scoring call
+    embn = barrier(_emb_with_norms(emb))
     topk = _knn_topk(_exact_cosine_edges(emb, cands, embn=embn))
     for _ in range(refine):
         topk = _knn_refine_round(spark, emb, topk, embn=embn, n=n)
@@ -744,10 +751,10 @@ def _undirected(edges: DataFrame) -> DataFrame:
     one materialization for its several consumers and the lineage flat
     across rounds."""
     e = edges.select("src", "dst")
-    return (
+    # barrier: reuse — every hop, refine and settle round expands over it
+    return barrier(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
 
@@ -907,7 +914,8 @@ def sim_knn_graph_prescreened(
             partitions_for_rows(spark, n * KNN_PRESCREEN_C), "src", "dst"
         )
     )
-    embn = _emb_with_norms(emb).localCheckpoint(eager=False)
+    # barrier: reuse — the norm frame feeds every scoring call
+    embn = barrier(_emb_with_norms(emb))
     topk = _knn_topk(_exact_cosine_edges(emb, short, embn=embn))
     for _ in range(KNN_GRAPH_REFINE):
         topk = _knn_refine_round(spark, emb, topk, embn=embn, n=n)
@@ -1096,16 +1104,20 @@ def _knn_descent_graph(
     # JVM-fold scoring stage; the Arrow kernel rides the distinct's own
     # AQE-sized exchange (bytes-proportional at any corpus size)
     cands = _md5_band_pairs(emb, n, "knnd").where(F.col("src") < F.col("dst"))
-    embn = _emb_with_norms(emb).localCheckpoint(eager=False)
+    # barrier: reuse — the norm frame feeds every scoring call
+    embn = barrier(_emb_with_norms(emb))
     topk = _knn_topk(
         _exact_cosine_edges(emb, cands, mirror=True, embn=embn),
         k=KNN_DESCENT_K,
     )
-    topk = topk.localCheckpoint(eager=False)
+    # barrier: reuse — the first round's _undirected reads the start
+    # state once per union branch
+    topk = barrier(topk)
     for r in range(rounds):
-        nxt = _knn_refine_round(
+        # barrier: loop — each round's edge set
+        nxt = barrier(_knn_refine_round(
             spark, emb, topk, k=KNN_DESCENT_K, embn=embn, n=n
-        ).localCheckpoint(eager=False)
+        ))
         # zero-update early stop: the edge SET fixed-point implies all
         # later rounds are identical (scores are deterministic functions
         # of the set), so stopping here equals the full unroll.  The
@@ -1310,9 +1322,8 @@ def _beam_walk(
             .select("src", "dst")
         )
         neigh = front.join(nbrs, "dst").select("src", F.col("nxt").alias("dst"))
-        scored = score(front.unionByName(neigh).distinct()).localCheckpoint(
-            eager=False
-        )
+        # barrier: loop — each hop's scored frontier
+        scored = barrier(score(front.unionByName(neigh).distinct()))
         seen = seen.unionByName(scored)
     return seen.distinct()
 
@@ -1365,8 +1376,9 @@ def sim_graph_stored_topk(
         F.col("vec_id").alias("src")
     )
 
-    # one norm pass for the walk's 1 + {GS_HOPS} scoring calls
-    embn = _emb_with_norms(emb).localCheckpoint(eager=False)
+    # barrier: reuse — one norm pass for the walk's 1 + {GS_HOPS}
+    # scoring calls
+    embn = barrier(_emb_with_norms(emb))
 
     def score(cands: DataFrame) -> DataFrame:
         return _exact_cosine_edges(
@@ -1374,7 +1386,8 @@ def sim_graph_stored_topk(
         )
 
     seen = _beam_walk(
-        score(queries.crossJoin(entries)).localCheckpoint(eager=False),
+        # barrier: reuse — the seed scores feed the first front and the seen set
+        barrier(score(queries.crossJoin(entries))),
         und,
         score,
         GS_HOPS,
@@ -1527,21 +1540,24 @@ def sim_knn_graph_incremental(
 
     # stale entries out, fresh delta signatures in — bucket space HELD
     # at the build-time schedule (meta), so unchanged signatures stand
-    sig_plus = banded_hyperplane_buckets(
+    # barrier: reuse — the delta signatures feed b2, the re-rank set and the
+    # new pairs
+    sig_plus = barrier(banded_hyperplane_buckets(
         plus_emb, bands, planes
-    ).localCheckpoint(eager=False)
+    ))
     b2 = b1.join(minus_ids, "vid", "left_anti").unionByName(sig_plus)
-    b2 = b2.localCheckpoint(eager=False)  # feeds probe + candidate sides
+    # barrier: reuse — feeds the probe and the candidate sides
+    b2 = barrier(b2)
 
     # FULL re-rank set: (a) sources that lost an edge, (b) delta nodes
-    full_set = (
+    # barrier: reuse — the probe and the new-pair anti join read it
+    full_set = barrier(
         g1.join(minus_ids.withColumnRenamed("vid", "dst"), "dst", "left_semi")
         .select(F.col("src").alias("vid"))
         .unionByName(sig_plus.select("vid"))
         .distinct()
         # only v2 members re-rank (a removed source's edges just drop)
         .join(emb2.select(F.col("vec_id").alias("vid")), "vid", "left_semi")
-        .localCheckpoint(eager=False)
     )
     probe = b2.join(full_set, "vid", "left_semi").select(
         F.col("vid").alias("src"), "band", "bucket"
@@ -1580,7 +1596,8 @@ def sim_knn_graph_incremental(
         .join(full_set.withColumnRenamed("vid", "src"), "src", "left_anti")
         .distinct()
     )
-    new_pairs = spread(new_pairs, "src", "dst").localCheckpoint(eager=False)
+    # barrier: reuse — the merge sources and the scoring read the new pairs
+    new_pairs = barrier(spread(new_pairs, "src", "dst"))
     merge_srcs = new_pairs.select(F.col("src").alias("vid")).distinct()
     merged = _knn_topk(
         _exact_cosine_edges(emb2, new_pairs, engine="jvm")
@@ -1643,28 +1660,25 @@ def _serve_incremental_working(
     )
 
     removed, edited, is_added, kept, added = _snapshot_v2_parts(emb)
-    emb2 = kept.unionByName(added).localCheckpoint(eager=False)
+    # barrier: reuse — the v2 norm frame and every scoring call read it
+    emb2 = barrier(kept.unionByName(added))
     minus_src = emb.where(removed | edited).select(
         F.col("vec_id").alias("src")
     )
     minus_dst = minus_src.withColumnRenamed("src", "dst")
     plus = kept.where(edited).unionByName(added)
 
-    # 1. SURVIVE — stored edges with both endpoints alive.  The
-    # src-alive filter is shared by surv and lost (round-14: factoring
-    # it drops one stored-graph scan + anti join from the plan; at
-    # 100 TB the stored graph is corpus-sized).
-    alive_src = g1.join(minus_src, "src", "left_anti").localCheckpoint(
-        eager=False
+    # 1. SURVIVE — stored edges with both endpoints alive.  One pass
+    # over the stored graph (corpus-sized at 100 TB) splits the
+    # src-alive edges into surv and lost by whether dst is gone.
+    # barrier: reuse — surv's three readers and lost read it
+    alive_src = barrier(
+        g1.join(minus_src, "src", "left_anti").join(
+            minus_dst.withColumn("gone", F.lit(True)), "dst", "left"
+        )
     )
-    surv = alive_src.join(minus_dst, "dst", "left_anti").localCheckpoint(
-        eager=False
-    )
-    lost = (
-        alive_src.join(minus_dst, "dst", "left_semi")
-        .select("src")
-        .distinct()
-    )
+    surv = alive_src.where(F.col("gone").isNull()).select(*g1.columns)
+    lost = alive_src.where(F.col("gone")).select("src").distinct()
 
     # 2. PLACE — beam walk over the surviving graph; counts are
     # bounded metadata actions (|survivors|, |delta|) that size the
@@ -1704,10 +1718,10 @@ def _serve_incremental_working(
         spark, n_plus * (2 * KNN_DESCENT_K) ** 2
     )
 
-    # hoist the v2 norm frame ONCE for the chain's ~8 scoring calls —
-    # re-deriving it per call re-pays a Python-boundary stage each time
-    # (measured at sf0.1: 17.6 s -> 12.0 s for the whole chain)
-    embn2 = _emb_with_norms(emb2).localCheckpoint(eager=False)
+    # barrier: reuse — hoist the v2 norm frame ONCE for the chain's ~8
+    # scoring calls; re-deriving it per call re-pays a Python-boundary
+    # stage each time (measured at sf0.1: 17.6 s -> 12.0 s for the chain)
+    embn2 = barrier(_emb_with_norms(emb2))
 
     def score(cands: DataFrame, widen: bool = False) -> DataFrame:
         c = cands.where(F.col("src") != F.col("dst"))
@@ -1716,13 +1730,15 @@ def _serve_incremental_working(
         return _exact_cosine_edges(emb2, c, embn=embn2)
 
     seeds = plus.select(F.col("vec_id").alias("src")).crossJoin(entries)
-    place = _beam_walk(
-        score(seeds, widen=True).localCheckpoint(eager=False),
+    # barrier: reuse — the seed scores feed the walk's first front and seen
+    # set; the placement feeds plus_lists and the mirror
+    place = barrier(_beam_walk(
+        barrier(score(seeds, widen=True)),
         und,
         score,
         INC_PLACE_HOPS,
         INC_PLACE_BEAM,
-    ).localCheckpoint(eager=False)
+    ))
     pp = score(_md5_band_pairs(plus, n_plus, "knndinc"))
     plus_lists = _knn_topk(
         place.unionByName(pp).distinct(), k=KNN_DESCENT_K
@@ -1733,10 +1749,9 @@ def _serve_incremental_working(
     mirror = place.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), "cosine"
     )
-    dirty_surv = (
-        lost.unionByName(mirror.select("src")).distinct().localCheckpoint(
-            eager=False
-        )
+    # barrier: reuse — reranked, clean and the settle set read it
+    dirty_surv = barrier(
+        lost.unionByName(mirror.select("src")).distinct()
     )
     reranked = _knn_topk(
         surv.join(dirty_surv, "src", "left_semi")
@@ -1746,10 +1761,10 @@ def _serve_incremental_working(
         k=KNN_DESCENT_K,
     )
     clean = surv.join(dirty_surv, "src", "left_anti")
-    g = (
+    # barrier: loop — the SETTLE rounds' start state
+    g = barrier(
         clean.unionByName(reranked)
         .unionByName(plus_lists)
-        .localCheckpoint(eager=False)
     )
 
     # 4. SETTLE — restricted descent rounds over the dirty set
@@ -1759,9 +1774,8 @@ def _serve_incremental_working(
     dirty = F.broadcast(dirty)
     for r in range(INC_REFINE_ROUNDS):
         cands = _hop_candidates(_undirected(g), dirty).distinct()
-        refined = _knn_topk(score(cands), k=KNN_DESCENT_K).localCheckpoint(
-            eager=False
-        )
+        # barrier: reuse — the next state and the fixed-point probe read it
+        refined = barrier(_knn_topk(score(cands), k=KNN_DESCENT_K))
         nxt = g.join(dirty, "src", "left_anti").unionByName(refined)
         # zero-update early stop: identical edge set -> every later
         # restricted round is an exact no-op (same argument as the
@@ -1773,7 +1787,8 @@ def _serve_incremental_working(
         ):
             g = nxt
             break
-        g = nxt.localCheckpoint(eager=False)
+        # barrier: loop — each SETTLE round's graph
+        g = barrier(nxt)
     return g
 
 
@@ -2111,18 +2126,20 @@ def _lloyd(emb: DataFrame, k: int, assign, iters: int) -> DataFrame:
 
     Scale shape per round: one assignment pass over the data + one
     (centroid, pos) aggregation — both shuffle-light; the centroid frame
-    is k rows and localCheckpointed so the loop never builds a
+    is k rows and behind a barrier so the loop never builds a
     rounds-deep plan.  Returns (vec_id=centroid id, embedding)."""
-    cent = (
+    # barrier: loop — the Lloyd rounds' start state (k rows)
+    cent = barrier(
         emb.orderBy("vec_id")
         .limit(k)
         .select(
             (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("vec_id"),
             "embedding",
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
-    d = _exploded(emb, "vid", "dv").localCheckpoint(eager=False)
+    # barrier: reuse — every round reads the exploded embeddings
+    d = barrier(_exploded(emb, "vid", "dv"))
     for _ in range(iters):
         a = assign(emb, cent)
         key = a.columns[1]  # cell (IVF) or code (PQ)
@@ -2135,7 +2152,8 @@ def _lloyd(emb: DataFrame, k: int, assign, iters: int) -> DataFrame:
                 ).cast("double").alias("mv")
             )
         )
-        cent = (
+        # barrier: loop — each round's centroids
+        cent = barrier(
             means.groupBy(key)
             .agg(
                 F.expr(
@@ -2143,8 +2161,8 @@ def _lloyd(emb: DataFrame, k: int, assign, iters: int) -> DataFrame:
                     " s -> s.mv)"
                 ).alias("embedding")
             )
-            .select(F.col(key).alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
+            .select(F.col(key).alias("vec_id"), "embedding"),
+            eager=True,
         )
     return cent
 
@@ -2492,9 +2510,10 @@ def _insert_report(
         (stored,) = _read_state(spark, idx, table)
         return stored.groupBy(*keys).agg(F.count("*").alias(name))
 
-    # materialize BEFORE the append — a lazy read would re-list the
-    # directory after the insert and count the delta twice
-    before = counts("n_base").localCheckpoint(eager=True)
+    # barrier: boundary — materialize BEFORE the append: a lazy read
+    # would re-list the directory after the insert and count the delta
+    # twice
+    before = barrier(counts("n_base"), eager=True)
     insert(spark, idx, emb.where(F.col("vec_id") % 10 == 0))
     after = counts("n_total")
     names = after.columns[:-1]
@@ -2951,10 +2970,12 @@ def pq_train_encode(
     emb = spread(emb, "vec_id")
     cent = _lloyd(_pq_long(emb), k * PQ_M, _assign_l2, PQ_ITERS)
     code, m = _pq_split("vec_id")
-    books = cent.select(
+    # barrier: reuse — the encode reads the codebooks and the caller writes
+    # them; the caller writes and counts the codes
+    books = barrier(cent.select(
         m.alias("m"), code.cast("int").alias("code"), "embedding"
-    ).localCheckpoint(eager=True)
-    return books, _pq_encode(emb, books).localCheckpoint(eager=True)
+    ), eager=True)
+    return books, barrier(_pq_encode(emb, books), eager=True)
 
 
 @query("sim_pq_adc_topk")  # rows-only: approximate; recall asserted in tests
@@ -3786,7 +3807,8 @@ def sim_range_search(
     — linear, broadcast queries, no shuffle."""
     t = Tables(spark, sf_dir)
     raw = t.embeddings.select("vec_id", "embedding")
-    buckets = banded_hyperplane_buckets(raw).localCheckpoint(eager=False)
+    # barrier: reuse — the query side and the candidate join read the buckets
+    buckets = barrier(banded_hyperplane_buckets(raw))
     qb = buckets.where(F.col("vid").isin(*probe_ids)).select(
         F.col("vid").alias("qid"), "band", "bucket"
     )
@@ -3958,7 +3980,7 @@ def _sql_knn_score_rank(
     re-expands the whole prefix at each level (exponential plans; the
     descent oracle exhausted the process FD limit re-opening the
     parquet scan).  Materializing the round outputs bounds the oracle
-    to linear work, matching the Spark side's localCheckpoint."""
+    to linear work, matching the Spark side's barrier."""
     return f"""{_sql_score_edges(cand, f"{out}_sc", d=d, norms=norms)},
     {out} AS MATERIALIZED (
       SELECT src, dst, cosine, rk FROM (

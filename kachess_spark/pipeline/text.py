@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import Tables, spread
+from kachess_spark.catalog import Tables, barrier, spread
 from kachess_spark.registry import query
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
@@ -268,7 +268,8 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, materialize the word arrays before the explode, then a plain
     count + per-lang top-k window (tiny groups)."""
     t = Tables(spark, sf_dir)
-    words = (
+    # barrier: boundary — the explode-pushdown trap (see dedup._with_shingles)
+    words = barrier(
         spread(t.documents.select("doc_id", "lang", "text"), "doc_id")
         .select(
             "lang",
@@ -278,7 +279,6 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ws"),
         )
         .where(F.size("ws") >= 2)
-        .localCheckpoint(eager=False)
     )
     bigrams = words.select(
         "lang",
@@ -387,7 +387,8 @@ def _doc_words(docs: DataFrame) -> DataFrame:
     """(doc_id, ws): each document's non-empty lower-cased letter words.
     Spread before the CPU-bound split and checkpoint-barriered before
     any explode (the pushdown trap — see dedup._with_shingles)."""
-    return (
+    # barrier: boundary — the explode-pushdown trap (see dedup._with_shingles)
+    return barrier(
         spread(docs.select("doc_id", "text"), "doc_id")
         .select(
             "doc_id",
@@ -396,7 +397,6 @@ def _doc_words(docs: DataFrame) -> DataFrame:
                 " ' '), w -> w <> '')"
             ).alias("ws"),
         )
-        .localCheckpoint(eager=False)
     )
 
 
@@ -709,7 +709,8 @@ def text_unigram_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — same plan.
     """
     t = Tables(spark, sf_dir)
-    words = t.documents.select(
+    # barrier: reuse — the total count and the vocabulary read the words
+    words = barrier(t.documents.select(
         "doc_id",
         F.explode(
             F.filter(
@@ -722,7 +723,7 @@ def text_unigram_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: x != "",
             )
         ).alias("word"),
-    ).localCheckpoint(eager=False)
+    ))
     total = words.count()  # one job; vocabulary normalization constant
     vocab = (
         words.groupBy("word")
@@ -956,7 +957,8 @@ def text_bigram_likelihood(
         ),
         lambda x: x != "",
     )
-    bg = (
+    # barrier: reuse — the left and pair counts read the bigrams
+    bg = barrier(
         t.documents.select("doc_id", ws.alias("ws"))
         .where(F.size("ws") >= 2)
         .select(
@@ -970,7 +972,6 @@ def text_bigram_likelihood(
             ).alias("p"),
         )
         .select("doc_id", "p.w1", "p.w2")
-        .localCheckpoint(eager=False)
     )
     left_cnt = bg.groupBy("w1").agg(F.count("*").alias("lc"))
     pair_cnt = bg.groupBy("w1", "w2").agg(F.count("*").alias("pc"))

@@ -37,7 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kachess_spark.catalog import _events_ts, load_table, table_path
+from kachess_spark.catalog import _events_ts, barrier, load_table, table_path
 from kachess_spark.operators._util import davg, dsum, oracle_dsum
 from kachess_spark.registry import query
 
@@ -1379,7 +1379,8 @@ def _static_gate(spark: SparkSession, sf_dir: str, verify: bool) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bands = _band_rows(minhash_signature(docs))
     if verify:
-        bands = bands.localCheckpoint(eager=True)
+        # barrier: reuse — the history and the incoming side both read the bands
+        bands = barrier(bands, eager=True)
     return (
         _admit(
             bands.where(F.col("doc_id") % 2 == 0),
@@ -1412,9 +1413,10 @@ def _growing_gate(spark: SparkSession, sf_dir: str, verify: bool) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = _with_shingles(docs).localCheckpoint(eager=True) if verify else None
-    bands = _band_rows(minhash_signature(docs)).localCheckpoint(eager=True)
-    hist = bands.where(F.col("doc_id") % 2 == 0).localCheckpoint(eager=True)
+    # barrier: reuse — every batch reads the shingles and the bands
+    sh = barrier(_with_shingles(docs), eager=True) if verify else None
+    bands = barrier(_band_rows(minhash_signature(docs)), eager=True)
+    hist = bands.where(F.col("doc_id") % 2 == 0)
     odd = docs.where(F.col("doc_id") % 2 == 1).withColumn(
         "b", F.expr(f"((doc_id - 1) div 2) % {_GATE_N_BATCHES}")
     )
@@ -1424,14 +1426,15 @@ def _growing_gate(spark: SparkSession, sf_dir: str, verify: bool) -> DataFrame:
         adm_ids = _admit(hist, bkb, bk_ids, same_batch=True, sh=sh)
         # coalesced so the per-batch union doesn't accumulate partitions
         # (32 + 32 per batch grew the final probe to 128 tiny tasks)
-        hist = (
+        # barrier: loop — the index grows by a union each batch
+        hist = barrier(
             hist.unionByName(
                 bands.join(F.broadcast(adm_ids), "doc_id").select(
                     "doc_id", "band", "band_key"
                 )
             )
-            .coalesce(8)
-            .localCheckpoint(eager=True)
+            .coalesce(8),
+            eager=True,
         )
     admitted_ids = (
         hist.where(F.col("doc_id") % 2 == 1)
@@ -1601,7 +1604,8 @@ def streaming_ingest_dedup_gate(
             hist_src.write.mode("overwrite").parquet(hist_dir)
         hist_bands = None
     else:
-        hist_bands = hist_src.localCheckpoint(eager=True)  # built ONCE
+        # barrier: reuse — built ONCE, every micro-batch probes it
+        hist_bands = barrier(hist_src, eager=True)
 
     def _index_dirs_before(batch_id: int) -> list:
         """Stored-index parquet dirs visible to ``batch_id``: the hist
@@ -1636,7 +1640,8 @@ def streaming_ingest_dedup_gate(
             # the stored index AS OF this batch: every EARLIER batch's
             # admitted contribution (availableNow batches run serially),
             # but never batch_id's own — crash-replay safe
-            new_bands = new_bands.localCheckpoint(eager=True)
+            # barrier: reuse — the probe and the same-batch target read the bands
+            new_bands = barrier(new_bands, eager=True)
             idx = spark.read.parquet(*_index_dirs_before(batch_id))
         else:
             idx = hist_bands
@@ -1647,10 +1652,10 @@ def streaming_ingest_dedup_gate(
             "doc_id", "source", "n_chars"
         )
         if grow:
-            # eager barrier: breaks the index-read lineage before we
-            # write back UNDER the index dir, and admitted feeds two
-            # writes (sink + index) — lazy would recompute per consumer
-            admitted = admitted.localCheckpoint(eager=True)
+            # barrier: boundary — eager: breaks the index-read lineage
+            # before we write back UNDER the index dir, and admitted feeds
+            # two writes (sink + index) — lazy would recompute per consumer
+            admitted = barrier(admitted, eager=True)
         (
             admitted
             # exactly-once under crash-replay: each micro-batch owns a

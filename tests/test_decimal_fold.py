@@ -43,6 +43,12 @@ Partition width has one owner: ``defaultParallelism`` and
 ``getNumPartitions`` appear as code only in ``catalog.py`` (``spread`` and
 the sizing rules), so no call site sizes its own exchange.
 
+Plan cuts have one owner too: ``localCheckpoint(`` and ``.checkpoint(``
+appear as code only in ``catalog.py`` (``barrier``), under
+``kachess_spark/``, ``tools/`` and in ``bench.py``, and every
+``barrier(`` call names its reason (loop, reuse or boundary) in a
+``# barrier:`` comment just above it.
+
 The texts the owners build are pinned too (a changed text would change
 every plan or oracle built on it)."""
 
@@ -75,6 +81,11 @@ _AWAIT = re.compile(r"awaitTermination\(")
 _HOUR_BOUND = re.compile(r'F\.expr\("INTERVAL 1 HOUR"\)')
 _PQ_SUBSPACES = re.compile(r"\b_pq_subspaces\b")
 _CORE_COUNT = re.compile(r"\b(?:defaultParallelism|getNumPartitions)\b")
+_CHECKPOINT = re.compile(r"\blocalCheckpoint\(|\.checkpoint\(")
+_BARRIER_CALL = re.compile(r"(?<![\w.])barrier\(")
+_BARRIER_REASON = re.compile(r"# barrier: (?:loop|reuse|boundary) — ")
+# how far above its call a barrier's reason comment may start
+_REASON_REACH = 8
 
 _CLONE_WINDOW = 8
 # Deliberate twins: the sorted ("path::scope", "path::scope") pair of
@@ -89,6 +100,18 @@ def _py_files(top: str):
         for name in sorted(files):
             if name.endswith(".py"):
                 yield os.path.join(root, name)
+
+
+def _checked_sources():
+    """(repo-relative path, source) of every file the guards read."""
+    paths = [
+        *_py_files(_PKG),
+        *_py_files(os.path.join(_REPO, "tools")),
+        os.path.join(_REPO, "bench.py"),
+    ]
+    for path in paths:
+        with open(path) as f:
+            yield os.path.relpath(path, _REPO), f.read()
 
 
 def _code_lines(src: str) -> list[tuple[int, str]]:
@@ -138,17 +161,10 @@ def test_no_cloned_code_runs():
     """No run of ``_CLONE_WINDOW`` code lines appears twice under
     kachess_spark/, tools/ or in bench.py, unless ``_CLONE_ALLOWED``
     names the pair with a reason; every entry there still clones."""
-    paths = [
-        *_py_files(_PKG),
-        *_py_files(os.path.join(_REPO, "tools")),
-        os.path.join(_REPO, "bench.py"),
-    ]
     first: dict[tuple[str, ...], tuple[str, int, int]] = {}
     found: dict[tuple[str, str], str] = {}
-    for path in paths:
-        rel = os.path.relpath(path, _REPO)
-        with open(path) as f:
-            lines = _code_lines(f.read())
+    for rel, src in _checked_sources():
+        lines = _code_lines(src)
         texts = [text for _, text in lines]
         run = None  # the twin of the previous window, to report a run once
         for i in range(len(lines) - _CLONE_WINDOW + 1):
@@ -318,3 +334,26 @@ def test_partition_width_read_only_in_catalog():
                 if _CORE_COUNT.search(text)
             ]
     assert hits == [], f"size the exchange with catalog.spread: {hits}"
+
+
+def test_plan_cut_only_in_catalog():
+    hits = [
+        f"{rel}:{lineno}"
+        for rel, src in _checked_sources()
+        if rel != os.path.join("kachess_spark", "catalog.py")
+        for lineno, text in _code_lines(src)
+        if _CHECKPOINT.search(text)
+    ]
+    assert hits == [], f"cut the plan with catalog.barrier: {hits}"
+
+
+def test_every_barrier_names_its_reason():
+    missing = []
+    for rel, src in _checked_sources():
+        lines = src.splitlines()
+        for lineno, text in _code_lines(src):
+            if _BARRIER_CALL.search(text) and not text.startswith("def "):
+                above = lines[max(0, lineno - 1 - _REASON_REACH) : lineno]
+                if not any(_BARRIER_REASON.search(x) for x in above):
+                    missing.append(f"{rel}:{lineno}")
+    assert missing == [], f"add a '# barrier: <reason> — ' comment: {missing}"

@@ -77,6 +77,48 @@ def test_closure_matches_bfs(spark, edges):
     assert got == _bfs_closure(edges)
 
 
+def test_small_probe_bound(spark, monkeypatch):
+    """The edge probe returns the (src, dst) tuples up to
+    SMALL_GRAPH_EDGES rows, and None at exactly one row more."""
+    from kachess_spark.lineage import closure as C
+
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 5)
+    edges = [(1, 2), (2, 3), (2, 3), (3, 3), (4, 1), (5, 6)]
+    df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT").coalesce(1)
+    assert C._collect_small(df) is None
+    assert sorted(C._collect_small(df.limit(5))) == sorted(
+        df.limit(5).collect()
+    )
+    assert C._collect_small(df.limit(0)) == []
+
+
+def test_driver_bfs_keeps_rows_with_duplicates_and_self_loops(spark):
+    """Duplicate edges and self-loops reach the driver walk unfiltered
+    (the probe runs no distinct) and change none of its rows: the full
+    closure and the seeded lookup equal the BFS reference and the
+    distributed loop, which does drop them."""
+    from kachess_spark.lineage import closure as C
+
+    edges = [(1, 2), (1, 2), (2, 2), (2, 3), (3, 1), (3, 4), (4, 4), (4, 5)]
+    df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
+    want = _bfs_closure(edges)
+
+    def rows(frame):
+        return {
+            (r.ancestor_id, r.descendant_id): r.distance for r in frame.collect()
+        }
+
+    assert rows(C.transitive_closure(df, "src", "dst")) == want
+    seeded = C._seeded_closure(df, "src", "dst", [2, 4], 20)
+    assert rows(seeded) == {k: v for k, v in want.items() if k[0] in (2, 4)}
+    old = C.SMALL_GRAPH_EDGES
+    C.SMALL_GRAPH_EDGES = 0
+    try:
+        assert rows(C.transitive_closure(df, "src", "dst")) == want
+    finally:
+        C.SMALL_GRAPH_EDGES = old
+
+
 # --------------------------------------------------------------- splitter
 
 

@@ -53,6 +53,44 @@ print("MODIFIABLE", *(spark.conf.isModifiable(k) for k in keys))
     assert "MODIFIABLE True True" in out.stdout.splitlines()
 
 
+def test_barrier_checkpoint_dir_keeps_rows(tmp_path, sf_dir):
+    """With a checkpoint dir set, ``catalog.barrier`` writes reliable
+    checkpoints there and the rows are the local barriers' rows: the
+    eager PageRank loop and the lazy triangle-count reuse.  Its own
+    session, so the shared test session never holds a checkpoint dir."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ckpt = tmp_path / "ckpt"
+    src = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from kachess_spark.operators.pagerank import graph_pagerank_trade, graph_triangle_count
+from kachess_spark.session import tune_for_session
+spark = tune_for_session(SparkSession.builder.master("local[2]").getOrCreate())
+def rows():
+    return [sorted(map(tuple, q(spark, {sf_dir!r}).collect()))
+            for q in (graph_pagerank_trade, graph_triangle_count)]
+local = rows()
+spark.sparkContext.setCheckpointDir({str(ckpt)!r})
+print("SAME", rows() == local, all(local))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", src],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "SAME True True" in out.stdout.splitlines()
+    written = [f for _, _, files in os.walk(ckpt) for f in files]
+    assert any(f.startswith("part-") for f in written)
+
+
 def test_every_query_has_callable(spark):
     import __spark_entry__ as e
 

@@ -3,7 +3,9 @@ measure first).  Runs ``fn(spark, sf_dir).count()`` exactly like
 bench.py, then dumps every stage the run created from the JVM
 AppStatusStore: executorRunTime / CpuTime, shuffle bytes, task count
 and the stage's callsite name — the numbers that say WHERE a wall
-went, without the (disabled) UI.
+went, without the (disabled) UI.  The session runs
+``local[SPARK_GRAFT_CPUS]``, default this process's CPU affinity
+count; the core count and load averages are printed with the table.
 
 Usage: python tools/profile_stages.py <name> [sf_dir] [--warm]
 """
@@ -17,7 +19,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import prep_indexes, stage_snapshot  # noqa: E402
+from bench import _loadavg, prep_indexes, stage_snapshot  # noqa: E402
 from kachess_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 
 
@@ -26,6 +28,7 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else DEFAULT_SF_DIR
     warm = "--warm" in sys.argv
 
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     from kachess_spark import registry
     from kachess_spark.session import get_spark
 
@@ -56,6 +59,8 @@ def main() -> None:
 
     new = {k: v for k, v in after.items() if k not in before}
     print(f"\n{name}: wall={wall:.2f}s rows={rows} stages={len(new)}")
+    cores = spark.sparkContext.defaultParallelism
+    print(f"cores={cores} loadavg={_loadavg()}")
     tot_run = sum(v[1] for v in new.values()) / 1000.0
     tot_cpu = sum(v[2] for v in new.values()) / 1e9
     print(f"sum executorRunTime={tot_run:.1f}s  cpuTime={tot_cpu:.1f}s")
